@@ -683,6 +683,13 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         the reference's one DB container; ``write_mode="merge"`` swaps this
         for a Delta Lake MERGE (:meth:`_merge_append`) for concurrent
         writers.
+
+        Write layout: the batch's own partitioning never reaches disk.
+        Every append (base table, ``__ivf``, postings) is sized by bytes
+        (``catalog.sized_by_bytes``), so one insert commits one file per
+        partition directory — not ``shuffle.partitions`` files per
+        directory — and a bulk insert advisory-size files.  Many small
+        inserts still leave many small files; :meth:`compact` merges them.
         """
         # Re-validate the sidecar at the WRITE boundary, not only at
         # construction: a handle built while the table did not yet exist

@@ -711,8 +711,10 @@ class IvfIndexMixin:
         )
         # fit on only the hot partition — partition-pruned scan, MLlib
         # distributed fit (no driver collect of rows; the centroids are
-        # the only driver artifact, children × dim floats)
-        sub = IVFIndex.build(rows_c, vec_col="embedding", k=int(children))
+        # the only driver artifact, children × dim floats).  Three
+        # restarts: one k-means|| fit can spend a child on a single outlier
+        # row, which the no-progress rule then parks as unsplittable
+        sub = IVFIndex.build(rows_c, vec_col="embedding", k=int(children), n_init=3)
         cents = np.asarray(sub.centroids, dtype=np.float64)
         # dedupe degenerate centers (k-means on duplicate-heavy data can
         # emit coincident centroids — a zero-information child that would
@@ -1151,8 +1153,11 @@ class IvfIndexMixin:
         # somehow survives (crash between the overwrite and this drop on a
         # retry path) still fails the generation check loudly.
         self._invalidate_graph_index()
+        # the clustered frame inherits the base table's file split, which
+        # partitionBy would multiply by the cluster count: rebalance on
+        # cluster_id so each cluster dir gets advisory-size files
         self._cat.overwrite(
-            clustered,
+            catalog.sized_by_bytes(clustered, ["cluster_id"]),
             self.name + "__ivf",
             self.warehouse,
             partition_by=["cluster_id"],

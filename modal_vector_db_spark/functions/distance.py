@@ -13,14 +13,18 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def vector_lit(vec: Sequence[float]) -> Column:
-    """A literal query vector as an array<double> column."""
-    return F.array(*[F.lit(float(v)) for v in vec])
+    """A literal query vector as an array<double> column — ONE py4j call
+    (a float64 ndarray literal), not one ``lit`` per element; the doubles
+    are the same, and Catalyst folds the per-element form into this
+    literal anyway."""
+    return F.lit(np.asarray(vec, dtype=np.float64))
 
 
 def dot_product(a: Column, b: Column) -> Column:

@@ -147,6 +147,7 @@ class IVFIndex:
         k: int = 16,
         seed: int = 42,
         sample_fraction: float | None = None,
+        n_init: int = 1,
     ) -> "IVFIndex":
         """Fit KMeans on the vector column (MLlib, distributed).
 
@@ -167,7 +168,13 @@ class IVFIndex:
         ASSIGNMENT still covers every row (:meth:`assign` is a single
         scan), so the index is exact over the full corpus either way;
         only centroid placement (and thus recall/probe balance) depends on
-        the sample."""
+        the sample.
+
+        ``n_init``: fit with seeds ``seed .. seed+n_init-1`` and keep the
+        lowest-cost centers (the classic k-means restart).  k-means|| seeds
+        far points and samples per input partition in row order, so a
+        single fit can spend a center on one outlier, and which one depends
+        on how the rows are split across files."""
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
@@ -186,7 +193,13 @@ class IVFIndex:
         feats = src.filter(F.col(vec_col).isNotNull()).select(
             array_to_vector(F.col(vec_col)).alias("features")
         )
-        model = KMeans(k=k, seed=seed, featuresCol="features").fit(feats)
+        model = min(
+            (
+                KMeans(k=k, seed=seed + i, featuresCol="features").fit(feats)
+                for i in range(n_init)
+            ),
+            key=lambda m: m.summary.trainingCost,
+        )
         return cls(np.array([np.asarray(c) for c in model.clusterCenters()]))
 
     def assign(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -234,8 +247,14 @@ class IVFIndex:
 
     @classmethod
     def load(cls, path: str, spark: SparkSession) -> "IVFIndex":
-        rows = spark.read.parquet(path).orderBy("cluster_id").collect()
-        return cls(np.array([r["centroid"] for r in rows]))
+        """Read the centroid table on the driver — zero Spark jobs.  It is
+        one small file (:meth:`save` coalesces, :data:`MAX_IVF_CLUSTERS`
+        bounds it), read on every IVF query and index sync."""
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(path).sort_by("cluster_id")
+        flat = t.column("centroid").combine_chunks().flatten()
+        return cls(np.array(flat.to_numpy(), dtype=np.float64).reshape(len(t), -1))
 
 
 class IVFIndex2L:

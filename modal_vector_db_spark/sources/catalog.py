@@ -149,8 +149,29 @@ def read_table(spark: SparkSession, name: str, warehouse: str | None = None) -> 
     return spark.read.parquet(p)
 
 
+def sized_by_bytes(df: DataFrame, partition_by=None) -> DataFrame:
+    """The write-layout rule for every commit that carries rows (appends and
+    copy-on-write replacements, on both backends): file size comes from
+    AQE, not from the upstream partitioning.  ``rebalance`` adds one shuffle
+    that AQE coalesces (and splits) to ``advisoryPartitionSizeInBytes``, so
+    a small insert lands as ONE file per partition directory and a bulk
+    ingest as advisory-size files.  Without it a commit inherits its input's
+    partition count — a persisted batch keeps its cached plan's
+    ``shuffle.partitions``, and ``partitionBy`` multiplies that by the
+    partition-value count — and every such file is one more footer read,
+    scan task and listing entry for every later query.  Writes that DEFINE
+    a layout (overwrite, replace_table, z-order, compact) keep the caller's
+    partitioning; ``create_index`` applies this to its ``__ivf`` overwrite
+    because its input's partitioning is the base table's file split, not
+    a layout.  Without AQE the hint would fan out to
+    ``shuffle.partitions`` files, so it is applied only under AQE."""
+    if df.sparkSession.conf.get("spark.sql.adaptive.enabled").lower() != "true":
+        return df
+    return df.hint("rebalance", *(partition_by or ()))
+
+
 def append(df: DataFrame, name: str, warehouse: str | None = None, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("append")
+    w = sized_by_bytes(df, partition_by).write.mode("append")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(db_path(name, warehouse))
@@ -374,7 +395,8 @@ def _assemble_and_swap(
     partition_by: list[str] | None = None,
 ) -> int:
     """Build the table's next directory: stage ``replacement_df`` with
-    Spark (``partitionBy`` when the table is partitioned), HARDLINK every
+    Spark (``partitionBy`` when the table is partitioned; files sized by
+    :func:`sized_by_bytes`), HARDLINK every
     untouched file in under its original relative path (a metadata-only op
     — the bytes, inode and mtime are untouched, so unmodified data is
     never rewritten), then crash-safe swap.  Returns the row count of the
@@ -382,7 +404,7 @@ def _assemble_and_swap(
     p = db_path(name, warehouse)
     tmp = p + "__rewriting"
     if replacement_df is not None:
-        w = replacement_df.write.mode("overwrite")
+        w = sized_by_bytes(replacement_df, partition_by).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)

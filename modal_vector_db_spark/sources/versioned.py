@@ -60,6 +60,7 @@ from modal_vector_db_spark.sources.catalog import (
     _read_subset,
     db_path,
     drop_ids_frame,
+    sized_by_bytes,
 )
 
 
@@ -121,7 +122,16 @@ def _stage_files(
     under unique names so two commits never collide.  With ``partition_by``
     the Hive-style ``col=value`` subdirectories are preserved under
     ``data/`` (readers recover the partition columns via ``basePath``,
-    :func:`_read_files`)."""
+    :func:`_read_files`).
+
+    Files are written with ``df``'s partitioning as given: the callers that
+    carry rows (:func:`append`, :func:`replace_files`) pass it through
+    ``catalog.sized_by_bytes`` first, so a small commit stages one file per
+    partition directory and a bulk one advisory-size files, while writes
+    that define a layout (:func:`overwrite`, :func:`replace_table`,
+    :func:`optimize_zorder`, the tombstone id file) keep the caller's
+    partitioning — e.g. a ``repartitionByRange(8)`` overwrite stays 8
+    range-disjoint files for manifest-stats pruning."""
     base = db_path(name, warehouse)
     stage = os.path.join(base, f"_stage_{uuid.uuid4().hex[:12]}")
     w = df.write.mode("overwrite")
@@ -621,7 +631,9 @@ def append(
     anti-join read a snapshot, so an append racing past it could
     double-insert content; pinning lets the caller re-run the anti-join
     against the new head and retry (``engine.py:_versioned_cas_append``)."""
-    new = _stage_files(df, name, warehouse, partition_by=partition_by)
+    new = _stage_files(
+        sized_by_bytes(df, partition_by), name, warehouse, partition_by=partition_by
+    )
     new_stats = _collect_stats(name, warehouse, new, stats_cols)
 
     def _attempt(v: int | None) -> int:
@@ -850,7 +862,9 @@ def replace_files(
     m = _read_manifest(name, warehouse, head) if head else {"files": []}
     touched_set = set(touched)
     carried = [f for f in m["files"] if f not in touched_set]
-    new = _stage_files(df, name, warehouse, partition_by=partition_by)
+    new = _stage_files(
+        sized_by_bytes(df, partition_by), name, warehouse, partition_by=partition_by
+    )
     new_stats = _collect_stats(name, warehouse, new, stats_cols)
     parent_stats = m.get("stats") or {}
     carried_stats = {f: parent_stats[f] for f in carried if f in parent_stats}
