@@ -684,12 +684,13 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         for a Delta Lake MERGE (:meth:`_merge_append`) for concurrent
         writers.
 
-        Write layout: the batch's own partitioning never reaches disk.
-        Every append (base table, ``__ivf``, postings) is sized by bytes
-        (``catalog.sized_by_bytes``), so one insert commits one file per
-        partition directory — not ``shuffle.partitions`` files per
-        directory — and a bulk insert advisory-size files.  Many small
-        inserts still leave many small files; :meth:`compact` merges them.
+        Write layout (``catalog.sized_for_append``): a persisted batch and
+        every ``partitionBy`` index append (``__ivf``, postings) are
+        rebalanced so AQE sizes their files, so one insert commits one
+        file per partition directory — not ``shuffle.partitions`` files
+        per directory.  An un-persisted batch is written as its dedup
+        shuffle left it, which AQE already coalesces.  Many small inserts
+        still leave many small files; :meth:`compact` merges them.
         """
         # Re-validate the sidecar at the WRITE boundary, not only at
         # construction: a handle built while the table did not yet exist

@@ -24,6 +24,9 @@ from pyspark.sql import functions as F
 from modal_vector_db_spark.schema import ITEMS_SCHEMA
 from modal_vector_db_spark.sources import catalog
 
+# k-means fits per hot-cluster split; the lowest-cost one is kept
+_SPLIT_RESTARTS = 3
+
 
 class IvfIndexMixin:
     """IVF layout + sidecar machinery (see module docstring)."""
@@ -700,6 +703,8 @@ class IvfIndexMixin:
         import uuid as _uuid
 
         import numpy as np
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
 
         from modal_vector_db_spark.operators.ann import IVFIndex
         from modal_vector_db_spark.plans.checkpoints import release_local_checkpoint
@@ -711,11 +716,22 @@ class IvfIndexMixin:
         )
         # fit on only the hot partition — partition-pruned scan, MLlib
         # distributed fit (no driver collect of rows; the centroids are
-        # the only driver artifact, children × dim floats).  Three
-        # restarts: one k-means|| fit can spend a child on a single outlier
-        # row, which the no-progress rule then parks as unsplittable
-        sub = IVFIndex.build(rows_c, vec_col="embedding", k=int(children), n_init=3)
-        cents = np.asarray(sub.centroids, dtype=np.float64)
+        # the only driver artifact, children × dim floats).  Best of
+        # _SPLIT_RESTARTS seeds by k-means cost: k-means|| samples per input
+        # partition, so which rows seed a single fit depends on the file
+        # split, and one fit can spend a child on a single outlier row that
+        # the no-progress rule then parks as unsplittable
+        feats = rows_c.filter(F.col("embedding").isNotNull()).select(
+            array_to_vector(F.col("embedding")).alias("features")
+        )
+        model = min(
+            (
+                KMeans(k=int(children), seed=42 + i, featuresCol="features").fit(feats)
+                for i in range(_SPLIT_RESTARTS)
+            ),
+            key=lambda m: m.summary.trainingCost,
+        )
+        cents = np.array([np.asarray(c) for c in model.clusterCenters()], dtype=np.float64)
         # dedupe degenerate centers (k-means on duplicate-heavy data can
         # emit coincident centroids — a zero-information child that would
         # sit permanently empty while consuming an nprobe slot); keep the

@@ -147,7 +147,6 @@ class IVFIndex:
         k: int = 16,
         seed: int = 42,
         sample_fraction: float | None = None,
-        n_init: int = 1,
     ) -> "IVFIndex":
         """Fit KMeans on the vector column (MLlib, distributed).
 
@@ -168,13 +167,7 @@ class IVFIndex:
         ASSIGNMENT still covers every row (:meth:`assign` is a single
         scan), so the index is exact over the full corpus either way;
         only centroid placement (and thus recall/probe balance) depends on
-        the sample.
-
-        ``n_init``: fit with seeds ``seed .. seed+n_init-1`` and keep the
-        lowest-cost centers (the classic k-means restart).  k-means|| seeds
-        far points and samples per input partition in row order, so a
-        single fit can spend a center on one outlier, and which one depends
-        on how the rows are split across files."""
+        the sample."""
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
@@ -193,13 +186,7 @@ class IVFIndex:
         feats = src.filter(F.col(vec_col).isNotNull()).select(
             array_to_vector(F.col(vec_col)).alias("features")
         )
-        model = min(
-            (
-                KMeans(k=k, seed=seed + i, featuresCol="features").fit(feats)
-                for i in range(n_init)
-            ),
-            key=lambda m: m.summary.trainingCost,
-        )
+        model = KMeans(k=k, seed=seed, featuresCol="features").fit(feats)
         return cls(np.array([np.asarray(c) for c in model.clusterCenters()]))
 
     def assign(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:

@@ -150,28 +150,44 @@ def read_table(spark: SparkSession, name: str, warehouse: str | None = None) -> 
 
 
 def sized_by_bytes(df: DataFrame, partition_by=None) -> DataFrame:
-    """The write-layout rule for every commit that carries rows (appends and
-    copy-on-write replacements, on both backends): file size comes from
-    AQE, not from the upstream partitioning.  ``rebalance`` adds one shuffle
-    that AQE coalesces (and splits) to ``advisoryPartitionSizeInBytes``, so
-    a small insert lands as ONE file per partition directory and a bulk
-    ingest as advisory-size files.  Without it a commit inherits its input's
-    partition count — a persisted batch keeps its cached plan's
-    ``shuffle.partitions``, and ``partitionBy`` multiplies that by the
-    partition-value count — and every such file is one more footer read,
-    scan task and listing entry for every later query.  Writes that DEFINE
-    a layout (overwrite, replace_table, z-order, compact) keep the caller's
-    partitioning; ``create_index`` applies this to its ``__ivf`` overwrite
-    because its input's partitioning is the base table's file split, not
-    a layout.  Without AQE the hint would fan out to
-    ``shuffle.partitions`` files, so it is applied only under AQE."""
+    """The write-layout rule for commits that carry rows: file size comes
+    from AQE, not from the upstream partitioning.  ``rebalance`` adds one
+    shuffle that AQE coalesces (and splits) to
+    ``advisoryPartitionSizeInBytes``, so a small commit lands as ONE file
+    per partition directory.  Taken by appends whose input partitioning is
+    fixed (:func:`sized_for_append`), by update-shaped copy-on-write
+    replacements (``replace_where``, both backends — they union the kept
+    rows with a persisted patch batch) and by ``create_index``'s ``__ivf``
+    overwrite (its input's partitioning is the base table's file split).
+    Deletes (``rewrite_where``) write their scan of the touched files as
+    is: one file per scan split, and Spark packs small files into one split
+    and cuts only files larger than a split, so the shuffle would buy
+    nothing.  Writes that DEFINE a layout (overwrite, replace_table,
+    z-order, compact) keep the caller's partitioning.  Without AQE the
+    hint would fan out to ``shuffle.partitions`` files, so it is applied
+    only under AQE."""
     if df.sparkSession.conf.get("spark.sql.adaptive.enabled").lower() != "true":
         return df
     return df.hint("rebalance", *(partition_by or ()))
 
 
+def sized_for_append(df: DataFrame, partition_by=None) -> DataFrame:
+    """The append side of :func:`sized_by_bytes`: rebalance only when the
+    input's partitioning is fixed.  A persisted frame keeps its cached
+    plan's ``shuffle.partitions`` (Spark does not let AQE coalesce a cached
+    plan), and ``partitionBy`` multiplies the input's partition count by
+    the partition-value count — both would commit many tiny files.  Any
+    other append input ends in a shuffle AQE already coalesces (the insert
+    batch's dedup, the bloom words' group-by), and a rebalance there would
+    only shuffle the whole batch a second time."""
+    level = df.storageLevel
+    if partition_by or level.useMemory or level.useDisk or level.useOffHeap:
+        return sized_by_bytes(df, partition_by)
+    return df
+
+
 def append(df: DataFrame, name: str, warehouse: str | None = None, partition_by: list[str] | None = None) -> None:
-    w = sized_by_bytes(df, partition_by).write.mode("append")
+    w = sized_for_append(df, partition_by).write.mode("append")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(db_path(name, warehouse))
@@ -395,8 +411,7 @@ def _assemble_and_swap(
     partition_by: list[str] | None = None,
 ) -> int:
     """Build the table's next directory: stage ``replacement_df`` with
-    Spark (``partitionBy`` when the table is partitioned; files sized by
-    :func:`sized_by_bytes`), HARDLINK every
+    Spark (``partitionBy`` when the table is partitioned), HARDLINK every
     untouched file in under its original relative path (a metadata-only op
     — the bytes, inode and mtime are untouched, so unmodified data is
     never rewritten), then crash-safe swap.  Returns the row count of the
@@ -404,7 +419,7 @@ def _assemble_and_swap(
     p = db_path(name, warehouse)
     tmp = p + "__rewriting"
     if replacement_df is not None:
-        w = sized_by_bytes(replacement_df, partition_by).write.mode("overwrite")
+        w = replacement_df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)
@@ -529,7 +544,8 @@ def replace_where(
     rows_before = sum(_footer_rows(os.path.join(p, f)) for f in touched)
     untouched = [f for f in files if f not in set(touched)]
     rows_after = _assemble_and_swap(
-        spark, name, warehouse, untouched, replacement, partition_by=pcols or None
+        spark, name, warehouse, untouched,
+        sized_by_bytes(replacement, pcols or None), partition_by=pcols or None,
     )
     if extra_df is not None:
         return rows_before

@@ -61,6 +61,7 @@ from modal_vector_db_spark.sources.catalog import (
     db_path,
     drop_ids_frame,
     sized_by_bytes,
+    sized_for_append,
 )
 
 
@@ -124,11 +125,15 @@ def _stage_files(
     ``data/`` (readers recover the partition columns via ``basePath``,
     :func:`_read_files`).
 
-    Files are written with ``df``'s partitioning as given: the callers that
-    carry rows (:func:`append`, :func:`replace_files`) pass it through
-    ``catalog.sized_by_bytes`` first, so a small commit stages one file per
-    partition directory and a bulk one advisory-size files, while writes
-    that define a layout (:func:`overwrite`, :func:`replace_table`,
+    Files are written with ``df``'s partitioning as given.  Two callers
+    size them by bytes first, so a small commit stages one file per
+    partition directory: :func:`replace_where` always
+    (``catalog.sized_by_bytes``; its replacement unions a persisted patch
+    batch) and :func:`append` when its input's partitioning is fixed — a
+    persisted batch or a ``partition_by`` write
+    (``catalog.sized_for_append``).  A delete's replacement, a scan of the
+    touched files, is written one file per scan split.  Writes that
+    define a layout (:func:`overwrite`, :func:`replace_table`,
     :func:`optimize_zorder`, the tombstone id file) keep the caller's
     partitioning — e.g. a ``repartitionByRange(8)`` overwrite stays 8
     range-disjoint files for manifest-stats pruning."""
@@ -632,7 +637,7 @@ def append(
     double-insert content; pinning lets the caller re-run the anti-join
     against the new head and retry (``engine.py:_versioned_cas_append``)."""
     new = _stage_files(
-        sized_by_bytes(df, partition_by), name, warehouse, partition_by=partition_by
+        sized_for_append(df, partition_by), name, warehouse, partition_by=partition_by
     )
     new_stats = _collect_stats(name, warehouse, new, stats_cols)
 
@@ -862,9 +867,7 @@ def replace_files(
     m = _read_manifest(name, warehouse, head) if head else {"files": []}
     touched_set = set(touched)
     carried = [f for f in m["files"] if f not in touched_set]
-    new = _stage_files(
-        sized_by_bytes(df, partition_by), name, warehouse, partition_by=partition_by
-    )
+    new = _stage_files(df, name, warehouse, partition_by=partition_by)
     new_stats = _collect_stats(name, warehouse, new, stats_cols)
     parent_stats = m.get("stats") or {}
     carried_stats = {f: parent_stats[f] for f in carried if f in parent_stats}
@@ -942,7 +945,7 @@ def replace_where(
         # when extra_df's schema is a subset/superset of the stored files'
         replacement = replacement.unionByName(p, allowMissingColumns=True)
     _, new = replace_files(
-        replacement,
+        sized_by_bytes(replacement, partition_by),
         name,
         touched,
         warehouse,

@@ -169,9 +169,8 @@ def stream_to_versioned_hypertable(
     remains an auditable time-travel/rollback target.
 
     100 TB shape: the commit is O(metadata) per batch regardless of batch
-    size; the append's byte-sized write (``catalog.sized_by_bytes``) keeps
-    it to one file per touched bucket per batch (no every-task-writes-
-    every-bucket fragmentation);
+    size; the ``repartition('p_bucket')`` keeps it to one file per touched
+    bucket per batch (no every-task-writes-every-bucket fragmentation);
     accumulated small files compact later via ``replace_table``/
     ``optimize_zorder`` without breaking time travel.  Micro-batch
     RETRIES re-append rows (the blind append is what makes concurrent
@@ -186,7 +185,9 @@ def stream_to_versioned_hypertable(
     fmt = _GRANULARITY_FMT[granularity]
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df.withColumn("p_bucket", F.date_format(F.col(ts_col), fmt))
+        out = batch_df.withColumn(
+            "p_bucket", F.date_format(F.col(ts_col), fmt)
+        ).repartition("p_bucket")
         vcat.append(out, name, warehouse, partition_by=["p_bucket"], stats_cols=[])
 
     q = (

@@ -3,6 +3,8 @@ batch query (file source + AvailableNow trigger for determinism)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -270,6 +272,13 @@ def test_stream_to_versioned_hypertable_prunes_and_time_travels(spark, event_fil
     assert vcat.read_table(spark, name, wh).count() == n
     assert vcat.manifest_row_count(name, wh) == n
     assert all(h["op"] == "append" for h in vcat.history(name, wh))
+    # each micro-batch commit adds at most ONE file per bucket it touches
+    prev: set = set()
+    for h in vcat.history(name, wh):
+        cur = set(vcat.resolve_files(name, wh, version=h["version"]))
+        buckets = [os.path.dirname(f) for f in cur - prev]
+        assert buckets and len(buckets) == len(set(buckets)), h
+        prev = cur
 
     # pick a real day and verify manifest-alone pruning + exact rows
     day = str(

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from modal_vector_db_spark.engine import VectorDB
 from modal_vector_db_spark.functions.distance import vector_lit
-from modal_vector_db_spark.operators.ann import IVFIndex
+from modal_vector_db_spark.operators.ann import IVFIndex, IVFIndex2L
 from modal_vector_db_spark.sources import catalog
 from modal_vector_db_spark.sources import versioned as vcat
 
@@ -99,6 +99,25 @@ def test_ivf_load_is_job_free_and_matches_spark_read(spark, tmp_path):
     assert loaded.centroids.dtype == np.float64
     assert np.array_equal(loaded.centroids, via_spark)
     assert np.array_equal(loaded.centroids, cents)
+
+
+def test_ivf2l_load_reads_coarse_table_job_free(spark, tmp_path):
+    # the two-level loader reads its coarse table through IVFIndex.load;
+    # the fine table is read lazily, per probed shard
+    rng = np.random.default_rng(11)
+    coarse = rng.standard_normal((3, 8))
+    fine = [
+        (c * 2 + j, c, rng.standard_normal(8).tolist())
+        for c in range(3)
+        for j in range(2)
+    ]
+    path = str(tmp_path / "centroids2l")
+    IVFIndex2L(coarse, 2, fine_rows=fine).save(path, spark)
+
+    loaded, jobs = _jobs_in_group(spark, lambda: IVFIndex2L.load(path, spark))
+    assert jobs == []
+    assert np.array_equal(loaded.coarse, coarse)
+    assert loaded.fine_path == path + "__fine"
 
 
 def test_vector_lit_matches_per_element_literals(spark):
