@@ -52,6 +52,14 @@ class Result:
     distance: float
 
 
+def _results(rows) -> list[Result]:
+    """Collected ``(id, metadata, distance)`` rows as :class:`Result` objects."""
+    return [
+        Result(id=r["id"], metadata=json.loads(r["metadata"]), distance=r["distance"])
+        for r in rows
+    ]
+
+
 class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin):
     """Spark-native vector DB with the reference's public API.
 
@@ -913,6 +921,16 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         )
 
     # -- flagship read path ------------------------------------------------
+    #
+    # One retrieval planner: every read method is a short sequence of the
+    # helpers below (snapshot → probe → source → vector/lexical channel →
+    # metadata join) plus its OWN top-k operator.  Single-query methods keep
+    # the single-query operators (TakeOrderedAndProject via ``knn``, the
+    # ungrouped ``rrf_fuse``); batch methods keep the grouped ones
+    # (WindowGroupLimit).  Routing Q=1 through the batch operators was
+    # 1.6-2.5x slower (5k rows, dim 64, 4 cores), so the split stays.
+    # Operator entry points are looked up at call time (module attributes),
+    # never bound at import.
     def _query_vec(self, query: str | Sequence[float]) -> list[float]:
         """Embed text driver-side, or validate a PRECOMPUTED vector's
         dimension — the query-side twin of the ingest boundary's dim
@@ -927,6 +945,153 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 f"{self.embedding_dim}"
             )
         return qv
+
+    def _snapshot(self, version: int | None, use_index: bool) -> int | None:
+        """The ``version`` contract stated on :meth:`query`, for every read
+        method: versioned tables only, and an indexed read pins the
+        VERIFIED ``__ivf`` version of that commit — returned here (None for
+        head or exact reads) — or fails loudly."""
+        if version is None:
+            return None
+        self._require_versioned()
+        if not use_index:
+            return None
+        ivf_version = self._ivf_version_for_base(version)
+        if ivf_version is None:
+            raise ValueError(
+                f"no verified index snapshot for version {version} of "
+                f"table {self.name!r}: the stamp history maps only "
+                "commits whose index sync verified, and mutations/"
+                "rebuilds reset it — run the exact path (omit "
+                "use_index)"
+            )
+        return ivf_version
+
+    def _probe_clusters(
+        self, qvecs: list[list[float]], nprobe: int | None
+    ) -> list[list[int]]:
+        """Each query's ``nprobe`` nearest IVF clusters, nearest first
+        (``nprobe`` resolves explicit > calibrated > 4)."""
+        _, ivf = self._load_ivf()
+        nprobe = self._resolve_nprobe(nprobe)
+        return [ivf.nearest_centroids(qv, nprobe) for qv in qvecs]
+
+    def _probed_source(
+        self,
+        clusters: list[int],
+        ivf_version: int | None,
+        filters: Optional[dict] = None,
+    ) -> DataFrame:
+        """The ``__ivf`` layout pruned to ``clusters`` (the ``isin`` is
+        Spark-side partition pruning), optionally filtered."""
+        src = self._read_ivf_probes(clusters, version=ivf_version).filter(
+            F.col("cluster_id").isin(clusters)
+        )
+        return src.filter(compile_filters(filters)) if filters else src
+
+    def _source(self, filters: Optional[dict], version: int | None) -> DataFrame:
+        """The filtered corpus: :meth:`_filtered_source` (manifest-stats
+        file pruning) plus the exact row filter."""
+        src = self._filtered_source(filters, version=version)
+        return src.filter(compile_filters(filters)) if filters else src
+
+    def _vector_topk_multi(
+        self,
+        qvecs: list[list[float]],
+        k: int,
+        filters: Optional[dict],
+        *,
+        use_index: bool,
+        nprobe: int | None,
+        version: int | None,
+        ivf_version: int | None,
+        src: DataFrame | None = None,
+    ) -> tuple[DataFrame, DataFrame]:
+        """The batch vector channel: per-query top-k ``(q_id, id,
+        distance)`` as a Partial-mode WindowGroupLimit, so each corpus
+        partition ships at most Q×k rows into the shuffle.  ``use_index``
+        scans the UNION of every query's probed clusters and a broadcast
+        (q_id, cluster_id) join restricts each query to ITS clusters
+        (``operators/ann.py:ivf_topk_multi``); otherwise brute force over
+        ``src`` (the caller's filtered corpus, or :meth:`_source` when
+        None).  Returns ``(top, scanned)`` — ``scanned`` carries the
+        metadata of every row ``top`` can name."""
+        from modal_vector_db_spark.operators import ann
+
+        if use_index:
+            probes = self._probe_clusters(qvecs, nprobe)
+            probe_df = self.spark.createDataFrame(
+                [(i, int(c), qv) for i, qv in enumerate(qvecs) for c in probes[i]],
+                "q_id int, cluster_id int, q_vec array<double>",
+            )
+            union = sorted({c for cs in probes for c in cs})
+            scanned = self._probed_source(union, ivf_version, filters)
+            return ann.ivf_topk_multi(scanned, probe_df, k=k, id_col="id"), scanned
+        qdf = self.spark.createDataFrame(
+            list(enumerate(qvecs)), "q_id int, q_vec array<double>"
+        )
+        if src is None:
+            src = self._source(filters, version)
+        return ann.brute_force_topk_multi(src, qdf, k=k, id_col="id"), src
+
+    def _hybrid_inputs(
+        self,
+        terms: list[str],
+        filters: Optional[dict],
+        version: int | None,
+        text_field: str,
+        *,
+        use_text_index: bool,
+        use_index: bool,
+        use_graph_index: bool,
+    ) -> tuple[DataFrame, int | None, DataFrame, dict | None]:
+        """The hybrid twins' shared setup: channel checks, the verified
+        snapshot, the filtered corpus ``src``, and the lexical channel's
+        input.  Returns ``(src, ivf_version, lex_src, lex_stats)``:
+        ``lex_stats`` is None on the scan path (``lex_src`` = THE
+        :meth:`_text_docs` projection — never inlined: postings must
+        tokenize what the scan tokenizes) and the index calibration
+        ``{n, avgdl, buckets}`` with ``use_text_index`` (``lex_src`` = the
+        postings of ``terms``' buckets)."""
+        if use_graph_index and use_index:
+            raise ValueError(
+                "use_graph_index and use_index are mutually exclusive — "
+                "pick ONE vector channel"
+            )
+        if use_graph_index and version is not None:
+            raise ValueError(
+                "use_graph_index=True is head-only: the graph epoch mirrors "
+                "the head commit (run the scan/IVF path for time travel)"
+            )
+        if use_text_index and filters:
+            raise ValueError(
+                "use_text_index=True cannot apply filters: postings carry "
+                "no metadata and the BM25 calibration stats cover the "
+                "WHOLE corpus — use the scan path for filtered hybrid"
+            )
+        ivf_version = self._snapshot(version, use_index)
+        src = self._source(filters, version)
+        if not use_text_index:
+            return src, ivf_version, self._text_docs(src, text_field), None
+        from modal_vector_db_spark.operators.hybrid import term_buckets
+
+        # version=N → the verified ledger pair for N (raises loudly if
+        # none); open mutation window → the last verified head pair;
+        # otherwise live head stats + head postings
+        pv, n_cal, dl_cal, buckets = self._resolve_text_index_read(
+            version, text_field
+        )
+        postings = self._read_text_buckets(term_buckets(terms, buckets), version=pv)
+        stats = {"n": n_cal, "avgdl": dl_cal / max(n_cal, 1.0), "buckets": buckets}
+        return src, ivf_version, postings, stats
+
+    @staticmethod
+    def _join_metadata(top: DataFrame, src: DataFrame, *cols) -> DataFrame:
+        """Resolve a top-k result's metadata from ``src``.  The result is
+        ≤ Q×k rows — the build side of the join, hinted explicitly
+        (consistent with the insert/conflict paths) rather than relying on
+        AQE to notice it is tiny."""
+        return F.broadcast(top).join(src.select("id", "metadata"), "id").select(*cols)
 
     def query(
         self,
@@ -945,7 +1110,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         ``query`` may be text (embedded driver-side, U6) or a precomputed
         vector.  ``as_dataframe=True`` returns the lazy DataFrame — the
         idiomatic Spark surface; default collects to ``Result`` rows for
-        reference parity.
+        reference parity.  Top-k plans as a TakeOrderedAndProject.
 
         ``use_index=True`` probes the IVF layout written by
         :meth:`create_index` — mirroring the reference, where only a table
@@ -953,41 +1118,25 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         and the default path stays exact brute force (``duckvdb.py:37-45``).
         The scan then prunes to the ``nprobe`` nearest cluster partitions.
 
-        ``version`` (versioned tables): time-travel query — exact KNN over
-        the table AS OF that commit, still manifest-stats-pruned when the
-        filter keys a declared stats field.  Composes with ``use_index``
-        when the stamp history holds a VERIFIED (base → ``__ivf``) version
-        pair for that commit (every insert sync records one,
-        :meth:`_stamp_ivf_version`): the probe then reads the index
-        manifest AS OF that pair's index version — same file-list pruning,
-        zero extra cost.  Head centroids are valid for any historical probe
+        ``version`` — THE snapshot contract of every read method
+        (versioned tables only): read the table AS OF that commit, still
+        manifest-stats-pruned when the filter keys a declared stats field.
+        With ``use_index`` it composes through the stamp history of
+        VERIFIED (base → ``__ivf``) version pairs (every insert sync
+        records one, :meth:`_stamp_ivf_version`): the probe reads the index
+        manifest AS OF the pair's index version — same file-list pruning,
+        zero extra cost; head centroids are valid for any historical probe
         because rebuilds reset the history with the index.  A version with
         no verified pair (pre-index commits, raced syncs, post-mutation
         rebuilds) fails loudly instead of serving the wrong snapshot.
         """
         if compressed and not use_index:
             raise ValueError("compressed=True requires use_index=True (build with create_index(pq_m=...))")
-        ivf_version: int | None = None
-        if version is not None:
-            self._require_versioned()
-            if use_index:
-                ivf_version = self._ivf_version_for_base(version)
-                if ivf_version is None:
-                    raise ValueError(
-                        f"no verified index snapshot for version {version} of "
-                        f"table {self.name!r}: the stamp history maps only "
-                        "commits whose index sync verified, and mutations/"
-                        "rebuilds reset it — run the exact path (omit "
-                        "use_index)"
-                    )
+        ivf_version = self._snapshot(version, use_index)
         qv = self._query_vec(query)
         if use_index:
-            ivf_table, ivf = self._load_ivf()
-            nprobe = self._resolve_nprobe(nprobe)
-            probes = ivf.nearest_centroids(qv, nprobe)
-            src = self._read_ivf_probes(probes, version=ivf_version).filter(
-                F.col("cluster_id").isin(probes)
-            )
+            (probes,) = self._probe_clusters([qv], nprobe)
+            src = self._probed_source(probes, ivf_version)
             if compressed:
                 # IVF+PQ: ADC over the code column inside the probed
                 # partitions picks k·refine_factor candidates, then the
@@ -1032,13 +1181,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             # we pin them so results are reproducible across runs/engines).
             tie_break="id",
         )
-        if as_dataframe:
-            return out
-        return [
-            Result(id=r["id"], metadata=json.loads(r["metadata"]), distance=r["distance"])
-            for r in out.collect()
-        ]
-
+        return out if as_dataframe else _results(out.collect())
 
     def query_batch(
         self,
@@ -1055,73 +1198,22 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         embedded driver-side via the registry embedder, mixed freely with
         precomputed vectors.  Returns a DataFrame (q_id, id, metadata,
         distance) with q_id = the query's position in ``queries``; per-query
-        top-k is planned as a Partial-mode WindowGroupLimit, so each corpus
-        partition ships at most Q×k rows into the shuffle
-        (``operators/ann.py:brute_force_topk_multi``).
+        top-k plans as a WindowGroupLimit (:meth:`_vector_topk_multi`).
 
-        ``use_index=True``: batched ANN over the IVF layout — the scan
-        prunes to the UNION of every query's ``nprobe`` nearest cluster
-        partitions, and a broadcast (q_id, cluster_id) join restricts each
-        query to ITS probed clusters (``operators/ann.py:ivf_topk_multi``)
-        — one job, partition-pruned, instead of Q index queries.
-
-        ``version``: time-travel batch — top-k AS OF that commit (same
-        contract as :meth:`query`: versioned tables only; composes with
-        ``use_index`` via the verified stamp history, failing loudly for
-        commits with no verified index snapshot)."""
+        ``use_index=True``: batched ANN over the IVF layout — one job,
+        partition-pruned to the union of the queries' probed clusters,
+        instead of Q index queries.  ``version``: the snapshot contract of
+        :meth:`query`."""
         if not queries:
             raise ValueError("query_batch needs at least one query")
-        ivf_version: int | None = None
-        if version is not None:
-            self._require_versioned()
-            if use_index:
-                ivf_version = self._ivf_version_for_base(version)
-                if ivf_version is None:
-                    raise ValueError(
-                        f"no verified index snapshot for version {version} of "
-                        f"table {self.name!r}: the stamp history maps only "
-                        "commits whose index sync verified, and mutations/"
-                        "rebuilds reset it — run the exact path (omit "
-                        "use_index)"
-                    )
-        qvecs = []
-        for q in queries:
-            qvecs.append(self._query_vec(q))
-        if use_index:
-            from modal_vector_db_spark.operators.ann import ivf_topk_multi
-
-            ivf_table, ivf = self._load_ivf()
-            nprobe = self._resolve_nprobe(nprobe)
-            probe_rows = [
-                (i, int(c), qv)
-                for i, qv in enumerate(qvecs)
-                for c in ivf.nearest_centroids(qv, nprobe)
-            ]
-            probes = self.spark.createDataFrame(
-                probe_rows, "q_id int, cluster_id int, q_vec array<double>"
-            )
-            probed_clusters = sorted({c for _, c, _ in probe_rows})
-            src = self._read_ivf_probes(probed_clusters, version=ivf_version).filter(
-                F.col("cluster_id").isin(probed_clusters)
-            )
-            if filters:
-                src = src.filter(compile_filters(filters))
-            out = ivf_topk_multi(src, probes, k=k, id_col="id")
-        else:
-            from modal_vector_db_spark.operators.ann import brute_force_topk_multi
-
-            qdf = self.spark.createDataFrame(
-                list(enumerate(qvecs)), "q_id int, q_vec array<double>"
-            )
-            src = self._filtered_source(filters, version=version)
-            if filters:
-                src = src.filter(compile_filters(filters))
-            out = brute_force_topk_multi(src, qdf, k=k, id_col="id")
-        # The (Q×k)-row result is the build side of the metadata join —
-        # hint it explicitly (consistent with the insert/conflict paths)
-        # rather than relying on AQE to notice it is tiny.
-        return F.broadcast(out).join(src.select("id", "metadata"), "id").select(
-            "q_id", "id", "metadata", F.round("distance", 6).alias("distance")
+        ivf_version = self._snapshot(version, use_index)
+        qvecs = [self._query_vec(q) for q in queries]
+        top, src = self._vector_topk_multi(
+            qvecs, k, filters, use_index=use_index, nprobe=nprobe,
+            version=version, ivf_version=ivf_version,
+        )
+        return self._join_metadata(
+            top, src, "q_id", "id", "metadata", F.round("distance", 6).alias("distance")
         )
 
     def query_hybrid(
@@ -1150,8 +1242,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         better (unlike :meth:`query`, where lower distance is better).
         ``filters`` (same DSL as :meth:`query`) restrict BOTH channels before
         scoring, so the fused top-k is exact over the filtered corpus.
-        ``version``: time-travel — both channels score the table AS OF that
-        commit (versioned tables only).
+        ``version``: both channels score the table AS OF that commit (the
+        snapshot contract of :meth:`query`).
 
         ``use_text_index=True``: the lexical channel reads the materialized
         inverted index (:meth:`create_text_index`) — only the query terms'
@@ -1159,8 +1251,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         expression-identical to the scan path (integer-valued inputs, one
         shared contribution expression).  Mutually exclusive with
         ``filters`` (postings carry no metadata — the calibration stats
-        would be over the wrong corpus) and with ``version`` (the index
-        mirrors the head).
+        would be over the wrong corpus); with ``version`` it reads the
+        verified postings ledger pair for that commit.
 
         ``use_index=True``: the VECTOR channel probes the IVF layout
         (``nprobe`` nearest cluster partitions) instead of scanning the
@@ -1168,9 +1260,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         shape where NO channel touches the corpus (the base is read only
         for the ≤k fused rows' metadata).  APPROXIMATE like every IVF
         query: rows outside the probed clusters can't rank; ``nprobe`` =
-        ``num_clusters`` recovers the exact result.  Composes with
-        ``version`` via the verified stamp history (same contract as
-        :meth:`query`); ``use_text_index`` stays head-only.
+        ``num_clusters`` recovers the exact result.
 
         ``use_graph_index=True``: the vector channel beam-searches the
         HNSW graph (:meth:`query_graph` internals — O(ef·log n) distance
@@ -1182,109 +1272,39 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         filtered beam.  Mutually exclusive with ``use_index`` and
         head-only (the graph epoch mirrors the head)."""
         from modal_vector_db_spark.functions.distance import cosine_distance, vector_lit
-        from modal_vector_db_spark.operators.hybrid import bm25_scores, rrf_fuse
+        from modal_vector_db_spark.operators import hybrid
 
         terms = [t for t in query.lower().split() if t]
         if not terms:
             raise ValueError("query_hybrid needs a non-empty text query")
-        if use_graph_index and use_index:
-            raise ValueError(
-                "use_graph_index and use_index are mutually exclusive — "
-                "pick ONE vector channel"
-            )
-        if use_graph_index and version is not None:
-            raise ValueError(
-                "use_graph_index=True is head-only: the graph epoch mirrors "
-                "the head commit (run the scan/IVF path for time travel)"
-            )
-        if version is not None:
-            self._require_versioned()
-        src = self._filtered_source(filters, version=version)
-        if filters:
-            src = src.filter(compile_filters(filters))
-        if use_text_index:
-            if filters:
-                raise ValueError(
-                    "use_text_index=True cannot apply filters: postings carry "
-                    "no metadata and the BM25 calibration stats cover the "
-                    "WHOLE corpus — use the scan path for filtered hybrid"
-                )
-            if version is not None and not self.versioned:
-                raise ValueError(
-                    "use_text_index=True with version= requires a versioned "
-                    "table (the snapshot ledger lives on the manifest log)"
-                )
-            from modal_vector_db_spark.operators.hybrid import (
-                bm25_from_postings,
-                term_buckets,
-            )
-
-            # version=N → the verified ledger pair for N (raises loudly if
-            # none); open mutation window → the last verified head pair;
-            # otherwise live head stats + head postings
-            pv, n_cal, dl_cal, buckets = self._resolve_text_index_read(
-                version, text_field
-            )
-            postings = self._read_text_buckets(
-                term_buckets(terms, buckets), version=pv
-            )
-            lex = bm25_from_postings(
-                postings,
-                terms,
-                n=n_cal,
-                avgdl=dl_cal / max(n_cal, 1.0),
-                id_col="id",
-                buckets=buckets,
-            )
+        src, ivf_version, lex_src, lex_stats = self._hybrid_inputs(
+            terms, filters, version, text_field, use_text_index=use_text_index,
+            use_index=use_index, use_graph_index=use_graph_index,
+        )
+        if lex_stats:
+            lex = hybrid.bm25_from_postings(lex_src, terms, id_col="id", **lex_stats)
         else:
-            # THE _text_docs projection (never inlined: postings must
-            # tokenize what the scan tokenizes)
-            lex = bm25_scores(self._text_docs(src, text_field), terms, id_col="id")
-        qv = [float(v) for v in self._embedder.embed(query)]
+            lex = hybrid.bm25_scores(lex_src, terms, id_col="id")
+        qv = self._query_vec(query)
         if use_graph_index:
             # graph beam as the vector channel: top_n candidates per the
             # rrf contract; the ≤top_n result is tiny, the fuse broadcasts
             vec = self._graph_topk_df(
                 [qv], top_n, ef_search, nprobe, filters
             ).select("id", "distance")
-        elif use_index:
-            ivf_version: int | None = None
-            if version is not None:
-                ivf_version = self._ivf_version_for_base(version)
-                if ivf_version is None:
-                    raise ValueError(
-                        f"no verified index snapshot for version {version} of "
-                        f"table {self.name!r} — run the scan path (omit "
-                        "use_index)"
-                    )
-            ivf_table, ivf = self._load_ivf()
-            nprobe = self._resolve_nprobe(nprobe)
-            probes = ivf.nearest_centroids(qv, nprobe)
-            vsrc = self._read_ivf_probes(probes, version=ivf_version).filter(
-                F.col("cluster_id").isin(probes)
-            )
-            if filters:
-                vsrc = vsrc.filter(compile_filters(filters))
+        else:
+            vsrc = src
+            if use_index:
+                (probes,) = self._probe_clusters([qv], nprobe)
+                vsrc = self._probed_source(probes, ivf_version, filters)
             vec = vsrc.select(
                 "id", cosine_distance(F.col("embedding"), vector_lit(qv)).alias("distance")
             )
-        else:
-            vec = src.select(
-                "id", cosine_distance(F.col("embedding"), vector_lit(qv)).alias("distance")
-            )
-        fused = rrf_fuse(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
-        # fused is <= k rows: hint explicitly rather than relying on AQE
-        # to notice it is tiny (the query_batch rule)
-        out = F.broadcast(fused).join(src.select("id", "metadata"), "id").select(
-            "id", "metadata", F.col("score").alias("distance")
-        )
+        fused = hybrid.rrf_fuse(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
+        out = self._join_metadata(fused, src, "id", "metadata", F.col("score").alias("distance"))
         if as_dataframe:
             return out
-        rows = sorted(out.collect(), key=lambda r: (-r["distance"], r["id"]))
-        return [
-            Result(id=r["id"], metadata=json.loads(r["metadata"]), distance=r["distance"])
-            for r in rows
-        ]
+        return _results(sorted(out.collect(), key=lambda r: (-r["distance"], r["id"])))
 
     def query_hybrid_batch(
         self,
@@ -1315,24 +1335,15 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         ``use_text_index=True``, ONE postings read pruned to the UNION of
         all queries' term buckets — no matter how many queries ride on it
         (``operators/hybrid.py:bm25_scores_multi``); the vector channel is
-        the batched brute-force / IVF top-k (one job for Q queries,
-        ``operators/ann.py``); fusion ranks within q_id-partitioned
-        windows (WindowGroupLimit — each partition ships ≤ top_n rows per
-        query).  Per-query rows are bit-identical to :meth:`query_hybrid`
-        (test-pinned).
+        the batched brute-force / IVF top-k (:meth:`_vector_topk_multi`);
+        fusion ranks within q_id-partitioned windows (WindowGroupLimit —
+        each partition ships ≤ top_n rows per query).  Per-query rows are
+        bit-identical to :meth:`query_hybrid` (test-pinned).
 
-        ``filters`` / ``use_index`` / ``use_graph_index`` / ``version``
-        compose exactly as on :meth:`query_hybrid`: the same DSL
-        restricts BOTH channels before scoring for every query in the
-        batch (verified stamp history; the graph channel is head-only
-        and exclusive with ``use_index``; ``use_text_index`` is
-        head-only and filter-free — postings carry no metadata)."""
-        from modal_vector_db_spark.functions.distance import cosine_distance, vector_lit
-        from modal_vector_db_spark.operators.hybrid import (
-            bm25_from_postings_multi,
-            bm25_scores_multi,
-            rrf_fuse_multi,
-        )
+        ``filters`` / ``use_text_index`` / ``use_index`` /
+        ``use_graph_index`` / ``version`` compose exactly as on
+        :meth:`query_hybrid`, for every query in the batch."""
+        from modal_vector_db_spark.operators import hybrid
 
         if not queries:
             raise ValueError("query_hybrid_batch needs at least one query")
@@ -1346,97 +1357,28 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 f"queries at positions {empties} have no terms"
             )
         pairs = sorted({(i, t) for i, ts in enumerate(per_q) for t in ts})
-        if use_graph_index and use_index:
-            raise ValueError(
-                "use_graph_index and use_index are mutually exclusive — "
-                "pick ONE vector channel"
-            )
-        if use_graph_index and version is not None:
-            raise ValueError(
-                "use_graph_index=True is head-only: the graph epoch mirrors "
-                "the head commit (run the scan/IVF path for time travel)"
-            )
-        if version is not None:
-            self._require_versioned()
-        src = self._filtered_source(filters, version=version)
-        if filters:
-            src = src.filter(compile_filters(filters))
-        if use_text_index:
-            if filters:
-                raise ValueError(
-                    "use_text_index=True cannot apply filters: postings carry "
-                    "no metadata and the BM25 calibration stats cover the "
-                    "WHOLE corpus — use the scan path for filtered hybrid"
-                )
-            if version is not None and not self.versioned:
-                raise ValueError(
-                    "use_text_index=True with version= requires a versioned "
-                    "table (the snapshot ledger lives on the manifest log)"
-                )
-            from modal_vector_db_spark.operators.hybrid import term_buckets
-
-            pv, n_cal, dl_cal, buckets = self._resolve_text_index_read(
-                version, text_field
-            )
-            all_terms = sorted({t for _, t in pairs})
-            postings = self._read_text_buckets(
-                term_buckets(all_terms, buckets), version=pv
-            )
-            lex = bm25_from_postings_multi(
-                postings,
-                pairs,
-                n=n_cal,
-                avgdl=dl_cal / max(n_cal, 1.0),
-                id_col="id",
-                buckets=buckets,
-            )
+        src, ivf_version, lex_src, lex_stats = self._hybrid_inputs(
+            sorted({t for _, t in pairs}), filters, version, text_field,
+            use_text_index=use_text_index, use_index=use_index,
+            use_graph_index=use_graph_index,
+        )
+        if lex_stats:
+            lex = hybrid.bm25_from_postings_multi(lex_src, pairs, id_col="id", **lex_stats)
         else:
-            # same rule as query_hybrid: the ONE _text_docs projection
-            lex = bm25_scores_multi(self._text_docs(src, text_field), pairs, id_col="id")
-        qvecs = [[float(v) for v in self._embedder.embed(q)] for q in queries]
+            lex = hybrid.bm25_scores_multi(lex_src, pairs, id_col="id")
+        qvecs = [self._query_vec(q) for q in queries]
         if use_graph_index:
             vec = self._graph_topk_df(
                 qvecs, top_n, ef_search, nprobe, filters
             ).select("q_id", "id", "distance")
-        elif use_index:
-            from modal_vector_db_spark.operators.ann import ivf_topk_multi
-
-            ivf_version: int | None = None
-            if version is not None:
-                ivf_version = self._ivf_version_for_base(version)
-                if ivf_version is None:
-                    raise ValueError(
-                        f"no verified index snapshot for version {version} of "
-                        f"table {self.name!r} — run the scan path (omit "
-                        "use_index)"
-                    )
-            ivf_table, ivf = self._load_ivf()
-            nprobe = self._resolve_nprobe(nprobe)
-            probe_rows = [
-                (i, int(c), qv)
-                for i, qv in enumerate(qvecs)
-                for c in ivf.nearest_centroids(qv, nprobe)
-            ]
-            probes = self.spark.createDataFrame(
-                probe_rows, "q_id int, cluster_id int, q_vec array<double>"
-            )
-            probed_clusters = sorted({c for _, c, _ in probe_rows})
-            vsrc = self._read_ivf_probes(probed_clusters, version=ivf_version).filter(
-                F.col("cluster_id").isin(probed_clusters)
-            )
-            if filters:
-                vsrc = vsrc.filter(compile_filters(filters))
-            vec = ivf_topk_multi(vsrc, probes, k=top_n, id_col="id")
         else:
-            from modal_vector_db_spark.operators.ann import brute_force_topk_multi
-
-            qdf = self.spark.createDataFrame(
-                list(enumerate(qvecs)), "q_id int, q_vec array<double>"
+            vec, _ = self._vector_topk_multi(
+                qvecs, top_n, filters, use_index=use_index, nprobe=nprobe,
+                version=version, ivf_version=ivf_version, src=src,
             )
-            vec = brute_force_topk_multi(src, qdf, k=top_n, id_col="id")
-        fused = rrf_fuse_multi(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
-        return F.broadcast(fused).join(src.select("id", "metadata"), "id").select(
-            "q_id", "id", "metadata", F.col("score").alias("distance")
+        fused = hybrid.rrf_fuse_multi(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
+        return self._join_metadata(
+            fused, src, "q_id", "id", "metadata", F.col("score").alias("distance")
         )
 
     def compact(self, target_file_bytes: int = 128 * 1024 * 1024) -> int:

@@ -810,11 +810,7 @@ class GraphIndexMixin:
 
         meta = self._check_graph_epoch()
         efs = self._resolve_ef_search(ef_search, meta)
-        _, ivf = self._load_ivf()
-        np_resolved = self._resolve_nprobe(nprobe)
-        probes = {
-            i: ivf.nearest_centroids(qv, np_resolved) for i, qv in enumerate(qvecs)
-        }
+        probes = dict(enumerate(self._probe_clusters(qvecs, nprobe)))
         graph = self._cat.read_table(self.spark, self.name + "__hnsw", self.warehouse)
         nodes = self._cat.read_table(
             self.spark, self.name + "__hnsw_nodes", self.warehouse
@@ -869,7 +865,7 @@ class GraphIndexMixin:
         commit, plain tables the row count, both the IVF generation —
         and inserts/deletes MAINTAIN the pins incrementally, so only
         replace-shaped mutations demand a rebuild."""
-        from modal_vector_db_spark.engine import Result
+        from modal_vector_db_spark.engine import _results
 
         qv = self._query_vec(query)
         out = (
@@ -877,12 +873,7 @@ class GraphIndexMixin:
             .select("id", "metadata", "distance")
             .orderBy(F.col("distance").asc(), F.col("id").asc())
         )
-        if as_dataframe:
-            return out
-        return [
-            Result(id=r["id"], metadata=json.loads(r["metadata"]), distance=r["distance"])
-            for r in out.collect()
-        ]
+        return out if as_dataframe else _results(out.collect())
 
     def query_graph_batch(
         self,
@@ -899,5 +890,7 @@ class GraphIndexMixin:
         queries cost one cogroup pass, not Q jobs.  Same epoch/filters/
         ef-resolution contract as :meth:`query_graph`.  Returns a
         DataFrame ``(q_id, id, metadata, distance)``."""
+        if not queries:
+            raise ValueError("query_graph_batch needs at least one query")
         qvecs = [self._query_vec(q) for q in queries]
         return self._graph_topk_df(qvecs, k, ef_search, nprobe, filters)

@@ -73,18 +73,6 @@ def minhash_signature(shingles: Column, num_hashes: int) -> Column:
     )
 
 
-def minhash_signature_sql(shingles_expr: str, num_hashes: int) -> str:
-    """DuckDB transliteration of :func:`minhash_signature` (same constants,
-    same int64 arithmetic — bit-identical signatures)."""
-    h = md5_long_sql("s")
-    return (
-        f"list_transform(generate_series(0, {num_hashes - 1}), "
-        f"i -> list_min(list_transform("
-        f"list_transform({shingles_expr}, s -> {h} % {_MH_RED}), "
-        f"h -> ((1000003*i + 37) * h + (97 + 31*i)) % {_MH_MOD})))"
-    )
-
-
 def simhash64(toks: Column, bits: int = 60) -> Column:
     """SimHash over a token array: bit j is set iff the sum over tokens of
     ±1 (sign = bit j of the token hash) is positive.
@@ -120,12 +108,6 @@ def simhash64(toks: Column, bits: int = 60) -> Column:
     # hamming-0 mega-cluster (review finding; the NULL convention is what
     # signature_hamming_pairs already filters on)
     return F.when(F.size(toks) == 0, F.lit(None).cast("long")).otherwise(sig)
-
-
-def hamming_distance64(a: Column, b: Column) -> Column:
-    """Hamming distance between two int64 simhashes (popcount of xor)."""
-    x = a.bitwiseXOR(b)
-    return F.bit_count(x)
 
 
 def minhash_signature_from_hashes(hashes: Column, num_hashes: int) -> Column:

@@ -143,16 +143,6 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def shingles_sql(expr: str, n: int = 3) -> str:
-    t = tokens_sql(expr)
-    joined = f"list_aggregate(list_slice({t}, i, i + {n - 1}), 'string_agg', ' ')"
-    return (
-        f"(CASE WHEN len({t}) < {n} THEN [list_aggregate({t}, 'string_agg', ' ')] "
-        f"ELSE list_distinct(list_transform(generate_series(1, len({t}) - {n - 1}), "
-        f"i -> {joined})) END)"
-    )
-
-
 # Hashed shingles: the scale path for MinHash input.  Tokens are hashed ONCE
 # (md5 → 30-bit int), then each n-gram's hash is a cheap integer fold over n
 # consecutive token hashes — no n-gram string is ever materialized, no

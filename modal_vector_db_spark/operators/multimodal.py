@@ -382,16 +382,6 @@ def extract_media_features(df: DataFrame, blob_col: str = "blob", type_col: str 
     return pre.mapInPandas(_extract, MEDIA_FEATURES_SCHEMA)
 
 
-def resize_stub(df: DataFrame, width: int, height: int, blob_col: str = "blob") -> DataFrame:
-    """Resize plumbing for formats the stdlib cannot decode (JPEG/GIF
-    pixels): passes blobs through and records the target size
-    (schema/partitioning identical to the real op).  For PNG/BMP use
-    :func:`resize_image` — a REAL stdlib nearest-neighbor resize."""
-    return df.withColumn("target_width", F.lit(width)).withColumn(
-        "target_height", F.lit(height)
-    )
-
-
 def frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
     """Frame-sampling plumbing for video blobs: emits (doc_id, frame_idx)
     rows from the (fake-)decoded frame count — the explode shape of the

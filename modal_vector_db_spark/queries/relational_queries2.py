@@ -35,26 +35,6 @@ def _disc_price():
     return F.col("l_extendedprice").cast(DEC) * (F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC))
 
 
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS → left-semi join with a non-equi residual
-    (l_shipdate > o_orderdate).  Semi join never multiplies rows, so no
-    DISTINCT pass is needed — the shape that matters when lineitem is 100 TB."""
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    return (
-        o.join(
-            li,
-            (o.o_orderkey == li.l_orderkey) & (li.l_shipdate > o.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
 @register(
     "q7_volume_shipping",
     oracle="""

@@ -392,10 +392,3 @@ def _ivf2l_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=len(ivf._fine_rows),
     )
     return out.withColumn("distance", F.round(F.col("distance"), 6))
-
-
-def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate IVF probe (nprobe=4 of 8) — the production ANN path.
-    Not registered: no SQL oracle can express KMeans; recall-vs-exact is
-    asserted in tests/test_ann.py instead."""
-    return _ivf_query(spark, sf_dir, nprobe=4)

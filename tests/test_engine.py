@@ -801,3 +801,27 @@ def test_query_batch_indexed_matches_per_query(spark, tmp_path):
     )
     single_flt = db.query("5", k=3, filters={"grp": "odd"}, use_index=True, nprobe=4)
     assert sorted(r["id"] for r in flt.collect()) == sorted(s.id for s in single_flt)
+
+
+@pytest.fixture(scope="module")
+def graph_db(spark, tmp_path_factory):
+    db = VectorDB(spark, "emptybatch", embedding_dim=16, create_new_table=True,
+                  warehouse=str(tmp_path_factory.mktemp("wh_emptybatch")))
+    db.insert([{"text": f"doc {i}", "n": i} for i in range(40)], embed_field="text")
+    db.create_index(num_clusters=4)
+    db.create_graph_index(calibrate=False)
+    return db
+
+
+@pytest.mark.parametrize("method", ["query_batch", "query_hybrid_batch", "query_graph_batch"])
+def test_batch_methods_reject_empty_batch(graph_db, method, monkeypatch):
+    """Every batch read method rejects an empty batch with the same error,
+    before any I/O (no index load, epoch check or corpus read)."""
+
+    def no_io(*a, **kw):
+        raise AssertionError("I/O before the empty-batch check")
+
+    for attr in ("_load_ivf", "_check_graph_epoch", "_filtered_source"):
+        monkeypatch.setattr(graph_db, attr, no_io)
+    with pytest.raises(ValueError, match=f"^{method} needs at least one query$"):
+        getattr(graph_db, method)([])

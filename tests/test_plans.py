@@ -200,3 +200,34 @@ def test_batched_ivf_prunes_partitions_and_bounds_topk(spark, tmp_path):
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cluster_id" in m.group(1), "no cluster_id partition pruning"
+
+
+def test_facade_single_query_plans_take_ordered_batch_plans_window_limit(spark, tmp_path):
+    """The facade's single-query calls plan their top-k as a bounded-heap
+    TakeOrderedAndProject and its batch calls as a WindowGroupLimit, and the
+    split is deliberate: routing Q=1 through the batch operators was slower
+    every time (5k rows, dim 64, default IVF, 4 cores, 20 alternating
+    reps, medians) — ``query_hybrid_batch([t])`` 1838 ms vs
+    ``query_hybrid(t)`` 1176 ms, ``query_batch([v])`` 690 ms vs
+    ``query(v)`` 389 ms, ``query_batch([v], use_index=True)`` 640 ms vs
+    ``query(v, use_index=True)`` 253 ms."""
+    from modal_vector_db_spark.engine import VectorDB
+
+    db = VectorDB(spark, "shapes", embedding_dim=16, warehouse=str(tmp_path / "wh_shapes"),
+                  create_new_table=True)
+    db.insert([{"text": f"doc {i} topic {i % 5}", "n": i} for i in range(60)], embed_field="text")
+    db.create_index(num_clusters=4)
+    single = {
+        "query": db.query("doc 3", k=4, as_dataframe=True),
+        "query(use_index)": db.query("doc 3", k=4, use_index=True, nprobe=2, as_dataframe=True),
+        "query_hybrid": db.query_hybrid("doc 3", k=4, as_dataframe=True),
+    }
+    for name, df in single.items():
+        assert uses_take_ordered(df), name
+        assert window_group_limit_count(df) == 0, name
+    batch = {
+        "query_batch": db.query_batch(["doc 3", "doc 41"], k=4),
+        "query_hybrid_batch": db.query_hybrid_batch(["doc 3", "doc 41"], k=4),
+    }
+    for name, df in batch.items():
+        assert window_group_limit_count(df) >= 1, name
