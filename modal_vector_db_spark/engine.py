@@ -1109,8 +1109,11 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
 
         ``query`` may be text (embedded driver-side, U6) or a precomputed
         vector.  ``as_dataframe=True`` returns the lazy DataFrame — the
-        idiomatic Spark surface; default collects to ``Result`` rows for
-        reference parity.  Top-k plans as a TakeOrderedAndProject.
+        idiomatic Spark surface, with the template's SELECT DISTINCT as a
+        HashAggregate; default collects to ``Result`` rows for reference
+        parity, running the top-k without that aggregate and falling back to
+        the DISTINCT plan only when the collected rows hold a duplicate.
+        Top-k plans as a TakeOrderedAndProject.
 
         ``use_index=True`` probes the IVF layout written by
         :meth:`create_index` — mirroring the reference, where only a table
@@ -1170,18 +1173,27 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             # file-pruned from manifest stats when the filter keys a
             # declared stats field (no-op otherwise)
             src = self._filtered_source(filters, version=version)
-        out = knn(
-            src,
-            qv,
-            k=k,
-            filters=filters,
-            distinct=True,  # template parity: SELECT DISTINCT (duckvdb.py:111)
-            # Deterministic tie-break on id (the reference orders by distance
-            # alone, so equal-distance boundaries are engine-nondeterministic;
-            # we pin them so results are reproducible across runs/engines).
-            tie_break="id",
-        )
-        return out if as_dataframe else _results(out.collect())
+
+        def top(distinct: bool) -> DataFrame:
+            # Template parity: SELECT DISTINCT (duckvdb.py:111).
+            # Deterministic tie-break on id (the reference orders by
+            # distance alone, so equal-distance boundaries are
+            # engine-nondeterministic; we pin them so results are
+            # reproducible across runs/engines).
+            return knn(src, qv, k=k, filters=filters, distinct=distinct, tie_break="id")
+
+        if as_dataframe:
+            return top(True)
+        # Collected: the top-k without the DISTINCT aggregate (whose exchange
+        # ships every scanned row).  If its <= k rows are pairwise distinct,
+        # each is the first occurrence of its value, so they ARE the first k
+        # rows of the distinct sequence; only a duplicate (bulk loads are
+        # not deduplicated) re-runs the DISTINCT plan.  NaN != NaN in
+        # Python, while DISTINCT groups NaNs together.
+        rows = top(False).collect()
+        if len({tuple("NaN" if v != v else v for v in r) for r in rows}) < len(rows):
+            rows = top(True).collect()
+        return _results(rows)
 
     def query_batch(
         self,
@@ -2183,7 +2195,9 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         scan `ReadSchema` (column pruning), `PushedFilters`, and
         `TakeOrderedAndProject` (bounded-heap top-k, never a global sort);
         with ``use_index=True``, `PartitionFilters` on the probed
-        ``cluster_id`` partitions."""
+        ``cluster_id`` partitions.  This is the ``as_dataframe`` plan, with
+        the template's DISTINCT aggregate; a collected :meth:`query` runs
+        its top-k without it (see there)."""
         from modal_vector_db_spark.plans.inspect import executed_plan
 
         df = self.query(query, k=k, filters=filters, as_dataframe=True, **kwargs)

@@ -421,17 +421,19 @@ class IVFIndex2L:
     # -- assignment ----------------------------------------------------------
     def _fine_matrix(self):
         """(cluster_ids, coarse_ids, matrix) — the FULL fine set, loaded on
-        demand (assign-time only; queries never call this)."""
+        demand (assign-time only; queries never call this) on the driver
+        with pyarrow, zero Spark jobs."""
         if self._fine_rows is None:
-            rows = (
-                self._spark.read.parquet(self.fine_path)
-                .orderBy("cluster_id")
-                .collect()
+            import pyarrow.parquet as pq
+
+            t = pq.read_table(self.fine_path).sort_by("cluster_id")
+            self._fine_rows = list(
+                zip(
+                    t.column("cluster_id").to_pylist(),
+                    t.column("coarse_id").to_pylist(),
+                    t.column("centroid").to_pylist(),
+                )
             )
-            self._fine_rows = [
-                (int(r["cluster_id"]), int(r["coarse_id"]), list(r["centroid"]))
-                for r in rows
-            ]
         ids = np.array([r[0] for r in self._fine_rows], dtype=np.int64)
         co = np.array([r[1] for r in self._fine_rows], dtype=np.int64)
         mat = np.array([r[2] for r in self._fine_rows], dtype=np.float64)
@@ -636,8 +638,10 @@ class IVFIndex2L:
         if not _os.path.isdir(shard):
             self._shard_cache[coarse_id] = []
             return []
-        rows = self._spark.read.parquet(shard).collect()
-        out = [(int(r["cluster_id"]), list(r["centroid"])) for r in rows]
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(shard, columns=["cluster_id", "centroid"])
+        out = list(zip(t.column("cluster_id").to_pylist(), t.column("centroid").to_pylist()))
         self._shard_cache[coarse_id] = out
         return out
 

@@ -43,10 +43,14 @@ def knn(
     ``filters`` uses the metadata dict DSL (compiled pre-distance so Catalyst
     pushes it into the scan); ``filter_col`` accepts an arbitrary boolean
     Column for non-JSON tables.  ``distinct`` reproduces the reference's
-    SELECT DISTINCT template slot (P2 — redundant under unique ids but
-    preserved as semantics).  ``tie_break`` optionally adds a deterministic
-    secondary sort key so equal-distance boundaries are stable across
-    engines.
+    SELECT DISTINCT template slot (P2).  Its aggregate ships every scanned
+    row through an exchange, so a caller that collects can run without it
+    and check the ≤ k rows instead: if they are pairwise distinct they are
+    the first k rows of the distinct sequence (each is the first occurrence
+    of its value), and only a duplicate needs the DISTINCT plan
+    (``VectorDB.query``; bulk loads are not deduplicated).  ``tie_break``
+    optionally adds a deterministic secondary sort key so equal-distance
+    boundaries are stable across engines.
     """
     if filters:
         df = df.filter(compile_filters(filters))

@@ -235,20 +235,25 @@ class PQIndex:
 
     @classmethod
     def load(cls, path: str, spark: SparkSession) -> "PQIndex":
-        rows = spark.read.parquet(path).collect()
-        m = max(r["subspace"] for r in rows) + 1
-        ksub = max(r["code"] for r in rows) + 1
-        if len(rows) != m * ksub:
+        """Read the codebook table on the driver with pyarrow — zero Spark
+        jobs (it is read on every compressed query and every PQ sync)."""
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(path)
+        sub = t.column("subspace").to_numpy()
+        code = t.column("code").to_numpy()
+        m = int(sub.max()) + 1
+        ksub = int(code.max()) + 1
+        if t.num_rows != m * ksub:
             # np.empty slots for absent (subspace, code) rows would hold
             # uninitialized-memory garbage centroids and quantize
             # SILENTLY wrong (review finding: torn/hand-edited codebook
             # parquet) — fail loudly instead
             raise ValueError(
-                f"PQ codebook at {path!r} is incomplete: {len(rows)} rows "
+                f"PQ codebook at {path!r} is incomplete: {t.num_rows} rows "
                 f"for an inferred {m}x{ksub} grid — rebuild the index"
             )
-        dsub = len(rows[0]["centroid"])
-        books = np.empty((m, ksub, dsub))
-        for r in rows:
-            books[r["subspace"], r["code"]] = r["centroid"]
+        flat = t.column("centroid").combine_chunks().flatten().to_numpy()
+        books = np.empty((m, ksub, len(flat) // t.num_rows))
+        books[sub, code] = flat.reshape(t.num_rows, -1)
         return cls(books)

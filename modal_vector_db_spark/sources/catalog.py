@@ -12,11 +12,13 @@ atomically per batch via Spark's committer.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_WAREHOUSE = os.environ.get("SPARKVDB_WAREHOUSE", "/tmp/sparkvdb_warehouse")
 
@@ -143,10 +145,36 @@ def list_tables(warehouse: str | None = None) -> list[dict]:
     return out
 
 
+#: footer key under which Spark's parquet writer records the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_reader(spark: SparkSession, sample: str | None) -> DataFrameReader:
+    """``spark.read`` pinned to the schema Spark wrote into ``sample``'s
+    parquet footer, read on the driver with pyarrow — so the read starts no
+    schema-inference job.  Same schema as inference: without
+    ``mergeSchema`` Spark also takes it from one data file's footer, from
+    this same key, and partition columns (``cluster_id=N/``) still come
+    from path discovery.  A file without the key (not written by Spark),
+    an unreadable one, or no file at all falls back to plain inference."""
+    reader = spark.read
+    if sample is None:
+        return reader
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(sample).metadata or {}).get(SPARK_SCHEMA_KEY)
+    except (OSError, ValueError):
+        return reader
+    if raw is None:
+        return reader
+    return reader.schema(StructType.fromJson(json.loads(raw)))
+
+
 def read_table(spark: SparkSession, name: str, warehouse: str | None = None) -> DataFrame:
     p = db_path(name, warehouse)
     _recover_swap(p)
-    return spark.read.parquet(p)
+    return footer_reader(spark, next(_walk_leaf_files(p), None)).parquet(p)
 
 
 def sized_by_bytes(df: DataFrame, partition_by=None) -> DataFrame:
@@ -285,6 +313,19 @@ def footer_row_count(name: str, warehouse: str | None = None) -> int:
     return sum(_footer_rows(os.path.join(p, f)) for f in rels)
 
 
+def _walk_leaf_files(p: str):
+    """The leaf parquet files under directory ``p``, lazily, in walk order.
+    Skips Spark/metadata dirs exactly like Spark's own file listing
+    (_temporary staging, _SUCCESS, hidden files): a crashed append's
+    uncommitted task files must never enter a rewrite's file list —
+    explicit-path reads bypass Spark's underscore filter."""
+    for root, dirs, fs in os.walk(p):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in fs:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
+
+
 def _leaf_files(name: str, warehouse: str | None) -> tuple[list[str], list[str]]:
     """``(relative leaf parquet paths, partition column names)`` for a
     table directory.  Flat tables return ``(files, [])``; Hive-partitioned
@@ -294,16 +335,8 @@ def _leaf_files(name: str, warehouse: str | None) -> tuple[list[str], list[str]]
     through ``basePath`` so the partition column is recovered; restages
     write ``partitionBy`` the same columns)."""
     p = db_path(name, warehouse)
-    rels, pcols = [], []
-    for root, dirs, fs in os.walk(p):
-        # Skip Spark/metadata dirs exactly like Spark's own file listing
-        # (_temporary staging, _SUCCESS, hidden files): a crashed append's
-        # uncommitted task files must never enter a rewrite's file list —
-        # explicit-path reads bypass Spark's underscore filter.
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in fs:
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                rels.append(os.path.relpath(os.path.join(root, f), p))
+    rels = [os.path.relpath(f, p) for f in _walk_leaf_files(p)]
+    pcols = []
     for r in rels:
         segs = [s for s in os.path.dirname(r).split(os.sep) if "=" in s]
         if segs:
@@ -323,8 +356,10 @@ def _read_subset(spark: SparkSession, base_path: str, paths: list[str]) -> DataF
     """``basePath``-pinned read of an explicit leaf-file subset, so
     path-encoded partition columns survive subset reads.  SHARED by the
     plain catalog and the versioned manifest log (which passes its
-    ``data/`` dir as the base)."""
-    return spark.read.option("basePath", base_path).parquet(*paths)
+    ``data/`` dir as the base).  The schema comes from the first path's
+    footer (:func:`footer_reader`)."""
+    sample = paths[0] if paths else None
+    return footer_reader(spark, sample).option("basePath", base_path).parquet(*paths)
 
 
 def _files_with_matches(

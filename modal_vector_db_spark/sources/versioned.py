@@ -60,6 +60,7 @@ from modal_vector_db_spark.sources.catalog import (
     _read_subset,
     db_path,
     drop_ids_frame,
+    footer_reader,
     sized_by_bytes,
     sized_for_append,
 )
@@ -430,8 +431,8 @@ def _tombstone_ids(
     rels = m.get("tombstones")
     if not rels:
         return None
-    base = db_path(name, warehouse)
-    return spark.read.parquet(*[os.path.join(base, r) for r in rels])
+    paths = [os.path.join(db_path(name, warehouse), r) for r in rels]
+    return footer_reader(spark, paths[0]).parquet(*paths)
 
 
 def _tombstone_ids_local(
