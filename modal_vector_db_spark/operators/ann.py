@@ -276,13 +276,11 @@ class IVFIndex2L:
         coarse: np.ndarray,
         k2: int,
         fine_path: str | None = None,
-        spark: SparkSession | None = None,
         fine_rows: list | None = None,
     ) -> None:
         self.coarse = np.asarray(coarse, dtype=np.float64)
         self.k2 = int(k2)
         self.fine_path = fine_path
-        self._spark = spark
         # (cluster_id, coarse_id, centroid) rows — populated at build time,
         # lazily (and only fully for assign) after load
         self._fine_rows = fine_rows
@@ -414,7 +412,6 @@ class IVFIndex2L:
         return cls(
             coarse.centroids,
             k2_,
-            spark=df.sparkSession,
             fine_rows=fine_rows,
         )
 
@@ -659,7 +656,6 @@ class IVFIndex2L:
         # a load()ed handle has _fine_rows=None until assign() lazily
         # populates it — materialize first, or re-save crashes
         # order-dependently (review finding)
-        self._spark = getattr(self, "_spark", None) or spark
         self._fine_matrix()
         # the coarse table IS the flat layout: one definition (IVFIndex.save)
         IVFIndex(self.coarse).save(path, spark)
@@ -701,7 +697,6 @@ class IVFIndex2L:
             IVFIndex.load(path, spark).centroids,
             int(marker["k2"]),
             fine_path=marker["fine_path"],
-            spark=spark,
         )
 
 

@@ -47,10 +47,10 @@ def knn(
     row through an exchange, so a caller that collects can run without it
     and check the ≤ k rows instead: if they are pairwise distinct they are
     the first k rows of the distinct sequence (each is the first occurrence
-    of its value), and only a duplicate needs the DISTINCT plan
-    (``VectorDB.query``; bulk loads are not deduplicated).  ``tie_break``
-    optionally adds a deterministic secondary sort key so equal-distance
-    boundaries are stable across engines.
+    of its value), and only a duplicate needs the DISTINCT plan, run as a
+    second scan (``VectorDB.query``; bulk loads are not deduplicated).
+    ``tie_break`` optionally adds a deterministic secondary sort key so
+    equal-distance boundaries are stable across engines.
     """
     if filters:
         df = df.filter(compile_filters(filters))

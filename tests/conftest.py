@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -17,6 +18,18 @@ def spark():
 
     s = get_spark("tests", shuffle_partitions=8)
     yield s
+
+
+def jobs_in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, its job ids)."""
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 @pytest.fixture(scope="session")

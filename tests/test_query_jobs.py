@@ -1,15 +1,14 @@
 """One Spark job per single query: reads take their schema from a parquet
 footer (``catalog.footer_reader``) instead of a schema-inference job, the
 collected ``query`` runs its top-k without the DISTINCT aggregate unless it
-sees a duplicate, and the index artifacts a query reads on the driver
-(PQ codebooks, two-level fine centroids) are read with pyarrow.
+sees a duplicate, and the PQ codebooks a query reads on the driver are
+read with pyarrow (the two-level fine centroids: ``tests/test_write_layout.py``).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -17,11 +16,11 @@ import pyarrow.parquet as pq
 
 from modal_vector_db_spark import engine as engine_mod
 from modal_vector_db_spark.engine import VectorDB
-from modal_vector_db_spark.operators.ann import IVFIndex2L
 from modal_vector_db_spark.operators.pq import PQIndex
 from modal_vector_db_spark.schema import ITEMS_SCHEMA
 from modal_vector_db_spark.sources import catalog
 from modal_vector_db_spark.sources import versioned as vcat
+from tests.conftest import jobs_in_group
 
 
 def _rows(lo, hi):
@@ -29,18 +28,6 @@ def _rows(lo, hi):
         {"text": f"doc {i} about topic {i % 7}", "category": i % 5, "n": i}
         for i in range(lo, hi)
     ]
-
-
-def _jobs_in_group(spark, fn):
-    """Run ``fn`` under a fresh job group; return (result, its job ids)."""
-    sc = spark.sparkContext
-    gid = f"qjobs-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(gid, gid)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 # -- job-free driver artifacts ---------------------------------------------
@@ -52,7 +39,7 @@ def test_pq_load_is_job_free_and_matches_spark_read(spark, tmp_path):
     path = str(tmp_path / "codebooks")
     PQIndex(books).save(path, spark)
 
-    loaded, jobs = _jobs_in_group(spark, lambda: PQIndex.load(path, spark))
+    loaded, jobs = jobs_in_group(spark, lambda: PQIndex.load(path, spark))
     assert jobs == []
     via_spark = np.empty_like(books)
     for r in spark.read.parquet(path).collect():
@@ -60,35 +47,6 @@ def test_pq_load_is_job_free_and_matches_spark_read(spark, tmp_path):
     assert np.array_equal(loaded.codebooks, via_spark)
     assert np.array_equal(loaded.codebooks, books)
     # the incomplete-grid ValueError: tests/test_pq.py
-
-
-def test_ivf2l_fine_reads_are_job_free_and_match_spark_read(spark, tmp_path):
-    rng = np.random.default_rng(13)
-    coarse = rng.standard_normal((3, 8))
-    fine = [
-        (c * 2 + j, c, rng.standard_normal(8).tolist())
-        for c in range(3)
-        for j in range(2)
-    ]
-    path = str(tmp_path / "centroids2l")
-    IVFIndex2L(coarse, 2, fine_rows=fine).save(path, spark)
-    rows = spark.read.parquet(path + "__fine").orderBy("cluster_id").collect()
-
-    shard, jobs = _jobs_in_group(
-        spark, lambda: IVFIndex2L.load(path, spark)._fine_of_coarse(1)
-    )
-    assert jobs == []
-    assert shard == [
-        (r["cluster_id"], list(r["centroid"])) for r in rows if r["coarse_id"] == 1
-    ]
-
-    (ids, co, mat), jobs = _jobs_in_group(
-        spark, lambda: IVFIndex2L.load(path, spark)._fine_matrix()
-    )
-    assert jobs == []
-    assert ids.tolist() == [r["cluster_id"] for r in rows]
-    assert co.tolist() == [r["coarse_id"] for r in rows]
-    assert np.array_equal(mat, np.array([r["centroid"] for r in rows]))
 
 
 # -- jobs-per-call ceilings ---------------------------------------------------
@@ -108,7 +66,7 @@ def test_single_query_launches_one_job(spark, tmp_path):
     for fn in calls.values():
         fn()  # the first indexed read of a handle runs its consistency probe
     for name, fn in calls.items():
-        res, jobs = _jobs_in_group(spark, fn)
+        res, jobs = jobs_in_group(spark, fn)
         assert len(res) == 5
         assert len(jobs) == 1, (name, jobs)
 
@@ -123,10 +81,10 @@ def test_versioned_stats_filtered_query_jobs_after_tombstone_delete(spark, tmp_p
     def ask():
         return db.query("topic 3", k=5, filters={"category": 2})
 
-    _, jobs = _jobs_in_group(spark, ask)
+    _, jobs = jobs_in_group(spark, ask)
     assert len(jobs) == 1
     assert db.delete({"category": 2, "n": ("in", [2, 7, 12])}, tombstone=True) == 3
-    res, jobs = _jobs_in_group(spark, ask)
+    res, jobs = jobs_in_group(spark, ask)
     # the merge-on-read mask is a broadcast DISTINCT of the tombstone ids:
     # its shuffle and its broadcast are one job each, beside the top-k
     assert len(jobs) == 3
@@ -254,7 +212,7 @@ def test_footer_schema_equals_inferred_schema(spark, tmp_path):
     )
 
     for name, (footer, inferred) in cases.items():
-        got, jobs = _jobs_in_group(spark, footer)
+        got, jobs = jobs_in_group(spark, footer)
         assert jobs == [], name
         want = inferred().schema
         assert got.schema == want, name

@@ -7,8 +7,6 @@ pins that ride with it (one-call vector literal, job-free centroid load).
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -17,6 +15,7 @@ from modal_vector_db_spark.functions.distance import vector_lit
 from modal_vector_db_spark.operators.ann import IVFIndex, IVFIndex2L
 from modal_vector_db_spark.sources import catalog
 from modal_vector_db_spark.sources import versioned as vcat
+from tests.conftest import jobs_in_group
 
 K = 4
 
@@ -26,18 +25,6 @@ def _rows(lo, hi):
         {"text": f"doc {i} about topic {i % 7}", "category": i % 5, "n": i}
         for i in range(lo, hi)
     ]
-
-
-def _jobs_in_group(spark, fn):
-    """Run ``fn`` under a fresh job group; return (result, its job ids)."""
-    sc = spark.sparkContext
-    gid = f"layout-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(gid, gid)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 def test_versioned_insert_and_update_add_one_base_file(spark, tmp_path):
@@ -89,9 +76,9 @@ def test_ivf_load_is_job_free_and_matches_spark_read(spark, tmp_path):
     path = str(tmp_path / "centroids")
     IVFIndex(cents).save(path, spark)
 
-    loaded, jobs = _jobs_in_group(spark, lambda: IVFIndex.load(path, spark))
+    loaded, jobs = jobs_in_group(spark, lambda: IVFIndex.load(path, spark))
     assert jobs == []
-    rows, spark_jobs = _jobs_in_group(
+    rows, spark_jobs = jobs_in_group(
         spark, lambda: spark.read.parquet(path).orderBy("cluster_id").collect()
     )
     assert spark_jobs  # the probe does see jobs when there are some
@@ -103,7 +90,8 @@ def test_ivf_load_is_job_free_and_matches_spark_read(spark, tmp_path):
 
 def test_ivf2l_load_reads_coarse_table_job_free(spark, tmp_path):
     # the two-level loader reads its coarse table through IVFIndex.load;
-    # the fine table is read lazily, per probed shard
+    # the fine table is read lazily on the driver, per probed shard or
+    # whole for assign
     rng = np.random.default_rng(11)
     coarse = rng.standard_normal((3, 8))
     fine = [
@@ -113,11 +101,24 @@ def test_ivf2l_load_reads_coarse_table_job_free(spark, tmp_path):
     ]
     path = str(tmp_path / "centroids2l")
     IVFIndex2L(coarse, 2, fine_rows=fine).save(path, spark)
+    rows = spark.read.parquet(path + "__fine").orderBy("cluster_id").collect()
 
-    loaded, jobs = _jobs_in_group(spark, lambda: IVFIndex2L.load(path, spark))
+    loaded, jobs = jobs_in_group(spark, lambda: IVFIndex2L.load(path, spark))
     assert jobs == []
     assert np.array_equal(loaded.coarse, coarse)
     assert loaded.fine_path == path + "__fine"
+
+    shard, jobs = jobs_in_group(spark, lambda: loaded._fine_of_coarse(1))
+    assert jobs == []
+    assert shard == [
+        (r["cluster_id"], list(r["centroid"])) for r in rows if r["coarse_id"] == 1
+    ]
+
+    (ids, co, mat), jobs = jobs_in_group(spark, loaded._fine_matrix)
+    assert jobs == []
+    assert ids.tolist() == [r["cluster_id"] for r in rows]
+    assert co.tolist() == [r["coarse_id"] for r in rows]
+    assert np.array_equal(mat, np.array([r["centroid"] for r in rows]))
 
 
 def test_vector_lit_matches_per_element_literals(spark):
