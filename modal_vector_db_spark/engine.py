@@ -41,6 +41,7 @@ from modal_vector_db_spark.operators.filters import compile_filters
 from modal_vector_db_spark.operators.knn import knn
 from modal_vector_db_spark.schema import ITEMS_SCHEMA, json_to_uuid, stringify_metadata
 from modal_vector_db_spark.sources import catalog
+from modal_vector_db_spark.sources import versioned as vcat
 
 
 @dataclass
@@ -436,8 +437,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         carry no stats for the declared columns — the manifest keeps every
         file, pruning is only ever an optimization."""
         if version is not None:
-            from modal_vector_db_spark.sources import versioned as vcat
-
             bounds = self._derive_prune_bounds(filters) or None
             try:
                 df = vcat.scan(
@@ -450,8 +449,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         bounds = self._derive_prune_bounds(filters) if self.versioned else []
         if not bounds or not self._cat.table_exists(self.name, self.warehouse):
             return self.items()
-        from modal_vector_db_spark.sources import versioned as vcat
-
         df = vcat.scan(self.spark, self.name, self.warehouse, between=bounds)
         return df.select(*[f.name for f in ITEMS_SCHEMA.fields])
 
@@ -479,8 +476,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                     *[f.name for f in ITEMS_SCHEMA.fields]
                 )
             )
-            from modal_vector_db_spark.sources import versioned as vcat
-
             pre_head = vcat.current_version(self.name, self.warehouse) or 0
             n = self._cat.replace_table(
                 df, self.name, self.warehouse, **self._write_kwargs
@@ -795,8 +790,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         with the same semantics Delta's MERGE gets from optimistic
         concurrency.  A lost race costs one restage (the orphaned staged
         files age out via vacuum)."""
-        from modal_vector_db_spark.sources import versioned as vcat
-
         last_err: Exception | None = None
         for _ in range(16):
             head = vcat.current_version(self.name, self.warehouse) or 0
@@ -1006,33 +999,43 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         version: int | None,
         ivf_version: int | None,
         src: DataFrame | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
+        payload: Sequence[str] = (),
+    ) -> DataFrame:
         """The batch vector channel: per-query top-k ``(q_id, id,
-        distance)`` as a Partial-mode WindowGroupLimit, so each corpus
-        partition ships at most Q×k rows into the shuffle.  ``use_index``
-        scans the UNION of every query's probed clusters and a broadcast
-        (q_id, cluster_id) join restricts each query to ITS clusters
-        (``operators/ann.py:ivf_topk_multi``); otherwise brute force over
-        ``src`` (the caller's filtered corpus, or :meth:`_source` when
-        None).  Returns ``(top, scanned)`` — ``scanned`` carries the
-        metadata of every row ``top`` can name."""
+        *payload, distance)`` as a Partial-mode WindowGroupLimit, so each
+        corpus partition ships at most Q×k rows into the shuffle.
+        ``use_index`` scans the UNION of every query's probed clusters and
+        a broadcast (q_id, cluster_id) join restricts each query to ITS
+        clusters (``operators/ann.py:ivf_topk_multi``); otherwise brute
+        force over ``src`` (the caller's filtered corpus, or
+        :meth:`_source` when None).  Each query row carries its
+        driver-folded norm (``q_norm``); ``payload`` columns ride the
+        window with their row."""
+        from modal_vector_db_spark.functions.distance import l2_norm_value
         from modal_vector_db_spark.operators import ann
 
+        norms = [l2_norm_value(qv) for qv in qvecs]
+        kw = dict(k=k, id_col="id", q_norm_col="q_norm", payload=payload)
         if use_index:
             probes = self._probe_clusters(qvecs, nprobe)
             probe_df = self.spark.createDataFrame(
-                [(i, int(c), qv) for i, qv in enumerate(qvecs) for c in probes[i]],
-                "q_id int, cluster_id int, q_vec array<double>",
+                [
+                    (i, int(c), qv, norms[i])
+                    for i, qv in enumerate(qvecs)
+                    for c in probes[i]
+                ],
+                "q_id int, cluster_id int, q_vec array<double>, q_norm double",
             )
             union = sorted({c for cs in probes for c in cs})
             scanned = self._probed_source(union, ivf_version, filters)
-            return ann.ivf_topk_multi(scanned, probe_df, k=k, id_col="id"), scanned
+            return ann.ivf_topk_multi(scanned, probe_df, **kw)
         qdf = self.spark.createDataFrame(
-            list(enumerate(qvecs)), "q_id int, q_vec array<double>"
+            [(i, qv, norms[i]) for i, qv in enumerate(qvecs)],
+            "q_id int, q_vec array<double>, q_norm double",
         )
         if src is None:
             src = self._source(filters, version)
-        return ann.brute_force_topk_multi(src, qdf, k=k, id_col="id"), src
+        return ann.brute_force_topk_multi(src, qdf, **kw)
 
     def _hybrid_inputs(
         self,
@@ -1213,7 +1216,9 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         embedded driver-side via the registry embedder, mixed freely with
         precomputed vectors.  Returns a DataFrame (q_id, id, metadata,
         distance) with q_id = the query's position in ``queries``; per-query
-        top-k plans as a WindowGroupLimit (:meth:`_vector_topk_multi`).
+        top-k plans as a WindowGroupLimit (:meth:`_vector_topk_multi`) that
+        carries each row's metadata, so nothing is read twice and a table
+        holding repeated rows still returns at most k rows per query.
 
         ``use_index=True``: batched ANN over the IVF layout — one job,
         partition-pruned to the union of the queries' probed clusters,
@@ -1223,12 +1228,12 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             raise ValueError("query_batch needs at least one query")
         ivf_version = self._snapshot(version, use_index)
         qvecs = [self._query_vec(q) for q in queries]
-        top, src = self._vector_topk_multi(
+        top = self._vector_topk_multi(
             qvecs, k, filters, use_index=use_index, nprobe=nprobe,
-            version=version, ivf_version=ivf_version,
+            version=version, ivf_version=ivf_version, payload=("metadata",),
         )
-        return self._join_metadata(
-            top, src, "q_id", "id", "metadata", F.round("distance", 6).alias("distance")
+        return top.select(
+            "q_id", "id", "metadata", F.round("distance", 6).alias("distance")
         )
 
     def query_hybrid(
@@ -1286,7 +1291,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         channel's result exactly (test-pinned).  Filters compose via the
         filtered beam.  Mutually exclusive with ``use_index`` and
         head-only (the graph epoch mirrors the head)."""
-        from modal_vector_db_spark.functions.distance import cosine_distance, vector_lit
+        from modal_vector_db_spark.functions.distance import cosine_distance_to
         from modal_vector_db_spark.operators import hybrid
 
         terms = [t for t in query.lower().split() if t]
@@ -1313,7 +1318,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 (probes,) = self._probe_clusters([qv], nprobe)
                 vsrc = self._probed_source(probes, ivf_version, filters)
             vec = vsrc.select(
-                "id", cosine_distance(F.col("embedding"), vector_lit(qv)).alias("distance")
+                "id", cosine_distance_to(F.col("embedding"), qv).alias("distance")
             )
         fused = hybrid.rrf_fuse(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
         out = self._join_metadata(fused, src, "id", "metadata", F.col("score").alias("distance"))
@@ -1387,7 +1392,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 qvecs, top_n, ef_search, nprobe, filters
             ).select("q_id", "id", "distance")
         else:
-            vec, _ = self._vector_topk_multi(
+            vec = self._vector_topk_multi(
                 qvecs, top_n, filters, use_index=use_index, nprobe=nprobe,
                 version=version, ivf_version=ivf_version, src=src,
             )
@@ -1406,8 +1411,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self._require_rewritable()
         if self.versioned:
             import math
-
-            from modal_vector_db_spark.sources import versioned as vcat
 
             df = self.items()
             # Size the target from the CURRENT version's files only — data/
@@ -1436,10 +1439,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             return n_files
         return catalog.compact(self.spark, self.name, self.warehouse, target_file_bytes)
 
-    #: merge-on-read delete threshold: a mask must stay broadcast-tiny (it
-    #: anti-joins onto EVERY read until folded) — past this, the eager
-    #: file-pruned rewrite is the cheaper total cost
-    _TOMBSTONE_MAX_IDS = 10_000
+    #: merge-on-read delete threshold: a mask must stay tiny (it masks
+    #: EVERY read until folded) — past this, the eager file-pruned rewrite
+    #: is the cheaper total cost
+    _TOMBSTONE_MAX_IDS = vcat.TOMBSTONE_MAX_IDS
 
     def _fold_tombstones(self) -> bool:
         """Fold the merge-on-read delete mask into a real rewrite: masked
@@ -1454,8 +1457,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         True when a fold commit landed."""
         if not self.versioned:
             return False
-        from modal_vector_db_spark.sources import versioned as vcat
-
         head = vcat.current_version(self.name, self.warehouse) or 0
         if not head or not vcat._read_manifest(
             self.name, self.warehouse, head
@@ -1487,8 +1488,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         the ``__ivf`` stamp re-verifies via row totals on the next indexed
         query.  Returns the new head version."""
         self._require_versioned()
-        from modal_vector_db_spark.sources import versioned as vcat
-
         cols = []
         for f in fields:
             if f == "id":
@@ -1527,15 +1526,11 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
     def history(self) -> list[dict]:
         """Commit log of the base table, oldest first (version/op/n_files)."""
         self._require_versioned()
-        from modal_vector_db_spark.sources import versioned as vcat
-
         return vcat.history(self.name, self.warehouse)
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel: the table exactly as of ``version``."""
         self._require_versioned()
-        from modal_vector_db_spark.sources import versioned as vcat
-
         return vcat.read_table(self.spark, self.name, self.warehouse, version=version)
 
     def rollback(self, version: int) -> int:
@@ -1544,8 +1539,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         are projections of the abandoned head and are dropped; call
         :meth:`create_index` to rebuild against the restored data."""
         self._require_versioned()
-        from modal_vector_db_spark.sources import versioned as vcat
-
         v = vcat.rollback(self.name, version, self.warehouse)
         self._drop_index_tables()
         # a restored older version can hold keys the filter never saw
@@ -1562,8 +1555,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         clone_table``).  Derived indexes are not cloned (rebuild on the
         fork if needed)."""
         self._require_versioned()
-        from modal_vector_db_spark.sources import versioned as vcat
-
         vcat.clone_table(self.name, new_name, self.warehouse, version)
         # Stamp the fork's sidecar BEFORE constructing its handle: a stale
         # sidecar from a past (out-of-band-dropped) table of the same name
@@ -1597,8 +1588,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         are kept — they may be a live writer's staged files (Delta's VACUUM
         retention-age guard).  Returns files removed."""
         self._require_versioned()
-        from modal_vector_db_spark.sources import versioned as vcat
-
         n = vcat.vacuum(self.name, self.warehouse, keep_versions, orphan_grace_s)
         # the versioned __ivf layout accumulates its own commit history —
         # vacuum it on the same retention policy
@@ -1788,14 +1777,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             )
             pre_head = 0
             if self.versioned:
-                from modal_vector_db_spark.sources import versioned as vcat
-
                 pre_head = vcat.current_version(self.name, self.warehouse) or 0
             removed = None
             committed_v: int | None = None
             if self.versioned and tombstone is not False:
-                from modal_vector_db_spark.sources import versioned as vcat
-
                 # merge-on-read: matched ids from the LOGICAL view (already
                 # masked ids can never re-match, so the mask stays
                 # duplicate-free — the count-arithmetic contract)
@@ -2036,8 +2021,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                     text_pinned = updated.localCheckpoint(eager=True)
                 pre_head = 0
                 if self.versioned:
-                    from modal_vector_db_spark.sources import versioned as vcat
-
                     pre_head = vcat.current_version(self.name, self.warehouse) or 0
                 # File-pruned copy-on-write (both backends): only files
                 # that CONTAIN matched rows are rewritten — the
@@ -2170,8 +2153,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self._drop_index_tables(keep_text=True)
         pre_head = 0
         if self.versioned:
-            from modal_vector_db_spark.sources import versioned as vcat
-
             pre_head = vcat.current_version(self.name, self.warehouse) or 0
         n = self._cat.replace_table(
             self._with_stats_cols(out), self.name, self.warehouse, **self._write_kwargs
@@ -2215,8 +2196,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         any file lacks recorded stats (e.g. rows written by a caller that
         bypassed the facade)."""
         if self.versioned:
-            from modal_vector_db_spark.sources import versioned as vcat
-
             n = vcat.manifest_row_count(self.name, self.warehouse)
             if n is not None:
                 return n

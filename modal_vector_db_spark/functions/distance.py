@@ -7,10 +7,16 @@ JVM-side inside whole-stage codegen, which at 100 TB is the difference between
 a scan-rate-bound job and a Python-serialization-bound one.  A vectorized
 pandas_udf alternative exists for very high dims where per-element codegen
 becomes expression-tree heavy; for dim ≤ ~4k the native expression wins.
+
+Against a query vector known on the driver, :func:`cosine_distance_to`
+folds the query's norm there once (the same left fold, so the distance is
+bit-identical) instead of re-folding the literal on every row; a batch
+carries each query's norm as a column (``b_norm``).
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 import numpy as np
@@ -56,20 +62,41 @@ def sq_l2_distance(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
+def l2_norm_value(vec: Sequence[float]) -> float:
+    """:func:`l2_norm` of a driver-side vector: the expression's left fold
+    (``s = s + x*x`` in double, then the square root), so the value is
+    bit-identical to what the plan would compute per row."""
+    s = 0.0
+    for x in np.asarray(vec, dtype=np.float64).tolist():
+        s = s + x * x
+    return math.sqrt(s)
+
+
+def cosine_similarity(a: Column, b: Column, b_norm: Column | None = None) -> Column:
+    """``b_norm``: ``l2_norm(b)`` when the caller already has it (a literal
+    or a per-query column), so the plan does not fold ``b`` again."""
     # try_divide, not /: under ANSI mode (the Spark 4 default) a single
     # zero-norm vector anywhere in the corpus would raise DIVIDE_BY_ZERO
     # and fail the whole scan; NULL (ranked last by asc_nulls_last) is
     # the established convention for undefined distances.  Non-zero
     # results are bit-identical to the plain division.
-    return F.try_divide(dot_product(a, b), l2_norm(a) * l2_norm(b))
+    if b_norm is None:
+        b_norm = l2_norm(b)
+    return F.try_divide(dot_product(a, b), l2_norm(a) * b_norm)
 
 
-def cosine_distance(a: Column, b: Column) -> Column:
+def cosine_distance(a: Column, b: Column, b_norm: Column | None = None) -> Column:
     """1 − cosine similarity — parity with DuckDB ``array_cosine_distance``
     (reference query template ``duckvdb.py:111``; oracle uses
     ``1 - list_cosine_similarity``)."""
-    return F.lit(1.0) - cosine_similarity(a, b)
+    return F.lit(1.0) - cosine_similarity(a, b, b_norm)
+
+
+def cosine_distance_to(a: Column, vec: Sequence[float]) -> Column:
+    """``cosine_distance(a, vector_lit(vec))`` with ``vec``'s norm folded
+    once on the driver (:func:`l2_norm_value`) — the same doubles, one
+    interpreted fold per row fewer."""
+    return cosine_distance(a, vector_lit(vec), F.lit(l2_norm_value(vec)))
 
 
 def cosine_similarity_pandas_udf():

@@ -26,7 +26,11 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints (srp_band_k
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modal_vector_db_spark.functions.distance import cosine_distance, vector_lit
+from modal_vector_db_spark.functions.distance import (
+    cosine_distance,
+    cosine_distance_to,
+    vector_lit,
+)
 
 
 def brute_force_topk(
@@ -43,7 +47,7 @@ def brute_force_topk(
     return (
         df.select(
             F.col(id_col),
-            cosine_distance(F.col(vec_col), vector_lit(query_vec)).alias("distance"),
+            cosine_distance_to(F.col(vec_col), query_vec).alias("distance"),
         )
         .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
         .limit(k)
@@ -58,6 +62,9 @@ def brute_force_topk_multi(
     id_col: str = "vec_id",
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
+    *,
+    q_norm_col: str | None = None,
+    payload: Sequence[str] = (),
 ) -> DataFrame:
     """Batch top-k for MANY query vectors: broadcast the (small) query set
     against the (huge) corpus — a crossJoin that never shuffles the corpus —
@@ -65,9 +72,12 @@ def brute_force_topk_multi(
     with a **Partial-mode WindowGroupLimit** below the exchange (Spark
     3.5+): each input partition keeps only its local top-k per query
     before shuffling, so ≤ partitions×Q×k rows move, not corpus×Q.
-    Plan-asserted in tests/test_plans.py."""
+    Plan-asserted in tests/test_plans.py.  ``q_norm_col`` and ``payload``:
+    see :func:`_topk_per_query`."""
     joined = df.crossJoin(F.broadcast(queries))
-    return _topk_per_query(joined, k, vec_col, id_col, q_id_col, q_vec_col)
+    return _topk_per_query(
+        joined, k, vec_col, id_col, q_id_col, q_vec_col, q_norm_col, payload
+    )
 
 
 def _topk_per_query(
@@ -77,17 +87,25 @@ def _topk_per_query(
     id_col: str,
     q_id_col: str,
     q_vec_col: str,
+    q_norm_col: str | None = None,
+    payload: Sequence[str] = (),
 ) -> DataFrame:
     """Shared tail of every multi-query top-k: score (row, query) pairs and
     keep each query's k best — ONE definition of the distance expression,
     NULL policy, and tie-break, so the brute-force and IVF paths can never
-    silently diverge."""
+    silently diverge.  ``q_norm_col`` names a column holding each query's
+    driver-folded norm (:func:`~modal_vector_db_spark.functions.distance.l2_norm_value`),
+    so the plan does not fold the query again per row.  ``payload``
+    columns ride the window with their row, so the caller needs no second
+    scan to resolve them.  Returns ``(q_id, id, *payload, distance)``."""
     from pyspark.sql.window import Window
 
+    q_norm = F.col(q_norm_col) if q_norm_col else None
     scored = joined.select(
         F.col(q_id_col),
         F.col(id_col),
-        cosine_distance(F.col(vec_col), F.col(q_vec_col)).alias("distance"),
+        *payload,
+        cosine_distance(F.col(vec_col), F.col(q_vec_col), q_norm).alias("distance"),
     )
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("distance").asc_nulls_last(), F.col(id_col).asc()
@@ -107,6 +125,9 @@ def ivf_topk_multi(
     id_col: str = "id",
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
+    *,
+    q_norm_col: str | None = None,
+    payload: Sequence[str] = (),
 ) -> DataFrame:
     """Batched IVF ANN: per-query partition-pruned top-k in ONE job.
 
@@ -120,9 +141,12 @@ def ivf_topk_multi(
     lives in exactly one cluster and (q_id, cluster_id) pairs are unique,
     no (row, query) pair is ever scored twice.  Per-query top-k plans as
     the same Partial-mode WindowGroupLimit as the brute-force twin
-    (shared :func:`_topk_per_query` tail)."""
+    (shared :func:`_topk_per_query` tail, which also reads ``q_norm_col``
+    and ``payload``)."""
     joined = src.join(F.broadcast(probes), "cluster_id")
-    return _topk_per_query(joined, k, vec_col, id_col, q_id_col, q_vec_col)
+    return _topk_per_query(
+        joined, k, vec_col, id_col, q_id_col, q_vec_col, q_norm_col, payload
+    )
 
 
 #: Flat-IVF centroid-count bound: the centroid table is a driver-side

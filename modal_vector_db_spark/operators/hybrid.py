@@ -9,13 +9,16 @@ misses, and RRF combines the two rankings without score calibration
 
 Scale shape:
 
-- BM25 is one scan + explode of the corpus restricted to the QUERY terms
-  (the `isin` filter prunes the exploded stream before any shuffle), a
-  grouped tf aggregation on (doc, term), and two tiny broadcasts (per-term
-  document frequencies — |terms| rows — and the (N, avgdl) scalar).  No
-  inverted index is materialized; at 100 TB you would precompute `dl` and
-  persist (doc, term, tf) bucketed by term, but the per-query plan shape
-  is the same.
+- BM25 is one projection of the corpus: each row's text is tokenized
+  once (``split``), ``dl`` is the token count, and each query term's
+  ``tf`` is ``size(tokens) - size(array_remove(tokens, term))`` — no
+  explode, no (doc, term) shuffle, no ``dl`` join.  One global aggregate
+  over the same projection yields ``n``, ``avgdl`` and every term's ``df``
+  (a 1-row broadcast), and ``arrays_overlap`` keeps only the rows holding
+  a query term.  The corpus-sized work is two codegen'd scans; what moves
+  between tasks is the aggregate's partial rows.  At 100 TB the
+  materialized postings (:func:`build_text_postings`) replace the scan,
+  with the same contribution expression.
 - Each channel ends in orderBy(...).limit(top_n) — TakeOrderedAndProject,
   a bounded heap, never a full sort.  The rank window then runs over
   ≤ top_n rows (single tiny partition by construction).
@@ -49,40 +52,58 @@ def bm25_scores(
 
     Returns (id_col, score) for documents containing ≥1 query term; the
     score is rounded to 6dp (ranking key contract, see module docstring).
+    A document counts once toward ``n`` however its text reads (a NULL
+    text too); a repeated query term scores once.
     """
-    split = F.split(F.col(text_col), " ")
-    toks = docs.select(id_col, F.explode(split).alias("term")).filter(
-        F.col("term").isin(list(terms))
+    term_list = list(dict.fromkeys(terms))
+    toks = docs.select(id_col, F.split(F.col(text_col), " ").alias("_toks"))
+    tokens = F.col("_toks")
+    proj = toks.select(
+        id_col,
+        F.size(tokens).cast("double").alias("dl"),
+        F.arrays_overlap(tokens, F.array(*[F.lit(t) for t in term_list])).alias("_hit"),
+        *[
+            (F.size(tokens) - F.size(F.array_remove(tokens, t))).cast("double").alias(f"_tf{i}")
+            for i, t in enumerate(term_list)
+        ],
     )
-    dl = docs.select(id_col, F.size(split).cast("double").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("double").alias("n"), F.avg("dl").alias("avgdl")
+    tfs = [F.col(f"_tf{i}") for i in range(len(term_list))]
+    stats = proj.agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.avg("dl").alias("avgdl"),
+        *[F.count_if(tf > 0).cast("double").alias(f"_df{i}") for i, tf in enumerate(tfs)],
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    dfreq = tf.groupBy("term").agg(
-        F.countDistinct(id_col).cast("double").alias("df")
-    )
+    score = None
+    for i, tf in enumerate(tfs):
+        c = F.when(
+            tf > 0,
+            _bm25_contrib(tf, F.col(f"_df{i}"), F.col("dl"), F.col("n"), F.col("avgdl"), k1, b),
+        ).otherwise(F.lit(0.0))
+        score = c if score is None else score + c
     return (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, id_col)
+        proj.filter(F.col("_hit"))
         .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
-        .agg(F.round(F.sum(_bm25_contrib(k1, b)), 6).alias("score"))
+        .select(id_col, F.round(score, 6).alias("score"))
     )
 
 
-def _bm25_contrib(k1: float, b: float) -> Column:
-    """The per-(doc, term) BM25 contribution over columns (tf, df, dl, n,
-    avgdl) — ONE definition shared by the scan path and the materialized-
-    index path, so the two produce bit-identical scores (all inputs are
-    integer-valued doubles; the expression mirrors the DuckDB oracle
-    token-for-token:
+def _bm25_contrib(
+    tf: Column, df: Column, dl: Column, n: Column, avgdl: Column, k1: float, b: float
+) -> Column:
+    """The per-(doc, term) BM25 contribution — ONE definition shared by the
+    scan path and the materialized-index path, so the two produce
+    bit-identical scores (all inputs are integer-valued doubles; the
+    expression mirrors the DuckDB oracle token-for-token:
     ln((n - df + 0.5) / (df + 0.5) + 1) * tf*(k1+1)
     / (tf + k1*((1-b) + b*dl/avgdl)))."""
-    idf = F.log((F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5)) + F.lit(1))
-    return idf * F.col("tf") * F.lit(k1 + 1) / (
-        F.col("tf") + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+    idf = F.log((n - df + F.lit(0.5)) / (df + F.lit(0.5)) + F.lit(1))
+    return idf * tf * F.lit(k1 + 1) / (
+        tf + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * dl / avgdl)
     )
+
+
+#: :func:`_bm25_contrib`'s inputs as the postings paths name their columns
+_POSTING_COLS = ("tf", "df", "dl", "n", "avgdl")
 
 
 def build_text_postings(
@@ -160,7 +181,7 @@ def bm25_from_postings(
         .withColumn("avgdl", F.lit(float(avgdl)))
     )
     return scored.groupBy(id_col).agg(
-        F.round(F.sum(_bm25_contrib(k1, b)), 6).alias("score")
+        F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS), k1, b)), 6).alias("score")
     )
 
 
@@ -250,7 +271,7 @@ def bm25_scores_multi(
         .join(dl, id_col)
         .crossJoin(F.broadcast(stats))
         .groupBy("q_id", id_col)
-        .agg(F.round(F.sum(_bm25_contrib(k1, b)), 6).alias("score"))
+        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS), k1, b)), 6).alias("score"))
     )
 
 
@@ -284,7 +305,7 @@ def bm25_from_postings_multi(
         .withColumn("n", F.lit(float(n)))
         .withColumn("avgdl", F.lit(float(avgdl)))
         .groupBy("q_id", id_col)
-        .agg(F.round(F.sum(_bm25_contrib(k1, b)), 6).alias("score"))
+        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS), k1, b)), 6).alias("score"))
     )
 
 

@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from modal_vector_db_spark.functions.distance import cosine_distance, vector_lit
+from modal_vector_db_spark.functions.distance import cosine_distance_to
 from modal_vector_db_spark.operators.filters import compile_filters
 
 
@@ -56,7 +56,7 @@ def knn(
         df = df.filter(compile_filters(filters))
     if filter_col is not None:
         df = df.filter(filter_col)
-    dist = cosine_distance(F.col(vec_col), vector_lit(query_vec)).alias("distance")
+    dist = cosine_distance_to(F.col(vec_col), query_vec).alias("distance")
     out = df.select(*id_cols, dist)
     if distinct:
         out = out.distinct()

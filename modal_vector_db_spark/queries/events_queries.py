@@ -63,8 +63,9 @@ def events_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     COMPLETE hourly spine per event_type (sequence-explode of the global
     hour range against the distinct keys), hourly count (0 where no events)
     and the mean value forward-filled across empty hours (LOCF via
-    ``last(ignorenulls)`` over an ordered per-key window; decimal-exact
-    mean so both engines agree bit-for-bit before the 4dp cast).  At scale
+    ``last(ignorenulls)`` over an ordered per-key window; the decimal sum
+    is divided in DOUBLE as DuckDB divides ``DECIMAL / BIGINT``, and
+    rounded to 4dp as ``round(x * 10000) / 10000``).  At scale
     the spine generation is a per-key explode after the key shuffle — no
     driver loop, no cross-join blowup beyond keys × hours.  Streaming
     twins: the same windowed ops under a watermark in
@@ -105,7 +106,7 @@ def events_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("h"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(F.col("value").cast(DEC)) / F.count(F.lit(1))).alias("av"),
+        (F.sum(F.col("value").cast(DEC)).cast("double") / F.count(F.lit(1))).alias("av"),
     )
     bounds = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
@@ -132,8 +133,8 @@ def events_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("h").alias("window_start"),
             "event_type",
             F.coalesce("n", F.lit(0)).alias("n"),
-            F.round(
-                F.last("av", ignorenulls=True).over(locf_w).cast("double"), 4
+            (
+                F.round(F.last("av", ignorenulls=True).over(locf_w) * 10000, 0) / 10000
             ).alias("sum_value"),
         )
     )

@@ -435,6 +435,28 @@ def _tombstone_ids(
     return footer_reader(spark, paths[0]).parquet(*paths)
 
 
+#: merge-on-read mask ceiling (``VectorDB._TOMBSTONE_MAX_IDS``): a delete
+#: matching more ids rewrites eagerly, and a read inlines a mask of at most
+#: this many ids as an ``IN`` literal
+TOMBSTONE_MAX_IDS = 10_000
+
+
+def _tombstone_values(name: str, warehouse: str | None, m: dict) -> list | None:
+    """The mask's distinct ids, read on the driver with pyarrow (no Spark
+    job), or None when the version carries no tombstones."""
+    rels = m.get("tombstones")
+    if not rels:
+        return None
+    import pyarrow.parquet as pq
+
+    col = m.get("tombstone_col", "id")
+    base = db_path(name, warehouse)
+    vals = []
+    for r in rels:
+        vals += pq.ParquetFile(os.path.join(base, r)).read(columns=[col]).column(0).to_pylist()
+    return list(dict.fromkeys(vals))
+
+
 def _tombstone_ids_local(
     spark: SparkSession, name: str, warehouse: str | None, m: dict
 ) -> DataFrame | None:
@@ -443,26 +465,31 @@ def _tombstone_ids_local(
     ``input_file_name()`` probe, which rejects plans with two file
     sources.  Bounded by the merge-on-read contract: masks stay
     broadcast-tiny or they are folded."""
-    tomb = _tombstone_ids(spark, name, warehouse, m)
-    if tomb is None:
+    vals = _tombstone_values(name, warehouse, m)
+    if vals is None:
         return None
     col = m.get("tombstone_col", "id")
-    rows = [(r[col],) for r in tomb.select(col).distinct().collect()]
-    return spark.createDataFrame(rows, tomb.select(col).schema)
+    schema = _tombstone_ids(spark, name, warehouse, m).select(col).schema
+    return spark.createDataFrame([(v,) for v in vals], schema)
 
 
 def _apply_tombstones(
     spark: SparkSession, name: str, warehouse: str | None, m: dict, df: DataFrame
 ) -> DataFrame:
-    """Mask the manifest's tombstoned ids out of a read (broadcast
-    anti-join — the mask is tiny by the engine's threshold contract).
-    Zero cost when the version carries no tombstones."""
-    from pyspark.sql import functions as F
-
-    tomb = _tombstone_ids(spark, name, warehouse, m)
-    if tomb is None:
+    """Mask the manifest's tombstoned ids out of a read.  A mask of at most
+    :data:`TOMBSTONE_MAX_IDS` ids is an ``IN`` literal — no job; ``IS
+    NULL`` keeps NULL-id rows, as the anti-join does.  A larger mask (a
+    forced ``tombstone=True``, or several deletes' masks together) is a
+    broadcast anti-join.  Zero cost when the version carries no
+    tombstones."""
+    vals = _tombstone_values(name, warehouse, m)
+    if vals is None:
         return df
     col = m.get("tombstone_col", "id")
+    ids = [v for v in vals if v is not None]
+    if len(ids) <= TOMBSTONE_MAX_IDS:
+        return df.filter(F.col(col).isNull() | ~F.col(col).isin(ids))
+    tomb = _tombstone_ids(spark, name, warehouse, m)
     return df.join(F.broadcast(tomb.select(col).distinct()), col, "left_anti")
 
 

@@ -197,6 +197,68 @@ def test_srp_pandas_keys_match_expr(emb, spark):
     assert expr_keys == pandas_keys
 
 
+def _bits(v):
+    import struct
+
+    return None if v is None else "nan" if v != v else struct.pack("<d", v)
+
+
+def test_driver_query_norm_is_bit_identical(spark):
+    """The query norm folded on the driver (a literal for one query, a
+    ``q_norm`` column for a batch) gives the distance the plan-folded norm
+    gives, bit for bit — degenerate rows and queries included."""
+    import numpy as np
+
+    from modal_vector_db_spark.functions.distance import (
+        cosine_distance,
+        cosine_distance_to,
+        vector_lit,
+    )
+    from modal_vector_db_spark.operators.ann import brute_force_topk_multi
+
+    rng = np.random.default_rng(11)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
+    rows += [
+        (100, [0.0] * 8),  # zero-norm row
+        (101, None),  # NULL embedding
+        (102, [1.0, None] + [0.5] * 6),  # NULL element
+        (103, [1.0] * 5),  # wrong length
+        (104, [float("nan")] + [1.0] * 7),
+    ]
+    df = spark.createDataFrame(rows, "id int, embedding array<double>")
+    queries = [
+        [float(x) for x in rng.standard_normal(8)],
+        [float(x) for x in rng.standard_normal(8).astype(np.float32)],
+        [0.0] * 8,  # zero query vector
+        [float("nan")] + [1.0] * 7,
+    ]
+    emb = F.col("embedding")
+    for qv in queries:
+        got = df.select(
+            "id",
+            cosine_distance(emb, vector_lit(qv)).alias("plan"),
+            cosine_distance_to(emb, qv).alias("driver"),
+        ).collect()
+        assert len(got) == len(rows)
+        for r in got:
+            assert _bits(r["plan"]) == _bits(r["driver"]), (qv, r["id"])
+
+    from modal_vector_db_spark.functions.distance import l2_norm_value
+
+    qdf = spark.createDataFrame(
+        [(i, qv, l2_norm_value(qv)) for i, qv in enumerate(queries)],
+        "q_id int, q_vec array<double>, q_norm double",
+    )
+    k = len(rows)
+    plan = brute_force_topk_multi(df, qdf, k=k, id_col="id").collect()
+    driver = brute_force_topk_multi(df, qdf, k=k, id_col="id", q_norm_col="q_norm").collect()
+    key = lambda r: (r["q_id"], r["id"])  # noqa: E731
+    assert len(plan) == len(driver) == k * len(queries)
+    assert [(key(r), _bits(r["distance"])) for r in sorted(plan, key=key)] == [
+        (key(r), _bits(r["distance"])) for r in sorted(driver, key=key)
+    ]
+
+
 def test_pandas_cosine_close_to_expr(emb, spark):
     """The Arrow verify path must agree with the native expression to float
     noise (<1e-9 relative) — and the SRP pair SET at the 0.999 threshold

@@ -184,3 +184,57 @@ def test_hybrid_batch_filters_match_single(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="cannot apply filters"):
         db.query_hybrid_batch(qs, k=3, filters=flt, use_text_index=True)
+
+
+def _bm25_explode_shape(docs, terms, k1=1.2, b=0.75):
+    """The scan path's earlier shape — explode every token, aggregate tf by
+    (doc, term), df over that, and join ``dl`` back by id — kept here as the
+    reference the one-projection :func:`bm25_scores` must reproduce."""
+    from modal_vector_db_spark.operators.hybrid import _POSTING_COLS, _bm25_contrib
+
+    split = F.split(F.col("text"), " ")
+    toks = docs.select("doc_id", F.explode(split).alias("term")).filter(
+        F.col("term").isin(list(terms))
+    )
+    dl = docs.select("doc_id", F.size(split).cast("double").alias("dl"))
+    stats = dl.agg(F.count(F.lit(1)).cast("double").alias("n"), F.avg("dl").alias("avgdl"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).cast("double").alias("tf"))
+    dfreq = tf.groupBy("term").agg(F.countDistinct("doc_id").cast("double").alias("df"))
+    return (
+        tf.join(F.broadcast(dfreq), "term")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS), k1, b)), 6).alias("score"))
+    )
+
+
+def test_bm25_one_projection_matches_explode_shape(spark):
+    rows = [
+        (0, "spark merge window filter scan"),
+        (1, "spark spark spark merge merge"),
+        (2, None),  # no tokens, but still one of the n documents
+        (3, "window  window"),  # an empty token counts toward dl
+        (4, ""),
+        (5, "Spark MERGE spark"),  # case is the caller's business
+        (6, "scan table row value"),
+        (7, "merge"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    for terms in (
+        ["spark", "merge", "window"],
+        ["spark", "spark", "merge"],  # a repeated term scores once
+        ["spark", "absent"],  # a term in no document
+        ["absent"],
+        ["Spark", "MERGE"],
+        [""],
+    ):
+        got = sorted(map(tuple, bm25_scores(docs, terms).collect()))
+        want = sorted(map(tuple, _bm25_explode_shape(docs, terms).collect()))
+        assert got == want, terms
+    # the NULL text is in n: dropping it changes the idf, hence the scores
+    with_null = dict(map(tuple, bm25_scores(docs, ["merge"]).collect()))
+    without = dict(
+        map(tuple, bm25_scores(docs.filter(F.col("text").isNotNull()), ["merge"]).collect())
+    )
+    assert with_null.keys() == without.keys() and with_null != without

@@ -13,6 +13,7 @@ import os
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from modal_vector_db_spark import engine as engine_mod
 from modal_vector_db_spark.engine import VectorDB
@@ -71,7 +72,7 @@ def test_single_query_launches_one_job(spark, tmp_path):
         assert len(jobs) == 1, (name, jobs)
 
 
-def test_versioned_stats_filtered_query_jobs_after_tombstone_delete(spark, tmp_path):
+def test_versioned_stats_filtered_query_jobs_after_tombstone_delete(spark, tmp_path, monkeypatch):
     db = VectorDB(
         spark, "qj_v", embedding_dim=16, create_new_table=True, warehouse=str(tmp_path),
         versioned=True, stats_fields={"category": "double"},
@@ -85,10 +86,37 @@ def test_versioned_stats_filtered_query_jobs_after_tombstone_delete(spark, tmp_p
     assert len(jobs) == 1
     assert db.delete({"category": 2, "n": ("in", [2, 7, 12])}, tombstone=True) == 3
     res, jobs = jobs_in_group(spark, ask)
-    # the merge-on-read mask is a broadcast DISTINCT of the tombstone ids:
-    # its shuffle and its broadcast are one job each, beside the top-k
-    assert len(jobs) == 3
+    # the merge-on-read mask is read on the driver and applied as an IN
+    # literal: the top-k is the only job
+    assert len(jobs) == 1
     assert not {r.metadata["n"] for r in res} & {2, 7, 12}
+    # a mask above the ceiling takes the broadcast anti-join, same rows
+    monkeypatch.setattr(vcat, "TOMBSTONE_MAX_IDS", 2)
+    masked, jobs = jobs_in_group(spark, ask)
+    assert len(jobs) > 1
+    assert _triples(masked) == _triples(res)
+
+
+@pytest.mark.parametrize("call", ["hybrid", "batch_ivf"])
+def test_hybrid_and_batch_job_ceilings(spark, tmp_path, call):
+    db = VectorDB(
+        spark, f"qj_{call}", embedding_dim=16, create_new_table=True,
+        warehouse=str(tmp_path),
+    )
+    db.insert(_rows(0, 300), embed_field="text")
+    db.create_index(num_clusters=4, calibrate=False)
+    qs = ["topic 3", "doc 12 about", "topic 5"]
+    fn, ceiling, rows = {
+        # BM25 from one projection: its aggregate's broadcast, the fused
+        # top-k and the metadata join's broadcast, not a shuffle per step
+        "hybrid": (lambda: db.query_hybrid("doc about topic 3", k=5), 4, 5),
+        # the top-k carries the metadata: no second scan to resolve it
+        "batch_ivf": (lambda: db.query_batch(qs, k=5, use_index=True).collect(), 3, 15),
+    }[call]
+    fn()  # the first indexed read of a handle runs its consistency probe
+    res, jobs = jobs_in_group(spark, fn)
+    assert len(res) == rows
+    assert len(jobs) <= ceiling, jobs
 
 
 # -- DISTINCT semantics --------------------------------------------------------
@@ -145,6 +173,22 @@ def test_collected_query_reruns_distinct_plan_on_duplicates(spark, tmp_path, mon
     want = db.query(probe, k=10, as_dataframe=True).collect()
     assert _triples(got) == _rows_of(want)
     assert len({r.id for r in got}) == 10
+
+
+def test_query_batch_on_repeated_rows_returns_k_rows(spark, tmp_path):
+    items = _items(30)
+    # bulk loads are not deduplicated: every row twice
+    db = _load(spark, tmp_path, "qj_batch_dup", items + items)
+    meta = {i: m for i, m, _ in items}
+    probes = [items[0][2], items[5][2]]
+    got = db.query_batch(probes, k=3).collect()
+    for q_id, probe in enumerate(probes):
+        rows = sorted((r for r in got if r["q_id"] == q_id), key=lambda r: (r["distance"], r["id"]))
+        nearest = [r["id"] for r in db.query(probe, k=2, as_dataframe=True).collect()]
+        # the nearest row's two copies, then the next row: k rows, not a
+        # copy per stored duplicate
+        assert [r["id"] for r in rows] == [nearest[0], nearest[0], nearest[1]], q_id
+        assert all(r["metadata"] == meta[r["id"]] for r in rows)
 
 
 def test_collected_query_on_unique_rows_takes_no_fallback(spark, tmp_path, monkeypatch):
