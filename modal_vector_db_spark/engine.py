@@ -1008,30 +1008,22 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         a broadcast (q_id, cluster_id) join restricts each query to ITS
         clusters (``operators/ann.py:ivf_topk_multi``); otherwise brute
         force over ``src`` (the caller's filtered corpus, or
-        :meth:`_source` when None).  Each query row carries its
-        driver-folded norm (``q_norm``); ``payload`` columns ride the
-        window with their row."""
-        from modal_vector_db_spark.functions.distance import l2_norm_value
+        :meth:`_source` when None).  ``payload`` columns ride the window
+        with their row."""
         from modal_vector_db_spark.operators import ann
 
-        norms = [l2_norm_value(qv) for qv in qvecs]
-        kw = dict(k=k, id_col="id", q_norm_col="q_norm", payload=payload)
+        kw = dict(k=k, id_col="id", payload=payload)
         if use_index:
             probes = self._probe_clusters(qvecs, nprobe)
             probe_df = self.spark.createDataFrame(
-                [
-                    (i, int(c), qv, norms[i])
-                    for i, qv in enumerate(qvecs)
-                    for c in probes[i]
-                ],
-                "q_id int, cluster_id int, q_vec array<double>, q_norm double",
+                [(i, int(c), qv) for i, qv in enumerate(qvecs) for c in probes[i]],
+                "q_id int, cluster_id int, q_vec array<double>",
             )
             union = sorted({c for cs in probes for c in cs})
             scanned = self._probed_source(union, ivf_version, filters)
             return ann.ivf_topk_multi(scanned, probe_df, **kw)
         qdf = self.spark.createDataFrame(
-            [(i, qv, norms[i]) for i, qv in enumerate(qvecs)],
-            "q_id int, q_vec array<double>, q_norm double",
+            list(enumerate(qvecs)), "q_id int, q_vec array<double>"
         )
         if src is None:
             src = self._source(filters, version)
@@ -1439,10 +1431,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             return n_files
         return catalog.compact(self.spark, self.name, self.warehouse, target_file_bytes)
 
-    #: merge-on-read delete threshold: a mask must stay tiny (it masks
-    #: EVERY read until folded) — past this, the eager file-pruned rewrite
-    #: is the cheaper total cost
-    _TOMBSTONE_MAX_IDS = vcat.TOMBSTONE_MAX_IDS
+    #: merge-on-read delete threshold: a mask must stay broadcast-tiny (it
+    #: masks EVERY read until folded) — past this, the eager file-pruned
+    #: rewrite is the cheaper total cost
+    _TOMBSTONE_MAX_IDS = 10_000
 
     def _fold_tombstones(self) -> bool:
         """Fold the merge-on-read delete mask into a real rewrite: masked

@@ -11,7 +11,8 @@ becomes expression-tree heavy; for dim ≤ ~4k the native expression wins.
 Against a query vector known on the driver, :func:`cosine_distance_to`
 folds the query's norm there once (the same left fold, so the distance is
 bit-identical) instead of re-folding the literal on every row; a batch
-carries each query's norm as a column (``b_norm``).
+projects each query's norm on the query side of its join and passes it as
+``b_norm`` (``operators/ann.py:_with_q_norm``).
 """
 
 from __future__ import annotations
@@ -74,7 +75,8 @@ def l2_norm_value(vec: Sequence[float]) -> float:
 
 def cosine_similarity(a: Column, b: Column, b_norm: Column | None = None) -> Column:
     """``b_norm``: ``l2_norm(b)`` when the caller already has it (a literal
-    or a per-query column), so the plan does not fold ``b`` again."""
+    or a column projected once per query), so the plan does not fold ``b``
+    again per row."""
     # try_divide, not /: under ANSI mode (the Spark 4 default) a single
     # zero-norm vector anywhere in the corpus would raise DIVIDE_BY_ZERO
     # and fail the whole scan; NULL (ranked last by asc_nulls_last) is

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from modal_vector_db_spark.functions.distance import (
     cosine_distance,
     cosine_distance_to,
+    l2_norm,
     vector_lit,
 )
 
@@ -63,7 +64,6 @@ def brute_force_topk_multi(
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
     *,
-    q_norm_col: str | None = None,
     payload: Sequence[str] = (),
 ) -> DataFrame:
     """Batch top-k for MANY query vectors: broadcast the (small) query set
@@ -72,12 +72,19 @@ def brute_force_topk_multi(
     with a **Partial-mode WindowGroupLimit** below the exchange (Spark
     3.5+): each input partition keeps only its local top-k per query
     before shuffling, so ≤ partitions×Q×k rows move, not corpus×Q.
-    Plan-asserted in tests/test_plans.py.  ``q_norm_col`` and ``payload``:
-    see :func:`_topk_per_query`."""
-    joined = df.crossJoin(F.broadcast(queries))
-    return _topk_per_query(
-        joined, k, vec_col, id_col, q_id_col, q_vec_col, q_norm_col, payload
-    )
+    Plan-asserted in tests/test_plans.py.  ``payload``: see
+    :func:`_topk_per_query`."""
+    joined = df.crossJoin(F.broadcast(_with_q_norm(queries, q_vec_col)))
+    return _topk_per_query(joined, k, vec_col, id_col, q_id_col, q_vec_col, payload)
+
+
+#: each query's ``l2_norm``, projected on the (small) query side before the
+#: join so the corpus-sized scoring does not fold the query vector per row
+_Q_NORM = "_q_norm"
+
+
+def _with_q_norm(queries: DataFrame, q_vec_col: str) -> DataFrame:
+    return queries.withColumn(_Q_NORM, l2_norm(F.col(q_vec_col)))
 
 
 def _topk_per_query(
@@ -87,25 +94,23 @@ def _topk_per_query(
     id_col: str,
     q_id_col: str,
     q_vec_col: str,
-    q_norm_col: str | None = None,
     payload: Sequence[str] = (),
 ) -> DataFrame:
     """Shared tail of every multi-query top-k: score (row, query) pairs and
     keep each query's k best — ONE definition of the distance expression,
     NULL policy, and tie-break, so the brute-force and IVF paths can never
-    silently diverge.  ``q_norm_col`` names a column holding each query's
-    driver-folded norm (:func:`~modal_vector_db_spark.functions.distance.l2_norm_value`),
-    so the plan does not fold the query again per row.  ``payload``
-    columns ride the window with their row, so the caller needs no second
-    scan to resolve them.  Returns ``(q_id, id, *payload, distance)``."""
+    silently diverge.  ``joined`` carries each query's norm
+    (:func:`_with_q_norm`), the same fold the plain distance would run per
+    row, so the distances are bit-identical.  ``payload`` columns ride the
+    window with their row, so the caller needs no second scan to resolve
+    them.  Returns ``(q_id, id, *payload, distance)``."""
     from pyspark.sql.window import Window
 
-    q_norm = F.col(q_norm_col) if q_norm_col else None
     scored = joined.select(
         F.col(q_id_col),
         F.col(id_col),
         *payload,
-        cosine_distance(F.col(vec_col), F.col(q_vec_col), q_norm).alias("distance"),
+        cosine_distance(F.col(vec_col), F.col(q_vec_col), F.col(_Q_NORM)).alias("distance"),
     )
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("distance").asc_nulls_last(), F.col(id_col).asc()
@@ -126,7 +131,6 @@ def ivf_topk_multi(
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
     *,
-    q_norm_col: str | None = None,
     payload: Sequence[str] = (),
 ) -> DataFrame:
     """Batched IVF ANN: per-query partition-pruned top-k in ONE job.
@@ -141,12 +145,10 @@ def ivf_topk_multi(
     lives in exactly one cluster and (q_id, cluster_id) pairs are unique,
     no (row, query) pair is ever scored twice.  Per-query top-k plans as
     the same Partial-mode WindowGroupLimit as the brute-force twin
-    (shared :func:`_topk_per_query` tail, which also reads ``q_norm_col``
-    and ``payload``)."""
-    joined = src.join(F.broadcast(probes), "cluster_id")
-    return _topk_per_query(
-        joined, k, vec_col, id_col, q_id_col, q_vec_col, q_norm_col, payload
-    )
+    (shared :func:`_topk_per_query` tail, which also carries
+    ``payload``)."""
+    joined = src.join(F.broadcast(_with_q_norm(probes, q_vec_col)), "cluster_id")
+    return _topk_per_query(joined, k, vec_col, id_col, q_id_col, q_vec_col, payload)
 
 
 #: Flat-IVF centroid-count bound: the centroid table is a driver-side

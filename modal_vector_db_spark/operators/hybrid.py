@@ -52,10 +52,16 @@ def bm25_scores(
 
     Returns (id_col, score) for documents containing ≥1 query term; the
     score is rounded to 6dp (ranking key contract, see module docstring).
-    A document counts once toward ``n`` however its text reads (a NULL
-    text too); a repeated query term scores once.
+    Each input row is one document: it counts once toward ``n`` however
+    its text reads (a NULL text too), and a row repeated under the same id
+    counts toward ``n`` and ``df`` and is scored once per copy, exactly as
+    if the copies had distinct ids (one row per id would need a shuffle of
+    the hits; the vector channel ranks each copy too).  A repeated query
+    term scores once; no terms, no rows.
     """
     term_list = list(dict.fromkeys(terms))
+    if not term_list:
+        return docs.select(id_col, F.lit(0.0).alias("score")).limit(0)
     toks = docs.select(id_col, F.split(F.col(text_col), " ").alias("_toks"))
     tokens = F.col("_toks")
     proj = toks.select(

@@ -204,8 +204,8 @@ def _bits(v):
 
 
 def test_driver_query_norm_is_bit_identical(spark):
-    """The query norm folded on the driver (a literal for one query, a
-    ``q_norm`` column for a batch) gives the distance the plan-folded norm
+    """The query norm folded once (on the driver for one query, on the
+    query side of a batch's join) gives the distance the per-row fold
     gives, bit for bit — degenerate rows and queries included."""
     import numpy as np
 
@@ -243,20 +243,23 @@ def test_driver_query_norm_is_bit_identical(spark):
         for r in got:
             assert _bits(r["plan"]) == _bits(r["driver"]), (qv, r["id"])
 
-    from modal_vector_db_spark.functions.distance import l2_norm_value
+    # a batch projects each query's norm on the query side once
+    from modal_vector_db_spark.operators.ann import ivf_topk_multi
 
-    qdf = spark.createDataFrame(
-        [(i, qv, l2_norm_value(qv)) for i, qv in enumerate(queries)],
-        "q_id int, q_vec array<double>, q_norm double",
-    )
+    qdf = spark.createDataFrame(list(enumerate(queries)), "q_id int, q_vec array<double>")
     k = len(rows)
-    plan = brute_force_topk_multi(df, qdf, k=k, id_col="id").collect()
-    driver = brute_force_topk_multi(df, qdf, k=k, id_col="id", q_norm_col="q_norm").collect()
     key = lambda r: (r["q_id"], r["id"])  # noqa: E731
-    assert len(plan) == len(driver) == k * len(queries)
-    assert [(key(r), _bits(r["distance"])) for r in sorted(plan, key=key)] == [
-        (key(r), _bits(r["distance"])) for r in sorted(driver, key=key)
-    ]
+    plain = df.crossJoin(qdf).select(
+        "q_id", "id", cosine_distance(emb, F.col("q_vec")).alias("distance")
+    )
+    want = [(key(r), _bits(r["distance"])) for r in sorted(plain.collect(), key=key)]
+    one = F.lit(0).alias("cluster_id")
+    for top in (
+        brute_force_topk_multi(df, qdf, k=k, id_col="id"),
+        ivf_topk_multi(df.select("*", one), qdf.select("*", one), k=k),
+    ):
+        got = top.collect()
+        assert [(key(r), _bits(r["distance"])) for r in sorted(got, key=key)] == want
 
 
 def test_pandas_cosine_close_to_expr(emb, spark):

@@ -238,3 +238,16 @@ def test_bm25_one_projection_matches_explode_shape(spark):
         map(tuple, bm25_scores(docs.filter(F.col("text").isNotNull()), ["merge"]).collect())
     )
     assert with_null.keys() == without.keys() and with_null != without
+    # no terms, no rows (and no error)
+    assert bm25_scores(docs, []).collect() == []
+    # each row is a document: a copy stored under the same id scores, and
+    # counts toward n and df, exactly like the same text under a new id
+    copy = spark.createDataFrame([(1, rows[1][1])], "doc_id int, text string")
+    relabeled = spark.createDataFrame([(8, rows[1][1])], "doc_id int, text string")
+    for terms in (["spark", "merge"], ["spark", "absent"]):
+        got = sorted(map(tuple, bm25_scores(docs.union(copy), terms).collect()))
+        want = sorted(
+            (1 if i == 8 else i, s)
+            for i, s in map(tuple, bm25_scores(docs.union(relabeled), terms).collect())
+        )
+        assert got == want and [i for i, _ in got].count(1) == 2, terms

@@ -91,7 +91,7 @@ def test_versioned_stats_filtered_query_jobs_after_tombstone_delete(spark, tmp_p
     assert len(jobs) == 1
     assert not {r.metadata["n"] for r in res} & {2, 7, 12}
     # a mask above the ceiling takes the broadcast anti-join, same rows
-    monkeypatch.setattr(vcat, "TOMBSTONE_MAX_IDS", 2)
+    monkeypatch.setattr(vcat, "IN_MASK_MAX_IDS", 2)
     masked, jobs = jobs_in_group(spark, ask)
     assert len(jobs) > 1
     assert _triples(masked) == _triples(res)
