@@ -12,11 +12,12 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-POKEMON = "/root/reference/data/pokemon.json"
+from tests.conftest import POKEMON, require_pokemon
 
 
 @pytest.fixture(scope="module")
 def records():
+    require_pokemon()
     with open(POKEMON) as f:
         return json.load(f)
 

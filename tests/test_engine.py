@@ -12,6 +12,7 @@ import pytest
 from modal_vector_db_spark.embedders import HashingEmbedder, get_embedder
 from modal_vector_db_spark.engine import Result, VectorDB
 from modal_vector_db_spark.schema import json_to_uuid
+from tests.conftest import POKEMON, needs_pokemon
 
 
 @pytest.fixture()
@@ -136,10 +137,11 @@ def test_indexed_query_matches_exact(spark, tmp_path):
     assert len({r.id for r in partial} & exact_ids) >= 3  # decent recall
 
 
+@needs_pokemon
 def test_json_file_source(spark):
     """S3: the reference's JSON-file ingestion (vdb.py:79) as a Spark
     source — multiLine JSON array → DataFrame of nested structs."""
-    df = spark.read.json("/root/reference/data/pokemon.json", multiLine=True)
+    df = spark.read.json(POKEMON, multiLine=True)
     assert df.count() == 898
     # nested access works directly on the inferred schema
     from pyspark.sql import functions as F

@@ -14,12 +14,12 @@ from modal_vector_db_spark.operators.filters import (
     compile_where,
     filters_to_duckdb_sql,
 )
-
-POKEMON = "/root/reference/data/pokemon.json"
+from tests.conftest import POKEMON, require_pokemon
 
 
 @pytest.fixture(scope="module")
 def meta_df(spark):
+    require_pokemon()
     with open(POKEMON) as f:
         records = json.load(f)
     rows = [(json.dumps(r),) for r in records]
@@ -102,11 +102,11 @@ def test_filter_demo_query(meta_df):
     assert got == want
 
 
-def test_unsupported_operator_rejected(meta_df):
+def test_unsupported_operator_rejected(spark):
     """Reference splices arbitrary op strings into SQL (injection, §8 bug #1);
     we whitelist."""
     with pytest.raises(ValueError, match="unsupported filter operator"):
-        meta_df.filter(compile_filters({"id": ("; DROP TABLE items;--", 1)}))
+        compile_filters({"id": ("; DROP TABLE items;--", 1)})
 
 
 def test_missing_path_is_null_not_error(meta_df):
@@ -128,7 +128,7 @@ def test_in_between_shapes_validated(meta_df):
     assert _oracle_ids({"id": ("in", [])}) == []
 
 
-def test_combinator_shapes_rejected(meta_df):
+def test_combinator_shapes_rejected(spark):
     """$-combinators validate their clause shapes at the API boundary."""
     with pytest.raises(ValueError, match=r"\$or takes a non-empty list"):
         compile_filters({"$or": []})
