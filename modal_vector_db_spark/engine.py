@@ -78,7 +78,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         embedder_kwargs: Optional[dict] = None,
         create_new_table: bool = False,
         warehouse: str | None = None,
-        write_mode: str = "anti_join",
         versioned: bool = False,
         stats_fields: Optional[dict | Sequence[str]] = None,
         id_fields: Optional[Sequence[str]] = None,
@@ -88,13 +87,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         ):
             raise ValueError(
                 f"id_fields must be a non-empty sequence of field names, got {id_fields!r}"
-            )
-        if write_mode not in ("anti_join", "merge"):
-            raise ValueError(f"write_mode must be 'anti_join' or 'merge', got {write_mode!r}")
-        if versioned and write_mode == "merge":
-            raise ValueError(
-                "versioned=True uses the manifest-log layout; Delta MERGE "
-                "(write_mode='merge') manages its own log — pick one"
             )
         if stats_fields and not versioned:
             raise ValueError(
@@ -108,7 +100,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self.embedding_dim = embedding_dim
         self.embedder_name = embedder_name
         self.embedder_kwargs = embedder_kwargs or {}
-        self.write_mode = write_mode
         self.versioned = versioned
         # Table-level content-identity declaration: when set, ids hash only
         # this metadata SUBSET (uuid5 of its canonical JSON) on EVERY path
@@ -120,10 +111,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self.id_fields: tuple[str, ...] | None = tuple(id_fields) if id_fields else None
         # Base-table storage backend: the plain directory catalog, or the
         # manifest-log layout (``sources/versioned.py`` — atomic commits,
-        # time travel, rollback, vacuum).  The derived __ivf layout follows
-        # the base's backend (see _index_write_kwargs below); the tiny
-        # centroid/PQ-codebook tables stay plain — rebuildable single-writer
-        # artifacts, not primary data.
+        # time travel, rollback, vacuum).  The derived graph/bloom tables
+        # follow the base's backend (see _index_write_kwargs below); the
+        # tiny centroid/PQ-codebook tables stay plain — rebuildable
+        # single-writer artifacts, not primary data.
         from modal_vector_db_spark.sources import versioned as versioned_catalog
 
         self._cat = versioned_catalog if versioned else catalog
@@ -139,27 +130,21 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         # correctness never depends on it).  A plain sequence declares every
         # field "string".
         self._stats_fields = self._normalize_stats_fields(stats_fields)
-        # Versioned writes record per-file row counts in the manifest
-        # (stats_cols=[]: rows only), which turns num_rows() into an
-        # O(metadata) read of the commit log; declared stats fields add
-        # their materialized columns' min/max.
-        self._write_kwargs = (
-            {"stats_cols": [self._stats_colname(f) for f in self._stats_fields]}
-            if versioned
-            else {}
-        )
-        # Derived __ivf layout backend: on a versioned table the INDEX lives
-        # on the manifest log too — its appends become OCC commits (safe
-        # under concurrent CAS inserts, round-4 verdict gap #2), its row
-        # count comes from its own manifest (O(metadata) consistency
-        # probes), and a sidecar stamp records which base version it
-        # reflects.  Centroids / PQ codebooks stay tiny plain-catalog
-        # tables: they are single-writer build artifacts.
+        # Versioned writes record per-file row counts in the manifest,
+        # which turns num_rows() into an O(metadata) read of the commit
+        # log; declared stats fields add their materialized columns'
+        # min/max, and an indexed table's in-file cluster_id adds its
+        # range (what probe reads prune files on — a column a file lacks
+        # records nothing).
+        self._write_kwargs = self._versioned_write_kwargs() if versioned else {}
+        # Derived graph/bloom tables on a versioned table live on the
+        # manifest log too: their appends become OCC commits and their row
+        # counts come from their own manifests.
         self._index_write_kwargs = {"stats_cols": []} if versioned else {}
         self._index_mut_kwargs = (
             {"stats_cols": [], "partition_by": ["cluster_id"]} if versioned else {}
         )
-        # __text follows the same backend rule as __ivf: manifest-logged on
+        # __text follows the same backend rule: manifest-logged on
         # versioned tables (immutable postings snapshots are what make the
         # time-travel ledger possible), plain parquet dirs otherwise.
         self._text_write_kwargs = (
@@ -170,8 +155,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self._text_mut_kwargs = (
             {"stats_cols": [], "partition_by": ["bucket"]} if versioned else {}
         )
-        # one consistency probe per handle lifetime (see _load_ivf)
-        self._ivf_probed = False
         # (marker_stat_key, IVFIndex2L) — per-handle two-level index cache
         # so repeated queries reuse the fine-centroid shard cache
         self._ivf2l_cache = None
@@ -304,6 +287,11 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 "sanitization ('.' becomes '_') — rename one"
             )
         return out
+
+    def _versioned_write_kwargs(self) -> dict:
+        """Base-table write kwargs of a versioned table (see ``__init__``)."""
+        cols = [self._stats_colname(f) for f in self._stats_fields]
+        return {"stats_cols": [*cols, "cluster_id"]}
 
     @staticmethod
     def _stats_colname(field: str) -> str:
@@ -464,17 +452,17 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         new = self._normalize_stats_fields(stats_fields)
         old_fields, old_kwargs = self._stats_fields, self._write_kwargs
         self._stats_fields = new
-        self._write_kwargs = {"stats_cols": [self._stats_colname(f) for f in new]}
+        self._write_kwargs = self._versioned_write_kwargs()
         try:
             if not self._cat.table_exists(self.name, self.warehouse):
                 self._write_meta()
                 return 0
-            # read raw and re-project: clearing a declaration (new = {})
-            # must still strip the OLD _s_ columns out of the rewrite
+            # read raw and drop the old stats columns: clearing a
+            # declaration (new = {}) must still strip them out of the
+            # rewrite, while an index's cluster_id/pq_code stay
+            raw = self._cat.read_table(self.spark, self.name, self.warehouse)
             df = self._with_stats_cols(
-                self._cat.read_table(self.spark, self.name, self.warehouse).select(
-                    *[f.name for f in ITEMS_SCHEMA.fields]
-                )
+                raw.drop(*[c for c in raw.columns if c.startswith("_s_")])
             )
             pre_head = vcat.current_version(self.name, self.warehouse) or 0
             n = self._cat.replace_table(
@@ -494,9 +482,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         if not self._cat.table_exists(self.name, self.warehouse):
             return self.spark.createDataFrame([], ITEMS_SCHEMA)
         df = self._cat.read_table(self.spark, self.name, self.warehouse)
-        if self._stats_fields:
+        if len(df.columns) != len(ITEMS_SCHEMA.fields):
             # public schema stays the reference's (id, metadata, embedding);
-            # the materialized stats columns are a storage detail
+            # materialized stats columns and an index's cluster_id/pq_code
+            # are a storage detail
             df = df.select(*[f.name for f in ITEMS_SCHEMA.fields])
         return df
 
@@ -683,12 +672,15 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         then the broadcast build side of the final anti-join.  Net: the base
         table is scanned once (id column only) and never shuffled, both
         joins broadcast the small side.  Single-writer semantics, same as
-        the reference's one DB container; ``write_mode="merge"`` swaps this
-        for a Delta Lake MERGE (:meth:`_merge_append`) for concurrent
-        writers.
+        the reference's one DB container; a versioned table takes the CAS
+        loop of :meth:`_versioned_cas_append` for concurrent writers.
+
+        On an indexed table the batch is cluster-assigned (+ PQ-encoded)
+        first and lands in ONE base commit — the base is the IVF layout
+        (plain: under its ``cluster_id=N/`` dirs).
 
         Write layout (``catalog.sized_for_append``): a persisted batch and
-        every ``partitionBy`` index append (``__ivf``, postings) are
+        every ``partitionBy`` append (an indexed plain base, postings) are
         rebalanced so AQE sizes their files, so one insert commits one
         file per partition directory — not ``shuffle.partitions`` files
         per directory.  An un-persisted batch is written as its dedup
@@ -703,9 +695,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         # — the exact failure the sidecar guard exists to prevent.
         self._check_meta()
         self._write_meta()
-        if self.write_mode == "merge":
-            self._merge_append(batch)
-            return
         # Every stored row must carry stats columns consistent with its
         # metadata: footer min/max skip NULLs, so a row written WITHOUT them
         # would not widen its file's recorded range and a later pruned
@@ -714,7 +703,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         if self.versioned:
             # The manifest log enables the stronger protocol: a native CAS
             # MERGE that is content-idempotent under CONCURRENT writers.
-            self._versioned_cas_append(batch)
+            self._versioned_cas_append(self._assign_clusters(batch))
             return
         if self._cat.table_exists(self.name, self.warehouse):
             conflicts = (
@@ -723,48 +712,39 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 .join(F.broadcast(batch.select("id")), "id", "left_semi")
             )
             batch = batch.join(F.broadcast(conflicts), "id", "left_anti")
-        # The batch feeds the base-table append AND (when an IVF layout
-        # exists) the index append; persist avoids recomputing the anti-join
-        # for the second write.  ORDER IS CORRECTNESS, not style: the batch's
-        # plan anti-joins against the CURRENT base table, and a cache miss
-        # (eviction, executor loss) re-executes that plan — if the base
-        # append ran first, the re-read would see the batch's own ids already
-        # present and the recomputed batch would be EMPTY (observed: index
-        # silently missing every post-index insert).  Writing __ivf first
-        # makes any recompute read the still-unmodified base and yield
-        # identical rows.  A failure BETWEEN the two appends leaves __ivf
-        # rows whose base rows are missing — and use_index=True queries serve
-        # id/metadata straight from __ivf, so those phantoms ARE visible
-        # until the caller replays the insert (the crashed write never
-        # acknowledged, so replay is the contract): on replay the base
-        # anti-join re-admits the rows while the __ivf-side anti-join below
-        # skips the already-present index rows, reconverging both tables
-        # with no duplicates.  :meth:`reconcile_index` is the explicit
-        # repair for an abandoned (never-replayed) batch.
-        has_index = (
-            catalog.table_exists(self.name + "__ivf", self.warehouse)
+        indexed = self._has_ivf()
+        if indexed:
+            batch = self._assign_clusters(batch)
+        # The derived stores below read the batch before the base append,
+        # so every consumer (and any recompute after a cache miss) sees
+        # the still-unmodified base; persist runs the anti-join once.
+        has_derived = (
+            indexed
             or catalog.table_exists(self.name + "__text", self.warehouse)
             or self._read_bloom_meta() is not None
         )
-        if has_index:
+        if has_derived:
             batch = batch.persist()
         try:
             # bloom words first — superset-safe under any later failure
             # (see the maintained-Bloom section comment)
             self._sync_bloom_for_append(batch)
-            ivf_rows = self._sync_index_for_append(batch)
-            # same before-base ordering and replay anti-join as __ivf; a
-            # crash between leaves postings whose docs are absent — invisible
-            # in results (the fused top-k inner-joins the base) and healed by
+            # postings before the base, with a replay anti-join: a crash
+            # between leaves postings whose docs are absent — invisible in
+            # results (the fused top-k inner-joins the base) and healed by
             # the insert replay contract
             self._sync_text_index_for_append(batch)
-            # graph maintenance rides the SAME assigned frame (before-base
-            # like __ivf: a crash leaves the epoch pin ahead of the base —
-            # loudly stale — and the replay anti-join converges the retry)
-            self._sync_graph_for_append(ivf_rows)
-            self._cat.append(batch, self.name, self.warehouse, **self._write_kwargs)
+            # graph maintenance rides the same assigned frame (a graph
+            # implies an index; a crash leaves the epoch pin ahead of the
+            # base — loudly stale — and the replay anti-join converges the
+            # retry)
+            self._sync_graph_for_append(batch)
+            self._cat.append(
+                batch, self.name, self.warehouse,
+                **({"partition_by": ["cluster_id"]} if indexed else {}),
+            )
         finally:
-            if has_index:
+            if has_derived:
                 batch.unpersist()
 
 
@@ -789,7 +769,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         the reference's ``ON CONFLICT (id) DO NOTHING`` (duckvdb.py:57-61),
         with the same semantics Delta's MERGE gets from optimistic
         concurrency.  A lost race costs one restage (the orphaned staged
-        files age out via vacuum)."""
+        files age out via vacuum).  ``batch`` arrives cluster-assigned on
+        an indexed table, so the commit carries the index too."""
         last_err: Exception | None = None
         for _ in range(16):
             head = vcat.current_version(self.name, self.warehouse) or 0
@@ -827,7 +808,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             pinned = pinned.persist()
             try:
                 # bloom words BEFORE the CAS attempt — the opposite order
-                # from __ivf/__text, because the bloom contract is superset
+                # from __text/graph, because the bloom contract is superset
                 # not exact: a lost race or a crash here leaves extra bits
                 # (absorbed by the exact verify), while words appended
                 # after a commit could be LOST by a crash — a false
@@ -845,29 +826,17 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 last_err = e
                 continue
             else:
-                # Index sync AFTER the commit — the opposite order from the
-                # plain path, and correct here because `pinned`'s plan reads
-                # only version-`head`'s IMMUTABLE files: a cache miss
-                # recomputes identical rows no matter what has since been
-                # committed.  Consequences: a retry that lost its race never
-                # touches the index (no duplicate/phantom rows from racing
-                # attempts), a CAS loop that gives up leaves the index
-                # unchanged, and a crash between the commit and this append
-                # leaves the index MISSING the new rows (under-recall until
-                # the next indexed query's consistency probe auto-repairs —
-                # strictly less harmful than serving phantoms).  The __ivf
-                # layout is itself a versioned table here, so concurrent
-                # writers' index appends serialize through its own OCC
-                # commit slots — the CAS contract now covers BOTH tables.
-                ivf_rows = self._sync_index_for_append(pinned, base_version=head + 1)
-                # text postings sync after the commit, like __ivf here: a
-                # crash leaves the lexical channel missing the new docs
-                # (marginal under-ranking) until the next insert or rebuild
+                # Derived-store syncs AFTER the commit, correct here because
+                # `pinned`'s plan reads only version-`head`'s IMMUTABLE
+                # files: a cache miss recomputes identical rows no matter
+                # what has since been committed.  A retry that lost its
+                # race never touches them, and a crash between the commit
+                # and a sync leaves that store MISSING the new rows: the
+                # lexical channel under-ranks until the next insert or
+                # rebuild, the graph epoch stays loudly stale until
+                # reconcile_index().
                 self._sync_text_index_for_append(pinned, base_version=head + 1)
-                # graph maintenance after the commit too; the epoch pin is
-                # totals-verified at a stable head, so racing writers
-                # converge and a crash leaves a loudly-stale pin
-                self._sync_graph_for_append(ivf_rows, base_version=head + 1)
+                self._sync_graph_for_append(pinned, base_version=head + 1)
                 return
             finally:
                 pinned.unpersist()
@@ -875,43 +844,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             f"table {self.name!r}: insert lost 16 consecutive head races"
         ) from last_err
 
-
-    def _merge_append(self, batch: DataFrame) -> None:
-        """Multi-writer upsert: Delta Lake ``MERGE … WHEN NOT MATCHED THEN
-        INSERT`` — the ACID generalization of ``ON CONFLICT DO NOTHING``
-        (reference ``duckvdb.py:57-61``) for CONCURRENT writers.
-
-        The anti-join default computes the conflict set against a snapshot,
-        so two simultaneous batches can both miss each other's rows and
-        double-insert; Delta's optimistic concurrency control serializes
-        the two MERGE commits instead (the loser retries against the
-        winner's snapshot), giving idempotency under concurrency.  Gated on
-        the optional ``delta-spark`` package (absent in this environment —
-        ``tests/test_engine.py`` pins both the clear failure here and, when
-        the package IS importable, the concurrent-batch semantics)."""
-        try:
-            from delta.tables import DeltaTable  # type: ignore
-        except ImportError as e:
-            raise NotImplementedError(
-                "write_mode='merge' requires the delta-spark package "
-                "(Delta Lake MERGE is the ACID multi-writer upsert); install "
-                "delta-spark and enable the Delta SQL extension"
-            ) from e
-        batch = batch.dropDuplicates(["id"])
-        # same before-commit ordering as the other insert paths — extra
-        # bits under a lost MERGE race, never missing ones
-        self._sync_bloom_for_append(batch)
-        path = catalog.db_path(self.name, self.warehouse)
-        if not DeltaTable.isDeltaTable(self.spark, path):
-            batch.write.format("delta").mode("append").save(path)
-            return
-        (
-            DeltaTable.forPath(self.spark, path)
-            .alias("t")
-            .merge(batch.alias("b"), "t.id = b.id")
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
 
     # -- flagship read path ------------------------------------------------
     #
@@ -939,45 +871,49 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             )
         return qv
 
-    def _snapshot(self, version: int | None, use_index: bool) -> int | None:
+    def _snapshot(self, version: int | None, use_index: bool) -> None:
         """The ``version`` contract stated on :meth:`query`, for every read
-        method: versioned tables only, and an indexed read pins the
-        VERIFIED ``__ivf`` version of that commit — returned here (None for
-        head or exact reads) — or fails loudly."""
+        method: versioned tables only, and an indexed read only of a
+        version at or after the commit of the current centroid generation
+        (older rows carry another generation's ``cluster_id``) — else it
+        fails loudly."""
         if version is None:
-            return None
+            return
         self._require_versioned()
         if not use_index:
-            return None
-        ivf_version = self._ivf_version_for_base(version)
-        if ivf_version is None:
+            return
+        since = self._indexed_since()
+        if (
+            since is None
+            or version < since
+            or version not in vcat.versions(self.name, self.warehouse)
+        ):
             raise ValueError(
                 f"no verified index snapshot for version {version} of "
-                f"table {self.name!r}: the stamp history maps only "
-                "commits whose index sync verified, and mutations/"
-                "rebuilds reset it — run the exact path (omit "
-                "use_index)"
+                f"table {self.name!r}: indexed reads serve the retained "
+                f"versions from the current index's commit ({since}) on, "
+                "and rebuilds move it — run the exact path (omit use_index)"
             )
-        return ivf_version
 
     def _probe_clusters(
         self, qvecs: list[list[float]], nprobe: int | None
     ) -> list[list[int]]:
         """Each query's ``nprobe`` nearest IVF clusters, nearest first
         (``nprobe`` resolves explicit > calibrated > 4)."""
-        _, ivf = self._load_ivf()
+        ivf = self._load_ivf()
         nprobe = self._resolve_nprobe(nprobe)
         return [ivf.nearest_centroids(qv, nprobe) for qv in qvecs]
 
     def _probed_source(
         self,
         clusters: list[int],
-        ivf_version: int | None,
+        version: int | None,
         filters: Optional[dict] = None,
     ) -> DataFrame:
-        """The ``__ivf`` layout pruned to ``clusters`` (the ``isin`` is
-        Spark-side partition pruning), optionally filtered."""
-        src = self._read_ivf_probes(clusters, version=ivf_version).filter(
+        """The base table pruned to ``clusters`` as of ``version`` (the
+        ``isin`` is Spark-side partition pruning on a plain table),
+        optionally filtered."""
+        src = self._read_ivf_probes(clusters, version=version).filter(
             F.col("cluster_id").isin(clusters)
         )
         return src.filter(compile_filters(filters)) if filters else src
@@ -997,7 +933,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         use_index: bool,
         nprobe: int | None,
         version: int | None,
-        ivf_version: int | None,
         src: DataFrame | None = None,
         payload: Sequence[str] = (),
     ) -> DataFrame:
@@ -1020,7 +955,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 "q_id int, cluster_id int, q_vec array<double>",
             )
             union = sorted({c for cs in probes for c in cs})
-            scanned = self._probed_source(union, ivf_version, filters)
+            scanned = self._probed_source(union, version, filters)
             return ann.ivf_topk_multi(scanned, probe_df, **kw)
         qdf = self.spark.createDataFrame(
             list(enumerate(qvecs)), "q_id int, q_vec array<double>"
@@ -1039,10 +974,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         use_text_index: bool,
         use_index: bool,
         use_graph_index: bool,
-    ) -> tuple[DataFrame, int | None, DataFrame, dict | None]:
-        """The hybrid twins' shared setup: channel checks, the verified
-        snapshot, the filtered corpus ``src``, and the lexical channel's
-        input.  Returns ``(src, ivf_version, lex_src, lex_stats)``:
+    ) -> tuple[DataFrame, DataFrame, dict | None]:
+        """The hybrid twins' shared setup: channel checks, the snapshot
+        check, the filtered corpus ``src``, and the lexical channel's
+        input.  Returns ``(src, lex_src, lex_stats)``:
         ``lex_stats`` is None on the scan path (``lex_src`` = THE
         :meth:`_text_docs` projection — never inlined: postings must
         tokenize what the scan tokenizes) and the index calibration
@@ -1064,10 +999,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 "no metadata and the BM25 calibration stats cover the "
                 "WHOLE corpus — use the scan path for filtered hybrid"
             )
-        ivf_version = self._snapshot(version, use_index)
+        self._snapshot(version, use_index)
         src = self._source(filters, version)
         if not use_text_index:
-            return src, ivf_version, self._text_docs(src, text_field), None
+            return src, self._text_docs(src, text_field), None
         from modal_vector_db_spark.operators.hybrid import term_buckets
 
         # version=N → the verified ledger pair for N (raises loudly if
@@ -1078,7 +1013,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         )
         postings = self._read_text_buckets(term_buckets(terms, buckets), version=pv)
         stats = {"n": n_cal, "avgdl": dl_cal / max(n_cal, 1.0), "buckets": buckets}
-        return src, ivf_version, postings, stats
+        return src, postings, stats
 
     @staticmethod
     def _join_metadata(top: DataFrame, src: DataFrame, *cols) -> DataFrame:
@@ -1117,27 +1052,25 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         :meth:`create_index` — mirroring the reference, where only a table
         loaded through ``load_from_parquet`` has the (approximate) HNSW index
         and the default path stays exact brute force (``duckvdb.py:37-45``).
-        The scan then prunes to the ``nprobe`` nearest cluster partitions.
+        The scan then prunes to the ``nprobe`` nearest clusters.
 
         ``version`` — THE snapshot contract of every read method
         (versioned tables only): read the table AS OF that commit, still
         manifest-stats-pruned when the filter keys a declared stats field.
-        With ``use_index`` it composes through the stamp history of
-        VERIFIED (base → ``__ivf``) version pairs (every insert sync
-        records one, :meth:`_stamp_ivf_version`): the probe reads the index
-        manifest AS OF the pair's index version — same file-list pruning,
-        zero extra cost; head centroids are valid for any historical probe
-        because rebuilds reset the history with the index.  A version with
-        no verified pair (pre-index commits, raced syncs, post-mutation
-        rebuilds) fails loudly instead of serving the wrong snapshot.
+        With ``use_index`` the probe resolves that version's files by their
+        manifest ``cluster_id`` ranges — the base IS the index, so a
+        version of the table is a version of the index.  Versions before
+        the current index generation committed (pre-index commits, or
+        before a rebuild or hot-cluster split) fail loudly instead of
+        probing rows assigned by other centroids.
         """
         if compressed and not use_index:
             raise ValueError("compressed=True requires use_index=True (build with create_index(pq_m=...))")
-        ivf_version = self._snapshot(version, use_index)
+        self._snapshot(version, use_index)
         qv = self._query_vec(query)
         if use_index:
             (probes,) = self._probe_clusters([qv], nprobe)
-            src = self._probed_source(probes, ivf_version)
+            src = self._probed_source(probes, version)
             if compressed:
                 # IVF+PQ: ADC over the code column inside the probed
                 # partitions picks k·refine_factor candidates, then the
@@ -1218,11 +1151,11 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         :meth:`query`."""
         if not queries:
             raise ValueError("query_batch needs at least one query")
-        ivf_version = self._snapshot(version, use_index)
+        self._snapshot(version, use_index)
         qvecs = [self._query_vec(q) for q in queries]
         top = self._vector_topk_multi(
             qvecs, k, filters, use_index=use_index, nprobe=nprobe,
-            version=version, ivf_version=ivf_version, payload=("metadata",),
+            version=version, payload=("metadata",),
         )
         return top.select(
             "q_id", "id", "metadata", F.round("distance", 6).alias("distance")
@@ -1255,7 +1188,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         ``filters`` (same DSL as :meth:`query`) restrict BOTH channels before
         scoring, so the fused top-k is exact over the filtered corpus.
         ``version``: both channels score the table AS OF that commit (the
-        snapshot contract of :meth:`query`).
+        snapshot contract of :meth:`query`).  At most k rows with distinct
+        ids: a collected call whose rows repeat an id (a row stored twice —
+        bulk loads are not deduplicated) re-runs with one row per id in
+        each channel; ``as_dataframe=True`` returns that plan.
 
         ``use_text_index=True``: the lexical channel reads the materialized
         inverted index (:meth:`create_text_index`) — only the query terms'
@@ -1289,7 +1225,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         terms = [t for t in query.lower().split() if t]
         if not terms:
             raise ValueError("query_hybrid needs a non-empty text query")
-        src, ivf_version, lex_src, lex_stats = self._hybrid_inputs(
+        src, lex_src, lex_stats = self._hybrid_inputs(
             terms, filters, version, text_field, use_text_index=use_text_index,
             use_index=use_index, use_graph_index=use_graph_index,
         )
@@ -1308,15 +1244,35 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             vsrc = src
             if use_index:
                 (probes,) = self._probe_clusters([qv], nprobe)
-                vsrc = self._probed_source(probes, ivf_version, filters)
+                vsrc = self._probed_source(probes, version, filters)
             vec = vsrc.select(
                 "id", cosine_distance_to(F.col("embedding"), qv).alias("distance")
             )
-        fused = hybrid.rrf_fuse(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
-        out = self._join_metadata(fused, src, "id", "metadata", F.col("score").alias("distance"))
+
+        def fused(distinct: bool) -> DataFrame:
+            # distinct: one row per id in each channel and in the result.
+            # A row stored twice (bulk loads are not deduplicated) would
+            # otherwise take two ranks in each channel, fuse once per pair
+            # of copies, and join each fused id to every copy's metadata.
+            if distinct:
+                top = hybrid.rrf_fuse(
+                    lex.dropDuplicates(["id"]), vec.dropDuplicates(["id"]),
+                    id_col="id", top_n=top_n, k=k, k0=k0,
+                )
+            else:
+                top = hybrid.rrf_fuse(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
+            out = self._join_metadata(top, src, "id", "metadata", F.col("score").alias("distance"))
+            return out.dropDuplicates(["id"]) if distinct else out
+
         if as_dataframe:
-            return out
-        return _results(sorted(out.collect(), key=lambda r: (-r["distance"], r["id"])))
+            return fused(True)
+        # Collected: the plan without the dedup shuffles, checked on the
+        # driver — only a repeated id among its <= k rows re-runs the
+        # distinct plan (the query() rule).
+        rows = fused(False).collect()
+        if len({r["id"] for r in rows}) < len(rows):
+            rows = fused(True).collect()
+        return _results(sorted(rows, key=lambda r: (-r["distance"], r["id"])))
 
     def query_hybrid_batch(
         self,
@@ -1369,7 +1325,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 f"queries at positions {empties} have no terms"
             )
         pairs = sorted({(i, t) for i, ts in enumerate(per_q) for t in ts})
-        src, ivf_version, lex_src, lex_stats = self._hybrid_inputs(
+        src, lex_src, lex_stats = self._hybrid_inputs(
             sorted({t for _, t in pairs}), filters, version, text_field,
             use_text_index=use_text_index, use_index=use_index,
             use_graph_index=use_graph_index,
@@ -1386,7 +1342,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         else:
             vec = self._vector_topk_multi(
                 qvecs, top_n, filters, use_index=use_index, nprobe=nprobe,
-                version=version, ivf_version=ivf_version, src=src,
+                version=version, src=src,
             )
         fused = hybrid.rrf_fuse_multi(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
         return self._join_metadata(
@@ -1399,12 +1355,15 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         Returns the new file count.  Run from a maintenance window — the
         write path is single-writer by contract.  On a versioned table this
         is just another commit (``replace``): readers of older versions keep
-        their small files until :meth:`vacuum`."""
-        self._require_rewritable()
+        their small files until :meth:`vacuum`.  An indexed versioned table
+        compacts into files of contiguous ``cluster_id`` ranges; a plain
+        one compacts within each cluster directory."""
         if self.versioned:
             import math
 
-            df = self.items()
+            # the stored rows, cluster_id/pq_code included (stats columns
+            # are recomputed below)
+            df = self._cat.read_table(self.spark, self.name, self.warehouse)
             # Size the target from the CURRENT version's files only — data/
             # also holds older versions' and failed commits' files, and
             # counting those would overstate live bytes and over-split the
@@ -1416,8 +1375,14 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             )
             n_files = max(1, math.ceil(total / target_file_bytes))
             pre_head = vcat.current_version(self.name, self.warehouse) or 0
+            # an indexed table's files each cover one contiguous cluster_id
+            # range, so the manifest stats keep pruning probes
+            if self._has_ivf():
+                df = df.repartitionByRange(n_files, "cluster_id")
+            else:
+                df = df.repartition(n_files)
             vcat.replace_table(
-                self._with_stats_cols(df.repartition(n_files)),
+                self._with_stats_cols(df),
                 self.name,
                 self.warehouse,
                 **self._write_kwargs,
@@ -1476,9 +1441,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         on them touches few files — the maintenance op that turns declared
         stats from "recorded" into "selective".  ``"id"`` may be clustered
         too (a top-level column).  Versioned tables only; just another
-        commit — time travel to the pre-optimize layout still works, and
-        the ``__ivf`` stamp re-verifies via row totals on the next indexed
-        query.  Returns the new head version."""
+        commit — time travel to the pre-optimize layout still works.  On an
+        indexed table the curve runs within each cluster (files stay
+        contiguous ``cluster_id`` ranges, so probes keep pruning).  Returns
+        the new head version."""
         self._require_versioned()
         cols = []
         for f in fields:
@@ -1494,16 +1460,27 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                     "— clustering a column whose range is never recorded "
                     "cannot make any read cheaper"
                 )
-        new_v = vcat.optimize_zorder(
-            self.spark,
-            self.name,
-            cols,
-            self.warehouse,
-            num_files=num_files,
-            # keep EVERY declared stats range recorded, not just the
-            # clustered subset — other fields' pruning must survive
-            stats_cols=self._write_kwargs.get("stats_cols", []),
-        )
+        if self._has_ivf():
+            from modal_vector_db_spark.operators.layout import zorder_frame
+
+            pre_head = vcat.current_version(self.name, self.warehouse) or 0
+            df = vcat.read_table(self.spark, self.name, self.warehouse, version=pre_head)
+            vcat.replace_table(
+                zorder_frame(df, cols, num_files=num_files, lead_cols=["cluster_id"]),
+                self.name, self.warehouse, **self._write_kwargs,
+            )
+            new_v = pre_head + 1
+        else:
+            new_v = vcat.optimize_zorder(
+                self.spark,
+                self.name,
+                cols,
+                self.warehouse,
+                num_files=num_files,
+                # keep EVERY declared stats range recorded, not just the
+                # clustered subset — other fields' pruning must survive
+                stats_cols=self._write_kwargs.get("stats_cols", []),
+            )
         # layout-only rewrite: ids + text unchanged, ledger stays
         # contiguous; graph epoch re-pins (the compact() rule)
         self._text_ledger_mark_unchanged(new_v)
@@ -1581,35 +1558,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         retention-age guard).  Returns files removed."""
         self._require_versioned()
         n = vcat.vacuum(self.name, self.warehouse, keep_versions, orphan_grace_s)
-        # the versioned __ivf layout accumulates its own commit history —
-        # vacuum it on the same retention policy
-        if vcat.table_exists(self.name + "__ivf", self.warehouse):
-            n += vcat.vacuum(
-                self.name + "__ivf", self.warehouse, keep_versions, orphan_grace_s
-            )
-            # prune stamp-history pairs pointing at vacuumed versions on
-            # EITHER log: indexed time travel to them then fails with the
-            # canonical "no verified index snapshot" error up front instead
-            # of a manifest-read error mid-plan.  The keep PREDICATE is
-            # evaluated against the re-read meta INSIDE the lock — a pair
-            # recorded by a concurrent writer between a pre-lock read and
-            # the rewrite must survive (versions are monotone, so anything
-            # NEWER than the post-vacuum listing is alive by construction).
-            bkeep = set(vcat.versions(self.name, self.warehouse))
-            ikeep = set(vcat.versions(self.name + "__ivf", self.warehouse))
-            bmax, imax = max(bkeep, default=0), max(ikeep, default=0)
-
-            def _ivf_alive(b: str, i) -> bool:
-                return (int(b) in bkeep or int(b) > bmax) and (
-                    int(i) in ikeep or int(i) > imax
-                )
-
-            with self._ivf_meta_lock():
-                meta = self._read_ivf_meta()
-                hist = meta.get("history", {})
-                kept = {b: i for b, i in hist.items() if _ivf_alive(b, i)}
-                if kept != hist:
-                    self._write_ivf_meta({**meta, "history": kept})
         # the versioned graph tables accumulate one commit PER INSERT now
         # that maintenance is incremental — same retention policy; no
         # ledger to prune (the graph epoch pins the head only, so old
@@ -1628,7 +1576,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             n += vcat.vacuum(
                 self.name + "__text", self.warehouse, keep_versions, orphan_grace_s
             )
-            # same in-lock predicate rule as the __ivf prune above: a pair
+            # the keep predicate is evaluated INSIDE the lock: a pair
             # a concurrent writer records between the version listing and
             # the locked rewrite references versions NEWER than the listing
             # (monotone), so the > max escape keeps it — filtering by
@@ -1670,22 +1618,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self.items().createOrReplaceTempView(self.name)
         return self.spark.sql(query)
 
-    def _require_rewritable(self) -> None:
-        """Mutation/maintenance paths rewrite the table directory with
-        plain parquet files; on a ``write_mode='merge'`` table that
-        destroys the Delta log (the swap carries no ``_delta_log``), and
-        the NEXT insert would silently blind-append — duplicating content
-        the MERGE mode exists to dedup.  Fail loudly instead."""
-        if self.write_mode == "merge":
-            raise ValueError(
-                "delete/update/compact/reembed rewrite the table directory "
-                "with plain parquet, which would destroy the Delta log a "
-                "write_mode='merge' table depends on (the next MERGE "
-                "append degrades to a blind append and duplicates "
-                "content) — run mutations through Delta itself or use the "
-                "default write_mode"
-            )
-
     def delete(self, filters: dict, tombstone: bool | None = None) -> int:
         """Remove every row matching ``filters`` (same DSL as :meth:`query`);
         returns the count removed.  The takedown/right-to-erasure operation
@@ -1700,10 +1632,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
           across 100 large files costs one tiny id-file write; reads
           anti-join the broadcast mask; :meth:`compact`/
           :meth:`maintain_index` (or any replace-shaped commit) FOLD the
-          mask into a real rewrite.  The derived stores (``__ivf``/text/
-          graph/bloom) still shrink eagerly — they are partition-local
-          rewrites and keeping them exact is what keeps every totals-based
-          consistency pin working.
+          mask into a real rewrite.  Indexed probes apply the same mask.
+          The derived text/graph stores still shrink eagerly — they are
+          partition-local rewrites and keeping them exact is what keeps
+          their totals-based consistency pins working.
         - EAGER (plain tables, large deletes, or ``tombstone=False``): a
           FILE-PRUNED copy-on-write rewrite (``rewrite_where``): one
           column-pruned scan finds which files contain matches, only those
@@ -1717,7 +1649,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         from a row's metadata) are KEPT — a delete must never remove rows it
         cannot positively match.  ``filters`` must be non-empty: clearing a
         table is ``create_new_table=True``, not an accidental match-all."""
-        self._require_rewritable()
         if not filters:
             raise ValueError(
                 "delete() requires non-empty filters; to clear the table, "
@@ -1732,24 +1663,11 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         if not self._cat.table_exists(self.name, self.warehouse):
             return 0
         keep = ~F.coalesce(compile_filters(filters), F.lit(False))
-        ivf_name = self.name + "__ivf"
-        has_index = self._cat.table_exists(ivf_name, self.warehouse)
         # ONE protected region from the first derived-store write to the
-        # base commit (same rule as update()): a failure anywhere after a
-        # derived store was touched drops the now-suspect derived tables —
-        # a diverged __ivf or a shrunk-postings index missing live docs
-        # must not survive the base keeping its rows.
+        # base commit (same rule as update()): a failure anywhere after the
+        # postings shrank drops the text index — a shrunk-postings index
+        # missing live docs must not survive the base keeping its rows.
         try:
-            # Keep the IVF layout consistent BEFORE rewriting the base
-            # (both rewrites read only their own directory; a stale index
-            # would keep returning deleted rows to use_index=True
-            # queries).  The predicate compiles over the metadata column,
-            # present in both.
-            if has_index:
-                self._cat.rewrite_where(
-                    self.spark, ivf_name, keep, self.warehouse,
-                    **self._index_mut_kwargs,
-                )
             # Graph shrink rides the same derived-stores-first window:
             # unpin the epoch, file-pruned-rewrite __hnsw_nodes, rebuild
             # only the clusters that lost rows; the epoch re-pins after
@@ -1811,10 +1729,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 if self.versioned:
                     committed_v = out.get("version")
         except Exception:
-            self._recover_index_after_failed_base_commit()
+            self._drop_text_index()
             raise
-        if has_index:
-            self._stamp_ivf_version()
         self._graph_delete_finish(graph_stash)
         head_after = committed_v if committed_v is not None else pre_head
         if text_delta is None:
@@ -1860,16 +1776,15 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         The patch/re-id step runs as one Arrow-batched ``mapInPandas`` pass
         over ONLY the matched rows (heterogeneous JSON text must round-trip
         through real JSON objects — the same boundary where the embedders
-        live); unmatched rows stream through untouched, JVM-side.  An IVF
-        layout, if present, is rewritten in the same call: old entries for
-        matched rows removed, patched rows re-assigned to their nearest
-        centroid (and re-encoded when a PQ codebook exists).  A text index
+        live); unmatched rows stream through untouched, JVM-side.  On an
+        indexed table the patched rows are re-assigned to their nearest
+        centroid (and re-encoded when a PQ codebook exists) before the one
+        base commit.  A text index
         is maintained incrementally for relabel-sized updates (a relabel
         is a delete+insert to the index too: old postings shrink, patched
         rows re-add through the replay-safe insert sync); mass updates
         drop it for rebuild.
         """
-        self._require_rewritable()
         if not filters:
             raise ValueError("update() requires non-empty filters")
         if not patch:
@@ -1951,46 +1866,23 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         conflicts = keep.select("id").join(
             F.broadcast(updated.select("id")), "id", "left_semi"
         )
-        updated = updated.join(F.broadcast(conflicts), "id", "left_anti")
-        # The patched batch feeds the conflict probe, the index rewrite, and
-        # the base rewrite — persist so the matched-scan + Arrow patch pass
+        updated = self._assign_clusters(
+            updated.join(F.broadcast(conflicts), "id", "left_anti")
+        )
+        # The patched batch feeds the text sync, the bloom sync and the
+        # base rewrite — persist so the matched-scan + Arrow patch pass
         # runs once, not once per consumer.  (Correctness never depends on
         # the cache: every plan reads only not-yet-swapped directories.)
         updated = updated.persist()
         text_pinned = None
         try:
             # ONE protected region from the first derived-store write to
-            # the base commit: if ANY step fails after a derived store was
-            # touched (__ivf replace, text shrink, the checkpoint, the
-            # base rewrite), the recovery helper drops the now-suspect
-            # derived tables — text index included — instead of leaving a
-            # silently inconsistent one behind (review finding: the text
-            # shrink used to sit outside the except that covered only the
-            # base rewrite).
+            # the base commit: if ANY step fails after the postings shrank
+            # (the checkpoint, the base rewrite), the text index is dropped
+            # instead of left silently inconsistent (review finding: the
+            # text shrink used to sit outside the except that covered only
+            # the base rewrite).
             try:
-                # Rewrite the IVF layout FIRST: its plan reads __ivf + the
-                # (still unswapped) base table; the base rewrite below
-                # reads only the base.
-                ivf_name, ivf = self._load_ivf(require=False)
-                if ivf is not None:
-                    assigned = self._encode_pq_if_present(ivf.assign(updated))
-                    # Open the mutation window BEFORE the replace: an
-                    # update is count-preserving, so in the window between
-                    # this __ivf rewrite and the base commit a concurrent
-                    # reader's stamp probe would see EQUAL totals over
-                    # DIVERGED content and record history[old_base] =
-                    # patched_ivf — time-traveled indexed reads of the old
-                    # snapshot would then silently serve patched vectors.
-                    # The flag makes that probe fail closed (no stamp).
-                    self._begin_ivf_mutation()
-                    # File-pruned like the base rewrite: only cluster-
-                    # partition files containing matched rows restage;
-                    # `assigned` carries cluster_id (+ pq_code), so
-                    # replacements land in their partition dirs.
-                    self._cat.replace_where(
-                        self.spark, ivf_name, pred, assigned, self.warehouse,
-                        **self._index_mut_kwargs,
-                    )
                 # Text postings: an update is a delete+insert to the index
                 # too — shrink the matched rows' postings BEFORE the base
                 # rewrite (same ordering as delete; mass updates fall back
@@ -2016,7 +1908,9 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                     pre_head = vcat.current_version(self.name, self.warehouse) or 0
                 # File-pruned copy-on-write (both backends): only files
                 # that CONTAIN matched rows are rewritten — the
-                # replacement set is touched.filter(~pred) ∪ updated,
+                # replacement set is touched.filter(~pred) ∪ updated
+                # (which carries cluster_id on an indexed table, so a
+                # plain table's replacements land in their cluster dirs),
                 # untouched files carry forward by reference (versioned:
                 # re-listed in the manifest; plain: hardlinked) — a
                 # one-row relabel never rewrites the corpus.  The conflict
@@ -2042,14 +1936,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                     **kw,
                 )
             except Exception:
-                # drops __ivf artifacts AND the text index in both its
-                # branches — rebuild-loudly, never a diverged index
-                self._recover_index_after_failed_base_commit()
+                self._drop_text_index()  # rebuild-loudly, never diverged
                 raise
-            if ivf is not None:
-                # clears mutation_pending under the lock, THEN stamps the
-                # now-consistent (base, __ivf) head pair
-                self._end_ivf_mutation()
             if has_text:
                 if text_delta is None:
                     self._drop_text_index()  # mass update: rebuild-loudly
@@ -2094,7 +1982,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         instance's embedder/dim switch to the new configuration so
         subsequent queries embed in the new space.  Returns rows
         re-embedded."""
-        self._require_rewritable()
         new_name = embedder_name or self.embedder_name
         new_dim = embedding_dim or self.embedding_dim
         new_kwargs = embedder_kwargs if embedder_kwargs is not None else self.embedder_kwargs
@@ -2255,9 +2142,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self._write_meta()
         self._drop_text_index()  # overwrite replaces the corpus wholesale
         self._drop_bloom_filter()  # new corpus = keys the filter never saw
-        # stale __ivf/PQ would SERVE the old corpus's rows under
-        # use_index=True when build_index=False and row counts happen to
-        # match (reconcile short-circuits on totals) — drop them too
+        # stale centroids/PQ describe the old corpus's geometry, and the
+        # flat overwrite drops the old cluster assignment — drop them too
         self._drop_index_tables(keep_text=True)
         self._cat.overwrite(
             self._with_stats_cols(df.select(*[f.name for f in ITEMS_SCHEMA.fields])),

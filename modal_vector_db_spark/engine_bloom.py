@@ -33,7 +33,7 @@ class BloomFilterMixin:
     # writer ever rewrites the word table.
     #
     # Consistency contract — SUPERSET, not exact (this is why no ledger is
-    # needed, unlike __ivf/__text): the filter must contain AT LEAST every
+    # needed, unlike __text): the filter must contain AT LEAST every
     # live key; extra bits only raise the false-positive rate and every
     # false positive dies in `bloom_admit`'s exact verify.  Maintenance
     # rules that keep the invariant:

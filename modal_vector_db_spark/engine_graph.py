@@ -203,27 +203,15 @@ class GraphIndexMixin:
         the corpus geometry, exactly like nprobe)."""
         from modal_vector_db_spark.operators.hnsw import build_hnsw
 
-        if not self._cat.table_exists(self.name + "__ivf", self.warehouse):
+        if not self._has_ivf():
             raise ValueError(
                 "create_graph_index needs the IVF layout: run create_index() "
                 "first (the cluster partitioning is the graph's sharding)"
             )
-        if self.versioned:
-            # the epoch pin below asserts "this graph mirrors base@head";
-            # that is only true if the __ivf source itself is verified at
-            # head (the stamp machinery) — otherwise the pin would bless a
-            # graph built from a stale index
-            from modal_vector_db_spark.sources import versioned as vcat
-
-            head = vcat.current_version(self.name, self.warehouse) or 0
-            if self._read_ivf_stamp() != head:
-                raise ValueError(
-                    f"__ivf is not verified at head version {head} — run "
-                    "create_index() (or reconcile_index()) before building "
-                    "the graph"
-                )
-        ivf_df = self._cat.read_table(self.spark, self.name + "__ivf", self.warehouse)
-        nodes = self._graph_node_projection(ivf_df)
+        # the base IS the IVF layout: its rows carry their cluster_id
+        nodes = self._graph_node_projection(
+            self._cat.read_table(self.spark, self.name, self.warehouse)
+        )
         self._cat.overwrite(
             nodes,
             self.name + "__hnsw_nodes",
@@ -337,12 +325,12 @@ class GraphIndexMixin:
 
     # -- incremental maintenance ---------------------------------------------
     def _sync_graph_for_append(
-        self, ivf_rows: DataFrame | None, base_version: int | None = None
+        self, ivf_rows: DataFrame, base_version: int | None = None
     ) -> None:
         """Keep the graph current on insert (the reference's HNSW is
         maintained on every insert, ``duckvdb.py:37-41,57-61``): append
-        the batch's rows to ``__hnsw_nodes`` (replay-safe anti-join, the
-        ``__ivf`` protocol) and INSERT the new nodes into the touched
+        the batch's rows to ``__hnsw_nodes`` (replay-safe anti-join) and
+        INSERT the new nodes into the touched
         clusters' LIVE graphs via the native HNSW insert
         (``operators/hnsw.py:grow_hnsw`` — ef_construction search per new
         node, O(batch · ef · log n) compute instead of the old
@@ -350,9 +338,8 @@ class GraphIndexMixin:
         partition rewrite I/O is unchanged, the cluster is the file
         unit either way).  No-op without a graph.
 
-        ``ivf_rows`` is the cluster-assigned, replay-filtered,
-        checkpoint-pinned frame :meth:`_sync_index_for_append` already
-        computed — the assignment is never recomputed.
+        ``ivf_rows`` is the insert's cluster-assigned, persisted batch
+        (:meth:`_assign_clusters`) — the assignment is never recomputed.
 
         The whole sync (append + rebuild + epoch bump) serializes under
         the epoch-sidecar lock: two concurrent writers rebuilding the
@@ -362,13 +349,12 @@ class GraphIndexMixin:
         demands a rebuild loudly) and the insert proceeds — graph
         maintenance must never block the write path.
 
-        The epoch bump is totals-verified (the ``_stamp_ivf_version``
-        sandwich, simplified): versioned tables pin the head only when
+        The epoch bump is totals-verified: versioned tables pin the head only when
         the node-table manifest total equals the base manifest total at
         a stable head — racing writers each converge the pin when the
         LAST sync lands; any in-between crash leaves a loudly-stale
         epoch, never a silently wrong one."""
-        if ivf_rows is None or self._read_hnsw_meta() is None:
+        if self._read_hnsw_meta() is None:
             return
         from modal_vector_db_spark.plans.checkpoints import release_local_checkpoint
 
@@ -390,7 +376,7 @@ class GraphIndexMixin:
                 )
                 nodes_new = nodes_new.join(F.broadcast(conflicts), "id", "left_anti")
                 # pin BEFORE the self-referential append (the plan reads
-                # the directory it appends to — the __ivf sync rule)
+                # the directory it appends to)
                 nodes_new = nodes_new.localCheckpoint(eager=True)
                 try:
                     n_new = nodes_new.count()
@@ -433,7 +419,7 @@ class GraphIndexMixin:
         path), insert only the flagged nodes, swap the partitions in.
         Unlike the rebuild, this plan is SELF-REFERENTIAL on ``__hnsw``
         (reads the adjacency it rewrites), so the fresh adjacency is
-        checkpoint-pinned before the swap — the ``__ivf`` sync rule.
+        checkpoint-pinned before the swap.
 
         Compute scales with the BATCH (ef_construction search per new
         node), not the cluster — the round-11 maintenance economics
@@ -680,19 +666,7 @@ class GraphIndexMixin:
                 "(create_index() ran since) — rebuild with "
                 "create_graph_index()"
             )
-        # Load the IVF handle BEFORE taking the epoch lock, with its
-        # once-per-handle auto-repair probe SUPPRESSED: the probe runs
-        # reconcile_index, whose graph-heal hook re-enters this lock — a
-        # self-deadlock (found by the chunk suite: 120 s spin, loud
-        # timeout) — and would also swallow this call's repair count into
-        # the probe.  Suppression is sound: reconcile_graph IS a
-        # reconciliation entry point (it diffs against the BASE, not
-        # __ivf), and cluster assignment needs only the centroid tables,
-        # which load fresh regardless; a caller healing everything after
-        # a crash should use reconcile_index(), which repairs __ivf FIRST
-        # and then delegates here.
-        self._ivf_probed = True
-        _, ivf = self._load_ivf()
+        ivf = self._load_ivf()
         try:
             with self._sidecar_lock(
                 self._hnsw_meta_path(), "hnsw graph", timeout_s=120.0

@@ -51,8 +51,8 @@ class TextIndexMixin:
     # history[str(base_v)] = [postings_version, n, dl_sum]: postings@pv
     # holds EXACTLY base@base_v's textful docs and (n, dl_sum) is the BM25
     # calibration at that version.  Entries are WRITER-recorded only —
-    # postings rows are per-(doc, term), so unlike the __ivf stamp no
-    # after-the-fact totals comparison can verify a pairing; instead each
+    # postings rows are per-(doc, term), so no after-the-fact totals
+    # comparison can verify a pairing; instead each
     # writer records the version it just synchronized, and contiguity
     # tracking (`synced_through` + `pending`) proves completeness:
     #
@@ -319,8 +319,7 @@ class TextIndexMixin:
         use_text_index=True)`` serves a recorded pair byte-equal to the
         scan path at N.  Ledger entries are WRITER-RECORDED, never
         reader-inferred (postings rows are per-(doc, term), so no totals
-        check could ever verify a pairing after the fact — the soundness
-        analysis the __ivf stamp needed does not transfer); every race
+        check could ever verify a pairing after the fact); every race
         that would make an entry unverifiable fails closed to "no entry"
         (see :meth:`_text_ledger_mark`)."""
         from modal_vector_db_spark.operators.hybrid import build_text_postings

@@ -19,7 +19,7 @@ state:
   by its cluster's size, zero driver state.  The output is a plain
   DataFrame ``(cluster_id, vec_id, layer, neighbors array<bigint>)`` —
   an adjacency TABLE, storable as cluster-partitioned parquet exactly
-  like the ``__ivf`` table, so serving reads only probed partitions.
+  like an indexed plain table, so serving reads only probed partitions.
 - :func:`hnsw_topk` serves a query by COGROUPING the adjacency and
   vector tables per probed cluster (``groupBy(cluster).cogroup(...)
   .applyInPandas``): each task reconstructs its cluster's graph, runs

@@ -111,8 +111,8 @@ def drop_table(name: str, warehouse: str | None = None) -> None:
 def list_tables(warehouse: str | None = None) -> list[dict]:
     """Catalog listing: every table directory under the warehouse with its
     kind — ``plain`` (parquet dir), ``versioned`` (manifest log), or
-    ``derived`` (the ``__ivf``/``__pq_codebooks``/``__ivf_centroids``
-    side-tables an index build writes).  The ops surface the reference gets
+    ``derived`` (the ``__pq_codebooks``/``__ivf_centroids`` side-tables an
+    index build writes, and ``__ivf`` copies older layouts kept).  The ops surface the reference gets
     for free from ``ls /db/*.duckdb``."""
     root = warehouse or DEFAULT_WAREHOUSE
     if not os.path.isdir(root):
@@ -131,8 +131,8 @@ def list_tables(warehouse: str | None = None) -> list[dict]:
             for s in ("__old", "__compacting", "__rewriting", "__replacing")
         ):
             continue
-        # suffix check FIRST: a versioned base table's __ivf layout is
-        # itself manifest-logged, but it is still a derived table
+        # suffix check FIRST: a derived table may itself be
+        # manifest-logged
         if any(name.endswith(s) for s in ("__ivf", "__ivf_centroids", "__pq_codebooks")):
             kind = "derived"
         elif os.path.isdir(os.path.join(p, "_manifests")):
@@ -185,8 +185,8 @@ def sized_by_bytes(df: DataFrame, partition_by=None) -> DataFrame:
     per partition directory.  Taken by appends whose input partitioning is
     fixed (:func:`sized_for_append`), by update-shaped copy-on-write
     replacements (``replace_where``, both backends — they union the kept
-    rows with a persisted patch batch) and by ``create_index``'s ``__ivf``
-    overwrite (its input's partitioning is the base table's file split).
+    rows with a persisted patch batch) and by ``create_index``'s plain-table
+    rewrite (its input's partitioning is the base table's file split).
     Deletes (``rewrite_where``) write their scan of the touched files as
     is: one file per scan split, and Spark packs small files into one split
     and cuts only files larger than a split, so the shuffle would buy

@@ -39,9 +39,7 @@ no longer the head, so the caller must re-run against the new head.
 Cross-writer content-idempotency (two writers inserting the same content
 simultaneously) is handled natively by the facade's CAS MERGE loop —
 ``append(expected_head=...)`` here is the compare-and-swap primitive,
-``engine.py:_versioned_cas_append`` the retry-with-fresh-anti-join policy
-(Delta MERGE via delta-spark remains the plain-catalog alternative,
-``engine.py:_merge_append``).
+``engine.py:_versioned_cas_append`` the retry-with-fresh-anti-join policy.
 """
 
 from __future__ import annotations

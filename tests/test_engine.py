@@ -210,48 +210,6 @@ def test_insert_rejects_wrong_dim(spark, tmp_path):
         db.insert([{"a": 1}], embeddings=[np.zeros(16, dtype=np.float32)])
 
 
-def test_merge_mode_without_delta_raises_cleanly(spark, tmp_path):
-    """write_mode='merge' on an env without delta-spark must fail with a
-    NotImplementedError NAMING the missing dep — at insert time, not with
-    an opaque ImportError from inside the write path."""
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark present: covered by test_merge_mode_concurrent_idempotency")
-    except ImportError:
-        pass
-    db = VectorDB(spark, "mergedb", embedding_dim=8,
-                  warehouse=str(tmp_path / "whm"), create_new_table=True,
-                  write_mode="merge")
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        db.insert([{"a": 1}], embed_field="a")
-
-
-def test_merge_mode_rejects_unknown_mode(spark, tmp_path):
-    with pytest.raises(ValueError, match="write_mode"):
-        VectorDB(spark, "badmode", warehouse=str(tmp_path / "whb"), write_mode="upsert")
-
-
-def test_merge_mode_concurrent_idempotency(spark, tmp_path):
-    """Delta MERGE semantics (runs only when delta-spark is importable):
-    two overlapping batches written through write_mode='merge' must merge
-    by id — the ON CONFLICT DO NOTHING contract under the ACID path."""
-    pytest.importorskip("delta", reason="delta-spark not installed in this env")
-    db = VectorDB(spark, "mergedb2", embedding_dim=8,
-                  warehouse=str(tmp_path / "whm2"), create_new_table=True,
-                  write_mode="merge")
-    b1 = [{"n": i} for i in range(20)]
-    b2 = [{"n": i} for i in range(10, 30)]  # overlaps b1 on 10..19
-    db.insert(b1, embed_field="n")
-    db.insert(b2, embed_field="n")
-    from delta.tables import DeltaTable
-    from modal_vector_db_spark.sources import catalog as C
-
-    merged = DeltaTable.forPath(spark, C.db_path("mergedb2", str(tmp_path / "whm2"))).toDF()
-    assert merged.count() == 30
-    assert merged.select("id").distinct().count() == 30
-
-
 @pytest.mark.slow
 def test_compact_merges_small_files(spark, tmp_path):
     """20 single-row insert batches fragment the table to ~20 files;
@@ -539,7 +497,7 @@ def test_update_collision_collapses(spark, tmp_path):
 @pytest.mark.slow
 def test_delete_and_update_keep_index_in_sync(spark, tmp_path):
     """use_index=True queries must see copy-on-write deletes/updates — the
-    IVF layout is rewritten in the same call."""
+    base table is the IVF layout, rewritten in the same commit."""
     db = _mk(spark, tmp_path, "upddb4")
     db.insert(
         [{"name": f"item {i}", "odd": bool(i % 2)} for i in range(40)],
@@ -555,12 +513,11 @@ def test_delete_and_update_keep_index_in_sync(spark, tmp_path):
     assert db.update({"odd": False}, {"status": "kept"}) == 20
     res = db.query("item 2", k=20, use_index=True, nprobe=4)
     assert res and all(r.metadata.get("status") == "kept" for r in res)
-    # index table row count tracks the base table through both rewrites
+    # the rows an index probe reaches are the base table's rows
     from modal_vector_db_spark.sources import catalog as cat
 
-    assert (
-        cat.read_table(spark, "upddb4__ivf", str(tmp_path)).count() == db.num_rows() == 20
-    )
+    assert not cat.table_exists("upddb4__ivf", str(tmp_path))
+    assert db.index_stats()["rows"] == db.num_rows() == 20
 
 
 def test_insert_df_bulk_ingest(spark, tmp_path):
@@ -618,7 +575,7 @@ def test_insert_df_bulk_ingest(spark, tmp_path):
 @pytest.mark.slow
 def test_insert_after_pq_index_visible_to_compressed_query(spark, tmp_path):
     """Rows inserted AFTER create_index(pq_m=...) must carry pq codes in the
-    __ivf layout — otherwise NULL ADC distances rank them last and they are
+    base table — otherwise NULL ADC distances rank them last and they are
     silently invisible to compressed queries until a rebuild."""
     db = _mk(spark, tmp_path, "pqins")
     db.insert([{"n": i} for i in range(60)], embed_field="n")
@@ -627,7 +584,7 @@ def test_insert_after_pq_index_visible_to_compressed_query(spark, tmp_path):
     db.insert([{"n": 999, "fresh": True}], embed_field="n")
     from modal_vector_db_spark.sources import catalog as cat
 
-    ivf = cat.read_table(spark, "pqins__ivf", str(tmp_path))
+    ivf = cat.read_table(spark, "pqins", str(tmp_path))
     fresh = ivf.filter("get_json_object(metadata, '$.fresh') = 'true'").collect()
     assert len(fresh) == 1 and fresh[0]["pq_code"] is not None
 
@@ -659,7 +616,7 @@ def test_list_tables_catalog_surface(spark, tmp_path):
     listing = {t["name"]: t["kind"] for t in cat.list_tables(wh)}
     assert listing["tbl_a"] == "plain"
     assert listing["tbl_v"] == "versioned"
-    assert listing["tbl_a__ivf"] == "derived"
+    assert "tbl_a__ivf" not in listing  # the base is the index layout
     assert listing["tbl_a__ivf_centroids"] == "derived"
     assert cat.list_tables(str(tmp_path / "nope")) == []
 

@@ -1,7 +1,6 @@
 """Round-9 engine review findings, pinned: stale-index drop on bulk
-load, query/bulk-load dim validation, merge-mode mutation gate,
-table-level id_fields identity, maintenance-op ledger marks, and the
-counter-shaped __ivf mutation window."""
+load, query/bulk-load dim validation, table-level id_fields identity,
+and maintenance-op ledger marks."""
 
 from __future__ import annotations
 
@@ -62,18 +61,6 @@ def test_load_from_parquet_validates_dim_and_drops_stale_index(spark, tmp_path):
     assert len(db.query("doc number 3", k=2)) == 2  # exact path fine
 
 
-def test_merge_mode_mutations_refused(spark, tmp_path):
-    db = _db(spark, tmp_path, write_mode="merge")
-    for fn in (
-        lambda: db.delete({"n": 1}),
-        lambda: db.update({"n": 1}, {"q": "x"}),
-        lambda: db.compact(),
-        lambda: db.reembed(embedder_name="HashingEmbedder"),
-    ):
-        with pytest.raises(ValueError, match="Delta log"):
-            fn()
-
-
 def test_id_fields_table_identity(spark, tmp_path):
     db = _db(spark, tmp_path, id_fields=("url", "text"))
     db.insert([{"url": "u1", "text": "a", "date": "d1"}])
@@ -120,18 +107,6 @@ def test_maintenance_ops_keep_text_ledger_contiguous(spark, tmp_path):
     # verified-pair time travel still works at the new head
     hits = db.query_hybrid("doc number 21", k=2, version=head, use_text_index=True)
     assert len(hits) == 2
-
-
-def test_ivf_mutation_window_is_a_counter(spark, tmp_path):
-    db = _db(spark, tmp_path, versioned=True)
-    db.insert(_metas(0, 30))
-    db.create_index(num_clusters=2)
-    db._begin_ivf_mutation()
-    db._begin_ivf_mutation()  # overlapping second window
-    db._end_ivf_mutation()  # first finalizer must NOT close the window
-    assert db._read_ivf_meta().get("mutation_pending") == 1
-    db._end_ivf_mutation()
-    assert "mutation_pending" not in db._read_ivf_meta()
 
 
 def test_id_fields_promotion_on_undeclared_table(spark, tmp_path):

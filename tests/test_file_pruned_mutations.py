@@ -129,13 +129,14 @@ def test_plain_update_hardlink_carries_untouched_files(spark, tmp_path):
 
 
 def test_indexed_delete_prunes_ivf_partition_files(spark, tmp_path):
-    """The cluster-partitioned __ivf layout is file-pruned too (partition
-    columns inferred from the Hive paths): a delete rewrites only the
-    cluster files containing matched rows; other clusters' files keep
-    their inodes, and indexed queries still agree with the exact path."""
+    """An indexed plain table is cluster-partitioned and still file-pruned
+    (partition columns inferred from the Hive paths): a delete rewrites
+    only the cluster files containing matched rows; other clusters' files
+    keep their inodes, and indexed queries still agree with the exact
+    path."""
     db = _mk(spark, tmp_path, "pivf", versioned=False)
     db.create_index(num_clusters=4)
-    ivf = db.name + "__ivf"
+    ivf = db.name
     files, pcols = catalog._leaf_files(ivf, db.warehouse)
     assert pcols == ["cluster_id"] and len(files) >= 2
     pred = F.get_json_object("metadata", "$.grp") == "b"
@@ -161,7 +162,7 @@ def test_indexed_update_prunes_ivf_partition_files(spark, tmp_path):
     db.create_index(num_clusters=4)
     assert db.update({"grp": "b"}, {"tier": "hot"}) == 10
     # index reflects the re-keyed rows: indexed query agrees with exact
-    _, pcols = catalog._leaf_files(db.name + "__ivf", db.warehouse)
+    _, pcols = catalog._leaf_files(db.name, db.warehouse)
     assert pcols == ["cluster_id"]
     exact = db.query("12", k=5, filters={"tier": "hot"})
     indexed = db.query("12", k=5, filters={"tier": "hot"}, use_index=True, nprobe=4)

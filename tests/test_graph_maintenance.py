@@ -247,13 +247,17 @@ def test_reconcile_graph_heals_missing_and_phantoms(spark, tmp_path):
     wh = db.warehouse
     e = get_embedder("HashingEmbedder", dim=32)
 
-    # MISSING: rows land in the base outside the facade (no graph sync)
+    # MISSING: rows land in the base outside the facade (no graph sync);
+    # the indexed base takes them with their cluster assignment
     rows = [
         (f"oob-{i}", json.dumps({"n": 5000 + i}),
          [float(x) for x in e.embed(f"oob text {i}")])
         for i in range(4)
     ]
-    catalog.append(spark.createDataFrame(rows, ITEMS_SCHEMA), name, wh)
+    catalog.append(
+        db._assign_clusters(spark.createDataFrame(rows, ITEMS_SCHEMA)), name, wh,
+        partition_by=["cluster_id"],
+    )
     with pytest.raises(ValueError, match="rebuild"):
         db.query_graph("oob text 1", k=2)
     assert db.reconcile_graph() == 4
@@ -303,7 +307,7 @@ def test_reconcile_graph_versioned_crash_window(spark, tmp_path):
 def test_vacuum_covers_graph_tables(spark, tmp_path):
     """Incremental maintenance gives the versioned graph tables one
     commit per insert — vacuum must reclaim their old versions' files on
-    the same retention policy as the base/__ivf/__text logs."""
+    the same retention policy as the base/__text logs."""
     from modal_vector_db_spark.sources import versioned as vcat
 
     db = _mk(spark, tmp_path, f"gvac_{_uuid.uuid4().hex[:6]}", versioned=True)
@@ -395,9 +399,7 @@ def test_load_from_parquet_builds_graph_opt_in(spark, tmp_path):
 def test_reconcile_index_heals_graph_too(spark, tmp_path):
     """One repair call heals every derived structure: reconcile_index()
     on a table whose graph sync crashed (base committed, graph pin
-    stale) repairs the graph as well — including through the zero-job
-    totals short-circuit, where base/__ivf agree but the graph does
-    not."""
+    stale) repairs the graph as well."""
     db = _mk(spark, tmp_path, f"gri_{_uuid.uuid4().hex[:6]}", versioned=True)
     real = db._sync_graph_for_append
     db._sync_graph_for_append = lambda *a, **k: None  # crash shape
@@ -405,8 +407,8 @@ def test_reconcile_index_heals_graph_too(spark, tmp_path):
         db.insert([{"text": "late row", "n": 31337}], embed_field="text")
     finally:
         db._sync_graph_for_append = real
-    # __ivf synced fine (totals match -> the short-circuit path), but the
-    # graph pin is stale
+    # the base (and so the IVF layout) committed, but the graph pin is
+    # stale
     with pytest.raises(ValueError, match="rebuild"):
         db.query_graph("late row", k=1)
     assert db.reconcile_index() == 1  # the healed graph row

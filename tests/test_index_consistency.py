@@ -1,17 +1,14 @@
-"""Crash/eviction consistency of the base-table ↔ __ivf double write
-(engine.py:_idempotent_append).
+"""Consistency of an indexed table's writes and reads
+(engine.py:_idempotent_append, engine_ivf.py).
 
-The insert path appends to the derived ``__ivf`` layout BEFORE the base
-table (a cache-missed recompute must read the still-unmodified base), which
-opens a crash window where index rows exist without base rows.  These tests
-pin the three recovery/robustness properties of that protocol:
-
-1. replaying the crashed insert reconverges both tables with no duplicate
-   index rows (the __ivf-side anti-join);
-2. :meth:`reconcile_index` repairs an abandoned (never-replayed) batch;
-3. evicting the persisted batch between the two appends does not lose or
-   duplicate rows (regression for the round-3 bug fixed in ebdae8c: a
-   recompute after the base append yielded an EMPTY batch).
+The base table IS the IVF layout: an insert assigns its rows and stores
+them in ONE base commit, so there is no second copy to crash out of step
+with.  These tests pin what that leaves to get right: a crashed insert
+replays cleanly, concurrent CAS inserts land every row once, an evicted
+persisted batch recomputes against the unmodified base (regression for
+the round-3 bug fixed in ebdae8c: a recompute after the base append
+yielded an EMPTY batch), and indexed time travel serves exactly the
+versions whose rows carry the current centroid generation's assignment.
 """
 
 from __future__ import annotations
@@ -38,28 +35,22 @@ def _indexed_db(spark, tmp_path, name):
 
 
 def _crash_base_append(monkeypatch, base_name):
-    """Make the NEXT base-table append die AFTER the __ivf append succeeded
-    — the exact crash window the protocol documents."""
+    """Make the NEXT base-table append die (after the derived-store syncs
+    ran on the assigned batch)."""
     real_append = catalog.append
 
     def dying(df, name, warehouse=None, partition_by=None):
         if name == base_name:
-            raise RuntimeError("simulated crash between index and base append")
+            raise RuntimeError("simulated crash in the base append")
         return real_append(df, name, warehouse, partition_by)
 
     monkeypatch.setattr(catalog, "append", dying)
     return real_append
 
 
-def _ivf_ids(spark, db):
-    # the __ivf layout follows the base table's backend (versioned tables
-    # keep a manifest-logged index)
-    return [
-        r["id"]
-        for r in db._cat.read_table(spark, db.name + "__ivf", db.warehouse)
-        .select("id")
-        .collect()
-    ]
+def _ids(db):
+    """The ids an index probe can reach: the base table's rows."""
+    return [r["id"] for r in db.items().select("id").collect()]
 
 
 def test_crashed_insert_replay_reconverges(spark, tmp_path, monkeypatch):
@@ -69,42 +60,25 @@ def test_crashed_insert_replay_reconverges(spark, tmp_path, monkeypatch):
     _crash_base_append(monkeypatch, db.name)
     with pytest.raises(RuntimeError, match="simulated crash"):
         db.insert(batch, embed_field="n")
-    # phantom state: index got the rows, base did not
+    # nothing landed: the index has no rows of its own to leave behind
     assert db.num_rows() == 40
-    assert len(_ivf_ids(spark, db)) == 45
+    assert not catalog.table_exists(db.name + "__ivf", db.warehouse)
     monkeypatch.undo()
 
     # replay (the crashed write never acknowledged — replay IS the contract)
     db.insert(batch, embed_field="n")
     assert db.num_rows() == 45
-    ids = _ivf_ids(spark, db)
-    assert len(ids) == 45 and len(set(ids)) == 45  # no duplicate index rows
+    ids = _ids(db)
+    assert len(ids) == 45 and len(set(ids)) == 45  # no duplicate rows
     # indexed and exact paths agree again
     exact = db.query("1002", k=5)
     indexed = db.query("1002", k=5, use_index=True, nprobe=4)
     assert [r.id for r in indexed] == [r.id for r in exact]
 
 
-def test_reconcile_index_drops_abandoned_phantoms(spark, tmp_path, monkeypatch):
-    db = _indexed_db(spark, tmp_path, "phantomidx")
-    _crash_base_append(monkeypatch, db.name)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        db.insert([{"n": 2000 + i} for i in range(3)], embed_field="n")
-    monkeypatch.undo()
-    assert len(_ivf_ids(spark, db)) == 43  # 3 phantoms
-
-    assert db.reconcile_index() == 3
-    ids = _ivf_ids(spark, db)
-    assert len(ids) == 40 == db.num_rows()
-    exact = db.query("7", k=5)
-    indexed = db.query("7", k=5, use_index=True, nprobe=4)
-    assert [r.id for r in indexed] == [r.id for r in exact]
-    assert db.reconcile_index() == 0  # idempotent
-
-
 def test_versioned_indexed_insert_happy_path(spark, tmp_path):
-    """CAS insert + post-commit index sync, no failures: committed rows are
-    immediately visible to indexed queries, replays dedup, and the index
+    """CAS insert of an assigned batch, no failures: committed rows are
+    immediately visible to indexed queries, replays dedup, and the table
     carries no duplicates."""
     db = VectorDB(
         spark, "vhappyidx", embedding_dim=16, warehouse=str(tmp_path),
@@ -114,104 +88,14 @@ def test_versioned_indexed_insert_happy_path(spark, tmp_path):
     db.create_index(num_clusters=4)
     batch = [{"n": 4000 + i} for i in range(5)]
     db.insert(batch, embed_field="n")
-    db.insert(batch, embed_field="n")  # replay: no-op on base AND index
+    db.insert(batch, embed_field="n")  # replay: no-op
 
     assert db.num_rows() == 45
-    ids = _ivf_ids(spark, db)
+    ids = _ids(db)
     assert len(ids) == 45 and len(set(ids)) == 45
     exact = db.query("4002", k=5)
     indexed = db.query("4002", k=5, use_index=True, nprobe=4)
     assert [r.id for r in indexed] == [r.id for r in exact]
-
-
-def test_versioned_crash_after_commit_heals_via_reconcile(spark, tmp_path, monkeypatch):
-    """Versioned path writes the index AFTER the base commit (snapshot-
-    pinned plans make the order safe): a crash in between leaves the index
-    MISSING rows — under-recall, never phantoms — and reconcile_index
-    appends exactly the missing rows."""
-    db = VectorDB(
-        spark, "vcrashidx", embedding_dim=16, warehouse=str(tmp_path),
-        create_new_table=True, versioned=True,
-    )
-    db.insert([{"n": i} for i in range(40)], embed_field="n")
-    db.create_index(num_clusters=4)
-    real_append = vcat.append
-
-    def dying(df, name, warehouse=None, partition_by=None, stats_cols=None, expected_head=None):
-        if name.endswith("__ivf"):
-            raise RuntimeError("simulated crash after base commit")
-        return real_append(df, name, warehouse, partition_by, stats_cols, expected_head)
-
-    monkeypatch.setattr(vcat, "append", dying)
-    with pytest.raises(RuntimeError, match="after base commit"):
-        db.insert([{"n": 5000 + i} for i in range(4)], embed_field="n")
-    monkeypatch.undo()
-
-    # base committed, index behind: under-recall, no phantoms
-    assert db.num_rows() == 44
-    assert len(_ivf_ids(spark, db)) == 40
-
-    # unequal totals (44 vs 40) fail the metadata short-circuit, so the
-    # default (shallow) reconcile proceeds to the real repair
-    assert db.reconcile_index() == 4
-    ids = _ivf_ids(spark, db)
-    assert len(ids) == 44 and len(set(ids)) == 44
-    exact = db.query("5002", k=5)
-    indexed = db.query("5002", k=5, use_index=True, nprobe=4)
-    assert [r.id for r in indexed] == [r.id for r in exact]
-
-
-def test_versioned_crash_auto_repairs_on_next_indexed_query(spark, tmp_path, monkeypatch):
-    """Round-5 (r4 verdict #5): the abandoned-crash state heals WITHOUT an
-    explicit reconcile_index() call — the first indexed query's consistency
-    probe sees the stale version stamp, compares manifest row totals
-    (O(metadata)), and auto-repairs."""
-    db = VectorDB(
-        spark, "vautoidx", embedding_dim=16, warehouse=str(tmp_path),
-        create_new_table=True, versioned=True,
-    )
-    db.insert([{"n": i} for i in range(40)], embed_field="n")
-    db.create_index(num_clusters=4)
-    real_append = vcat.append
-
-    def dying(df, name, warehouse=None, partition_by=None, stats_cols=None, expected_head=None):
-        if name.endswith("__ivf"):
-            raise RuntimeError("simulated crash after base commit")
-        return real_append(df, name, warehouse, partition_by, stats_cols, expected_head)
-
-    monkeypatch.setattr(vcat, "append", dying)
-    with pytest.raises(RuntimeError, match="after base commit"):
-        db.insert([{"n": 6000 + i} for i in range(4)], embed_field="n")
-    monkeypatch.undo()
-    assert len(_ivf_ids(spark, db)) == 40  # index is behind
-
-    # a FRESH handle (the post-crash reality) queries without repairing first
-    db2 = VectorDB(
-        spark, "vautoidx", embedding_dim=16, warehouse=str(tmp_path), versioned=True
-    )
-    exact = db2.query("6002", k=5)
-    indexed = db2.query("6002", k=5, use_index=True, nprobe=4)
-    assert [r.id for r in indexed] == [r.id for r in exact]
-    ids = _ivf_ids(spark, db2)
-    assert len(ids) == 44 and len(set(ids)) == 44  # healed as a side effect
-
-
-def test_plain_abandoned_phantoms_auto_repair_on_indexed_query(spark, tmp_path, monkeypatch):
-    """Plain-catalog twin: an abandoned crashed insert's PHANTOM index rows
-    are dropped by the first indexed query's probe (footer-total
-    comparison), no reconcile_index() call."""
-    db = _indexed_db(spark, tmp_path, "pautoidx")
-    _crash_base_append(monkeypatch, db.name)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        db.insert([{"n": 7000 + i} for i in range(3)], embed_field="n")
-    monkeypatch.undo()
-    assert len(_ivf_ids(spark, db)) == 43  # 3 phantoms
-
-    db2 = VectorDB(spark, "pautoidx", embedding_dim=16, warehouse=str(tmp_path))
-    exact = db2.query("7", k=5)
-    indexed = db2.query("7", k=5, use_index=True, nprobe=4)
-    assert [r.id for r in indexed] == [r.id for r in exact]
-    assert len(_ivf_ids(spark, db2)) == 40  # phantoms dropped
 
 
 def test_reconcile_clean_table_schedules_zero_jobs(spark, tmp_path, monkeypatch):
@@ -239,9 +123,9 @@ def test_reconcile_clean_table_schedules_zero_jobs(spark, tmp_path, monkeypatch)
 
 def test_concurrent_indexed_cas_inserts_both_land(spark, tmp_path):
     """r4 verdict #2 done-criterion: two writers racing CAS inserts on an
-    INDEXED versioned table — both land (base OCC), the index receives
-    every row exactly once (its own OCC commit slots serialize the
-    appends), and use_index=True equals the exact path afterwards."""
+    INDEXED versioned table — all land (base OCC), every row exactly once
+    (each commit carries its rows' cluster assignment), and use_index=True
+    equals the exact path afterwards."""
     import threading
 
     db = VectorDB(
@@ -267,7 +151,7 @@ def test_concurrent_indexed_cas_inserts_both_land(spark, tmp_path):
         t.join()
     assert not errs
     assert db.num_rows() == 40 + 10 + 3
-    ids = _ivf_ids(spark, db)
+    ids = _ids(db)
     assert len(ids) == 53 and len(set(ids)) == 53
     exact = db.query("8004", k=6)
     indexed = db.query("8004", k=6, use_index=True, nprobe=4)
@@ -276,7 +160,7 @@ def test_concurrent_indexed_cas_inserts_both_land(spark, tmp_path):
 
 def test_rollback_then_indexed_query_fails_loudly(spark, tmp_path):
     """Time travel composition: rollback abandons the head the index was
-    built from — the index (and its version stamp) are dropped, and an
+    built from — the index (and its generation) are dropped, and an
     indexed query fails LOUDLY instead of serving a stale layout."""
     db = VectorDB(
         spark, "vrbidx", embedding_dim=16, warehouse=str(tmp_path),
@@ -298,29 +182,9 @@ def test_rollback_then_indexed_query_fails_loudly(spark, tmp_path):
     assert [r.id for r in indexed] == [r.id for r in exact]
 
 
-def test_stamp_tracks_mutations(spark, tmp_path):
-    """The __ivf sidecar stamp follows every index-touching op: create,
-    CAS insert, update, delete — so the per-handle probe short-circuits on
-    a healthy table instead of re-counting."""
-    db = VectorDB(
-        spark, "vstamp", embedding_dim=16, warehouse=str(tmp_path),
-        create_new_table=True, versioned=True,
-    )
-    db.insert([{"n": i, "odd": bool(i % 2)} for i in range(20)], embed_field="n")
-    db.create_index(num_clusters=2)
-    head = vcat.current_version(db.name, db.warehouse)
-    assert db._read_ivf_stamp() == head
-    db.insert([{"n": 200}], embed_field="n")
-    assert db._read_ivf_stamp() == vcat.current_version(db.name, db.warehouse)
-    db.update({"n": 200}, {"tag": "x"})
-    assert db._read_ivf_stamp() == vcat.current_version(db.name, db.warehouse)
-    db.delete({"odd": True})
-    assert db._read_ivf_stamp() == vcat.current_version(db.name, db.warehouse)
-
-
 def test_index_stats_metadata_only(spark, tmp_path, monkeypatch):
     """index_stats reads footers/manifests only (zero Spark jobs) and its
-    balance/freshness numbers are right on both backends."""
+    balance numbers are right on both backends."""
     for name, versioned in (("istat_p", False), ("istat_v", True)):
         db = VectorDB(
             spark, name, embedding_dim=16, warehouse=str(tmp_path),
@@ -343,15 +207,6 @@ def test_index_stats_metadata_only(spark, tmp_path, monkeypatch):
         assert st["clusters_total"] == 4
         assert 0 < st["clusters_nonempty"] <= 4
         assert 0 < st["max_cluster_frac"] <= 1.0
-        if versioned:
-            assert st["stamp_fresh"] is True
-            # base advances without an index sync -> stale stamp reported
-            monkeypatch.setattr(
-                VectorDB, "_sync_index_for_append", lambda *a, **k: None
-            )
-            db.insert([{"n": 100}], embed_field="n")
-            monkeypatch.undo()
-            assert db.index_stats()["stamp_fresh"] is False
 
     nodb = VectorDB(
         spark, "istat_none", embedding_dim=16, warehouse=str(tmp_path),
@@ -361,54 +216,16 @@ def test_index_stats_metadata_only(spark, tmp_path, monkeypatch):
         nodb.index_stats()
 
 
-def test_stamp_refuses_unverified_totals(spark, tmp_path, monkeypatch):
-    """A stamp is only written after the base/__ivf manifest row totals
-    verify — the concurrent-CAS interleaving where a higher-version writer
-    finishes its index sync first must NOT leave a head-equal stamp while
-    the lower writer's index rows are still in flight (a crash there would
-    otherwise hide the missing rows from the consistency probe forever)."""
-    db = VectorDB(
-        spark, "vstampverify", embedding_dim=16, warehouse=str(tmp_path),
-        create_new_table=True, versioned=True,
-    )
-    db.insert([{"n": i} for i in range(20)], embed_field="n")
-    db.create_index(num_clusters=2)
-    good = db._read_ivf_stamp()
-    assert good == vcat.current_version(db.name, db.warehouse)
-
-    # base advances while the index sync is "in flight" (skipped)
-    monkeypatch.setattr(VectorDB, "_sync_index_for_append", lambda *a, **k: None)
-    db.insert([{"n": 500 + i} for i in range(4)], embed_field="n")
-    monkeypatch.undo()
-    head = vcat.current_version(db.name, db.warehouse)
-    assert head > good
-
-    # the racing writer's stamp attempt: totals disagree -> no advance
-    db._stamp_ivf_version()
-    assert db._read_ivf_stamp() == good
-
-    # next indexed query probes the stale stamp, heals, and re-stamps
-    db2 = VectorDB(
-        spark, "vstampverify", embedding_dim=16, warehouse=str(tmp_path), versioned=True
-    )
-    exact = db2.query("502", k=5)
-    indexed = db2.query("502", k=5, use_index=True, nprobe=2)
-    assert [r.id for r in indexed] == [r.id for r in exact]
-    assert db2._read_ivf_stamp() == head
-    ids = _ivf_ids(spark, db2)
-    assert len(ids) == 24 and len(set(ids)) == 24
-
-
-def test_eviction_between_double_writes_loses_nothing(spark, tmp_path, monkeypatch):
-    """The ordered-double-write invariant, enforced by eviction instead of
-    by comment: drop EVERY cached/persisted dataset after the __ivf append
-    and before the base append — the recomputed batch plan must still
-    anti-join against the unmodified base and append identical rows."""
+def test_eviction_before_base_append_loses_nothing(spark, tmp_path, monkeypatch):
+    """The derived stores read the persisted batch before the base append:
+    drop EVERY cached/persisted dataset right before the base append — the
+    recomputed batch plan must still anti-join against the unmodified base
+    and append identical rows."""
     db = _indexed_db(spark, tmp_path, "evictidx")
     real_append = catalog.append
 
     def evicting(df, name, warehouse=None, partition_by=None):
-        if name == db.name:  # base write = second write: cache is gone now
+        if name == db.name:  # the base write: cache is gone now
             spark.catalog.clearCache()
         return real_append(df, name, warehouse, partition_by)
 
@@ -417,7 +234,7 @@ def test_eviction_between_double_writes_loses_nothing(spark, tmp_path, monkeypat
     monkeypatch.undo()
 
     assert db.num_rows() == 46
-    ids = _ivf_ids(spark, db)
+    ids = _ids(db)
     assert len(ids) == 46 and len(set(ids)) == 46
     # post-index inserts remain visible to indexed queries
     exact = db.query("3004", k=5)
@@ -426,13 +243,12 @@ def test_eviction_between_double_writes_loses_nothing(spark, tmp_path, monkeypat
 
 
 def test_indexed_time_travel_serves_verified_snapshot(spark, tmp_path):
-    """query(version=N, use_index=True) probes the __ivf manifest AS OF the
-    index version the stamp history VERIFIED for base version N (pinned
-    manifest row totals, engine.py:_stamp_ivf_version) — at full probe the
+    """query(version=N, use_index=True) probes the base manifest AS OF N
+    (a version of the table is a version of its index) — at full probe the
     result equals the exact time-travel scan, on every read shape (single,
-    batched, hybrid vector channel); verified pairs survive later inserts
-    AND later mutations (old manifests are immutable); index_stats() lists
-    the servable set."""
+    batched, hybrid vector channel); old versions keep serving after later
+    inserts AND later mutations (old manifests are immutable);
+    index_stats() lists the servable set."""
     import json
 
     db = VectorDB(
@@ -469,8 +285,8 @@ def test_indexed_time_travel_serves_verified_snapshot(spark, tmp_path):
                           use_index=True, nprobe=2)
     assert all(r.metadata["n"] < 100 for r in hyb)
 
-    # a mutation shrinks the index at head, but v1's pair still serves the
-    # PRE-delete snapshot (immutable manifests; vacuum is the only eraser)
+    # a mutation shrinks the head, but v1 still serves the PRE-delete
+    # snapshot (immutable manifests; vacuum is the only eraser)
     db.delete({"n": ("<", 5)})
     assert db.num_rows() == 25
     old = db.query("3", k=5, version=v1, use_index=True, nprobe=2)
@@ -482,10 +298,9 @@ def test_indexed_time_travel_serves_verified_snapshot(spark, tmp_path):
 
 
 def test_vacuum_prunes_indexed_time_travel_history(spark, tmp_path):
-    """vacuum() removes old versions' files AND the stamp-history pairs
-    that pointed at them: indexed time travel to a vacuumed version fails
-    with the canonical loud error (not a manifest-read crash mid-plan);
-    retained versions keep serving."""
+    """vacuum() removes old versions: indexed time travel to a vacuumed
+    version fails with the canonical loud error (not a manifest-read crash
+    mid-plan); retained versions keep serving."""
     db = VectorDB(
         spark, "vvacidx", embedding_dim=16, warehouse=str(tmp_path),
         create_new_table=True, versioned=True,
@@ -493,7 +308,7 @@ def test_vacuum_prunes_indexed_time_travel_history(spark, tmp_path):
     db.insert([{"n": i} for i in range(10)], embed_field="n")
     db.create_index(num_clusters=2)
     v_old = vcat.current_version(db.name, db.warehouse)
-    for b in range(3):  # push v_old past the retention horizon on BOTH logs
+    for b in range(3):  # push v_old past the retention horizon
         db.insert([{"n": 100 * (b + 1) + i} for i in range(4)], embed_field="n")
     v_new = vcat.current_version(db.name, db.warehouse)
     assert db.query("3", k=3, version=v_old, use_index=True, nprobe=2)
@@ -508,10 +323,10 @@ def test_vacuum_prunes_indexed_time_travel_history(spark, tmp_path):
 
 
 def test_rebuild_resets_time_travel_history(spark, tmp_path):
-    """create_index() re-clustering resets the stamp history: pairs from
-    the OLD centroid generation must not let an indexed time-travel query
-    probe an old layout with the new centroids (review finding — silently
-    wrong rows, not a loud error)."""
+    """create_index() re-clustering moves the first servable version:
+    versions assigned by the OLD centroid generation must not let an
+    indexed time-travel query probe an old layout with the new centroids
+    (review finding — silently wrong rows, not a loud error)."""
     db = VectorDB(
         spark, "vrebuild", embedding_dim=16, warehouse=str(tmp_path),
         create_new_table=True, versioned=True,
@@ -528,7 +343,7 @@ def test_rebuild_resets_time_travel_history(spark, tmp_path):
     ]
     with pytest.raises(ValueError, match="verified index snapshot"):
         db.query("7", k=3, version=v1, use_index=True, nprobe=4)
-    # the fresh pair serves the head as of the rebuild
+    # the rebuild's commit serves the head
     head = db.query("105", k=3, use_index=True, nprobe=4)
     assert [r.id for r in head] == [r.id for r in db.query("105", k=3)]
 
@@ -564,10 +379,10 @@ def test_maintain_index_rebuilds_only_on_imbalance(spark, tmp_path, monkeypatch)
 
 
 def test_indexed_time_travel_composes_with_pq(spark, tmp_path):
-    """compressed=True + version=N: PQ codes ride the __ivf rows, and the
-    codebooks are constant within an index lifetime (rebuilds reset the
-    history), so the ADC candidate scan over a historical probe is sound —
-    results come from the snapshot only."""
+    """compressed=True + version=N: PQ codes ride the base rows, and the
+    codebooks are constant within an index generation (rebuilds move the
+    first servable version), so the ADC candidate scan over a historical
+    probe is sound — results come from the snapshot only."""
     db = VectorDB(
         spark, "vttpq", embedding_dim=16, warehouse=str(tmp_path),
         create_new_table=True, versioned=True,
@@ -587,36 +402,6 @@ def test_indexed_time_travel_composes_with_pq(spark, tmp_path):
     got_full = db.query("7", k=5, version=v1, use_index=True, compressed=True,
                         nprobe=2, refine_factor=24)
     assert [r.id for r in got_full] == [r.id for r in exact]
-
-
-def test_stamp_sandwich_fails_closed_when_base_moves(spark, tmp_path, monkeypatch):
-    """_stamp_ivf_version re-reads the base head after the index head (the
-    sandwich): if the base moved between the reads — the window where an
-    equal-cardinality delete+insert could otherwise verify a WRONG pair —
-    no stamp is written."""
-    db = VectorDB(
-        spark, "vsand", embedding_dim=16, warehouse=str(tmp_path),
-        create_new_table=True, versioned=True,
-    )
-    db.insert([{"n": i} for i in range(10)], embed_field="n")
-    db.create_index(num_clusters=2)
-    before = db._read_ivf_meta()
-
-    calls = {"n": 0}
-    real = vcat.current_version
-
-    def moving(name, warehouse=None):
-        v = real(name, warehouse)
-        if name == db.name:
-            calls["n"] += 1
-            if calls["n"] > 1:
-                return (v or 0) + 1  # base "moved" on the re-read
-        return v
-
-    monkeypatch.setattr(vcat, "current_version", moving)
-    db._stamp_ivf_version()
-    monkeypatch.undo()
-    assert db._read_ivf_meta() == before  # fail closed: sidecar untouched
 
 
 def test_text_meta_lock_raises_on_timeout(spark, tmp_path):
@@ -641,144 +426,3 @@ def test_text_meta_lock_raises_on_timeout(spark, tmp_path):
         os.remove(lock)
 
 
-def test_update_window_blocks_stamp_poisoning(spark, tmp_path, monkeypatch):
-    """ADVICE r5 (medium): update() rewrites __ivf (patched rows,
-    count-preserving) BEFORE the base commit.  If the current base version
-    was never stamped, a concurrent reader probing in that window sees
-    EQUAL totals over DIVERGED content and — without the mutation flag —
-    would record history[old_base] = patched_ivf, so a later
-    query(version=old_base, use_index=True) silently serves PATCHED
-    embeddings for the old snapshot.  The flag must make that probe fail
-    closed, and the old base version must stay UNstamped after the update
-    (honest fallback to the exact path for that snapshot)."""
-    db = VectorDB(
-        spark, "vpoison", embedding_dim=16, warehouse=str(tmp_path),
-        create_new_table=True, versioned=True,
-    )
-    db.insert([{"n": i} for i in range(20)], embed_field="n")
-    db.create_index(num_clusters=2)
-    # advance the base WITHOUT a stamp (a missed opportunistic stamp — the
-    # precondition of the poisoning window)
-    monkeypatch.setattr(VectorDB, "_stamp_ivf_version", lambda self: None)
-    db.insert([{"n": 200}], embed_field="n")
-    monkeypatch.undo()
-    unstamped_base = vcat.current_version(db.name, db.warehouse)
-    assert str(unstamped_base) not in db._read_ivf_meta().get("history", {})
-    assert db._index_totals_match()  # the probe's totals check WOULD pass
-
-    # a second handle = the concurrent reader; fire its stamp probe inside
-    # the window, i.e. right before update()'s base-table replace_where
-    reader = VectorDB(
-        spark, "vpoison", embedding_dim=16, warehouse=str(tmp_path), versioned=True
-    )
-    real_replace = vcat.replace_where
-    probed = {}
-
-    def replace_with_reader_probe(spark_, name, *a, **k):
-        if name == db.name:  # the base commit — __ivf already patched
-            reader._stamp_ivf_version()
-            probed["history_in_window"] = dict(
-                reader._read_ivf_meta().get("history", {})
-            )
-        return real_replace(spark_, name, *a, **k)
-
-    monkeypatch.setattr(vcat, "replace_where", replace_with_reader_probe)
-    n = db.update({"n": 3}, {"tag": "patched"})
-    monkeypatch.undo()
-    assert n == 1
-    # the in-window probe failed closed: no stamp for the unstamped base
-    assert str(unstamped_base) not in probed["history_in_window"]
-    # ...and it stays unstamped after the update (fail closed, not poisoned)
-    meta = db._read_ivf_meta()
-    assert str(unstamped_base) not in meta.get("history", {})
-    assert "mutation_pending" not in meta  # window closed
-    # the NEW head pair is stamped and indexed reads match exact reads
-    head = vcat.current_version(db.name, db.warehouse)
-    assert meta["history"][str(head)] == vcat.current_version(
-        db.name + "__ivf", db.warehouse
-    )
-    exact = db.query("3", k=5)
-    indexed = db.query("3", k=5, use_index=True, nprobe=2)
-    assert [r.id for r in indexed] == [r.id for r in exact]
-
-
-def test_leaked_mutation_flag_escalates_reconcile(spark, tmp_path, monkeypatch):
-    """A crash between update()'s __ivf replace and its base commit leaks
-    mutation_pending: stamping must stay disabled (totals alone cannot
-    distinguish patched from consistent), reconcile_index() must ESCALATE
-    to the deep id-set comparison even when called shallow, converge the
-    index, clear the flag, and re-enable stamping."""
-    db = VectorDB(
-        spark, "vleak", embedding_dim=16, warehouse=str(tmp_path),
-        create_new_table=True, versioned=True,
-    )
-    db.insert([{"n": i} for i in range(20)], embed_field="n")
-    db.create_index(num_clusters=2)
-
-    real_replace = vcat.replace_where
-
-    def crash_base_replace(spark_, name, *a, **k):
-        if name == db.name:
-            raise RuntimeError("simulated crash before the base commit")
-        return real_replace(spark_, name, *a, **k)
-
-    # ALSO disable the failure-recovery drop: a hard process crash runs no
-    # except-handler — the leaked-flag state is exactly what's left behind
-    monkeypatch.setattr(vcat, "replace_where", crash_base_replace)
-    monkeypatch.setattr(
-        VectorDB, "_recover_index_after_failed_base_commit", lambda self: None
-    )
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        db.update({"n": 3}, {"tag": "patched"})
-    monkeypatch.undo()
-
-    meta = db._read_ivf_meta()
-    assert meta.get("mutation_pending") == 1  # counter since round 9 (was a boolean)
-    # stamping is disabled while the flag is set
-    before = dict(meta.get("history", {}))
-    db._stamp_ivf_version()
-    assert db._read_ivf_meta().get("history", {}) == before
-
-    # WHILE the window is open: the __ivf HEAD holds patched rows for a
-    # base that never committed — a head indexed read must redirect to the
-    # verified pinned pair for the current base head (the pre-update
-    # snapshot) and so agree with the exact scan, patched rows invisible
-    reader = VectorDB(
-        spark, "vleak", embedding_dim=16, warehouse=str(tmp_path), versioned=True
-    )
-    exact = reader.query("3", k=5)
-    pinned = reader.query("3", k=5, use_index=True, nprobe=2)
-    assert [r.id for r in pinned] == [r.id for r in exact]
-    assert all(r.metadata.get("tag") != "patched" for r in pinned)
-
-    # ...and with NO verified pair for the head, the head indexed read
-    # fails LOUDLY instead of serving the patched index
-    import json as _json
-
-    sidecar = db._ivf_meta_path()
-    with open(sidecar) as f:
-        saved = f.read()
-    stripped = _json.loads(saved)
-    stripped["history"] = {}
-    with open(sidecar, "w") as f:
-        _json.dump(stripped, f)
-    with pytest.raises(ValueError, match="mutation window is open"):
-        reader.query("3", k=5, use_index=True, nprobe=2)
-    with open(sidecar, "w") as f:
-        f.write(saved)
-
-    # shallow reconcile escalates to deep, repairs the diverged rows
-    # (patched ids orphaned in __ivf + the old base ids missing from it),
-    # clears the flag, and stamps the now-consistent head
-    repaired = db.reconcile_index()
-    assert repaired == 2  # 1 orphan (patched id) + 1 missing (original id)
-    meta = db._read_ivf_meta()
-    assert "mutation_pending" not in meta
-    head = vcat.current_version(db.name, db.warehouse)
-    # the verified pair for the head exists; it may predate the repair's
-    # __ivf commits (immutable manifests: an OLDER ivf version can still
-    # hold exactly the head's rows)
-    assert str(head) in meta["history"]
-    exact = db.query("3", k=5)
-    indexed = db.query("3", k=5, use_index=True, nprobe=2)
-    assert [r.id for r in indexed] == [r.id for r in exact]

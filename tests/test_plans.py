@@ -182,7 +182,7 @@ def test_touched_file_discovery_scan_is_column_pruned(spark, tmp_path):
 
 def test_batched_ivf_prunes_partitions_and_bounds_topk(spark, tmp_path):
     """query_batch(use_index=True) must plan as: cluster_id partition
-    pruning on the __ivf scan (PartitionFilters carries the isin) + a
+    pruning on the indexed base scan (PartitionFilters carries the isin) + a
     Partial-mode WindowGroupLimit bounding the per-query top-k before the
     exchange — the same two properties that make the single-query index
     path scale, in one batched job."""

@@ -191,6 +191,29 @@ def test_query_batch_on_repeated_rows_returns_k_rows(spark, tmp_path):
         assert all(r["metadata"] == meta[r["id"]] for r in rows)
 
 
+def test_query_hybrid_on_repeated_rows_returns_k_distinct_rows(spark, tmp_path, monkeypatch):
+    """A table holding every row twice gives query_hybrid k rows with
+    distinct ids — the unique table's result; the dedup plan runs only
+    when the collected rows repeat an id."""
+    import modal_vector_db_spark.operators.hybrid as hybrid_mod
+
+    rng = np.random.default_rng(5)
+    items = [
+        (f"id-{i:03d}", json.dumps({"n": i, "text": "alpha " * (1 + i % 3) + f"w{i}"}),
+         [float(v) for v in rng.standard_normal(4)])
+        for i in range(30)
+    ]
+    calls = []
+    real = hybrid_mod.rrf_fuse
+    monkeypatch.setattr(hybrid_mod, "rrf_fuse", lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    want = _load(spark, tmp_path, "qj_hyb_uniq", items).query_hybrid("alpha", k=3)
+    assert len(calls) == 1  # no repeats: the one plan, as before
+    got = _load(spark, tmp_path, "qj_hyb_dup", items + items).query_hybrid("alpha", k=3)
+    assert len({r.id for r in got}) == len(got) == 3
+    assert _triples(got) == _triples(want)
+    assert len(calls) == 3
+
+
 def test_collected_query_on_unique_rows_takes_no_fallback(spark, tmp_path, monkeypatch):
     items = _items(30)
     db = _load(spark, tmp_path, "qj_uniq", items)
@@ -235,13 +258,12 @@ def test_footer_schema_equals_inferred_schema(spark, tmp_path):
     bare.create_index(num_clusters=3, calibrate=False)
 
     cases = {}
-    for name in ("fs_p", "fs_p__ivf", "fs_p__text", "fs_p__hnsw", "fs_p__hnsw_nodes",
-                 "fs_q", "fs_q__ivf"):
+    for name in ("fs_p", "fs_p__text", "fs_p__hnsw", "fs_p__hnsw_nodes", "fs_q"):
         cases[name] = (
             lambda n=name: catalog.read_table(spark, n, wh),
             lambda n=name: spark.read.parquet(catalog.db_path(n, wh)),
         )
-    for name in ("fs_v", "fs_v__ivf", "fs_v__text", "fs_w", "fs_w__ivf"):
+    for name in ("fs_v", "fs_v__text", "fs_w"):
         rels = vcat.resolve_files(name, wh)
         cases[name] = (
             lambda n=name, r=rels: vcat._read_files(spark, n, wh, r),
@@ -261,10 +283,11 @@ def test_footer_schema_equals_inferred_schema(spark, tmp_path):
         want = inferred().schema
         assert got.schema == want, name
         assert got.schema.json() == want.json(), name
-    assert "pq_code" in cases["fs_p__ivf"][0]().columns
-    assert "pq_code" not in cases["fs_q__ivf"][0]().columns
-    assert "pq_code" in cases["fs_v__ivf"][0]().columns
-    assert "pq_code" not in cases["fs_w__ivf"][0]().columns
+    # an indexed base carries its cluster_id (+ pq_code under PQ)
+    assert {"cluster_id", "pq_code"} <= set(cases["fs_p"][0]().columns)
+    assert "pq_code" not in cases["fs_q"][0]().columns
+    assert {"cluster_id", "pq_code"} <= set(cases["fs_v"][0]().columns)
+    assert "pq_code" not in cases["fs_w"][0]().columns
     assert any(c.startswith("_s_") for c in cases["fs_v"][0]().columns)
 
 

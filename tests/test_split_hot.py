@@ -60,7 +60,7 @@ def _hot_cluster(db) -> int:
 
 
 def _ivf_partition_inodes(db, exclude: set[int]) -> dict:
-    base = catalog.db_path(db.name + "__ivf", db.warehouse)
+    base = catalog.db_path(db.name, db.warehouse)
     out = {}
     for entry in os.listdir(base):
         p = os.path.join(base, entry)

@@ -299,16 +299,19 @@ def test_clone_carries_declaration(spark, tmp_path):
 
 
 def test_index_files_stay_clean_of_stats_cols(spark, tmp_path):
-    """__ivf keeps the reference schema — stats columns are a base-table
-    storage detail and must not leak into index files via the insert sync
-    path."""
+    """Stats columns are a base-table storage detail: an indexed base
+    carries them beside its cluster_id, but they must not leak into the
+    graph index's node files (built from the base, grown by the insert
+    path) or into the public schema."""
     db = _mk(spark, tmp_path, "sf_ivf", stats_fields={"ts": "double"})
     db.insert(_batch(0, 12), embed_field="text")
     db.create_index(num_clusters=2)
-    db.insert(_batch(12, 18), embed_field="text")  # exercises _sync_index_for_append
-    # versioned base ⇒ versioned __ivf: read through the manifest log
-    ivf_cols = vcat.read_table(spark, "sf_ivf__ivf", str(tmp_path)).columns
-    assert not [c for c in ivf_cols if c.startswith("_s_")]
+    db.create_graph_index(calibrate=False)
+    db.insert(_batch(12, 18), embed_field="text")  # the assigned append + graph sync
+    base_cols = vcat.read_table(spark, "sf_ivf", str(tmp_path)).columns
+    assert "cluster_id" in base_cols and "_s_ts" in base_cols
+    node_cols = vcat.read_table(spark, "sf_ivf__hnsw_nodes", str(tmp_path)).columns
+    assert not [c for c in node_cols if c.startswith("_s_")]
     hits = db.query("doc 13", k=18, use_index=True, nprobe=2)
     assert len(hits) == 18
     # and the public scan schema is unchanged

@@ -291,11 +291,11 @@ def test_update_maintains_text_index_incrementally(spark, tmp_path):
     check("reembed")
 
 
-def test_update_ivf_failure_drops_text_index(spark, tmp_path):
+def test_update_base_failure_drops_text_index(spark, tmp_path):
     """The whole update() derived-store + base sequence is ONE protected
-    region: a failure in the __ivf rewrite (after the text shrink would
-    have run, before the base commit) must drop the text index too —
-    never leave a silently inconsistent one (review finding)."""
+    region: a failure in the base rewrite of an indexed table (after the
+    text shrink ran) must drop the text index — never leave a silently
+    inconsistent one (review finding)."""
     import unittest.mock as mock
 
     db = _mk(spark, tmp_path, "tiuf", n=20)
@@ -304,14 +304,14 @@ def test_update_ivf_failure_drops_text_index(spark, tmp_path):
     orig = catalog.replace_where
 
     def boom(spark_, name, pred, repl, warehouse=None, **kw):
-        if name.endswith("__ivf"):
-            raise RuntimeError("injected ivf-rewrite failure")
+        if name == db.name:
+            raise RuntimeError("injected base-rewrite failure")
         return orig(spark_, name, pred, repl, warehouse, **kw)
 
     with mock.patch.object(catalog, "replace_where", side_effect=boom):
         with pytest.raises(RuntimeError, match="injected"):
             db.update({"n": 3}, {"tag": "x"})
     assert not catalog.table_exists(db.name + "__text", db.warehouse)
-    assert not catalog.table_exists(db.name + "__ivf", db.warehouse)
+    assert catalog.table_exists(db.name + "__ivf_centroids", db.warehouse)
     # base unchanged: the row is still there
     assert db.query("spark", k=3)

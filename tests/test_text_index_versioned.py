@@ -141,7 +141,7 @@ def test_raced_mutation_window_fails_closed(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(vcat, "replace_where", crash_base)
     monkeypatch.setattr(
-        VectorDB, "_recover_index_after_failed_base_commit", lambda self: None
+        VectorDB, "_drop_text_index", lambda self: None
     )
     with pytest.raises(RuntimeError, match="simulated crash"):
         db.update({"n": 5}, {"text": "alpha zulu patched"}, embed_field="text")

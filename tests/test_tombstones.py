@@ -110,8 +110,8 @@ def test_mor_is_byte_equal_to_eager(spark, tmp_path):
 
 @pytest.mark.slow
 def test_indexed_graph_paths_and_stamp_after_mor_delete(spark, tmp_path):
-    """The derived stores shrink eagerly while the base masks: indexed,
-    graph, and exact reads agree; the totals-based stamp/pin machinery
+    """The derived graph store shrinks eagerly while the base masks:
+    indexed, graph, and exact reads agree; the totals-based graph pin
     stays consistent (logical counts subtract the mask)."""
     db = _mk(spark, tmp_path, f"tbi_{_uuid.uuid4().hex[:6]}", n=120, per_batch=30)
     db.create_index(num_clusters=4, calibrate=False)
@@ -119,9 +119,7 @@ def test_indexed_graph_paths_and_stamp_after_mor_delete(spark, tmp_path):
     victim = db.query("doc 42", k=1)[0]
     assert db.delete({"n": victim.metadata["n"]}, tombstone=True) == 1
     assert _head_manifest(db)["op"] == "tombstone"
-    # stamp verified at the new head (logical totals match the shrunk __ivf)
     stats = db.index_stats()
-    assert stats["stamp_fresh"] is True
     assert stats["tombstones_pending"] == 1  # zero-job mask observability
     assert stats["graph"]["graph_fresh"] is True
     exact = db.query("doc 42", k=10)

@@ -84,8 +84,6 @@ def test_versioned_vacuum_bounds_storage(spark, tmp_path):
 
 
 def test_versioned_guardrails(spark, tmp_path):
-    with pytest.raises(ValueError, match="merge"):
-        VectorDB(spark, "x", versioned=True, write_mode="merge", warehouse=str(tmp_path))
     plain = VectorDB(
         spark, "plaindb", embedding_dim=16, create_new_table=True, warehouse=str(tmp_path)
     )

@@ -1,7 +1,7 @@
 """Write layout: commits that carry rows are sized by bytes
 (``catalog.sized_by_bytes``), not by the input's shuffle partitions — a
-small insert or update adds ONE file per partition directory, on the base
-table and on the ``__ivf`` layout — plus the two driver-side query-path
+small insert or update adds ONE file per partition directory of the base
+table, which on an indexed table is the IVF layout — plus the two driver-side query-path
 pins that ride with it (one-call vector literal, job-free centroid load).
 """
 
@@ -37,14 +37,13 @@ def test_versioned_insert_and_update_add_one_base_file(spark, tmp_path):
     db.create_index(num_clusters=K, calibrate=False)
 
     base0 = set(vcat.resolve_files("wl_v", wh))
-    ivf0 = set(vcat.resolve_files("wl_v__ivf", wh))
     # 180 new rows + 20 re-sent ones, like a replayed batch
     db.insert(_rows(180, 380), embed_field="text")
     base1 = set(vcat.resolve_files("wl_v", wh))
-    ivf1 = set(vcat.resolve_files("wl_v__ivf", wh))
     assert db.num_rows() == 380
+    # one file for the whole batch: cluster_id is an in-file column
     assert len(base1 - base0) == 1
-    assert 1 <= len(ivf1 - ivf0) <= K
+    assert not vcat.table_exists("wl_v__ivf", wh)
 
     assert db.update({"category": 3, "n": ("in", [13, 18, 23])}, {"tag": "x"}) == 3
     base2 = set(vcat.resolve_files("wl_v", wh))
@@ -59,14 +58,15 @@ def test_plain_insert_adds_one_file(spark, tmp_path):
     db.create_index(num_clusters=K, calibrate=False)
 
     base0, _ = catalog._leaf_files("wl_p", wh)
-    ivf0, _ = catalog._leaf_files("wl_p__ivf", wh)
     # the batch is persisted here (an index exists): the path whose cached
-    # plan keeps shuffle.partitions without the byte-sized write
+    # plan keeps shuffle.partitions without the byte-sized write.  The
+    # indexed base is the IVF layout, so the one copy of the batch adds
+    # one file per touched cluster directory, and nothing else is written
     db.insert(_rows(100, 200), embed_field="text")
-    base1, _ = catalog._leaf_files("wl_p", wh)
-    ivf1, _ = catalog._leaf_files("wl_p__ivf", wh)
-    assert len(set(base1) - set(base0)) == 1
-    assert 1 <= len(set(ivf1) - set(ivf0)) <= K
+    base1, pcols = catalog._leaf_files("wl_p", wh)
+    assert pcols == ["cluster_id"]
+    assert 1 <= len(set(base1) - set(base0)) <= K
+    assert not catalog.table_exists("wl_p__ivf", wh)
     assert db.num_rows() == 200
 
 
