@@ -432,7 +432,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                     version=version, between=bounds,
                 )
             except FileNotFoundError:  # empty at this version
-                return self.spark.createDataFrame([], ITEMS_SCHEMA)
+                return catalog.local_frame(self.spark, [], ITEMS_SCHEMA)
             return df.select(*[f.name for f in ITEMS_SCHEMA.fields])
         bounds = self._derive_prune_bounds(filters) if self.versioned else []
         if not bounds or not self._cat.table_exists(self.name, self.warehouse):
@@ -480,7 +480,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
     # -- S1: scan ----------------------------------------------------------
     def items(self) -> DataFrame:
         if not self._cat.table_exists(self.name, self.warehouse):
-            return self.spark.createDataFrame([], ITEMS_SCHEMA)
+            return catalog.local_frame(self.spark, [], ITEMS_SCHEMA)
         df = self._cat.read_table(self.spark, self.name, self.warehouse)
         if len(df.columns) != len(ITEMS_SCHEMA.fields):
             # public schema stays the reference's (id, metadata, embedding);
@@ -526,14 +526,15 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 (i, m, [float(x) for x in np.asarray(e, dtype=np.float32)])
                 for i, m, e in zip(ids, meta_strs, embeddings)
             ]
-            batch = self.spark.createDataFrame(rows, ITEMS_SCHEMA)
+            batch = catalog.local_frame(self.spark, rows, ITEMS_SCHEMA)
         else:
             texts = [
                 str(m.get(embed_field)) if embed_field else s
                 for m, s in zip(metadatas, meta_strs)
             ]
-            src = self.spark.createDataFrame(
-                list(zip(ids, meta_strs, texts)), "id string, metadata string, _text string"
+            src = catalog.local_frame(
+                self.spark, zip(ids, meta_strs, texts),
+                "id string, metadata string, _text string",
             )
             udf = embed_udf(self.embedder_name, dim=self.embedding_dim, **self.embedder_kwargs)
             batch = src.withColumn("embedding", udf("_text")).drop("_text")
@@ -658,6 +659,23 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             batch = batch.withColumn("embedding", udf("_text")).drop("_text")
         self._idempotent_append(batch)
 
+    def _batch_cached(self) -> bool:
+        """The cache rule of every write path (:meth:`_idempotent_append`,
+        :meth:`_versioned_cas_append`, :meth:`update`): persist the write
+        batch only when a derived store reads it besides the base commit —
+        a bloom filter, a text index or a graph index.  Otherwise the commit
+        is its only reader, and caching it would cost more than it saves:
+        a persisted batch keeps ``shuffle.partitions`` partitions, which AQE
+        cannot coalesce in a cached plan, so ``catalog.sized_for_append``
+        must add a rebalance.  Correctness never depends on the cache: a
+        recompute reads only immutable files (versioned) or the
+        not-yet-swapped directory (plain)."""
+        return (
+            self._read_bloom_meta() is not None
+            or self._read_text_meta() is not None
+            or self._read_hnsw_meta() is not None
+        )
+
     def _idempotent_append(self, batch: DataFrame) -> None:
         """The anti-join write protocol (S5).
 
@@ -678,6 +696,11 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         On an indexed table the batch is cluster-assigned (+ PQ-encoded)
         first and lands in ONE base commit — the base is the IVF layout
         (plain: under its ``cluster_id=N/`` dirs).
+
+        Cache rule (:meth:`_batch_cached`, shared with the CAS loop and
+        :meth:`update`): the batch is persisted only when a bloom filter,
+        text index or graph index reads it besides the base commit.  With
+        no second reader it is not cached: the commit is its one scan.
 
         Write layout (``catalog.sized_for_append``): a persisted batch and
         every ``partitionBy`` append (an indexed plain base, postings) are
@@ -718,12 +741,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         # The derived stores below read the batch before the base append,
         # so every consumer (and any recompute after a cache miss) sees
         # the still-unmodified base; persist runs the anti-join once.
-        has_derived = (
-            indexed
-            or catalog.table_exists(self.name + "__text", self.warehouse)
-            or self._read_bloom_meta() is not None
-        )
-        if has_derived:
+        cached = self._batch_cached()
+        if cached:
             batch = batch.persist()
         try:
             # bloom words first — superset-safe under any later failure
@@ -744,7 +763,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 **({"partition_by": ["cluster_id"]} if indexed else {}),
             )
         finally:
-            if has_derived:
+            if cached:
                 batch.unpersist()
 
 
@@ -770,7 +789,14 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         with the same semantics Delta's MERGE gets from optimistic
         concurrency.  A lost race costs one restage (the orphaned staged
         files age out via vacuum).  ``batch`` arrives cluster-assigned on
-        an indexed table, so the commit carries the index too."""
+        an indexed table, so the commit carries the index too.
+
+        Each attempt persists its pinned batch only under the cache rule of
+        :meth:`_batch_cached` (a bloom filter, text index or graph index
+        reads it besides the commit).  Without one the commit is the only
+        scan, and un-persisted its plan stays one that AQE can coalesce,
+        so it commits one file without a rebalance."""
+        cached = self._batch_cached()
         last_err: Exception | None = None
         for _ in range(16):
             head = vcat.current_version(self.name, self.warehouse) or 0
@@ -805,7 +831,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                     F.broadcast(batch.select("id")), "id", "left_semi"
                 )
                 pinned = batch.join(F.broadcast(conflicts), "id", "left_anti")
-            pinned = pinned.persist()
+            if cached:
+                pinned = pinned.persist()
             try:
                 # bloom words BEFORE the CAS attempt — the opposite order
                 # from __text/graph, because the bloom contract is superset
@@ -839,7 +866,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 self._sync_graph_for_append(pinned, base_version=head + 1)
                 return
             finally:
-                pinned.unpersist()
+                if cached:
+                    pinned.unpersist()
         raise vcat.ConcurrentWriteError(
             f"table {self.name!r}: insert lost 16 consecutive head races"
         ) from last_err
@@ -950,15 +978,16 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         kw = dict(k=k, id_col="id", payload=payload)
         if use_index:
             probes = self._probe_clusters(qvecs, nprobe)
-            probe_df = self.spark.createDataFrame(
+            probe_df = catalog.local_frame(
+                self.spark,
                 [(i, int(c), qv) for i, qv in enumerate(qvecs) for c in probes[i]],
                 "q_id int, cluster_id int, q_vec array<double>",
             )
             union = sorted({c for cs in probes for c in cs})
             scanned = self._probed_source(union, version, filters)
             return ann.ivf_topk_multi(scanned, probe_df, **kw)
-        qdf = self.spark.createDataFrame(
-            list(enumerate(qvecs)), "q_id int, q_vec array<double>"
+        qdf = catalog.local_frame(
+            self.spark, enumerate(qvecs), "q_id int, q_vec array<double>"
         )
         if src is None:
             src = self._source(filters, version)
@@ -1784,6 +1813,12 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         is a delete+insert to the index too: old postings shrink, patched
         rows re-add through the replay-safe insert sync); mass updates
         drop it for rebuild.
+
+        The patched batch is cached only under the write paths' cache rule
+        (:meth:`_batch_cached`): when a text index or bloom filter reads it
+        besides the base rewrite (the graph index is invalidated first).
+        Otherwise the rewrite recomputes the patch instead of reading a
+        cache.
         """
         if not filters:
             raise ValueError("update() requires non-empty filters")
@@ -1869,11 +1904,14 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         updated = self._assign_clusters(
             updated.join(F.broadcast(conflicts), "id", "left_anti")
         )
-        # The patched batch feeds the text sync, the bloom sync and the
-        # base rewrite — persist so the matched-scan + Arrow patch pass
-        # runs once, not once per consumer.  (Correctness never depends on
-        # the cache: every plan reads only not-yet-swapped directories.)
-        updated = updated.persist()
+        # Persist only under the cache rule (_batch_cached): with a text
+        # index or bloom filter the patch feeds their syncs besides the
+        # rewrite, and the cache runs the matched scan + Arrow patch once.
+        # (Correctness never depends on the cache: every plan reads only
+        # not-yet-swapped directories.)
+        cached = self._batch_cached()
+        if cached:
+            updated = updated.persist()
         text_pinned = None
         try:
             # ONE protected region from the first derived-store write to
@@ -1957,7 +1995,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         finally:
             if text_pinned is not None:
                 text_pinned.unpersist()
-            updated.unpersist()
+            if cached:
+                updated.unpersist()
 
 
     def reembed(

@@ -102,7 +102,7 @@ class BloomFilterMixin:
         words = B.bloom_build(
             self._bloom_key(self.items(), meta)
             if self._cat.table_exists(self.name, self.warehouse)
-            else self.spark.createDataFrame([], "_bk string"),
+            else catalog.local_frame(self.spark, [], "_bk string"),
             ["_bk"],
             meta["num_bits"],
             meta["num_hashes"],
@@ -156,7 +156,7 @@ class BloomFilterMixin:
                 "create_bloom_filter() first"
             )
         if not self._cat.table_exists(self.name + "__bloom", self.warehouse):
-            return self.spark.createDataFrame([], "word_idx long, word long")
+            return catalog.local_frame(self.spark, [], "word_idx long, word long")
         return B.bloom_merge(
             self._cat.read_table(self.spark, self.name + "__bloom", self.warehouse)
         )
@@ -195,7 +195,7 @@ class BloomFilterMixin:
         corpus_keys = (
             self._bloom_key(self.items(), meta).distinct()
             if self._cat.table_exists(self.name, self.warehouse)
-            else self.spark.createDataFrame([], "_bk string")
+            else catalog.local_frame(self.spark, [], "_bk string")
         )
         return sure.unionByName(
             cand.join(corpus_keys, "_bk", "left_anti").drop("_bk")

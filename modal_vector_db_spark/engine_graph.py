@@ -299,8 +299,8 @@ class GraphIndexMixin:
         ]
         if not sample:
             return None
-        qdf = self.spark.createDataFrame(
-            list(enumerate(sample)), "q_id int, q_vec array<double>"
+        qdf = catalog.local_frame(
+            self.spark, enumerate(sample), "q_id int, q_vec array<double>"
         )
         gold: dict[int, set] = {}
         for r in brute_force_topk_multi(live, qdf, k=k, id_col="gid").collect():

@@ -32,6 +32,7 @@ from modal_vector_db_spark.functions.distance import (
     l2_norm,
     vector_lit,
 )
+from modal_vector_db_spark.sources.catalog import local_frame
 
 
 def brute_force_topk(
@@ -254,7 +255,7 @@ class IVFIndex:
 
     def save(self, path: str, spark: SparkSession) -> None:
         rows = [(i, [float(x) for x in c]) for i, c in enumerate(self.centroids)]
-        spark.createDataFrame(rows, "cluster_id int, centroid array<double>").coalesce(1).write.mode(
+        local_frame(spark, rows, "cluster_id int, centroid array<double>").coalesce(1).write.mode(
             "overwrite"
         ).parquet(path)
 
@@ -686,7 +687,8 @@ class IVFIndex2L:
         # the coarse table IS the flat layout: one definition (IVFIndex.save)
         IVFIndex(self.coarse).save(path, spark)
         fine_path = path + "__fine"
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(co, cid, cen) for cid, co, cen in self._fine_rows],
             "coarse_id int, cluster_id int, centroid array<double>",
         ).repartition(1, "coarse_id").write.mode("overwrite").partitionBy(

@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from modal_vector_db_spark.sources.catalog import local_frame
+
 
 def bm25_scores(
     docs: DataFrame,
@@ -236,9 +238,7 @@ def _qterms_frame(like: DataFrame, pairs: Sequence[tuple[int, str]]) -> DataFram
     """The tiny broadcast (q_id, term) routing frame from driver-side
     pairs (the caller tokenized the queries — shipping the list through a
     DataFrame only to collect() it back would cost an extra job)."""
-    return like.sparkSession.createDataFrame(
-        list(pairs), "q_id int, term string"
-    )
+    return local_frame(like.sparkSession, pairs, "q_id int, term string")
 
 
 def bm25_scores_multi(

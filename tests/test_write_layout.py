@@ -58,10 +58,10 @@ def test_plain_insert_adds_one_file(spark, tmp_path):
     db.create_index(num_clusters=K, calibrate=False)
 
     base0, _ = catalog._leaf_files("wl_p", wh)
-    # the batch is persisted here (an index exists): the path whose cached
-    # plan keeps shuffle.partitions without the byte-sized write.  The
-    # indexed base is the IVF layout, so the one copy of the batch adds
-    # one file per touched cluster directory, and nothing else is written
+    # the indexed base is the IVF layout, a partitionBy append that
+    # multiplies the batch's partitions by the cluster directories without
+    # the byte-sized write.  The one copy of the batch adds one file per
+    # touched cluster directory, and nothing else is written
     db.insert(_rows(100, 200), embed_field="text")
     base1, pcols = catalog._leaf_files("wl_p", wh)
     assert pcols == ["cluster_id"]
