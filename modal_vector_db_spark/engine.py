@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 from dataclasses import dataclass
 from typing import Any, Optional, Sequence
 
@@ -1776,6 +1777,11 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             self._end_text_mutation(head_after, *text_delta)
         return removed
 
+    #: an update matching at most this many rows resolves on the driver
+    #: (:meth:`update`) — the same takedown-sized ceiling a delete's
+    #: merge-on-read split uses; above it the distributed plan runs
+    _UPDATE_DRIVER_MAX_ROWS = _TOMBSTONE_MAX_IDS
+
     def update(
         self,
         filters: dict,
@@ -1802,13 +1808,31 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         insert-path convention, ``vdb.py:56``); when ``None`` the existing
         embedding is preserved — the metadata-only relabel case.
 
-        The patch/re-id step runs as one Arrow-batched ``mapInPandas`` pass
-        over ONLY the matched rows (heterogeneous JSON text must round-trip
-        through real JSON objects — the same boundary where the embedders
-        live); unmatched rows stream through untouched, JVM-side.  On an
-        indexed table the patched rows are re-assigned to their nearest
-        centroid (and re-encoded when a PQ codebook exists) before the one
-        base commit.  A text index
+        Two plans, chosen by the matched row count:
+
+        - DRIVER-RESOLVED (at most ``_UPDATE_DRIVER_MAX_ROWS`` matches, the
+          takedown/relabel size): one scan of the stats-pruned, masked
+          source collects the matched rows' ``id``, ``metadata`` and file;
+          the patch and re-key run once in plain Python on the driver (the
+          reference computes the same content id in one process); one
+          id-only probe over the new ids plus the pending mask's ids finds
+          both the content collisions and the files the mask fold must
+          rewrite; then one commit, pinned to the head the matched scan
+          read (a commit that landed in between raises
+          ``ConcurrentWriteError``).  The patched rows reach Spark as a
+          ``catalog.local_frame`` and get their stored embeddings back
+          inside Spark, so the driver never holds a vector.  A 3-row
+          relabel of a versioned, indexed table with a pending mask runs at
+          most 6 Spark jobs and no Python worker
+          (``tests/test_query_jobs.py::test_small_update_job_budget``).
+        - DISTRIBUTED (more matches): a count, then the patch as one
+          Arrow-batched ``mapInPandas`` pass over ONLY the matched rows and
+          a conflict probe over the surviving ids; unmatched rows stream
+          through untouched, JVM-side.
+
+        On an indexed table the patched rows are re-assigned to their
+        nearest centroid (and re-encoded when a PQ codebook exists) before
+        the one base commit.  A text index
         is maintained incrementally for relabel-sized updates (a relabel
         is a delete+insert to the index too: old postings shrink, patched
         rows re-add through the replay-safe insert sync); mass updates
@@ -1827,17 +1851,40 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         if not self._cat.table_exists(self.name, self.warehouse):
             return 0
         pred = F.coalesce(compile_filters(filters), F.lit(False))
-        # The matched scan is file-pruned from manifest stats when the
-        # filter keys a declared stats field; the conflict probe below must
-        # NOT be — content collisions can live in any file, so it reads the
-        # full (id-column-pruned) surviving set.
-        matched = self._filtered_source(filters).filter(pred)
-        keep = self.items().filter(~pred)
-        # Count first: a no-match filter returns before any patch plan,
-        # index rewrite, or persist is even constructed (this is also the
-        # ONE count scan the mutation path schedules — everything after
-        # reports from parquet footers).
-        n_matched = matched.count()
+        patch_items = dict(patch)  # plain dict → picklable task closure
+        idf = list(self.id_fields) if self.id_fields else None  # closure-safe
+        want_text = embed_field is not None
+
+        def patched(s):
+            # One metadata JSON → (new id, patched JSON, embed text or
+            # None).  Self-contained on purpose: the distributed plan ships
+            # it to executors that may not have this package on their
+            # sys.path (a nested function ships by value, a module-level one
+            # by REFERENCE to its module) — so the id/stringify logic of
+            # schema.json_to_uuid/stringify_metadata is inlined via stdlib
+            # only.  Kept in lockstep by test_update_metadata_only's
+            # `aid == json_to_uuid(am)` assertion.
+            import json as _json
+            import uuid as _uuid
+
+            m = _json.loads(s) if s is not None else {}
+            for k, v in patch_items.items():
+                if v is None:
+                    m.pop(k, None)
+                else:
+                    m[k] = v
+            # re-key with the TABLE's identity (the declared id_fields
+            # subset when set) — re-keying on the whole document would
+            # orphan the subset identity crawl ingest keys on, so a later
+            # re-ingest of identical content would duplicate
+            key = {k: m.get(k) for k in idf} if idf else m
+            new_id = str(_uuid.uuid5(_uuid.NAMESPACE_DNS, _json.dumps(key, sort_keys=True)))
+            return new_id, _json.dumps(m), (str(m.get(embed_field)) if want_text else None)
+
+        plan = self._update_on_driver(filters, pred, patched, want_text)
+        if plan is None:
+            plan = self._update_distributed(filters, pred, patched)
+        n_matched, matched, updated, kw = plan
         if n_matched == 0:
             return 0
         # Replace-shaped mutation: rows re-key and may re-embed, which the
@@ -1845,68 +1892,13 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         # count-preserving update would pass the rows check while the graph
         # serves stale vectors) — invalidate loudly; rebuild is explicit.
         self._invalidate_graph_index()
-        patch_items = dict(patch)  # plain dict → picklable task closure
-        idf = list(self.id_fields) if self.id_fields else None  # closure-safe
-        want_text = embed_field is not None
-        out_schema = "id string, metadata string, embedding array<float>" + (
-            ", _text string" if want_text else ""
-        )
-
-        def _apply_patch(batches):
-            # Self-contained on purpose: executors in a consumer deployment
-            # may not have this package on their sys.path (UDF closures ship
-            # by value, but captured module-level functions ship by
-            # REFERENCE to their module) — so the id/stringify logic of
-            # schema.json_to_uuid/stringify_metadata is inlined via stdlib
-            # only.  Kept in lockstep by test_update_metadata_only's
-            # `aid == json_to_uuid(am)` assertion.
-            import json as _json
-            import uuid as _uuid
-
-            for pdf in batches:
-                metas = []
-                for s in pdf["metadata"]:
-                    m = _json.loads(s) if s is not None else {}
-                    for k, v in patch_items.items():
-                        if v is None:
-                            m.pop(k, None)
-                        else:
-                            m[k] = v
-                    metas.append(m)
-                out = pdf[["id", "metadata", "embedding"]].copy()
-                out["metadata"] = [_json.dumps(m) for m in metas]
-                # re-key with the TABLE's identity (the declared id_fields
-                # subset when set) — re-keying on the whole document would
-                # orphan the subset identity crawl ingest keys on, so a
-                # later re-ingest of identical content would duplicate
-                out["id"] = [
-                    str(_uuid.uuid5(_uuid.NAMESPACE_DNS, _json.dumps(
-                        {k: m.get(k) for k in idf} if idf else m, sort_keys=True
-                    )))
-                    for m in metas
-                ]
-                if want_text:
-                    out["_text"] = [str(m.get(embed_field)) for m in metas]
-                yield out
-
-        updated = matched.mapInPandas(_apply_patch, schema=out_schema)
         if want_text:
             udf = embed_udf(self.embedder_name, dim=self.embedding_dim, **self.embedder_kwargs)
-            updated = updated.withColumn("embedding", udf("_text")).drop("_text")
-        # Same conflict protocol as _idempotent_append: batch-internal dedup,
-        # then drop new ids already present in the surviving set (the
-        # conflict set is computed small-side so the big table never
-        # shuffles).
-        updated = updated.dropDuplicates(["id"])
-        conflicts = keep.select("id").join(
-            F.broadcast(updated.select("id")), "id", "left_semi"
-        )
-        updated = self._assign_clusters(
-            updated.join(F.broadcast(conflicts), "id", "left_anti")
-        )
+            updated = updated.withColumn("embedding", udf("_text"))
+        updated = self._assign_clusters(updated.drop("_text"))
         # Persist only under the cache rule (_batch_cached): with a text
         # index or bloom filter the patch feeds their syncs besides the
-        # rewrite, and the cache runs the matched scan + Arrow patch once.
+        # rewrite, and the cache computes the patched batch once.
         # (Correctness never depends on the cache: every plan reads only
         # not-yet-swapped directories.)
         cached = self._batch_cached()
@@ -1951,27 +1943,18 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 # plain table's replacements land in their cluster dirs),
                 # untouched files carry forward by reference (versioned:
                 # re-listed in the manifest; plain: hardlinked) — a
-                # one-row relabel never rewrites the corpus.  The conflict
-                # set above was computed over the FULL surviving set, so
+                # one-row relabel never rewrites the corpus.  The
+                # collisions were found over the FULL surviving set, so
                 # cross-file content collisions still drop.
                 # Bloom: an update RE-KEYS content ids and may change the
                 # filter's field value — append the patched rows' keys
                 # BEFORE the commit (superset-safe under commit failure;
                 # the removed old keys stay as stale-superset bits)
                 self._sync_bloom_for_append(updated)
-                kw = dict(self._write_kwargs)
-                bounds = (
-                    self._derive_prune_bounds(filters) if self.versioned else []
-                )
-                if bounds:
-                    # sound for the REMOVAL side (matched rows lie inside
-                    # the bound by implication); the patched replacement
-                    # rows land in newly-staged files regardless
-                    kw["prune_between"] = bounds
                 self._cat.replace_where(
                     self.spark, self.name, pred,
                     self._with_stats_cols(updated), self.warehouse,
-                    **kw,
+                    **self._write_kwargs, **kw,
                 )
             except Exception:
                 self._drop_text_index()  # rebuild-loudly, never diverged
@@ -1997,6 +1980,164 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 text_pinned.unpersist()
             if cached:
                 updated.unpersist()
+
+    def _update_on_driver(self, filters: dict, pred, patched, want_text: bool):
+        """:meth:`update`'s driver-resolved plan: ``(n_matched, matched,
+        patched rows, replace_where kwargs)``, or ``None`` when more than
+        ``_UPDATE_DRIVER_MAX_ROWS`` rows match.  Spark jobs: the matched
+        scan, the id probe (both collected through Arrow), and later the
+        write."""
+        cap = self._UPDATE_DRIVER_MAX_ROWS
+        base = catalog.db_path(self.name, self.warehouse)
+        # the file and row index name each stored row, so its embedding can
+        # be re-attached without collecting it (tagged before any join,
+        # whose projection hides `_metadata`)
+        path, row = F.col("_metadata.file_path"), F.col("_metadata.row_index")
+        if self.versioned:
+            head = vcat.current_version(self.name, self.warehouse)
+            m_head = vcat._read_manifest(self.name, self.warehouse, head)
+            files = m_head["files"]
+            mask = vcat._tombstone_table(self.name, self.warehouse, m_head)
+            mask_ids = set() if mask is None else set(mask.column(0).to_pylist()) - {None}
+
+            def read(rels):
+                return vcat._read_files(self.spark, self.name, self.warehouse, rels)
+
+            cands = vcat.resolve_files(
+                self.name, self.warehouse, head,
+                between=self._derive_prune_bounds(filters) or None,
+            )
+            if not cands:  # the stats bound admits no file
+                return 0, None, None, None
+            src = vcat._apply_tombstones(
+                self.spark, self.name, self.warehouse, m_head,
+                read(cands).select("*", path.alias("_f"), row.alias("_r")),
+            )
+            kw = {"expected_head": head}  # the head the matched scan reads
+        else:
+            files, _ = catalog._leaf_files(self.name, self.warehouse)
+            mask_ids = set()
+
+            def read(rels):
+                return catalog._read_rels(self.spark, self.name, self.warehouse, rels)
+
+            src = read(files).select("*", path.alias("_f"), row.alias("_r"))
+            kw = {}
+        # 1. ONE matched scan: the count, the touched files and the patch
+        # input
+        rows = (
+            src.filter(pred)
+            .select("id", "metadata", "_f", "_r")
+            .limit(cap + 1)
+            .toArrow()
+            .to_pylist()
+        )
+        if len(rows) > cap:
+            return None
+        if not rows:
+            return 0, None, None, None
+        # 2. the patch, once, on the driver; rows patched into the same
+        # content collapse to the first
+        new: dict = {}
+        for r in rows:
+            new_id, meta, text = patched(r["metadata"])
+            new.setdefault(new_id, (r["_f"], r["_r"], meta, text))
+        # 3. ONE id probe over the new ids and the mask's ids: a new id
+        # collides when a stored row outside the mask that this update
+        # does not remove already holds it; the mask's rows name the files
+        # the fold rewrites
+        keys = sorted(set(new) | mask_ids)
+        # (a plain table's probe reads its directory: one listing, where
+        # explicit paths past 32 files start a parallel-listing job)
+        probe = (read(files) if self.versioned else self._cat.read_table(
+            self.spark, self.name, self.warehouse
+        )).select("id", path.alias("_f"))
+        if len(keys) <= vcat.IN_MASK_MAX_IDS:
+            probe = probe.filter(catalog.in_list("id", keys))
+        else:
+            probe = probe.join(
+                F.broadcast(catalog.local_frame(self.spark, zip(keys), "id string")),
+                "id", "left_semi",
+            )
+        hits = probe.toArrow().to_pylist()
+        stored, removed = Counter(h["id"] for h in hits), Counter(r["id"] for r in rows)
+        new = {
+            i: p for i, p in new.items()
+            if i in mask_ids or stored[i] <= removed[i]
+        }
+        rel_to_abs = {f: os.path.join(base, f) for f in files}
+        kw["touched"] = catalog.file_rels((r["_f"] for r in rows), rel_to_abs)
+        if mask_ids:
+            kw["mask_files"] = catalog.file_rels(
+                (h["_f"] for h in hits if h["id"] in mask_ids), rel_to_abs
+            )
+        matched = catalog.local_frame(
+            self.spark, ((r["id"], r["metadata"]) for r in rows),
+            "id string, metadata string",
+        )
+        if want_text or not new:
+            # re-embedded from `_text` (or nothing left to add): no stored
+            # vector needed
+            updated = catalog.local_frame(
+                self.spark, ((i, p[2], None, p[3]) for i, p in new.items()),
+                "id string, metadata string, embedding array<float>, _text string",
+            )
+        else:
+            # the stored embedding, re-attached inside Spark by (file,
+            # row index) — a table holding a row twice re-attaches once
+            keyed = catalog.local_frame(
+                self.spark, ((p[0], p[1], i, p[2]) for i, p in new.items()),
+                "_f string, _r bigint, id string, metadata string",
+            )
+            updated = (
+                read(catalog.file_rels((p[0] for p in new.values()), rel_to_abs))
+                .select(path.alias("_f"), row.alias("_r"), "embedding")
+                .join(F.broadcast(keyed), ["_f", "_r"])
+                .select("id", "metadata", "embedding")
+            )
+        return len(rows), matched, updated, kw
+
+    def _update_distributed(self, filters: dict, pred, patched):
+        """:meth:`update`'s plan above the driver ceiling: a count, the
+        patch as one Arrow-batched ``mapInPandas`` pass over the matched
+        rows, and a conflict probe over the surviving ids.  Same return
+        shape as :meth:`_update_on_driver`."""
+        # The matched scan is file-pruned from manifest stats when the
+        # filter keys a declared stats field; the conflict probe below must
+        # NOT be — content collisions can live in any file, so it reads the
+        # full (id-column-pruned) surviving set.
+        matched = self._filtered_source(filters).filter(pred)
+        n_matched = matched.count()
+        if n_matched == 0:
+            return 0, None, None, None
+
+        def _apply_patch(batches):
+            for pdf in batches:
+                out = pdf[["id", "metadata", "embedding"]].copy()
+                res = [patched(s) for s in pdf["metadata"]]
+                out["id"] = [r[0] for r in res]
+                out["metadata"] = [r[1] for r in res]
+                out["_text"] = [r[2] for r in res]
+                yield out
+
+        updated = matched.mapInPandas(
+            _apply_patch,
+            schema="id string, metadata string, embedding array<float>, _text string",
+        )
+        # Same conflict protocol as _idempotent_append: batch-internal dedup,
+        # then drop new ids already present in the surviving set (the
+        # conflict set is computed small-side so the big table never
+        # shuffles).
+        updated = updated.dropDuplicates(["id"])
+        conflicts = self.items().filter(~pred).select("id").join(
+            F.broadcast(updated.select("id")), "id", "left_semi"
+        )
+        updated = updated.join(F.broadcast(conflicts), "id", "left_anti")
+        bounds = self._derive_prune_bounds(filters) if self.versioned else []
+        # sound for the REMOVAL side (matched rows lie inside the bound by
+        # implication); the patched replacement rows land in newly-staged
+        # files regardless
+        return n_matched, matched, updated, {"prune_between": bounds} if bounds else {}
 
 
     def reembed(

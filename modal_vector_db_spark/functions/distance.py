@@ -17,6 +17,7 @@ projects each query's norm on the query side of its join and passes it as
 
 from __future__ import annotations
 
+import json
 import math
 from collections.abc import Sequence
 
@@ -27,11 +28,17 @@ from pyspark.sql import functions as F
 
 
 def vector_lit(vec: Sequence[float]) -> Column:
-    """A literal query vector as an array<double> column — ONE py4j call
-    (a float64 ndarray literal), not one ``lit`` per element; the doubles
-    are the same, and Catalyst folds the per-element form into this
-    literal anyway."""
-    return F.lit(np.asarray(vec, dtype=np.float64))
+    """A literal vector as an array<double> column, built in a fixed number
+    of py4j calls whatever its length.  The doubles cross as one JSON text
+    (Python's shortest round-trip repr; NaN and ±Infinity as the
+    non-numeric tokens Spark's JSON reader accepts by default), and
+    Catalyst folds the ``from_json`` into one array literal with the same
+    doubles.  ``F.lit`` of a float64 ndarray converts element by element:
+    133 py4j calls at dim 64, 2,053 at dim 1,024.  A 2-D input gives one
+    array<array<double>> literal (a centroid matrix, ``operators/ann.py``)."""
+    arr = np.asarray(vec, dtype=np.float64)
+    typ = "array<" * arr.ndim + "double" + ">" * arr.ndim
+    return F.from_json(F.lit(json.dumps(arr.tolist())), typ)
 
 
 def dot_product(a: Column, b: Column) -> Column:

@@ -222,7 +222,7 @@ class IVFIndex:
         Computed as a native expression over a broadcast centroid literal
         array — no Python, no shuffle (the later partitioned write is the
         one intentional shuffle)."""
-        cents = F.array(*[vector_lit(c) for c in self.centroids])
+        cents = vector_lit(self.centroids)
         dists = F.transform(cents, lambda c: cosine_distance(F.col(vec_col), c))
         return df.withColumn("cluster_id", F.array_position(dists, F.array_min(dists)).cast("int") - 1)
 

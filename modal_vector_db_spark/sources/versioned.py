@@ -59,6 +59,7 @@ from modal_vector_db_spark.sources.catalog import (
     db_path,
     drop_ids_frame,
     footer_reader,
+    in_list,
     local_frame,
     sized_by_bytes,
     sized_for_append,
@@ -441,12 +442,14 @@ def _tombstone_ids(
     return footer_reader(spark, paths[0]).parquet(*paths)
 
 
-#: the largest mask a read inlines as an ``IN`` literal.  Building the
-#: literal costs about 0.4 ms per id on the driver (one py4j call each);
-#: the broadcast anti-join costs two extra jobs whatever the mask's size.
+#: the largest mask a read inlines as an ``IN`` literal; the broadcast
+#: anti-join above it costs two extra jobs whatever the mask's size.
 #: Measured on 4 cores (a 20k-row, dim-64 table, exact top-10, median of
 #: 7-11 interleaved reads), IN literal vs anti-join: 300 ids 565 vs 714 ms,
 #: 500 ids 643 vs 645 ms, 700 ids 763 vs 574 ms, 10k ids 4.8 s vs 0.58 s.
+#: Those figures date from when the literal cost one py4j call per id (about
+#: 0.4 ms each); :func:`catalog.in_list` now builds it from one SQL text, so
+#: the ceiling is conservative — re-measure before raising it.
 IN_MASK_MAX_IDS = 300
 
 
@@ -500,7 +503,7 @@ def _apply_tombstones(
     col = m.get("tombstone_col", "id")
     ids = [v for v in tab.column(0).to_pylist() if v is not None]
     if len(ids) <= IN_MASK_MAX_IDS:
-        return df.filter(F.col(col).isNull() | ~F.col(col).isin(ids))
+        return df.filter(F.col(col).isNull() | ~in_list(col, ids))
     tomb = _tombstone_ids(spark, name, warehouse, m)
     return df.join(F.broadcast(tomb.select(col)), col, "left_anti")
 
@@ -851,38 +854,32 @@ def files_matching(
 
 
 
-def _mask_fold_prep(spark, name, warehouse, m_head, files, touched):
+def _mask_fold_prep(spark, name, warehouse, m_head, files, touched, mask_files=None):
     """Fold bookkeeping shared by every replace-shaped mutation (the ONE
     definition — three call sites drifted apart within a round when this
     was inlined): union the mask-holding files into the touched set and
-    return ``(touched, tomb_local, tcol, tomb_rows)`` for the anti-join
-    and the removed-count adjustment.  No-op (tomb None, rows 0) when the
-    head carries no mask."""
-    tomb = _tombstone_ids_local(spark, name, warehouse, m_head)
-    tcol = m_head.get("tombstone_col", "id")
-    if tomb is None:
-        return touched, None, tcol, 0
-    touched = sorted(
-        set(touched)
-        | set(files_matching(spark, name, warehouse, files, None,
-                             semi=(tomb, tcol)))
-    )
+    return ``(touched, tomb_rows)``, the rows for the removed-count
+    adjustment.  The rewrite drops the masked rows with
+    :func:`_apply_tombstones`.  ``mask_files``: the mask-holding files when
+    the caller already found them (``update``'s id probe); otherwise one
+    semi-join probe over ``files`` finds them.  No-op (rows 0) when the head
+    carries no mask."""
+    if not m_head.get("tombstones"):
+        return touched, 0
+    if mask_files is None:
+        tomb = _tombstone_ids_local(spark, name, warehouse, m_head)
+        mask_files = files_matching(
+            spark, name, warehouse, files, None,
+            semi=(tomb, m_head.get("tombstone_col", "id")),
+        )
+    touched = sorted(set(touched) | set(mask_files))
     stats = m_head.get("stats", {})
     b = db_path(name, warehouse)
     tomb_rows = sum(
         (stats.get(t) or {}).get("rows") or _footer_rows(os.path.join(b, t))
         for t in m_head.get("tombstones", [])
     )
-    return touched, tomb, tcol, tomb_rows
-
-
-def _mask_anti(df: DataFrame, tomb: DataFrame | None, tcol: str) -> DataFrame:
-    """Anti-join the (broadcast-tiny, driver-local) mask out of a rewrite.
-    A left-anti join drops the same rows whatever duplicates its build side
-    holds, so the mask is broadcast without a ``distinct``."""
-    if tomb is None:
-        return df
-    return df.join(F.broadcast(tomb.select(tcol)), tcol, "left_anti")
+    return touched, tomb_rows
 
 
 def replace_files(
@@ -931,6 +928,9 @@ def replace_where(
     stats_cols: list[str] | None = None,
     partition_by=None,
     prune_between: tuple | list | None = None,
+    touched: list[str] | None = None,
+    mask_files: list[str] | None = None,
+    expected_head: int | None = None,
 ) -> int:
     """The update()-shaped mutation, file-pruned: rows matching ``pred``
     are removed, ``extra_df`` rows (already fully computed by the caller,
@@ -946,8 +946,15 @@ def replace_where(
     almost nothing.  The caller must guarantee the bound is implied by
     ``pred`` (rows matching ``pred`` all lie within it) — correctness
     depends on that implication, exactly like Delta's pushed-down DELETE
-    predicates."""
-    head = current_version(name, warehouse)
+    predicates.
+
+    ``touched`` / ``mask_files`` / ``expected_head``: a caller that already
+    scanned ``expected_head`` (``update``'s driver-resolved plan) passes the
+    files holding matched rows and the files holding masked rows, and no
+    discovery scan runs here; the commit is pinned to that head, so a
+    commit that landed since the caller's scan raises
+    ``ConcurrentWriteError``."""
+    head = expected_head if expected_head is not None else current_version(name, warehouse)
     if head is None:
         # zero-commit table: removals are a no-op; adds become the first
         # commit (mirrors the plain twin, which appends — the two _cat
@@ -957,17 +964,18 @@ def replace_where(
         return 0
     m_head = _read_manifest(name, warehouse, head)
     files = resolve_files(name, warehouse, head)
-    candidates = (
-        resolve_files(name, warehouse, head, between=prune_between)
-        if prune_between
-        else files
-    )
-    touched = files_matching(spark, name, warehouse, candidates, pred)
+    if touched is None:
+        candidates = (
+            resolve_files(name, warehouse, head, between=prune_between)
+            if prune_between
+            else files
+        )
+        touched = files_matching(spark, name, warehouse, candidates, pred)
     # merge-on-read FOLD (the rewrite_where rule): replace-shaped commits
     # clear the mask, so files holding masked rows join the touched set
-    # and masked rows are anti-joined out of the rewrite
-    touched, tomb, tcol, tomb_rows = _mask_fold_prep(
-        spark, name, warehouse, m_head, files, touched
+    # and masked rows are dropped from the rewrite
+    touched, tomb_rows = _mask_fold_prep(
+        spark, name, warehouse, m_head, files, touched, mask_files
     )
     if not touched and extra_df is None:
         return 0
@@ -975,8 +983,9 @@ def replace_where(
     rows_before = sum(_footer_rows(os.path.join(base, f)) for f in touched)
     parts = []
     if touched:
-        kept = _mask_anti(
-            _read_files(spark, name, warehouse, touched).filter(~pred), tomb, tcol
+        kept = _apply_tombstones(
+            spark, name, warehouse, m_head,
+            _read_files(spark, name, warehouse, touched).filter(~pred),
         )
         parts.append(kept)
     if extra_df is not None:
@@ -1064,7 +1073,7 @@ def rewrite_where(
             spark, name, warehouse, candidates, None,
             semi=(ids_df, drop_ids_col),
         )
-        touched, tomb, tcol, tomb_rows = _mask_fold_prep(
+        touched, tomb_rows = _mask_fold_prep(
             spark, name, warehouse, m_head, files, touched
         )
         if not touched:
@@ -1076,13 +1085,13 @@ def rewrite_where(
         # rows removed by filter(keep) are those where keep is not TRUE
         drop_pred = ~F.coalesce(keep, F.lit(False))
         touched = files_matching(spark, name, warehouse, candidates, drop_pred)
-        touched, tomb, tcol, tomb_rows = _mask_fold_prep(
+        touched, tomb_rows = _mask_fold_prep(
             spark, name, warehouse, m_head, files, touched
         )
         if not touched:
             return 0  # nothing to delete — no new version needed
         kept_df = _read_files(spark, name, warehouse, touched).filter(keep)
-    kept_df = _mask_anti(kept_df, tomb, tcol)
+    kept_df = _apply_tombstones(spark, name, warehouse, m_head, kept_df)
     base = db_path(name, warehouse)
     rows_before = sum(_footer_rows(os.path.join(base, f)) for f in touched)
     v, new = replace_files(

@@ -46,6 +46,17 @@ def jobs_in_group(spark, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(gid))
 
 
+def executed_plans(spark, fn):
+    """Run ``fn``; return the physical plan text of every SQL execution it
+    ran, from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsCount()
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = store.executionsList(int(before), 1 << 20)
+    return [runs.apply(i).physicalPlanDescription() for i in range(runs.size())]
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

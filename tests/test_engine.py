@@ -11,7 +11,9 @@ import pytest
 
 from modal_vector_db_spark.embedders import HashingEmbedder, get_embedder
 from modal_vector_db_spark.engine import Result, VectorDB
-from modal_vector_db_spark.schema import json_to_uuid
+from modal_vector_db_spark.schema import ITEMS_SCHEMA, json_to_uuid, stringify_metadata
+from modal_vector_db_spark.sources import catalog
+from modal_vector_db_spark.sources import versioned as vcat
 from tests.conftest import POKEMON, needs_pokemon
 
 
@@ -492,6 +494,80 @@ def test_update_collision_collapses(spark, tmp_path):
     assert db.num_rows() == 1
     (row,) = db.items().collect()
     assert json.loads(row["metadata"]) == {"name": "x", "grp": "a"}
+
+
+@pytest.mark.parametrize(
+    "test",
+    [
+        test_update_metadata_only_preserves_embedding,
+        test_update_reembed,
+        test_update_collision_collapses,
+    ],
+    ids=lambda t: t.__name__,
+)
+def test_update_distributed_plan(spark, tmp_path, monkeypatch, test):
+    """The same update contracts on ``update``'s distributed plan (the
+    driver ceiling at 0)."""
+    monkeypatch.setattr(VectorDB, "_UPDATE_DRIVER_MAX_ROWS", 0)
+    test(spark, tmp_path)
+
+
+@pytest.mark.parametrize("ceiling", [None, 0], ids=["driver", "distributed"])
+def test_update_of_rows_stored_twice(spark, tmp_path, monkeypatch, ceiling):
+    """A bulk load can store a row twice: update counts both copies and
+    leaves one row per new id, with the stored embedding."""
+    if ceiling is not None:
+        monkeypatch.setattr(VectorDB, "_UPDATE_DRIVER_MAX_ROWS", ceiling)
+    emb = get_embedder("HashingEmbedder", dim=16)
+    metas = [{"name": f"doc {i}", "grp": "ab"[i % 2]} for i in range(6)]
+    rows = [
+        (json_to_uuid(m), stringify_metadata(m), emb.embed(m["name"]).tolist())
+        for m in metas
+    ]
+    path = str(tmp_path / "twice")
+    catalog.local_frame(spark, rows + rows, ITEMS_SCHEMA).write.parquet(path)
+    db = _mk(spark, tmp_path, "updtwice")
+    db.load_from_parquet(path, build_index=False)
+    vec = {json.loads(r["metadata"])["name"]: r["embedding"] for r in db.items().collect()}
+    assert db.num_rows() == 12
+
+    assert db.update({"grp": "a"}, {"tier": "hot"}) == 6
+    got = [(r["id"], json.loads(r["metadata"]), r["embedding"]) for r in db.items().collect()]
+    hot = sorted((m["name"], i, e) for i, m, e in got if m.get("tier") == "hot")
+    assert [h[0] for h in hot] == ["doc 0", "doc 2", "doc 4"]
+    for name, i, e in hot:
+        assert i == json_to_uuid({"name": name, "grp": "a", "tier": "hot"})
+        assert e == vec[name]
+    assert db.num_rows() == 9
+
+
+def test_update_raced_by_a_commit_changes_nothing(spark, tmp_path, monkeypatch):
+    """The driver-resolved update commits pinned to the head its matched
+    scan read: a commit landing in between raises ConcurrentWriteError and
+    the update leaves no trace."""
+    db = VectorDB(
+        spark, "updrace", embedding_dim=16, create_new_table=True,
+        warehouse=str(tmp_path), versioned=True,
+    )
+    db.insert([{"name": f"doc {i}", "grp": "ab"[i % 2]} for i in range(6)], embed_field="name")
+    before = sorted((r["id"], r["metadata"]) for r in db.items().collect())
+    head = vcat.current_version(db.name, db.warehouse)
+    real = vcat.replace_where
+
+    def raced(*args, **kwargs):
+        db.insert([{"name": "racer", "grp": "a"}], embed_field="name")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(vcat, "replace_where", raced)
+    with pytest.raises(vcat.ConcurrentWriteError):
+        db.update({"grp": "a"}, {"tier": "hot"})
+    monkeypatch.undo()
+
+    assert vcat.current_version(db.name, db.warehouse) == head + 1  # the racer's
+    racer = {"name": "racer", "grp": "a"}
+    assert sorted((r["id"], r["metadata"]) for r in db.items().collect()) == sorted(
+        before + [(json_to_uuid(racer), stringify_metadata(racer))]
+    )
 
 
 @pytest.mark.slow

@@ -172,8 +172,9 @@ def test_indexed_update_prunes_ivf_partition_files(spark, tmp_path):
 
 def test_versioned_mutations_schedule_no_count_scans(spark, tmp_path, monkeypatch):
     """Mutation row counts come from parquet footers / manifest stats:
-    delete() runs ZERO DataFrame.count() jobs, update() exactly one (the
-    n_matched the API returns)."""
+    delete() runs ZERO DataFrame.count() jobs; update() runs none on its
+    driver-resolved plan (the matched collect is the count) and exactly one
+    on its distributed plan (the n_matched the API returns)."""
     db = _mk(spark, tmp_path, "vnocount", versioned=True)
     calls = []
     # patch the CONCRETE class (Spark 4's classic DataFrame overrides the
@@ -189,7 +190,25 @@ def test_versioned_mutations_schedule_no_count_scans(spark, tmp_path, monkeypatc
     assert db.delete({"n": ("<", 3)}) == 3
     assert calls == []
     assert db.update({"grp": "b"}, {"tier": "x"}) == 10
+    assert calls == []
+    monkeypatch.setattr(VectorDB, "_UPDATE_DRIVER_MAX_ROWS", 0)
+    assert db.update({"grp": "b"}, {"tier": "y"}) == 10
     assert len(calls) == 1
+
+
+@pytest.mark.parametrize(
+    "test",
+    [
+        test_versioned_update_rewrites_only_touched_files,
+        test_plain_update_hardlink_carries_untouched_files,
+    ],
+    ids=lambda t: t.__name__,
+)
+def test_update_distributed_plan(spark, tmp_path, monkeypatch, test):
+    """The same file-pruning contract on ``update``'s distributed plan (the
+    driver ceiling at 0)."""
+    monkeypatch.setattr(VectorDB, "_UPDATE_DRIVER_MAX_ROWS", 0)
+    test(spark, tmp_path)
 
 
 def test_plain_swap_crash_leaves_table_recoverable(spark, tmp_path, monkeypatch):

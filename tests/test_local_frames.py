@@ -16,6 +16,7 @@ from modal_vector_db_spark.engine import VectorDB
 from modal_vector_db_spark.schema import ITEMS_SCHEMA
 from modal_vector_db_spark.sources import catalog
 from modal_vector_db_spark.sources import versioned as vcat
+from tests.conftest import executed_plans
 
 K = 4
 
@@ -52,17 +53,6 @@ def test_local_frame_matches_create_dataframe(spark, schema, rows):
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
-def _executed_plans(spark, fn):
-    """Run ``fn``; return the physical plan text of every SQL execution it
-    ran, from the session's SQL status store."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsCount()
-    fn()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    runs = store.executionsList(int(before), 1 << 20)
-    return [runs.apply(i).physicalPlanDescription() for i in range(runs.size())]
-
-
 def test_write_and_batch_plans_scan_no_python_rdd(spark, tmp_path):
     db = VectorDB(
         spark, "lf_plans", embedding_dim=8, create_new_table=True,
@@ -83,7 +73,7 @@ def test_write_and_batch_plans_scan_no_python_rdd(spark, tmp_path):
         ),
     }
     for name, fn in calls.items():
-        plans = _executed_plans(spark, fn)
+        plans = executed_plans(spark, fn)
         assert plans, name
         assert any("LocalTableScan" in p for p in plans), name
         assert not any("ExistingRDD" in p for p in plans), (name, plans)

@@ -21,7 +21,7 @@ from modal_vector_db_spark.operators.pq import PQIndex
 from modal_vector_db_spark.schema import ITEMS_SCHEMA
 from modal_vector_db_spark.sources import catalog
 from modal_vector_db_spark.sources import versioned as vcat
-from tests.conftest import jobs_in_group
+from tests.conftest import executed_plans, jobs_in_group
 
 
 def _rows(lo, hi):
@@ -95,6 +95,40 @@ def test_versioned_stats_filtered_query_jobs_after_tombstone_delete(spark, tmp_p
     masked, jobs = jobs_in_group(spark, ask)
     assert len(jobs) > 1
     assert _triples(masked) == _triples(res)
+
+
+def test_small_update_job_budget(spark, tmp_path):
+    """A 3-row update resolves on the driver: one matched scan, one id
+    probe and the write — at most 6 Spark jobs on a versioned, indexed
+    table with a pending mask, and no Python worker in any plan."""
+    db = VectorDB(
+        spark, "qj_upd", embedding_dim=16, create_new_table=True, warehouse=str(tmp_path),
+        versioned=True, stats_fields={"category": "double"},
+    )
+    db.insert(_rows(0, 300), embed_field="text")
+    db.create_index(num_clusters=4, calibrate=False)
+    for i, (c, tag) in enumerate(((3, "x"), (4, "y"))):
+        assert db.delete({"category": 2, "n": ("in", [2 + 15 * i, 7 + 15 * i, 12 + 15 * i])}) == 3
+        head = vcat.current_version(db.name, db.warehouse)
+        assert vcat._read_manifest(db.name, db.warehouse, head).get("tombstones")
+        targets = [c + 10, c + 15, c + 20]
+        call = {}
+
+        def update():
+            call["n"] = db.update({"category": c, "n": ("in", targets)}, {"tag": tag})
+
+        plans, jobs = jobs_in_group(spark, lambda: executed_plans(spark, update))
+        assert call["n"] == 3
+        assert len(jobs) <= 6, jobs
+        assert plans
+        for p in plans:
+            for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+                assert node not in p, p
+        head = vcat.current_version(db.name, db.warehouse)
+        assert not vcat._read_manifest(db.name, db.warehouse, head).get("tombstones")
+        got = db.query("doc", k=300, filters={"tag": tag})
+        assert sorted(r.metadata["n"] for r in got) == targets
+    assert db.num_rows() == 294
 
 
 @pytest.mark.parametrize("call", ["hybrid", "batch_ivf"])

@@ -291,6 +291,14 @@ def test_update_maintains_text_index_incrementally(spark, tmp_path):
     check("reembed")
 
 
+@pytest.mark.slow
+def test_update_distributed_plan_maintains_text_index(spark, tmp_path, monkeypatch):
+    """The same incremental maintenance on ``update``'s distributed plan
+    (the driver ceiling at 0)."""
+    monkeypatch.setattr(VectorDB, "_UPDATE_DRIVER_MAX_ROWS", 0)
+    test_update_maintains_text_index_incrementally(spark, tmp_path)
+
+
 def test_update_base_failure_drops_text_index(spark, tmp_path):
     """The whole update() derived-store + base sequence is ONE protected
     region: a failure in the base rewrite of an indexed table (after the

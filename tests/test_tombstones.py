@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from modal_vector_db_spark.engine import VectorDB
+from modal_vector_db_spark.sources import catalog
 from modal_vector_db_spark.sources import versioned as vcat
 
 
@@ -241,6 +242,46 @@ def test_fold_only_eager_delete_keeps_text_ledger(spark, tmp_path):
     # and the verified pair still serves at the new head
     got = db.query_hybrid("doc 10", k=3, use_text_index=True)
     assert got
+
+
+def test_update_distributed_plan_folds(spark, tmp_path, monkeypatch):
+    """The same fold on ``update``'s distributed plan (the driver ceiling
+    at 0)."""
+    monkeypatch.setattr(VectorDB, "_UPDATE_DRIVER_MAX_ROWS", 0)
+    test_update_folds_and_eager_fallback_over_threshold(spark, tmp_path, monkeypatch)
+
+
+def test_update_with_mask_above_in_literal_ceiling(spark, tmp_path, monkeypatch):
+    """Past the IN-literal ceiling the driver-resolved update's matched scan
+    anti-joins the mask and its id probe semi-joins the ids: the same fold
+    and rows."""
+    monkeypatch.setattr(vcat, "IN_MASK_MAX_IDS", 1)
+    db = _mk(spark, tmp_path, f"tbi_{_uuid.uuid4().hex[:6]}", n=60, per_batch=20)
+    db.delete({"n": ("in", [10, 11, 30])}, tombstone=True)
+    assert db.update({"n": ("in", [12, 40])}, {"tag": "p"}) == 2
+    assert not _head_manifest(db).get("tombstones")
+    metas = [json.loads(r["metadata"]) for r in db.items().collect()]
+    assert sorted(m["n"] for m in metas) == sorted(set(range(60)) - {10, 11, 30})
+    assert sorted(m["n"] for m in metas if m.get("tag") == "p") == [12, 40]
+    assert db.num_rows() == 57
+
+
+def test_mask_ids_with_quote_and_backslash(spark, tmp_path):
+    """The mask's IN literal is SQL text: ids holding a quote or a
+    backslash are masked exactly, NULL ids are kept, and the optimized plan
+    keeps an In."""
+    wh = str(tmp_path)
+    ids = ["plain", "it's", "back\\slash", "both\\'", "'", "\\", "ünï", None]
+    vcat.overwrite(
+        catalog.local_frame(spark, [(i, n) for n, i in enumerate(ids)], "id string, n int"),
+        "tq", wh,
+    )
+    doomed = ["it's", "back\\slash", "both\\'", "'", "\\"]
+    vcat.tombstone(catalog.local_frame(spark, zip(doomed), "id string"), "tq", wh)
+    got = vcat.read_table(spark, "tq", wh)
+    assert sorted(r["n"] for r in got.collect()) == [0, 6, 7]
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert " IN (" in plan and "from_json" not in plan, plan
 
 
 def test_replace_where_count_excludes_folded_mask(spark, tmp_path):

@@ -2,10 +2,13 @@
 (``catalog.sized_by_bytes``), not by the input's shuffle partitions — a
 small insert or update adds ONE file per partition directory of the base
 table, which on an indexed table is the IVF layout — plus the two driver-side query-path
-pins that ride with it (one-call vector literal, job-free centroid load).
+pins that ride with it (a vector literal whose py4j cost does not grow with
+dim, job-free centroid load).
 """
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -121,15 +124,45 @@ def test_ivf2l_load_reads_coarse_table_job_free(spark, tmp_path):
     assert np.array_equal(mat, np.array([r["centroid"] for r in rows]))
 
 
-def test_vector_lit_matches_per_element_literals(spark):
+def _bits(xs):
+    return [struct.pack("<d", x) for x in xs]
+
+
+def test_vector_lit_matches_per_element_literals(spark, monkeypatch):
     rng = np.random.default_rng(3)
     for vec in (
         rng.standard_normal(64),
         rng.standard_normal(5).astype(np.float32),
         [1, 2.5, -3e-300, 1e300],
+        [float("nan"), float("inf"), -float("inf"), -0.0, 0.0, 5e-324],
     ):
         per_elem = F.array(*[F.lit(float(v)) for v in vec])
         got = spark.range(1).select(
             vector_lit(vec).alias("a"), per_elem.alias("b")
         ).first()
-        assert got["a"] == got["b"] == [float(v) for v in vec]
+        want = [float(v) for v in vec]
+        assert _bits(got["a"]) == _bits(got["b"]) == _bits(want)
+    mat = rng.standard_normal((3, 4))
+    got = spark.range(1).select(vector_lit(mat).alias("m")).first()["m"]
+    assert [_bits(r) for r in got] == [_bits(r) for r in mat.tolist()]
+
+    # a fixed number of py4j calls at any dim, folded into one literal
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    real = client.send_command
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    counts = []
+    for dim in (8, 1024):
+        vec = rng.standard_normal(dim)
+        calls.clear()
+        col = vector_lit(vec)
+        counts.append(len(calls))
+    monkeypatch.undo()
+    assert counts[0] == counts[1], counts
+    plan = spark.range(1).select(col.alias("v"))._jdf.queryExecution().optimizedPlan()
+    assert "from_json" not in plan.toString()
