@@ -10,8 +10,6 @@ indexes, so the scale path re-expresses "index" as *data layout*:
   ``cluster_id IN (...)`` — Spark partition pruning skips everything else,
   which is exactly what an IVF index probe does.  Recall is tunable via
   nprobe; rerank within probed clusters is exact.
-- **LSH via BucketedRandomProjectionLSH** on L2-normalized vectors: for unit
-  vectors, ‖a−b‖² = 2−2·cos(a,b), so Euclidean LSH order == cosine order.
 
 At 100 TB: centroids are O(k·dim) — always broadcastable; the big table is
 never shuffled at query time (the layout did the shuffle once at build).
@@ -809,42 +807,6 @@ def calibrate_nprobe(
     }
 
 
-def cosine_lsh_topk(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 4,
-) -> DataFrame:
-    """LSH-approximate top-k via BucketedRandomProjectionLSH on normalized
-    vectors (cosine ↔ Euclidean equivalence for unit vectors)."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    vecs = df.select(
-        F.col(id_col), array_to_vector(F.col(vec_col).cast("array<double>")).alias("raw")
-    )
-    normed = Normalizer(inputCol="raw", outputCol="features", p=2.0).transform(vecs)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    ).fit(normed)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / (np.linalg.norm(q) or 1.0)
-    from pyspark.ml.linalg import Vectors
-
-    res = lsh.approxNearestNeighbors(normed, Vectors.dense(q), k, distCol="l2")
-    # ‖a−b‖² = 2−2cos ⇒ cosine distance = l2² / 2
-    return res.select(
-        F.col(id_col), (F.col("l2") * F.col("l2") / 2.0).alias("distance")
-    ).orderBy("distance")
-
-
 # ---------------------------------------------------------------------------
 # Deterministic sign-random-projection (SRP) LSH — the oracle-able
 # embedding-dedup scale path.
@@ -1101,61 +1063,3 @@ def cosine_srp_pairs(
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-
-
-def similarity_join(
-    left: DataFrame,
-    right: DataFrame,
-    threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 4,
-    self_join: bool | None = None,
-) -> DataFrame:
-    """Approximate cosine similarity join: all (left, right) pairs with
-    cosine similarity >= threshold, via MLlib ``approxSimilarityJoin`` on
-    L2-normalized vectors (cosine sim s ↔ Euclidean distance √(2−2s)).
-
-    Scale shape: candidate pairs only form within shared LSH buckets —
-    shuffle O(rows × tables), never the full cross product.  Returns
-    (id_a, id_b, cos_sim).
-
-    ``self_join`` (default: auto — true iff ``left is right``): when true,
-    each unordered pair is emitted once as id_a < id_b (and self-pairs are
-    dropped).  For genuinely distinct inputs leave it false: ids from the
-    two sides are unrelated namespaces and the ordering filter would
-    silently drop every match with left id >= right id.
-    """
-    import math
-
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector
-
-    def prep(df, suffix):
-        vecs = df.select(
-            F.col(id_col).alias(f"id{suffix}"),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("raw"),
-        )
-        return Normalizer(inputCol="raw", outputCol="features", p=2.0).transform(vecs)
-
-    if self_join is None:
-        self_join = left is right
-    a, b = prep(left, "_a"), prep(right, "_b")
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    ).fit(a)
-    dist_t = math.sqrt(max(0.0, 2.0 - 2.0 * threshold))
-    pairs = lsh.approxSimilarityJoin(a, b, dist_t, distCol="l2")
-    out = pairs.select(
-        F.col("datasetA.id_a").alias("id_a"),
-        F.col("datasetB.id_b").alias("id_b"),
-        (1.0 - F.col("l2") * F.col("l2") / 2.0).alias("cos_sim"),
-    )
-    if self_join:
-        out = out.filter(F.col("id_a") < F.col("id_b"))
-    return out

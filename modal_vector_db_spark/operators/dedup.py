@@ -877,41 +877,3 @@ def semdedup_keep(
     pairs = semdedup_pairs(df, id_col, vec_col, **kwargs)
     doomed = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(doomed, id_col, "left_anti")
-
-
-def semdedup_cluster_stats(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str = "embedding",
-    *,
-    num_clusters: int = 64,
-    seed: int = 42,
-    cluster_cap: int = 20_000,
-    fit_sample_fraction: float | None = None,
-) -> DataFrame:
-    """The never-silent companion to :func:`semdedup_pairs` (same rule as
-    the LSH family's :func:`band_bucket_stats`): per-cluster member
-    counts, whether the cluster would hub-star at ``cluster_cap``, and
-    the candidate pairs the star suppresses (C(m,2) − (m−1)).  Run it
-    before committing to a cap — suppression must be a REPORTED number,
-    never an invisible default."""
-    from modal_vector_db_spark.operators.ann import IVFIndex
-
-    ivf = IVFIndex.build(
-        df, vec_col=vec_col, k=num_clusters, seed=seed,
-        sample_fraction=fit_sample_fraction,
-    )
-    m = F.col("members")
-    return (
-        ivf.assign(df, vec_col)
-        .groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("members"))
-        .withColumn("starred", m > int(cluster_cap))
-        .withColumn(
-            "suppressed_pairs",
-            F.when(
-                m > int(cluster_cap), (m * (m - 1) / 2 - (m - 1)).cast("long")
-            ).otherwise(F.lit(0).cast("long")),
-        )
-        .orderBy(F.col("members").desc(), F.col("cluster_id"))
-    )

@@ -250,9 +250,8 @@ def extract_html_fields(
 
 def crawl_pages_to_metadata(recs: DataFrame, text_tier: str = "parser") -> DataFrame:
     """WARC response records -> one ``metadata`` JSON-text column per
-    HTML page: the shared front half of ``VectorDB.load_from_warc`` and
-    the streaming crawl ingest (``streaming/crawl.py``) — filter to HTML
-    responses, normalize the URL (the stage-zero dedup key), extract
+    HTML page: the front half of ``VectorDB.load_from_warc`` — filter to
+    HTML responses, normalize the URL (the stage-zero dedup key), extract
     title + visible text through the chosen tier, drop textless pages,
     serialize for the engine's distributed embed+insert path."""
     if text_tier not in ("parser", "catalyst"):

@@ -43,13 +43,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str | list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two co-bucketed tables — plans as Exchange-free sort-merge."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
-
-
 #: op → (phase-1 partial fn, phase-2 recombine fn).  Partial counts ADD.
 _ALGEBRAIC = {
     "sum": (F.sum, F.sum),

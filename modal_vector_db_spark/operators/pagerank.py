@@ -44,14 +44,16 @@ __all__ = ["pagerank"]
 #: last chain plan captured under SPARK_GRAFT_PR_PLAN_DUMP (evidence hook)
 LAST_CHAIN_PLAN: str | None = None
 
-#: node-count ceiling for statically-planned iteration chains (env
-#: SPARK_GRAFT_PR_STATIC_MAX).  Below it the rank table is provably tiny
-#: (the head job counted it) and AQE's per-stage re-planning across the
-#: 2-3 exchanges × iters chain costs more than it can ever save — the
-#: chain runs with AQE off and a rank-table-sized static partition count.
-#: Above it (any real web graph) AQE stays on: the per-iteration shuffles
-#: are exactly what skew-join handling and partition coalescing are for.
-_STATIC_CHAIN_MAX_NODES = int(os.environ.get("SPARK_GRAFT_PR_STATIC_MAX", "200000"))
+#: node-count ceiling for statically-planned iteration chains.  Below it
+#: the rank table is provably tiny (the head job counted it) and AQE's
+#: per-stage re-planning across the 2-3 exchanges × iters chain costs more
+#: than it can ever save — the chain runs with AQE off and a
+#: rank-table-sized static partition count.  Above it (any real web graph)
+#: AQE stays on: the per-iteration shuffles are exactly what skew-join
+#: handling and partition coalescing are for.  A constant, not a setting:
+#: it also bounds the contributions broadcast of the static chain, which
+#: lands on the driver.
+_STATIC_CHAIN_MAX_NODES = 200_000
 
 
 @contextlib.contextmanager

@@ -113,18 +113,3 @@ def score_quality(
         *src_cols, F.lit(None).cast("double").alias(out_col)
     )
     return scored.unionByName(nulls)
-
-
-def quality_filter(
-    model,
-    df: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-) -> DataFrame:
-    """Keep rows scoring ≥ ``threshold`` (NULL text drops — a quality
-    filter must never pass what it cannot score)."""
-    return (
-        score_quality(model, df, text_col=text_col)
-        .filter(F.col("quality_score") >= F.lit(float(threshold)))
-        .drop("quality_score")
-    )

@@ -3,8 +3,7 @@ with NO equi-join key.
 
 The reference has no temporal operators (its surface is KNN + metadata
 filters, duckvdb.py:63-124); this is extension surface for the events
-fixture, the batch twin of the stream-stream interval join in
-``streaming/events.py:181``.
+fixture.
 
 Spark has no native range join (Databricks' range-join hint is not in OSS
 Spark), and the naive formulation — a theta join — plans as

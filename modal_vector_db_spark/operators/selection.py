@@ -124,38 +124,6 @@ def dsir_log_weights(
     )
 
 
-def dsir_resample(
-    weights: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    weight_col: str = "log_weight",
-    seed: str = "dsir",
-) -> DataFrame:
-    """The paper's actual selection step: GUMBEL-TOP-K resampling — draw k
-    docs WITHOUT replacement with probability ∝ exp(log_weight), via the
-    Gumbel-max trick: rank by ``log_weight + g_i`` where ``g_i`` is
-    per-doc Gumbel noise.  A plain threshold keeps only the extreme head;
-    resampling preserves diversity in proportion to importance, which is
-    what the method's guarantees are stated for.
-
-    Noise is DETERMINISTIC (md5 of seed+id → uniform → Gumbel), so runs
-    reproduce and a DuckDB twin can replay the draw exactly — no rand().
-    Top-k is orderBy+limit: Spark plans the bounded heap
-    (TakeOrderedAndProject), never a global sort."""
-    u = (
-        (F.pmod(md5_long(F.concat(F.lit(seed + "|"), F.col(id_col).cast("string"))),
-                F.lit(1_000_000_007)) + 1)
-        / F.lit(1_000_000_008.0)
-    )
-    g = -F.log(-F.log(u))
-    return (
-        weights.withColumn("_gumbel_key", F.col(weight_col) + g)
-        .orderBy(F.col("_gumbel_key").desc(), F.col(id_col).asc())
-        .limit(k)
-        .drop("_gumbel_key")
-    )
-
-
 def dsir_log_weights_sql(
     table: str,
     id_expr: str,

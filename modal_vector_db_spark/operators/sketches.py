@@ -9,12 +9,6 @@ contracts so pipelines use the cheap path by default:
 - HyperLogLog++ (``approx_count_distinct``) for cardinality / duplication
   rate: one scan, map-side partial sketches merged at the driver, relative
   standard deviation configurable.
-- Greenwald-Khanna (``percentile_approx``) for quantiles: mergeable, rank
-  error bounded by ``1/accuracy`` — usable per-group inside a single
-  aggregation pass (unlike an exact median, which needs a full sort).
-- FP-growth-style ``freqItems`` for heavy hitters (support threshold, false
-  positives possible, false negatives not) — the skew detector used before
-  choosing a salting strategy.
 
 Everything here is JVM-native (no Python in the loop) and single-pass.
 
@@ -58,75 +52,6 @@ def dup_rate_estimate(
             1 - F.col("approx_distinct") / F.col("total_rows"), 6
         ).alias("est_dup_rate"),
     )
-
-
-def grouped_ndv(
-    df: DataFrame, group_cols: Sequence[str], key_cols: Sequence[str], rsd: float = 0.02
-) -> DataFrame:
-    """Per-group approximate distinct counts (HLL++ partial sketches merge
-    map-side, so the shuffle carries one sketch per (partition, group) — not
-    one row per distinct value, which is what exact count(DISTINCT) moves)."""
-    key = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
-    return df.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.approx_count_distinct(key, rsd).alias("approx_distinct"),
-    )
-
-
-def quantile_profile(
-    df: DataFrame,
-    col: str,
-    probs: Sequence[float] = (0.25, 0.5, 0.75, 0.95, 0.99),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Approximate quantiles of ``col`` in one aggregation pass.
-
-    ``accuracy`` bounds the rank error at ``1/accuracy`` of the row count
-    (10000 → ±0.01% rank) with sketch memory O(accuracy·log n), independent
-    of data size.  Returns one row per probability: (prob, value).
-    """
-    q = df.agg(
-        F.percentile_approx(
-            col, F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
-        ).alias("qs")
-    )
-    pairs = F.arrays_zip(
-        F.array(*[F.lit(float(p)) for p in probs]).alias("prob"),
-        F.col("qs").alias("value"),
-    )
-    return q.select(F.explode(pairs).alias("pv")).select(
-        F.col("pv.prob").alias("prob"), F.col("pv.value").alias("value")
-    )
-
-
-def grouped_quantiles(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    probs: Sequence[float] = (0.5, 0.9),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Per-group approximate quantiles — the shape an exact median cannot do
-    without a per-group sort; GK sketches fold into the normal partial-agg
-    pipeline (one shuffle of sketches, not rows)."""
-    aggs = [
-        F.percentile_approx(value_col, F.lit(float(p)), F.lit(accuracy)).alias(
-            f"p{int(p * 100):02d}"
-        )
-        for p in probs
-    ]
-    return df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n_rows"), *aggs)
-
-
-def heavy_hitters(df: DataFrame, col: str, support: float = 0.01) -> list:
-    """Values of ``col`` appearing in more than ``support`` fraction of rows
-    (Karp-Papadimitriou-Shenker one-pass; may over-report, never misses a
-    true heavy hitter).  THE pre-join skew check: any key returned here is a
-    candidate for salting / AQE skew-join handling before a shuffle join on
-    ``col``.  Driver-side result (list of values) — the result set is at
-    most 1/support values by construction, so collecting is bounded."""
-    row = df.freqItems([col], support).collect()[0]
-    return sorted(row[f"{col}_freqItems"], key=lambda v: (v is None, str(v)))
 
 
 def column_profile(df: DataFrame, cols: Sequence[str] | None = None, rsd: float = 0.02) -> DataFrame:

@@ -225,7 +225,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # 2. MinHash + LSH banding near-dup pairs
 # ---------------------------------------------------------------------------
-_NUM_HASHES, _BANDS, _ROWS_PER_BAND, _JACC_T = 8, 4, 2, 0.4
+_NUM_HASHES, _BANDS, _JACC_T = 8, 4, 0.4
 
 _SH = hashed_shingles_sql("text", 3)
 _SIG = minhash_signature_from_hashes_sql("sh", _NUM_HASHES)

@@ -108,43 +108,6 @@ def drop_table(name: str, warehouse: str | None = None) -> None:
         shutil.rmtree(p)
 
 
-def list_tables(warehouse: str | None = None) -> list[dict]:
-    """Catalog listing: every table directory under the warehouse with its
-    kind — ``plain`` (parquet dir), ``versioned`` (manifest log), or
-    ``derived`` (the ``__pq_codebooks``/``__ivf_centroids`` side-tables an
-    index build writes, and ``__ivf`` copies older layouts kept).  The ops surface the reference gets
-    for free from ``ls /db/*.duckdb``."""
-    root = warehouse or DEFAULT_WAREHOUSE
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for name in sorted(os.listdir(root)):
-        p = os.path.join(root, name)
-        if not os.path.isdir(p):
-            continue
-        # crash/staging leftovers carry parquet but are NOT tables: a
-        # crashed compact/rewrite leaves foo__compacting/foo__old beside
-        # foo, and ops tooling iterating this listing must never treat
-        # them as data (review finding)
-        if name.startswith("_stage_") or any(
-            name.endswith(s)
-            for s in ("__old", "__compacting", "__rewriting", "__replacing")
-        ):
-            continue
-        # suffix check FIRST: a derived table may itself be
-        # manifest-logged
-        if any(name.endswith(s) for s in ("__ivf", "__ivf_centroids", "__pq_codebooks")):
-            kind = "derived"
-        elif os.path.isdir(os.path.join(p, "_manifests")):
-            kind = "versioned"
-        elif table_exists(name, warehouse):
-            kind = "plain"
-        else:
-            continue  # staging leftovers / empty dirs are not tables
-        out.append({"name": name, "kind": kind})
-    return out
-
-
 #: footer key under which Spark's parquet writer records the row schema
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -396,13 +359,6 @@ def _leaf_files(name: str, warehouse: str | None) -> tuple[list[str], list[str]]
             pcols = [s.partition("=")[0] for s in segs]
             break
     return sorted(rels), pcols
-
-
-def _flat_files(name: str, warehouse: str | None) -> list[str] | None:
-    """Top-level parquet filenames of an UNPARTITIONED table, or ``None``
-    for a Hive-partitioned layout (callers then use :func:`_leaf_files`)."""
-    rels, pcols = _leaf_files(name, warehouse)
-    return rels if not pcols else None
 
 
 def _read_subset(spark: SparkSession, base_path: str, paths: list[str]) -> DataFrame:

@@ -379,9 +379,8 @@ def records_from_binary_df(
     types: tuple[str, ...] | None = None,
     on_error: str = "fail",
 ) -> DataFrame:
-    """The record walker over any (path, content) DataFrame — shared by
-    :func:`read_warc` (batch ``binaryFile`` scan) and the streaming crawl
-    ingest (``readStream`` micro-batches land here via foreachBatch)."""
+    """The record walker over any (path, content) DataFrame — the walk
+    behind :func:`read_warc`'s ``binaryFile`` scan."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
     _ship_by_value()
@@ -546,20 +545,6 @@ def _local_path(p: str) -> str:
 
         return unquote(urlparse(p).path)
     return p
-
-
-def fetch_record(path: str, offset: int, length: int, rec_index: int = 0) -> dict:
-    """Driver-side single-record fetch: seek + read exactly ``length``
-    bytes, gunzip if the slice is a member, walk to ``rec_index``.  The
-    unit primitive under :func:`fetch_records`; on an object store this
-    read is a ranged GET."""
-    with open(_local_path(path), "rb") as f:
-        f.seek(offset)
-        blob = f.read(length)
-    if blob.startswith(_GZIP_MAGIC):
-        blob = gzip.decompress(blob)
-    recs = list(iter_warc_records(blob, path))
-    return recs[rec_index]
 
 
 def fetch_records(cdx: DataFrame) -> DataFrame:

@@ -90,16 +90,6 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> Data
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def run_to_memory(
-    stream_df: DataFrame, query_name: str, checkpoint_dir: str, output_mode: str = "append"
-) -> DataFrame:
-    """Drain a stream deterministically: Trigger.AvailableNow → memory sink;
-    returns the materialized result table."""
-    q = start_to_memory(stream_df, query_name, checkpoint_dir, output_mode)
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)
-
-
 def start_to_memory(
     stream_df: DataFrame, query_name: str, checkpoint_dir: str, output_mode: str = "append"
 ):
@@ -192,142 +182,6 @@ def stream_to_versioned_hypertable(
 
     q = (
         stream_df.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stateful_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running (event count, total value) maintained in explicit GroupState
-    across micro-batches — the arbitrary-state surface that windowed aggs
-    can't express (state survives any gap, emits a snapshot per batch).
-
-    The reference has no streaming at all; this is the extension-surface
-    analog of a per-key accumulator.  State is (count, total) — O(1) per
-    user; the shuffle partitions by user_id exactly like a batch groupBy.
-    """
-    import pandas as pd  # local import: executors pickle this fn by value
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update_totals(key, pdf_iter, state):
-        if state.exists:
-            n, total = state.get
-        else:
-            n, total = 0, 0.0
-        for pdf in pdf_iter:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update_totals,
-        outputStructType="user_id long, n_events long, total_value double",
-        stateStructType="n long, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_stream_interval_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream interval join: each click matched to same-user
-    purchases within ``horizon`` AFTER the click.
-
-    Both sides carry watermarks so the join state is bounded: a buffered
-    click can be evicted once the purchase-side watermark passes
-    ``click.ts + horizon`` — the state-cleanup contract that makes
-    stream-stream joins runnable forever."""
-    c = clicks.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
-    ).select("click_id", "purchase_id", "c_user", "click_ts", "purchase_ts", "purchase_value")
-
-
-DOCS_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("text", StringType())]
-)
-
-
-def read_document_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream of (doc_id, text) parquet files — a crawl feed."""
-    r = spark.readStream.schema(DOCS_SCHEMA)
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return r.parquet(path)
-
-
-def admit_stream_incremental(
-    docs_stream: DataFrame,
-    corpus_path: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **dedup_kwargs,
-) -> None:
-    """Streaming corpus admission — ``foreachBatch`` +
-    :func:`operators.dedup.incremental_dedup`: every micro-batch is checked
-    against the accepted corpus at ``corpus_path`` (exact by content hash,
-    near by MinHash band join) and against itself; only novel docs are
-    appended.  This is the steady-state crawl-ingest loop as a stream: the
-    corpus only ever grows by admitted rows and is never re-clustered.
-
-    ``corpus_path`` must be seeded with a (possibly empty) parquet of the
-    corpus schema.  Micro-batch retries re-run the same admission against a
-    corpus that already contains the batch's survivors, so every retried
-    row is rejected as an exact duplicate — the sink is effectively-once,
-    the same replay-safety as the engine's anti-join write path.
-
-    Scale: the corpus side is a column-pruned scan (hash/shingle columns
-    derived per batch here; at 100 TB they are precomputed and stored
-    alongside, see ``incremental_dedup``'s docstring); state outside the
-    corpus table is just the file-source log — no unbounded stream state.
-    """
-    from modal_vector_db_spark.operators.dedup import incremental_dedup
-
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # NULL-text docs are dropped at admission: incremental_dedup
-        # passes them through as survivors ("duplicates of nothing"), so
-        # a micro-batch RETRY would append them a second time — breaking
-        # the effectively-once contract this sink documents.  A corpus
-        # admission sink has no use for textless rows anyway.
-        batch_df = batch_df.filter(F.col(text_col).isNotNull())
-        # the corpus schema is the BATCH's schema (review finding: a
-        # hardcoded (doc_id, text) schema null-filled or crashed any
-        # caller using the id_col/text_col parameters it advertises)
-        corpus = spark.read.schema(batch_df.schema).parquet(corpus_path)
-        survivors = incremental_dedup(
-            corpus, batch_df, id_col, text_col, **dedup_kwargs
-        )
-        survivors.write.mode("append").parquet(corpus_path)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(_admit)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

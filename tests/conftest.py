@@ -48,13 +48,22 @@ def jobs_in_group(spark, fn):
 
 def executed_plans(spark, fn):
     """Run ``fn``; return the physical plan text of every SQL execution it
-    ran, from the session's SQL status store."""
+    ran, from the session's SQL status store.  Executions are picked by
+    ``executionId``, not by count offset: the store keeps at most
+    ``spark.sql.ui.retainedExecutions`` entries, so once it is full the
+    count stops growing while old entries are evicted."""
     store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsCount()
+    last = store.executionsList(max(int(store.executionsCount()) - 1, 0), 1)
+    seen = last.apply(0).executionId() if last.size() else -1
     fn()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    runs = store.executionsList(int(before), 1 << 20)
-    return [runs.apply(i).physicalPlanDescription() for i in range(runs.size())]
+    runs = store.executionsList(0, 1 << 20)
+    plans = []
+    for i in reversed(range(runs.size())):  # ascending executionId
+        if runs.apply(i).executionId() <= seen:
+            break
+        plans.append(runs.apply(i).physicalPlanDescription())
+    return plans[::-1]
 
 
 @pytest.fixture(scope="session")

@@ -1,4 +1,4 @@
-"""ANN quality gates: IVF and LSH approximate top-k must hit recall@10 ≥ 0.9
+"""ANN quality gates: IVF approximate top-k must hit recall@10 ≥ 0.9
 against exact brute force on the embeddings fixture (SURVEY §5.2 item 4)."""
 
 from __future__ import annotations
@@ -7,11 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from modal_vector_db_spark.harness import load
-from modal_vector_db_spark.operators.ann import (
-    IVFIndex,
-    brute_force_topk,
-    cosine_lsh_topk,
-)
+from modal_vector_db_spark.operators.ann import IVFIndex, brute_force_topk
 from tests.conftest import SF_DIR
 
 
@@ -70,38 +66,6 @@ def test_ivf_save_load_roundtrip(emb, spark, tmp_path):
     import numpy as np
 
     assert np.allclose(ivf.centroids, loaded.centroids)
-
-
-def test_lsh_recall(emb, query_vecs):
-    recalls = []
-    for qid, qv in query_vecs.items():
-        exact = [r["vec_id"] for r in brute_force_topk(emb, qv, k=10).collect()]
-        approx = [r["vec_id"] for r in cosine_lsh_topk(emb, qv, k=10, num_hash_tables=6).collect()]
-        recalls.append(_recall(approx, exact))
-    assert sum(recalls) / len(recalls) >= 0.9, recalls
-
-
-def test_similarity_join_finds_planted_pairs(emb, spark):
-    """approxSimilarityJoin must recover planted identical-copy pairs
-    (cos=1.0) and agree with the exact blocked join at the threshold."""
-    from pyspark.sql import functions as F
-
-    from modal_vector_db_spark.operators.ann import similarity_join
-
-    copies = emb.filter(F.col("vec_id") % 50 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding", "label"
-    )
-    aug = emb.select("vec_id", "embedding", "label").union(copies)
-    got = similarity_join(aug, aug, threshold=0.999, num_hash_tables=6).collect()
-    got_pairs = {(r["id_a"], r["id_b"]) for r in got}
-    want_pairs = {
-        (r["vec_id"], r["vec_id"] + 100000)
-        for r in emb.filter(F.col("vec_id") % 50 == 0).select("vec_id").collect()
-    }
-    # identical vectors always share every LSH bucket -> recall 1.0 on them
-    assert want_pairs <= got_pairs
-    for r in got:
-        assert r["cos_sim"] >= 0.998
 
 
 # ---------------------------------------------------------------------------

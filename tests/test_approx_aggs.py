@@ -33,14 +33,7 @@ def test_approx_percentile_close_to_exact(spark):
 # ---------------------------------------------------------------------------
 # operators/sketches.py — packaged one-pass estimators
 # ---------------------------------------------------------------------------
-from modal_vector_db_spark.operators.sketches import (  # noqa: E402
-    column_profile,
-    dup_rate_estimate,
-    grouped_ndv,
-    grouped_quantiles,
-    heavy_hitters,
-    quantile_profile,
-)
+from modal_vector_db_spark.operators.sketches import column_profile, dup_rate_estimate  # noqa: E402
 from modal_vector_db_spark.plans.inspect import executed_plan, shuffle_count  # noqa: E402
 
 
@@ -88,65 +81,3 @@ def test_column_profile_one_row_per_column_exact_counts(spark):
     )
     key_ndv = by_col["o_orderkey"]["approx_ndv"]
     assert abs(key_ndv - n) / n < 0.05  # unique key: ndv ~= rows
-
-
-def test_quantile_profile_monotone_and_close(spark):
-    o = load(spark, SF_DIR, "orders")
-    probs = (0.25, 0.5, 0.75, 0.95)
-    rows = quantile_profile(o, "o_totalprice", probs).collect()
-    assert [r["prob"] for r in rows] == list(probs)
-    vals = [r["value"] for r in rows]
-    assert vals == sorted(vals)
-    exact_med = o.agg(F.percentile("o_totalprice", F.lit(0.5))).head()[0]
-    assert abs(vals[1] - exact_med) / exact_med < 0.01
-
-
-def test_grouped_quantiles_vs_exact_per_group(spark):
-    c = load(spark, SF_DIR, "customer")
-    approx = {
-        r["c_mktsegment"]: r["p50"]
-        for r in grouped_quantiles(c, ["c_mktsegment"], "c_acctbal", probs=(0.5,)).collect()
-    }
-    # percentile_approx returns an ACTUAL data value whose rank is within
-    # n/accuracy of the target — so the right check is a rank bound, not a
-    # value tolerance (small groups have wide gaps between adjacent values).
-    exact = {
-        r["c_mktsegment"]: (r["lo"], r["hi"])
-        for r in c.groupBy("c_mktsegment")
-        .agg(
-            F.percentile("c_acctbal", F.lit(0.45)).alias("lo"),
-            F.percentile("c_acctbal", F.lit(0.55)).alias("hi"),
-        )
-        .collect()
-    }
-    assert set(approx) == set(exact)
-    for seg, (lo, hi) in exact.items():
-        assert lo <= approx[seg] <= hi
-
-
-def test_grouped_ndv_counts_rows_exactly(spark):
-    li = load(spark, SF_DIR, "lineitem")
-    got = grouped_ndv(li, ["l_returnflag"], ["l_partkey"]).collect()
-    exact = {
-        r["l_returnflag"]: (r["n"], r["d"])
-        for r in li.groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("l_partkey").alias("d"))
-        .collect()
-    }
-    for r in got:
-        n, d = exact[r["l_returnflag"]]
-        assert r["n_rows"] == n
-        assert abs(r["approx_distinct"] - d) / d < 0.05
-
-
-def test_heavy_hitters_finds_planted_skew(spark):
-    """1 hot key owning ~half the rows must be reported; the result set is
-    bounded by 1/support."""
-    li = load(spark, SF_DIR, "lineitem").select(
-        F.when(F.col("l_orderkey") % 2 == 0, F.lit(999999))
-        .otherwise(F.col("l_partkey"))
-        .alias("k")
-    )
-    hot = heavy_hitters(li, "k", support=0.3)
-    assert 999999 in hot
-    assert len(hot) <= int(1 / 0.3) + 1

@@ -621,20 +621,6 @@ def test_semdedup_oversized_cluster_routes_to_jvm_hub_star(spark):
     assert all(r["cos_sim"] >= 0.99 for r in pairs)
 
 
-def test_semdedup_cluster_stats_reports_suppression(spark):
-    from modal_vector_db_spark.operators.dedup import semdedup_cluster_stats
-
-    rows = [(i, [1.0, 0.0, 0.0, 1e-6 * i]) for i in range(40)]
-    rows += [(100 + i, [0.0, 1.0, 0.0, 1e-6 * i]) for i in range(5)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    st = semdedup_cluster_stats(df, "vec_id", num_clusters=2, cluster_cap=10).collect()
-    assert len(st) == 2
-    big, small = st[0], st[1]
-    assert (big["members"], big["starred"]) == (40, True)
-    assert big["suppressed_pairs"] == 40 * 39 // 2 - 39
-    assert (small["members"], small["starred"], small["suppressed_pairs"]) == (5, False, 0)
-
-
 @pytest.mark.slow
 def test_semdedup_blocked_matmul_matches_unblocked(spark):
     """Round-7 ADVICE (medium): the per-cluster similarity used to be ONE

@@ -678,25 +678,6 @@ def test_explain_surfaces_plan_quality(vdb):
     assert "Filter" in planf
 
 
-def test_list_tables_catalog_surface(spark, tmp_path):
-    from modal_vector_db_spark.sources import catalog as cat
-
-    wh = str(tmp_path)
-    a = _mk(spark, tmp_path, "tbl_a")
-    a.insert([{"n": i} for i in range(12)], embed_field="n")
-    a.create_index(num_clusters=2)
-    v = VectorDB(spark, "tbl_v", embedding_dim=16, create_new_table=True,
-                 warehouse=wh, versioned=True)
-    v.insert([{"n": 2}], embed_field="n")
-
-    listing = {t["name"]: t["kind"] for t in cat.list_tables(wh)}
-    assert listing["tbl_a"] == "plain"
-    assert listing["tbl_v"] == "versioned"
-    assert "tbl_a__ivf" not in listing  # the base is the index layout
-    assert listing["tbl_a__ivf_centroids"] == "derived"
-    assert cat.list_tables(str(tmp_path / "nope")) == []
-
-
 def test_query_batch_matches_single_queries(spark, tmp_path):
     """One-job batched KNN: each q_id's rows equal the single-query path,
     strings and raw vectors mix, filters apply."""

@@ -114,47 +114,6 @@ def test_load_from_warc_catalyst_tier_and_validation(spark, tmp_path):
         assert "text_tier" in str(e)
 
 
-def test_stream_crawl_ingest(spark, tmp_path):
-    """Continuous crawl ingestion (streaming/crawl.py): file-source
-    exactly-once across restarts (segment files never re-read) PLUS
-    content-id idempotency for re-crawled pages in new segments."""
-    from modal_vector_db_spark.streaming.crawl import stream_crawl_ingest
-
-    landing = tmp_path / "landing"
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(landing)
-    _write_segment(landing / "seg0.warc", [_resp(f"https://e.com/{i}", _page(i)) for i in range(4)])
-    db = _db(spark, tmp_path)
-
-    q = stream_crawl_ingest(db, str(landing), ckpt)
-    q.awaitTermination()
-    assert db.num_rows() == 4
-
-    # restart with NO new files: the checkpoint prevents any re-read
-    q = stream_crawl_ingest(db, str(landing), ckpt)
-    q.awaitTermination()
-    assert db.num_rows() == 4
-
-    # a new segment lands: 2 re-crawled pages + 2 new ones (gzip this time)
-    _write_segment(
-        landing / "seg1.warc.gz",
-        [_resp(f"https://e.com/{i}", _page(i)) for i in (2, 3, 4, 5)],
-        gz=True,
-    )
-    q = stream_crawl_ingest(db, str(landing), ckpt)
-    q.awaitTermination()
-    assert db.num_rows() == 6  # content-id anti-join dropped the re-crawls
-
-    # the ingested corpus is queryable
-    assert len(db.query("crawl body 5", k=1)) == 1
-
-    try:
-        stream_crawl_ingest(db, str(landing), ckpt, text_tier="regex")
-        raise AssertionError("expected ValueError")
-    except ValueError as e:
-        assert "text_tier" in str(e)
-
-
 def test_recrawl_new_date_and_error_pages(spark, tmp_path):
     """Content identity excludes the capture date (review finding): a
     re-crawl of an unchanged page under a NEW WARC-Date must dedup; and
@@ -310,75 +269,3 @@ def test_incremental_crawl_refresh(spark, tmp_path):
     # composition)
     db.insert_df(pages, embed_field="text")
     assert db.num_rows() == 17
-
-
-def test_stream_crawl_with_live_graph_index(spark, tmp_path):
-    """Round 12 (judge #5): streaming ingest with a LIVE graph index —
-    each micro-batch's insert syncs the graph under the epoch-sidecar
-    lock (epoch advances; new pages graph-serve with NO rebuild call),
-    and a batch whose sync is lost leaves the epoch LOUDLY stale, never
-    silently wrong."""
-    import pytest
-
-    from modal_vector_db_spark.streaming.crawl import stream_crawl_ingest
-
-    landing = tmp_path / "landing_g"
-    ckpt = str(tmp_path / "ckpt_g")
-    os.makedirs(landing)
-    _write_segment(
-        landing / "seg0.warc",
-        [_resp(f"https://g.com/{i}", _page(i)) for i in range(8)],
-    )
-    db = _db(spark, tmp_path)
-    q = stream_crawl_ingest(db, str(landing), ckpt)
-    q.awaitTermination()
-    db.create_index(num_clusters=2, calibrate=False)
-    db.create_graph_index(calibrate=False)
-
-    # three new segments, one micro-batch each (max_files_per_trigger=1):
-    # three consecutive graph syncs through the epoch lock
-    for s in (1, 2, 3):
-        _write_segment(
-            landing / f"seg{s}.warc",
-            [_resp(f"https://g.com/{10 * s + j}", _page(10 * s + j)) for j in range(2)],
-        )
-    q = stream_crawl_ingest(db, str(landing), ckpt, max_files_per_trigger=1)
-    q.awaitTermination()
-    assert db.num_rows() == 14
-    # epoch advanced batch by batch: graph serving works with NO rebuild,
-    # including for pages from the LAST micro-batch (query with the stored
-    # text itself — the hashing embedder ranks exact text at distance 0)
-    (t31,) = [
-        json.loads(r["metadata"])["text"]
-        for r in db.items().collect()
-        if "/31" in json.loads(r["metadata"])["url"]
-    ]
-    got = db.query_graph(t31, k=2, nprobe=2, ef_search=8192)
-    assert any("/31" in json.dumps(r.metadata) for r in got)
-    exact = db.query("crawl body 11", k=5)
-    graph = db.query_graph("crawl body 11", k=5, nprobe=2, ef_search=8192)
-    assert [r.id for r in graph] == [r.id for r in exact]
-
-    # a lost sync (crash shape) leaves the epoch loudly stale — the next
-    # graph query raises instead of serving short results
-    real = db._sync_graph_for_append
-    db._sync_graph_for_append = lambda *a, **k: None
-    try:
-        _write_segment(
-            landing / "seg9.warc", [_resp("https://g.com/99", _page(99))]
-        )
-        q = stream_crawl_ingest(db, str(landing), ckpt)
-        q.awaitTermination()
-    finally:
-        db._sync_graph_for_append = real
-    with pytest.raises(ValueError, match="rebuild|reconcile"):
-        db.query_graph("crawl body 99", k=1, nprobe=2)
-    # reconcile heals it without a rebuild
-    assert db.reconcile_graph() >= 1
-    (t99,) = [
-        json.loads(r["metadata"])["text"]
-        for r in db.items().collect()
-        if "/99" in json.loads(r["metadata"])["url"]
-    ]
-    got = db.query_graph(t99, k=2, nprobe=2, ef_search=8192)
-    assert any("/99" in json.dumps(r.metadata) for r in got)

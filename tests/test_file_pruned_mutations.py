@@ -86,8 +86,8 @@ def test_versioned_update_rewrites_only_touched_files(spark, tmp_path):
 def test_plain_delete_hardlink_carries_untouched_files(spark, tmp_path):
     db = _mk(spark, tmp_path, "pprune", versioned=False)
     p = catalog.db_path(db.name, db.warehouse)
-    files = catalog._flat_files(db.name, db.warehouse)
-    assert files  # unpartitioned layout
+    files, pcols = catalog._leaf_files(db.name, db.warehouse)
+    assert files and not pcols  # unpartitioned layout
     # which files actually hold grp=b rows (the ones a pruned delete touches)
     touched = set(
         catalog._touched_files(
@@ -112,7 +112,8 @@ def test_plain_delete_hardlink_carries_untouched_files(spark, tmp_path):
 def test_plain_update_hardlink_carries_untouched_files(spark, tmp_path):
     db = _mk(spark, tmp_path, "ppruneu", versioned=False)
     p = catalog.db_path(db.name, db.warehouse)
-    files = catalog._flat_files(db.name, db.warehouse)
+    files, pcols = catalog._leaf_files(db.name, db.warehouse)
+    assert not pcols  # unpartitioned layout
     touched = set(
         catalog._touched_files(
             spark, db.name, db.warehouse, files,
@@ -318,21 +319,3 @@ def test_catalog_replace_where_missing_table(spark, tmp_path):
     catalog.replace_where(spark, "fresh", F.lit(False), extra, wh)
     assert catalog.read_table(spark, "fresh", wh).count() == 1
     assert not [d for d in os.listdir(wh) if d.endswith("__rewriting")]
-
-
-def test_list_tables_skips_crash_leftovers(spark, tmp_path):
-    """Review finding: foo__old/foo__compacting/_stage_* dirs full of
-    parquet were listed as plain tables."""
-    import os
-    import shutil
-
-    from modal_vector_db_spark.sources import catalog
-
-    wh = str(tmp_path)
-    df = spark.createDataFrame([(1, "a")], "id long, v string")
-    catalog.append(df, "real", wh)
-    for leftover in ("real__old", "real__compacting", "real__rewriting",
-                     "real__replacing", "_stage_ab12"):
-        shutil.copytree(os.path.join(wh, "real"), os.path.join(wh, leftover))
-    names = {t["name"] for t in catalog.list_tables(wh)}
-    assert names == {"real"}

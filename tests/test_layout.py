@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from modal_vector_db_spark.harness import load
-from modal_vector_db_spark.operators.layout import bucketed_join, salted_agg, write_bucketed
+from modal_vector_db_spark.operators.layout import salted_agg, write_bucketed
 from modal_vector_db_spark.plans.inspect import executed_plan, shuffle_count
 from tests.conftest import SF_DIR
 
@@ -41,17 +41,6 @@ def test_bucketed_join_no_shuffle(spark, bucketed_tables):
         assert shuffle_count(j) == 0, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-
-
-def test_bucketed_join_matches_plain_join(spark, bucketed_tables):
-    n_bucketed = bucketed_join(spark, "lineitem_b", "orders_b",
-                               F.col("l_orderkey") == F.col("o_orderkey")).count()
-    n_plain = (
-        load(spark, SF_DIR, "lineitem")
-        .join(load(spark, SF_DIR, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .count()
-    )
-    assert n_bucketed == n_plain
 
 
 def test_salted_agg_equals_direct(spark):

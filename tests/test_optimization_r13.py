@@ -49,9 +49,10 @@ def test_instream_dedup_rollup_equals_batch(spark, replay_files, tmp_path):
             )
         )
     )
-    got = SE.run_to_memory(
+    SE.start_to_memory(
         stream, "dedup_rollup_r13", str(tmp_path / "cp"), output_mode="complete"
-    ).toPandas()
+    ).awaitTermination()
+    got = spark.table("dedup_rollup_r13").toPandas()
 
     batch = _rollup(
         spark.read.parquet(replay_files).dropDuplicates(["event_id"])
@@ -150,8 +151,8 @@ def test_static_chain_broadcasts_contribs(spark, monkeypatch):
     from modal_vector_db_spark.operators import pagerank as PR
 
     monkeypatch.setenv("SPARK_GRAFT_PR_PLAN_DUMP", "1")
-    # the static chain is the precondition: a low ambient
-    # SPARK_GRAFT_PR_STATIC_MAX (read at import) must not flip it off
+    # the static chain is the precondition: pin the node ceiling the
+    # 30-node graph plans under
     monkeypatch.setattr(PR, "_STATIC_CHAIN_MAX_NODES", 200_000)
     edges = [(i, (i + 1) % 30) for i in range(30)] + [(i, i % 5) for i in range(30)]
     df = spark.createDataFrame(edges, "src long, dst long")

@@ -259,27 +259,3 @@ def test_dsir_sql_twin_is_bit_identical(spark):
     )
     assert len(sp) == len(du) > 0
     assert all(sp[k] == du[k] for k in sp)
-
-
-def test_dsir_resample_is_deterministic_and_importance_biased(spark):
-    """Gumbel-top-k resampling: deterministic across runs (hash-derived
-    noise, no rand()), biased toward high-weight docs (selection rate for
-    the +2.0 group far above the -2.0 group), and planned as a bounded
-    heap (TakeOrderedAndProject), never a global sort."""
-    from modal_vector_db_spark.operators.selection import dsir_resample
-
-    rows = [(i, 2.0) for i in range(200)] + [(1000 + i, -2.0) for i in range(200)]
-    w = spark.createDataFrame(rows, "doc_id long, log_weight double")
-    sel = dsir_resample(w, k=100)
-    plan = sel._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    ids = {r["doc_id"] for r in sel.collect()}
-    assert ids == {r["doc_id"] for r in dsir_resample(w, k=100).collect()}
-    hi = sum(1 for i in ids if i < 1000)
-    # exp(4) ~ 55x relative odds: expect the high group to dominate but the
-    # low group to retain a few slots (diversity — the point vs threshold)
-    assert hi >= 85, hi
-    assert len(ids) == 100
-    # a different seed draws a different sample
-    other = {r["doc_id"] for r in dsir_resample(w, k=100, seed="other").collect()}
-    assert other != ids

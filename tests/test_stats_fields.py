@@ -160,11 +160,11 @@ def test_facade_delete_scans_only_admitted_files(spark, tmp_path, spy_matching):
     assert got == [float(i) for i in range(20)]
 
 
-def test_facade_update_prunes_and_keeps_stats_sound(spark, tmp_path, spy_matching):
-    """update() keyed to a stats field: (a) both its matched scan and its
-    replace scan stay within the admitted files, (b) the PATCHED rows'
-    stats columns are rematerialized from the new metadata, so a LATER
-    pruned delete still finds them."""
+def test_facade_update_prunes_and_keeps_stats_sound(spark, tmp_path, spy_matching, monkeypatch):
+    """update() keyed to a stats field: (a) its matched scan resolves only
+    the admitted files from the manifest, (b) the PATCHED rows' stats
+    columns are rematerialized from the new metadata, so a LATER pruned
+    delete still finds them."""
     db = _mk(spark, tmp_path, "sf_upd", stats_fields={"ts": "double"})
     batches = []
     for lo in (0, 10):
@@ -173,15 +173,24 @@ def test_facade_update_prunes_and_keeps_stats_sound(spark, tmp_path, spy_matchin
         after = _files("sf_upd", str(tmp_path))
         batches.append(after - before)
 
-    spy_matching.clear()
+    resolved: list[list[str]] = []
+    real = vcat.resolve_files
+
+    def spying(name, warehouse=None, version=None, between=None):
+        out = real(name, warehouse, version, between)
+        if between is not None:
+            resolved.append(out)
+        return out
+
+    monkeypatch.setattr(vcat, "resolve_files", spying)
     # shift the low decade up into 100+ (patch CHANGES the pruned field)
     # 9.5, not 10.0: the closed-interval overlap test conservatively
     # admits a file whose min is EXACTLY the strict bound
     n = db.update({"ts": ("<", 9.5)}, {"ts": 100.0, "tag": "moved"})
     assert n == 10
-    for rels in spy_matching:  # every discovery scan in the op was pruned
+    assert resolved  # the matched scan took the stats-pruned file list
+    for rels in resolved:
         assert set(rels) <= batches[0]
-        assert not set(rels) & batches[1]
 
     # the moved decade keeps distinct text per row (no content collapse);
     # the second decade is untouched

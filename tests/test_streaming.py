@@ -28,7 +28,8 @@ def _batch_events(spark, path):
 
 def test_stream_windowed_counts_equals_batch(spark, event_files, tmp_path):
     stream = SE.windowed_counts(SE.read_event_stream(spark, event_files))
-    got = SE.run_to_memory(stream, "win_counts", str(tmp_path / "cp1")).toPandas()
+    SE.start_to_memory(stream, "win_counts", str(tmp_path / "cp1")).awaitTermination()
+    got = spark.table("win_counts").toPandas()
 
     ev = _batch_events(spark, event_files)
     # append mode emits only windows CLOSED by the final watermark
@@ -55,7 +56,8 @@ def test_stream_windowed_counts_equals_batch(spark, event_files, tmp_path):
 
 def test_stream_sessionize_equals_batch(spark, event_files, tmp_path):
     stream = SE.sessionized(SE.read_event_stream(spark, event_files))
-    got = SE.run_to_memory(stream, "sessions", str(tmp_path / "cp2")).toPandas()
+    SE.start_to_memory(stream, "sessions", str(tmp_path / "cp2")).awaitTermination()
+    got = spark.table("sessions").toPandas()
 
     ev = _batch_events(spark, event_files)
     cutoff = ev.agg(F.max("ts")).head()[0] - __import__("datetime").timedelta(hours=1)
@@ -82,7 +84,8 @@ def test_stream_dedup_within_watermark(spark, event_files, tmp_path):
     """Replayed events (same event_id) within the watermark are dropped —
     streaming S5."""
     deduped = SE.dedup_within_watermark(SE.read_event_stream(spark, event_files))
-    got = SE.run_to_memory(deduped, "dedup", str(tmp_path / "cp3"))
+    SE.start_to_memory(deduped, "dedup", str(tmp_path / "cp3")).awaitTermination()
+    got = spark.table("dedup")
     n_unique = _batch_events(spark, event_files).select("event_id").distinct().count()
     assert got.count() == n_unique
     assert got.select("event_id").distinct().count() == n_unique
@@ -107,123 +110,6 @@ def test_stream_upsert_to_vectordb(spark, event_files, tmp_path):
     # replay the whole stream with a fresh checkpoint → idempotent no-op
     SE.upsert_stream_to_vectordb(limited, vdb, str(tmp_path / "cp5"))
     assert vdb.num_rows() == n
-
-
-def test_stateful_user_totals_across_batches(spark, event_files, tmp_path):
-    """applyInPandasWithState accumulates across micro-batches: with
-    maxFilesPerTrigger=1 (4 batches), the final snapshot per user must equal
-    the batch groupBy over everything."""
-    stream = (
-        spark.readStream.schema(SE.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(event_files)
-    )
-    got = (
-        SE.run_to_memory(
-            SE.stateful_user_totals(stream), "user_totals", str(tmp_path / "cp6"), "update"
-        )
-        .toPandas()
-    )
-    # update mode emits one snapshot per (user, batch); the final state is
-    # the row with the highest n_events per user.
-    final = got.sort_values("n_events").groupby("user_id").tail(1)
-    batch = (
-        _batch_events(spark, event_files)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .toPandas()
-    )
-    key = "user_id"
-    f = final.sort_values(key).reset_index(drop=True)
-    b = batch.sort_values(key).reset_index(drop=True)
-    assert len(f) == len(b)
-    assert (f["n_events"].values == b["n_events"].values).all()
-    import numpy as np
-
-    assert np.allclose(f["total_value"].values, b["total_value"].values, atol=1e-3)
-
-
-def test_stream_stream_interval_join_equals_batch(spark, event_files, tmp_path):
-    """Stream-stream interval join (clicks x purchases within 30 min) must
-    produce exactly the batch interval-join rows."""
-    def split(df):
-        return (
-            df.filter(F.col("event_type") == "click"),
-            df.filter(F.col("event_type") == "purchase"),
-        )
-
-    sc, sp = split(SE.read_event_stream(spark, event_files))
-    got = SE.run_to_memory(
-        SE.stream_stream_interval_join(sc, sp), "ssj", str(tmp_path / "cp7")
-    ).toPandas()
-
-    bc, bp = split(_batch_events(spark, event_files))
-    want = (
-        bc.select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .join(
-            bp.select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"),
-                F.col("value").alias("purchase_value"),
-            ),
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 minutes")),
-        )
-        .select("click_id", "purchase_id", "c_user", "click_ts", "purchase_ts", "purchase_value")
-        .toPandas()
-    )
-    key = ["click_id", "purchase_id"]
-    g = got.sort_values(key).reset_index(drop=True)
-    w = want.sort_values(key).reset_index(drop=True)
-    assert len(g) == len(w)
-    assert g[key].equals(w[key])
-
-
-@pytest.mark.slow
-def test_stream_incremental_admission(spark, tmp_path):
-    """Crawl-feed admission: 3 micro-batches with planted duplicates —
-    exact and near copies of already-admitted docs are rejected across
-    batch boundaries; within-batch pairs keep the min id; novel docs land.
-    """
-    feed = tmp_path / "feed"
-    corpus = str(tmp_path / "corpus")
-    feed.mkdir()
-
-    t_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    t_b = "one two three four five six seven eight nine ten eleven twelve"
-    t_c = "spark plans shuffle broadcast partition catalyst tungsten codegen"
-    t_d = "red orange yellow green blue indigo violet ultraviolet infrared"
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, SE.DOCS_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(feed / name))
-
-    # seed empty corpus
-    spark.createDataFrame([], SE.DOCS_SCHEMA).write.mode("overwrite").parquet(corpus)
-
-    write_batch("b0", [(1, t_a), (2, t_b)])
-    write_batch("b1", [(10, t_a), (11, t_b + " zz"), (12, t_c)])  # exact/near/novel
-    write_batch("b2", [(20, t_c + " qq"), (21, t_d), (22, t_d + " ww")])
-
-    # drain one batch-dir at a time so admission order is deterministic
-    for name in ("b0", "b1", "b2"):
-        stream = SE.read_document_stream(spark, str(feed / name))
-        SE.admit_stream_incremental(
-            stream, corpus, str(tmp_path / f"cp_{name}"), threshold=0.4
-        )
-
-    got = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
-    assert got == [1, 2, 12, 21], got
 
 
 def test_stream_upsert_into_versioned_table(spark, event_files, tmp_path):

@@ -167,15 +167,17 @@ def _mixed_crawl(tmp_path, n=10):
 
 
 def test_build_cdx_spans_and_fetch_record(spark, tmp_path):
-    from modal_vector_db_spark.sources.warc import build_cdx, fetch_record
+    from modal_vector_db_spark.sources.warc import build_cdx, fetch_records
 
     total = _mixed_crawl(tmp_path)
-    cdx = build_cdx(spark, str(tmp_path)).collect()
+    cdx_df = build_cdx(spark, str(tmp_path))
+    cdx = cdx_df.collect()
     assert len(cdx) == total
     # every indexed span fetches back the exact record, both file kinds
+    fetched = {r["target_uri"]: r for r in fetch_records(cdx_df).collect()}
+    assert len(fetched) == total
     for r in cdx:
-        rec = fetch_record(r["path"], r["offset"], r["length"], r["rec_index"])
-        assert rec["target_uri"] == r["target_uri"]
+        rec = fetched[r["target_uri"]]
         assert rec["record_id"] == r["record_id"]
         assert rec["content_length"] == r["content_length"]
         if rec["warc_type"] == "response":
@@ -207,18 +209,18 @@ def test_fetch_records_equals_filtered_full_scan(spark, tmp_path):
 def test_cdx_multi_record_member_rec_index(spark, tmp_path):
     """A gzip member holding TWO records indexes as rec_index 0 and 1,
     both fetchable from the same span."""
-    from modal_vector_db_spark.sources.warc import build_cdx, fetch_record
+    from modal_vector_db_spark.sources.warc import build_cdx, fetch_records
 
     a = build_record("resource", b"first", target_uri="http://m.com/0")
     b = build_record("resource", b"second", target_uri="http://m.com/1")
     with open(os.path.join(tmp_path, "m.warc.gz"), "wb") as f:
         f.write(gzip.compress(a + b, mtime=0))
-    rows = sorted(build_cdx(spark, str(tmp_path)).collect(), key=lambda r: r["rec_index"])
+    cdx = build_cdx(spark, str(tmp_path))
+    rows = sorted(cdx.collect(), key=lambda r: r["rec_index"])
     assert [r["rec_index"] for r in rows] == [0, 1]
     assert rows[0]["offset"] == rows[1]["offset"]  # same member span
-    assert fetch_record(rows[1]["path"], rows[1]["offset"], rows[1]["length"], 1)[
-        "payload"
-    ] == b"second"
+    (second,) = fetch_records(cdx.filter("rec_index = 1")).collect()
+    assert bytes(second["payload"]) == b"second"
 
 
 def test_cdx_truncated_member_modes(spark, tmp_path):
