@@ -60,9 +60,10 @@ def executed_plans(spark, fn):
     runs = store.executionsList(0, 1 << 20)
     plans = []
     for i in reversed(range(runs.size())):  # ascending executionId
-        if runs.apply(i).executionId() <= seen:
+        run = runs.apply(i)
+        if run.executionId() <= seen:
             break
-        plans.append(runs.apply(i).physicalPlanDescription())
+        plans.append(run.physicalPlanDescription())
     return plans[::-1]
 
 
