@@ -51,8 +51,7 @@ LAST_CHAIN_PLAN: str | None = None
 #: rank-table-sized static partition count.  Above it (any real web graph)
 #: AQE stays on: the per-iteration shuffles are exactly what skew-join
 #: handling and partition coalescing are for.  A constant, not a setting:
-#: it also bounds the contributions broadcast of the static chain, which
-#: lands on the driver.
+#: it also bounds the static chain's contributions broadcast.
 _STATIC_CHAIN_MAX_NODES = 200_000
 
 
