@@ -1335,8 +1335,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         (``operators/hybrid.py:bm25_scores_multi``); the vector channel is
         the batched brute-force / IVF top-k (:meth:`_vector_topk_multi`);
         fusion ranks within q_id-partitioned windows (WindowGroupLimit —
-        each partition ships ≤ top_n rows per query).  Per-query rows are
-        bit-identical to :meth:`query_hybrid` (test-pinned).
+        each partition ships ≤ top_n rows per query).  On a table with no
+        repeated ids, per-query rows are bit-identical to
+        :meth:`query_hybrid` (test-pinned); a table that stores a row twice
+        gets more than k rows per query here (ROADMAP direction 3).
 
         ``filters`` / ``use_text_index`` / ``use_index`` /
         ``use_graph_index`` / ``version`` compose exactly as on
@@ -1648,14 +1650,14 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self.items().createOrReplaceTempView(self.name)
         return self.spark.sql(query)
 
-    def delete(self, filters: dict, tombstone: bool | None = None) -> int:
+    def delete(self, filters: dict) -> int:
         """Remove every row matching ``filters`` (same DSL as :meth:`query`);
         returns the count removed.  The takedown/right-to-erasure operation
         a training-data store needs and the reference lacks.
 
-        Two physical strategies (versioned tables):
+        Two physical strategies, chosen by the match count alone:
 
-        - MERGE-ON-READ (default for matches ≤ ``_TOMBSTONE_MAX_IDS``): the
+        - MERGE-ON-READ (versioned tables, matches ≤ ``_TOMBSTONE_MAX_IDS``): the
           matched ids land in a tombstone mask on the manifest
           (``sources/versioned.py:tombstone``) — ZERO base-file rewrites,
           the Delta deletion-vector shape.  A takedown of 100 ids scattered
@@ -1666,14 +1668,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
           The derived text/graph stores still shrink eagerly — they are
           partition-local rewrites and keeping them exact is what keeps
           their totals-based consistency pins working.
-        - EAGER (plain tables, large deletes, or ``tombstone=False``): a
+        - EAGER (plain tables and larger deletes): a
           FILE-PRUNED copy-on-write rewrite (``rewrite_where``): one
           column-pruned scan finds which files contain matches, only those
           are rewritten, untouched files carry forward by reference.
-
-        ``tombstone=True`` forces merge-on-read regardless of size
-        (versioned only — raises on a plain table); ``False`` forces eager;
-        ``None`` picks by the threshold.
 
         Rows where the predicate is NULL (e.g. the filtered key is absent
         from a row's metadata) are KEPT — a delete must never remove rows it
@@ -1683,12 +1681,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             raise ValueError(
                 "delete() requires non-empty filters; to clear the table, "
                 "construct with create_new_table=True"
-            )
-        if tombstone and not self.versioned:
-            raise ValueError(
-                "tombstone=True (merge-on-read delete) needs "
-                "VectorDB(versioned=True): the mask lives on the manifest "
-                "log — plain tables delete eagerly"
             )
         if not self._cat.table_exists(self.name, self.warehouse):
             return 0
@@ -1720,7 +1712,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 pre_head = vcat.current_version(self.name, self.warehouse) or 0
             removed = None
             committed_v: int | None = None
-            if self.versioned and tombstone is not False:
+            if self.versioned:
                 # merge-on-read: matched ids from the LOGICAL view (already
                 # masked ids can never re-match, so the mask stays
                 # duplicate-free — the count-arithmetic contract)
@@ -1730,7 +1722,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                     self.name,
                     self.warehouse,
                     id_col="id",
-                    max_ids=None if tombstone else self._TOMBSTONE_MAX_IDS,
+                    max_ids=self._TOMBSTONE_MAX_IDS,
                     expected_head=pre_head,
                 )
                 if v is not None or n == 0:
@@ -1747,11 +1739,10 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 if bounds:
                     kw["prune_between"] = bounds
                 if self.versioned:
-                    # writer-side commit handle: an eager rewrite that only
-                    # FOLDS a pending tombstone mask removes 0 rows by this
-                    # predicate yet still commits — the ledger arithmetic
-                    # below must see the real head, not pre_head (review
-                    # finding: the miss poisoned the text snapshot ledger)
+                    # writer-side commit handle: the ledger arithmetic below
+                    # must see the head the rewrite (and the pending mask it
+                    # folds) committed, not pre_head (review finding: the
+                    # miss poisoned the text snapshot ledger)
                     kw["out"] = (out := {})
                 removed = self._cat.rewrite_where(
                     self.spark, self.name, keep, self.warehouse, **kw
@@ -1772,8 +1763,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             else:
                 self._end_text_mutation(head_after, 0, 0)
         else:
-            # a no-match delete commits no new base version; a fold-only
-            # commit (removed==0 but a version landed) still advances it
+            # a no-match delete commits no new base version
             self._end_text_mutation(head_after, *text_delta)
         return removed
 

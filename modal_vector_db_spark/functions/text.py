@@ -423,18 +423,20 @@ def c4_keep_sql(expr: str) -> str:
 
 #: Gopher's required stop words (≥ 2 distinct must appear)
 GOPHER_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
+#: Gopher's word-count bounds, shared by the Spark and DuckDB twins
+_GOPHER_MIN_WORDS = 50
+_GOPHER_MAX_WORDS = 100_000
 
 
 def gopher_keep(
     text: Column | str,
     *,
-    min_words: int = 50,
-    max_words: int = 100_000,
+    min_words: int = _GOPHER_MIN_WORDS,
     min_stops: int = 2,
 ) -> Column:
     """Gopher document-quality rules (Rae et al. 2021 §A1.1), the subset
     expressible without line structure: word count in [min_words,
-    max_words], mean word length in [3, 10], '#'-symbol-to-word ratio
+    ``_GOPHER_MAX_WORDS``], mean word length in [3, 10], '#'-symbol-to-word ratio
     < 0.1, ≥ 80% of words contain an alphabetic character, and ≥ 2
     distinct required stop words present.  (The bullet-line / ellipsis-line
     ratios need line boundaries — see :func:`c4_kept_lines` for the
@@ -452,7 +454,7 @@ def gopher_keep(
     alpha_words = F.size(F.filter(t, lambda w: w.rlike("[a-z]"))).cast("double")
     return (
         (n >= min_words)
-        & (n <= max_words)
+        & (n <= _GOPHER_MAX_WORDS)
         & (mean_len >= 3.0)
         & (mean_len <= 10.0)
         & (hashes / safe_n < 0.1)
@@ -461,9 +463,7 @@ def gopher_keep(
     )
 
 
-def gopher_keep_sql(
-    expr: str, min_words: int = 50, max_words: int = 100_000, min_stops: int = 2
-) -> str:
+def gopher_keep_sql(expr: str, min_stops: int = 2) -> str:
     t = tokens_sql(expr)
     n = f"len({t})"
     safe_n = f"greatest({n}::DOUBLE, 1.0)"
@@ -472,7 +472,7 @@ def gopher_keep_sql(
     alpha_words = f"len(list_filter({t}, w -> regexp_matches(w, '[a-z]')))::DOUBLE"
     stops = f"len(list_intersect(list_distinct({t}), [{', '.join(repr(w) for w in GOPHER_STOPS)}]))"
     return (
-        f"({n} >= {min_words} AND {n} <= {max_words} "
+        f"({n} >= {_GOPHER_MIN_WORDS} AND {n} <= {_GOPHER_MAX_WORDS} "
         f"AND {mean_len} >= 3.0 AND {mean_len} <= 10.0 "
         f"AND {hashes} / {safe_n} < 0.1 "
         f"AND {alpha_words} / {safe_n} >= 0.8 "

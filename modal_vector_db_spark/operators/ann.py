@@ -342,7 +342,6 @@ class IVFIndex2L:
         k2: int = 16,
         seed: int = 42,
         sample_fraction: float | None = None,
-        fit_sample_per_shard: int = 100_000,
     ) -> "IVFIndex2L":
         if not 1 <= k1 <= MAX_IVF_CLUSTERS:
             raise ValueError(f"coarse k1={k1} out of range [1, {MAX_IVF_CLUSTERS}]")
@@ -356,7 +355,7 @@ class IVFIndex2L:
         )
         k2_ = int(k2)
         seed_ = int(seed)
-        cap_ = int(fit_sample_per_shard)
+        cap_ = 100_000  # fit rows per coarse shard
 
         def _fit_shard(pdf):
             import numpy as _np
@@ -410,7 +409,7 @@ class IVFIndex2L:
             "coarse_id", F.col(vec_col).cast("array<double>").alias("_v")
         )
         total = fit_src.count()
-        target = 3.0 * k1 * fit_sample_per_shard
+        target = 3.0 * k1 * cap_
         if total > target:
             fit_src = fit_src.sample(fraction=target / total, seed=seed)
         fine = fit_src.groupBy("coarse_id").applyInPandas(
@@ -740,9 +739,7 @@ def calibrate_nprobe(
     ivf,
     sampled: list[tuple[Sequence[float], int]],
     total_clusters: int,
-    k: int = 10,
     target_recall: float = 0.7,
-    n_queries: int = 16,
 ) -> dict:
     """Derive the default ``nprobe`` from the index's own measured
     recall@k-vs-scan-fraction curve instead of a constant (the FAISS
@@ -750,8 +747,8 @@ def calibrate_nprobe(
     cluster geometry, not a universal number).
 
     ``sampled`` is a bounded, deterministic (vec, cluster_id) sample of
-    the clustered corpus; the first ``n_queries`` rows double as query
-    vectors.  For each swept nprobe: recall@k = the fraction of each
+    the clustered corpus; its first 16 rows double as query vectors.
+    For each swept nprobe: recall@k (k = 10) = the fraction of each
     query's EXACT cosine top-k (over the sample) whose rows live in the
     probed clusters — exact-rerank-inside-probes means partition
     membership IS recall; scan fraction = probed rows / sample rows (at
@@ -767,12 +764,12 @@ def calibrate_nprobe(
     and two-level indexes through the same probe API."""
     if not sampled:
         raise ValueError("calibrate_nprobe: empty sample")
-    k = min(k, len(sampled))
+    k = min(10, len(sampled))
     x = np.asarray([list(v) for v, _ in sampled], dtype=np.float64)
     clusters = np.asarray([c for _, c in sampled], dtype=np.int64)
     xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     rows_per_cluster = {int(c): int(n) for c, n in zip(*np.unique(clusters, return_counts=True))}
-    queries = x[: min(n_queries, len(sampled))]
+    queries = x[:16]
     qn = queries / np.maximum(np.linalg.norm(queries, axis=1, keepdims=True), 1e-12)
     sims = qn @ xn.T  # (Q, N) cosine
     # exact top-k rows per query (ties by index order — deterministic)
@@ -819,10 +816,10 @@ _SRP_SCALE = 1_000_000
 _SRP_W = 1_000  # hyperplane weights drawn from [-1000, 1000]
 
 
-def srp_hyperplanes(num_planes: int, dim: int, seed: str = "srp") -> list[list[int]]:
+def srp_hyperplanes(num_planes: int, dim: int) -> list[list[int]]:
     """Integer hyperplanes derived from md5 — reproducible everywhere with
     no RNG-library dependence (the same formula is trivially re-derivable
-    in any engine): w[p][j] = md5_60bit(f"{seed}_{p}_{j}") % 2001 - 1000.
+    in any engine): w[p][j] = md5_60bit(f"srp_{p}_{j}") % 2001 - 1000.
 
     Uniform-cube directions are a mild approximation of uniform-sphere
     (classic SRP uses gaussians) — fine for banding: collision probability
@@ -834,7 +831,7 @@ def srp_hyperplanes(num_planes: int, dim: int, seed: str = "srp") -> list[list[i
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
     return [
-        [h(f"{seed}_{p}_{j}") % (2 * _SRP_W + 1) - _SRP_W for j in range(dim)]
+        [h(f"srp_{p}_{j}") % (2 * _SRP_W + 1) - _SRP_W for j in range(dim)]
         for p in range(num_planes)
     ]
 
@@ -935,30 +932,31 @@ def srp_band_keys_sql(
     return out
 
 
+#: :func:`cosine_srp_pairs`' verify-stage skew guard, shared with the
+#: text-LSH family (``operators/dedup.py:_capped_pair_frame``): a bucket
+#: larger than the cap (near-identical embedding mega-cluster: re-encoded
+#: boilerplate, zero vectors from a broken encoder) emits hub-star edges
+#: (O(m)) instead of all C(m,2) pairs.  ``None`` keeps the exact contract;
+#: report suppression with ``dedup.band_bucket_stats``.
+_SRP_BUCKET_CAP: int | None = None
+#: :func:`cosine_srp_pairs` carries the embeddings through the band
+#: shuffle up to this dim and joins them back above it
+_CARRY_VECTORS_MAX_DIM = 512
+
+
 def cosine_srp_pairs(
     df: DataFrame,
     threshold: float,
     dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     *,
     num_planes: int = 24,
     bands: int = 4,
-    seed: str = "srp",
-    carry_vectors: bool | None = None,
     impl: str = "expr",
     verify_impl: str = "expr",
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs via deterministic SRP-LSH banding + exact
-    cosine verify ≥ threshold → (id_a, id_b, cos_sim).
-
-    ``bucket_cap``: verify-stage skew guard shared with the text-LSH
-    family (``operators/dedup.py:_capped_pair_frame``) — a bucket larger
-    than the cap (near-identical embedding mega-cluster: re-encoded
-    boilerplate, zero vectors from a broken encoder) emits hub-star edges
-    (O(m)) instead of all C(m,2) pairs; ``None`` keeps the exact
-    contract.  Report suppression with ``dedup.band_bucket_stats``.
+    cosine verify ≥ threshold over ``df``'s (vec_id, embedding) →
+    (id_a, id_b, cos_sim).
 
     ``impl``: ``"expr"`` (native Catalyst HOFs — zero Python, the
     oracle-parity default) or ``"pandas"`` (Arrow-batched numpy matmul via
@@ -984,12 +982,11 @@ def cosine_srp_pairs(
     the projections are integer-exact and engine-independent, so results
     are oracle-comparable bit-for-bit.
 
-    ``carry_vectors``: when true (default for dim ≤ 512) the embedding
-    rides through the band shuffle and pairs verify inline in the bucket
-    self-join — one shuffle total, both sides served by one
-    ReusedExchange.  For very high dims set false: bands shuffle only
-    (id, band, key) and candidates join back to the vectors, trading two
-    extra joins for a dim-independent shuffle width."""
+    Up to ``_CARRY_VECTORS_MAX_DIM`` the embedding rides through the band
+    shuffle and pairs verify inline in the bucket self-join — one shuffle
+    total, both sides served by one ReusedExchange.  Above it bands
+    shuffle only (id, band, key) and candidates join back to the vectors,
+    trading two extra joins for a dim-independent shuffle width."""
     if bands < 1 or num_planes % bands:
         # the same degenerate-band guard as the minhash engine: a
         # non-divisor silently dropped trailing planes in the expr impl
@@ -1006,8 +1003,9 @@ def cosine_srp_pairs(
     )
     from modal_vector_db_spark.operators.dedup import _banded_candidates
 
-    if carry_vectors is None:
-        carry_vectors = dim <= 512
+    vec_col, id_col = "embedding", "vec_id"
+    carry_vectors = dim <= _CARRY_VECTORS_MAX_DIM
+    bucket_cap = _SRP_BUCKET_CAP
     if impl not in ("expr", "pandas") or verify_impl not in ("expr", "pandas"):
         raise ValueError(f"impl/verify_impl must be 'expr' or 'pandas'")
     if verify_impl == "pandas":
@@ -1015,7 +1013,7 @@ def cosine_srp_pairs(
         cos_fn = lambda a, b: _pcos(a, b)  # noqa: E731
     else:
         cos_fn = cosine_similarity
-    planes = srp_hyperplanes(num_planes, dim, seed)
+    planes = srp_hyperplanes(num_planes, dim)
     carry = [vec_col] if carry_vectors else []
     if impl == "pandas":
         keys_udf = srp_band_keys_pandas(planes, bands)

@@ -30,6 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+#: :func:`asof_join`'s hot-key bucket width in seconds; ``None`` (the
+#: production setting) runs the single-window plan
+_TS_BUCKET_SECONDS: float | None = None
+
 
 def asof_join(
     left: DataFrame,
@@ -37,16 +41,15 @@ def asof_join(
     on: str,
     by: Sequence[str] | str,
     value_cols: Sequence[str] | None = None,
-    suffix: str = "_r",
-    ts_bucket_seconds: float | None = None,
 ) -> DataFrame:
     """Point-in-time join: latest right row with ``right.on <= left.on`` per
-    ``by`` group; right value columns arrive suffixed (null when no prior
-    right row exists — left rows are always kept, like a LEFT ASOF JOIN).
+    ``by`` group; right value columns arrive suffixed ``_r`` (null when no
+    prior right row exists — left rows are always kept, like a LEFT ASOF
+    JOIN).
     Right rows with a NULL ``on`` timestamp match NOTHING (``NULL <= ts``
     is not true — the DuckDB semantics; they are dropped up front).
 
-    ``ts_bucket_seconds``: the HOT-KEY escape hatch.  The default plan is
+    ``_TS_BUCKET_SECONDS``: the HOT-KEY escape hatch.  The default plan is
     one window partitioned by ``by`` — and window exchanges are NOT
     covered by AQE skew-join splitting (that mechanism rewrites joins
     only), so a key holding 100× the median rows (the real events-table
@@ -67,6 +70,7 @@ def asof_join(
 
     Same results as the default plan (equality is test-pinned); choose a
     width that yields ≥ tens of buckets over the hot key's time span."""
+    suffix, ts_bucket_seconds = "_r", _TS_BUCKET_SECONDS
     by = [by] if isinstance(by, str) else list(by)
     value_cols = list(value_cols) if value_cols is not None else [
         c for c in right.columns if c != on and c not in by
@@ -81,7 +85,7 @@ def asof_join(
         # data with no error (review finding)
         raise ValueError(
             f"asof_join: output/reserved column names collide with input "
-            f"columns: {sorted(set(clash))} — pick a different suffix"
+            f"columns: {sorted(set(clash))} — rename them first"
         )
 
     # the right row travels as ONE struct (see module docstring)

@@ -118,9 +118,7 @@ def avi_video_frames(blob: bytes) -> list[tuple[int, int]]:
     raise ValueError("AVI: no movi list")
 
 
-def sample_mjpeg_frames(
-    blob: bytes, every_n: int = 1, limit: int | None = None
-) -> list[tuple[int, int, int, int, int, bytes]]:
+def sample_mjpeg_frames(blob: bytes, every_n: int = 1) -> list[tuple[int, int, int, int, int, bytes]]:
     """Decode every ``every_n``-th video frame: returns
     ``(frame_idx, n_frames_total, width, height, channels, pixels)`` per
     sampled frame.  Skipped frames are never touched (MJPEG frames are
@@ -133,8 +131,6 @@ def sample_mjpeg_frames(
         off, size = frames[idx]
         w, h, ch, px = decode_jpeg_pixels(blob[off : off + size])
         out.append((idx, len(frames), w, h, ch, px))
-        if limit is not None and len(out) >= limit:
-            break
     return out
 
 
@@ -157,17 +153,15 @@ def video_dhash64(blob: bytes) -> int:
     return dhash64_from_pixels(w, h, ch, px)
 
 
-def extract_video_dhash(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id", synth=None
-) -> DataFrame:
-    """Arrow-batched :func:`video_dhash64` over a binary AVI column →
-    (id, dhash long); NULL on undecodable blobs (the all-None
+def extract_video_dhash(df: DataFrame, synth=None) -> DataFrame:
+    """Arrow-batched :func:`video_dhash64` over the binary AVI ``blob``
+    column → (doc_id, dhash long); NULL on undecodable blobs (the all-None
     convention).  Feed ``signature_hamming_pairs`` for banded video
     near-dup pairs.  Same shared boundary as the image/audio extractors
     (multimodal.hash_extract — its shipping covers this module too)."""
     from modal_vector_db_spark.operators.multimodal import hash_extract
 
-    return hash_extract(df, video_dhash64, blob_col, id_col, synth=synth)
+    return hash_extract(df, video_dhash64, synth=synth)
 
 
 # ---------------------------------------------------------------------------
@@ -233,15 +227,9 @@ def encode_mjpeg_avi(
 # Spark boundary
 # ---------------------------------------------------------------------------
 
-def extract_video_frame_stats(
-    df: DataFrame,
-    every_n: int = 1,
-    blob_col: str = "blob",
-    id_col: str = "doc_id",
-    synth=None,
-) -> DataFrame:
-    """Per-sampled-frame pixel stats over a binary AVI column: one output
-    row per decoded frame — ``(id, frame_idx, n_frames, width, height,
+def extract_video_frame_stats(df: DataFrame, every_n: int = 1, synth=None) -> DataFrame:
+    """Per-sampled-frame pixel stats over the binary AVI ``blob`` column:
+    one output row per decoded frame — ``(doc_id, frame_idx, n_frames, width, height,
     channels, ch_means array<double>, px_min, px_max)``; any decode
     failure (non-AVI, non-MJPEG codec, truncated/corrupt frame) collapses
     to ONE all-NULL row for that document (the ``pixel_stats`` error
@@ -264,6 +252,7 @@ def extract_video_frame_stats(
 
     ship_by_value(sys.modules[__name__], _jpeg_mod)
 
+    blob_col, id_col = "blob", "doc_id"
     id_type = dict(df.dtypes)[id_col]
     schema = (
         f"`{id_col}` {id_type}, frame_idx int, n_frames int, width int, "

@@ -149,9 +149,8 @@ def bloom_might_contain(
     num_bits: int,
     num_hashes: int,
     seed: int = 0,
-    flag_col: str = _FLAG,
 ) -> DataFrame:
-    """Annotate ``probe`` with ``flag_col``: true iff ALL ``num_hashes``
+    """Annotate ``probe`` with ``_bloom_hit``: true iff ALL ``num_hashes``
     bits for the row's key are set in ``words`` (built by
     :func:`bloom_build` with the SAME cols/num_bits/num_hashes/seed —
     mismatched parameters silently break the no-false-negative guarantee,
@@ -163,9 +162,7 @@ def bloom_might_contain(
     (true matches + ~fpp false positives) for an exact verify."""
     if num_hashes < 1:
         raise ValueError(f"num_hashes must be >= 1, got {num_hashes}")
-    if flag_col.startswith("_bf_"):
-        raise ValueError("bloom_might_contain: flag_col cannot use the "
-                         "reserved _bf_ prefix")
+    flag_col = _FLAG
     clash = [c for c in probe.columns if c.startswith("_bf_") or c == flag_col]
     if clash:
         raise ValueError(f"bloom_might_contain: reserved columns in probe: {clash}")
@@ -266,7 +263,6 @@ def bloom_anti_join(
     num_bits: int | None = None,
     num_hashes: int | None = None,
     seed: int = 0,
-    materialize: bool = False,
 ) -> DataFrame:
     """EXACT left-anti join (probe rows whose key does NOT exist in build)
     — the cross-corpus dedup / decontamination shape: "admit only documents
@@ -279,21 +275,14 @@ def bloom_anti_join(
     ``probe.join(build, on, 'left_anti')``.
 
     Scan economics: the sure/candidate branches are two filters over the
-    same flagged plan, so by default the probe source is SCANNED TWICE
-    (each scan is map-side only — flag columns + k broadcast joins, no
-    shuffle).  That is the right default when the source scan is cheap
-    relative to a shuffle (columnar pushdown reads only the key columns
-    twice).  When the probe is expensive to produce (a long upstream
-    pipeline, a non-columnar source), pass ``materialize=True`` to
-    ``localCheckpoint`` the flagged frame — one probe scan, the two
-    branches then read executor-local blocks (costs ~probe size in local
-    storage, no network)."""
+    same flagged plan, so the probe source is SCANNED TWICE (each scan is
+    map-side only — flag columns + k broadcast joins, no shuffle) — cheap
+    relative to a shuffle when columnar pushdown reads only the key
+    columns twice."""
     on = list(on)
     m, k = _sized(build, on, expected_items, fpp, num_bits, num_hashes)
     words = bloom_build(build, on, m, k, seed)
     flagged = bloom_might_contain(probe, words, on, m, k, seed)
-    if materialize:
-        flagged = flagged.localCheckpoint(eager=False)
     sure = flagged.filter(~F.col(_FLAG)).drop(_FLAG)
     cand = flagged.filter(F.col(_FLAG)).drop(_FLAG)
     return sure.unionByName(

@@ -87,13 +87,15 @@ def _merge_word(word: tuple[str, ...], pair: tuple[str, str]) -> tuple[str, ...]
     return tuple(out)
 
 
+#: :func:`train_bpe` stops once the best pair occurs fewer times than this
+_MIN_FREQ = 2
+
+
 def train_bpe(
     df: DataFrame,
     text_col: str = "text",
     num_merges: int = 200,
     max_words: int = 1_000_000,
-    min_freq: int = 2,
-    lowercase: bool = True,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merges from the corpus.  Returns the
     ranked merge list (rank = list position), the artifact
@@ -103,9 +105,9 @@ def train_bpe(
     the top ``max_words`` rows (by freq desc, word asc — deterministic)
     come to the driver and the merge loop runs on them with incremental
     pair-count maintenance.  Stops early when the best pair's count
-    drops below ``min_freq``."""
+    drops below ``_MIN_FREQ``.  Words are lowercased."""
     wf = (
-        word_frequencies(df, text_col, lowercase=lowercase)
+        word_frequencies(df, text_col, lowercase=True)
         .orderBy(F.col("freq").desc(), F.col("word").asc())
         .limit(int(max_words))
         .collect()
@@ -121,7 +123,7 @@ def train_bpe(
             break
         # deterministic argmax: highest count, then lexicographic pair
         best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        if counts[best] < min_freq:
+        if counts[best] < _MIN_FREQ:
             break
         merges.append(best)
         # rewrite ONLY the words containing the merged pair, updating the
@@ -180,11 +182,9 @@ def apply_bpe(
     df: DataFrame,
     merges: list[tuple[str, str]],
     text_col: str = "text",
-    out_col: str = "tokens",
-    lowercase: bool = True,
 ) -> DataFrame:
-    """Tokenize ``text_col`` with a learned merge list: adds ``out_col``
-    (array<string>) and ``n_tokens`` (int).  The ranked merge table
+    """Tokenize the lowercased ``text_col`` with a learned merge list: adds
+    ``tokens`` (array<string>) and ``n_tokens`` (int).  The ranked merge table
     broadcasts; encoding runs in one Arrow pass with a per-batch word
     cache (no shuffle — embarrassingly parallel)."""
     # ship this module by value: the closure references encode_word /
@@ -197,22 +197,19 @@ def apply_bpe(
 
     ship_by_value(sys.modules[__name__])
     ranks = {tuple(m): i for i, m in enumerate(merges)}
-    lc = bool(lowercase)
     src_cols = df.columns
-    # the output schema is input columns + out_col + n_tokens — a
+    # the output schema is input columns + tokens + n_tokens — a
     # collision would yield a duplicate-column schema that fails (or
     # silently shadows) inside mapInPandas; fail loudly at plan time
-    if out_col == "n_tokens":
-        raise ValueError("apply_bpe: out_col cannot be 'n_tokens' (reserved)")
-    for clash in (out_col, "n_tokens"):
+    for clash in ("tokens", "n_tokens"):
         if clash in src_cols:
             raise ValueError(
                 f"apply_bpe: input already has a column named {clash!r}; "
-                "drop or rename it (or pass a different out_col)"
+                "drop or rename it"
             )
     schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", `{out_col}` array<string>, n_tokens int"
+    ) + ", `tokens` array<string>, n_tokens int"
     tcol = text_col
 
     def _encode(batches):
@@ -224,7 +221,7 @@ def apply_bpe(
                     toks.append(None)
                     ns.append(None)
                     continue
-                t = str(text).lower() if lc else str(text)
+                t = str(text).lower()
                 out: list[str] = []
                 for w in t.split():
                     got = cache.get(w)
@@ -234,7 +231,7 @@ def apply_bpe(
                 toks.append(out)
                 ns.append(len(out))
             pdf = pdf.copy()
-            pdf[out_col] = toks
+            pdf["tokens"] = toks
             pdf["n_tokens"] = ns
             yield pdf
 

@@ -49,6 +49,16 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+#: skew guards production leaves off (``None`` = exact).  A simhash band
+#: bucket larger than ``_SIMHASH_BUCKET_CAP`` emits hub-star edges (see
+#: :func:`_capped_pair_frame`); ``_CORPUS_BUCKET_CAP`` bounds the corpus
+#: members of one colliding band key in :func:`incremental_dedup`.
+_SIMHASH_BUCKET_CAP: int | None = None
+_CORPUS_BUCKET_CAP: int | None = None
+#: rows of the similarity matrix :func:`semdedup_pairs` computes at a time
+_MATMUL_BLOCK = 2048
+
+
 def _capped_pair_frame(
     bands: DataFrame,
     id_col: str,
@@ -293,19 +303,18 @@ def simhash_pairs(
     bits: int = 60,
     band_bits: int = 15,
     hamming_threshold: int = 6,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """SimHash + hamming banding → verified near-dup pairs
     (id_a, id_b, hamming).  Pairs within hamming ≤ bands−1 are guaranteed
     candidates (pigeonhole: some band identical).
 
-    ``bucket_cap``: see :func:`minhash_lsh_pairs` — the simhash value rides
-    the bands frame, so starred pairs verify hamming inline against the
-    hub's signature with no corpus re-join."""
+    ``_SIMHASH_BUCKET_CAP``: see :func:`minhash_lsh_pairs` — the simhash
+    value rides the bands frame, so starred pairs verify hamming inline
+    against the hub's signature with no corpus re-join."""
     d = df.select(id_col, simhash64(tokens(text_col), bits).alias("sim"))
     return signature_hamming_pairs(
         d, id_col, "sim", bits=bits, band_bits=band_bits,
-        hamming_threshold=hamming_threshold, bucket_cap=bucket_cap,
+        hamming_threshold=hamming_threshold, bucket_cap=_SIMHASH_BUCKET_CAP,
     )
 
 
@@ -369,14 +378,13 @@ def incremental_dedup(
     bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.4,
-    corpus_bucket_cap: int | None = None,
 ) -> DataFrame:
     """Admit only NEW content from ``batch`` given an already-deduplicated
     ``corpus`` — the steady-state shape of a training-data pipeline (each
     crawl increment is checked against 100 TB of accepted corpus, not
     re-clustered with it).  Returns the surviving batch rows.
 
-    ``corpus_bucket_cap``: skew guard for the cross-corpus band join —
+    ``_CORPUS_BUCKET_CAP``: skew guard for the cross-corpus band join —
     only corpus rows in COLLIDING buckets participate, and buckets larger
     than the cap contribute their ``cap`` min-id members (a boilerplate
     mega-cluster in the accepted corpus sharing a band key with one batch
@@ -384,7 +392,7 @@ def incremental_dedup(
     can under-reject a batch doc whose only near-dup sits past the cap —
     the same bounded-recall trade as ``bucket_cap`` in the pair paths;
     an already-DEDUPLICATED corpus (this operator's contract) keeps such
-    buckets rare.  ``None`` (default) = uncapped.
+    buckets rare.  ``None`` = uncapped.
 
     Three rejection passes, cheapest first:
 
@@ -428,7 +436,7 @@ def incremental_dedup(
     b_sh = _shingled(b, id_col, text_col, shingle_n)
     c_bands = _minhash_bands(c_sh, id_col, num_hashes, bands)
     b_bands = _minhash_bands(b_sh, id_col, num_hashes, bands)
-    if corpus_bucket_cap is not None:
+    if _CORPUS_BUCKET_CAP is not None:
         from pyspark.sql import Window
 
         # rank only within COLLIDING buckets (semi-join first, so the
@@ -438,7 +446,7 @@ def incremental_dedup(
         w = Window.partitionBy("band", "key").orderBy(F.col(id_col))
         c_bands = (
             c_hit.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(corpus_bucket_cap))
+            .filter(F.col("_rn") <= int(_CORPUS_BUCKET_CAP))
             .drop("_rn")
         )
     cross = (
@@ -477,8 +485,6 @@ def deduplicate(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    *,
-    max_iter: int = 10,
 ) -> DataFrame:
     """Apply near-dup PAIRS to the corpus: cluster by connected components
     and keep ONE row per cluster (the min id — deterministic).  Rows in no
@@ -486,7 +492,7 @@ def deduplicate(
     a training-data pipeline runs after any pair detector above."""
     from modal_vector_db_spark.operators.graph import connected_components
 
-    comp = connected_components(pairs, src="id_a", dst="id_b", max_iter=max_iter)
+    comp = connected_components(pairs, src="id_a", dst="id_b")
     losers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -726,32 +732,24 @@ def decontaminate(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    *,
-    shingle_n: int = 8,
-    min_hits: int = 3,
 ) -> DataFrame:
     """Drop training docs flagged by :func:`contamination_report` — the
     standard pre-training hygiene pass against eval-set leakage."""
-    rep = contamination_report(
-        train, benchmark, id_col, text_col, shingle_n=shingle_n, min_hits=min_hits
-    )
+    rep = contamination_report(train, benchmark, id_col, text_col)
     return train.join(rep.select(id_col), id_col, "left_anti")
 
 
 def semdedup_pairs(
     df: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
     *,
     num_clusters: int = 64,
     eps: float = 0.05,
-    seed: int = 42,
     cluster_cap: int = 20_000,
-    matmul_block: int = 2048,
-    fit_sample_fraction: float | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster-blocked semantic near-dup
-    pairs ``(id_a, id_b, cos_sim)`` with ``cos_sim >= 1 - eps``.  The
+    pairs ``(id_a, id_b, cos_sim)`` over the ``embedding`` column, with
+    ``cos_sim >= 1 - eps``.  The
     paper's shape exactly: KMeans blocks the corpus so the quadratic
     verify runs WITHIN clusters (~(n/k)² per cluster, embarrassingly
     parallel across them), trading the cross-cluster pair tail — two
@@ -764,26 +762,23 @@ def semdedup_pairs(
 
     - cluster sizes are checked BEFORE any group materializes: small
       clusters (≤ ``cluster_cap``) run a BLOCKED numpy matmul per
-      cluster via ``applyInPandas`` — ``matmul_block`` rows of the
+      cluster via ``applyInPandas`` — ``_MATMUL_BLOCK`` rows of the
       similarity matrix at a time, so executor peak memory is
-      O(block × m) ≈ ``matmul_block * cluster_cap * 8`` bytes (~330 MB
+      O(block × m) ≈ ``_MATMUL_BLOCK * cluster_cap * 8`` bytes (~330 MB
       at the defaults), never the O(m²) dense matrix a 100k cluster
       would need (~80 GB); OVERSIZED clusters never materialize — they
       route to a hub-star computed JVM-side (broadcast hub vectors +
       codegen cosine), the same skew stance as the LSH ``bucket_cap``
       (O(m) edges, bucket connectivity preserved, sub-threshold-to-hub
       spokes lose edges — measured in BASELINE.md round 7);
-    - the KMeans fit pre-samples via ``fit_sample_fraction`` (forwarded
-      to ``IVFIndex.build``), assignment is the k-literal codegen
-      expression — no Python in the assign path.
+    - assignment is the k-literal codegen expression — no Python in the
+      assign path.
     """
     from modal_vector_db_spark.functions.distance import cosine_distance
     from modal_vector_db_spark.operators.ann import IVFIndex
 
-    ivf = IVFIndex.build(
-        df, vec_col=vec_col, k=num_clusters, seed=seed,
-        sample_fraction=fit_sample_fraction,
-    )
+    vec_col = "embedding"
+    ivf = IVFIndex.build(df, vec_col=vec_col, k=num_clusters, seed=42)
     # NULL embeddings are EXPLICITLY excluded (the signature_hamming_pairs
     # convention): they can't be near anything, and relying on NULL
     # cluster_id falling out of the sizes equi-join would be an accident
@@ -799,7 +794,7 @@ def semdedup_pairs(
     big = tagged.filter(F.col("_m") > int(cluster_cap)).drop("_m")
     thr = 1.0 - float(eps)
 
-    blk = max(1, int(matmul_block))
+    blk = _MATMUL_BLOCK
 
     def _pairs(pdf):
         import numpy as _np
@@ -867,13 +862,17 @@ def semdedup_pairs(
 def semdedup_keep(
     df: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
-    **kwargs,
+    *,
+    num_clusters: int,
+    eps: float,
+    cluster_cap: int,
 ) -> DataFrame:
     """Keep-one-per-semantic-cluster: rows of ``df`` minus every pair's
     higher id (the paper keeps one representative per ε-ball; min-id is
     the deterministic choice).  Composes :func:`semdedup_pairs` with the
     standard drop-the-max side."""
-    pairs = semdedup_pairs(df, id_col, vec_col, **kwargs)
+    pairs = semdedup_pairs(
+        df, id_col, num_clusters=num_clusters, eps=eps, cluster_cap=cluster_cap
+    )
     doomed = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(doomed, id_col, "left_anti")

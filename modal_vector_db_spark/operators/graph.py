@@ -13,7 +13,7 @@ Scale shape: each iteration is one join (edges × labels, partitioned on the
 join key) + one groupBy-min — O(E) shuffle per round, converging in
 O(diameter) rounds.  Dedup components are tiny (pairs/triangles/short
 chains), so 3-5 rounds close almost any real corpus; pathological long
-chains are capped by ``max_iter``.  The per-round ``count()`` convergence
+chains are capped by ``_MAX_ITER``.  The per-round ``count()`` convergence
 check is one cheap job on the (small) changed-set.
 
 Lineage discipline: each round's labels are ``localCheckpoint``-ed.  Without
@@ -35,17 +35,19 @@ from pyspark.sql import functions as F
 from modal_vector_db_spark.plans.checkpoints import release_local_checkpoint
 
 
+#: label-propagation rounds :func:`connected_components` may run
+_MAX_ITER = 10
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 10,
 ) -> DataFrame:
     """Label each node with the min node id reachable through ``edges``
     (undirected).  Returns (node, component).  Raises when a component's
-    diameter exceeds ``max_iter`` rounds (never silently unconverged)."""
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    diameter exceeds ``_MAX_ITER`` rounds (never silently unconverged)."""
+    max_iter = _MAX_ITER
     sym = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).union(
         edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
     )
@@ -55,7 +57,6 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
     prev = None
-    changed = -1  # -1 = never measured (max_iter == 1 path)
     for i in range(max_iter):
         neigh = (
             sym.join(labels, sym.d == labels.node)
@@ -96,13 +97,6 @@ def connected_components(
         # propagation needs ~diameter rounds, so a long-chain component
         # would silently return WRONG labels (and break oracle parity /
         # leakage-safety downstream) — fail loudly instead
-        if changed == -1:  # max_iter == 1: measure the only transition
-            changed = (
-                labels.alias("n")
-                .join(labels_old.alias("o"), "node")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
         if changed:
             # The FINAL budgeted round still moved labels — but it may
             # itself have reached the fixpoint (a chain whose diameter
@@ -126,8 +120,8 @@ def connected_components(
             if still:
                 raise ValueError(
                     f"connected_components: {still} labels still changing "
-                    f"after max_iter={max_iter} rounds — a component's "
-                    f"diameter exceeds the budget; raise max_iter"
+                    f"after {max_iter} rounds (_MAX_ITER) — a component's "
+                    f"diameter exceeds the budget"
                 )
     # the penultimate round's checkpoint has no remaining consumer (its
     # changed-count and propagation jobs have run); only the returned
@@ -142,8 +136,6 @@ def leakage_safe_split(
     edges: DataFrame,
     id_col: str,
     val_pct: int = 20,
-    src: str = "src",
-    dst: str = "dst",
     components: DataFrame | None = None,
 ) -> DataFrame:
     """Leakage-free train/validation split: documents connected by a
@@ -170,7 +162,7 @@ def leakage_safe_split(
     comp = (
         components
         if components is not None
-        else connected_components(edges, src=src, dst=dst)
+        else connected_components(edges)
     )
     labeled = (
         docs.select(id_col)

@@ -270,17 +270,16 @@ def build_hnsw(
     clustered: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cluster_col: str = "cluster_id",
     m: int = 8,
     ef_construction: int = 64,
 ) -> DataFrame:
-    """One HNSW graph per ``cluster_col`` group -> the adjacency table
+    """One HNSW graph per ``cluster_id`` group -> the adjacency table
     (:data:`HNSW_SCHEMA`).  Write it partitioned by ``cluster_id`` next
     to the vector table; NULL vectors are excluded (they cannot be
     navigated to — same stance as the IVF assign path)."""
     _ship()
     mm, efc = int(m), int(ef_construction)
-    vcol, icol, ccol = vec_col, id_col, cluster_col
+    vcol, icol, ccol = vec_col, id_col, "cluster_id"
     if mm < 2:
         raise ValueError(f"m must be >= 2, got {m}")
 
@@ -315,7 +314,6 @@ def grow_hnsw(
     is_new_col: str = "_is_new",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cluster_col: str = "cluster_id",
     m: int = 8,
     ef_construction: int = 64,
 ) -> DataFrame:
@@ -334,7 +332,7 @@ def grow_hnsw(
     """
     _ship()
     mm, efc = int(m), int(ef_construction)
-    vcol, icol, ccol, ncol = vec_col, id_col, cluster_col, is_new_col
+    vcol, icol, ccol, ncol = vec_col, id_col, "cluster_id", is_new_col
     if mm < 2:
         raise ValueError(f"m must be >= 2, got {m}")
 
@@ -439,18 +437,14 @@ def hnsw_topk(
     query_vec: Sequence[float],
     k: int = 10,
     ef_search: int = 64,
-    probes: Sequence[int] | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cluster_col: str = "cluster_id",
     allowed_col: str | None = None,
 ) -> DataFrame:
-    """Graph-ANN top-k: cogroup (adjacency, vectors) per probed cluster,
-    beam-search each cluster executor-side, take the global k.  Returns
+    """Graph-ANN top-k over ``clustered``'s (cluster_id, vec_id,
+    embedding): cogroup (adjacency, vectors) per cluster, beam-search
+    each cluster executor-side, take the global k.  Returns
     ``(vec_id, distance)`` with cosine distance, ordered (distance, id).
-    ``probes=None`` searches every cluster (the high-recall default —
-    still O(ef·log n) per cluster, NOT a scan); pass the IVF probe list
-    for the pruned serving path.
+    Every cluster is searched (still O(ef·log n) per cluster, NOT a
+    scan); :func:`hnsw_topk_multi` takes per-query probe lists.
 
     ``allowed_col``: name of a boolean column on ``clustered`` marking
     filter-passing nodes — filtered-query serving (the predicate is
@@ -462,13 +456,9 @@ def hnsw_topk(
     qv = np.asarray([float(v) for v in query_vec], dtype=np.float64)
     qn = qv / (np.linalg.norm(qv) or 1.0)
     kk, efs = int(k), int(ef_search)
-    vcol, icol, ccol, acol = vec_col, id_col, cluster_col, allowed_col
+    vcol, icol, ccol, acol = "embedding", "vec_id", "cluster_id", allowed_col
     cols = [ccol, icol, vcol] + ([acol] if acol else [])
     g, c = graph, clustered.select(*cols)
-    if probes is not None:
-        probe_list = [int(p) for p in probes]
-        g = g.filter(F.col("cluster_id").isin(probe_list))
-        c = c.filter(F.col(ccol).isin(probe_list))
 
     def _serve(gpdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
         vpdf = vpdf[vpdf[vcol].notna()]
@@ -502,7 +492,6 @@ def hnsw_topk_multi(
     probes_per_query: dict[int, Sequence[int]] | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cluster_col: str = "cluster_id",
     allowed_col: str | None = None,
 ) -> DataFrame:
     """Graph-ANN top-k for MANY queries in ONE job (the
@@ -523,7 +512,7 @@ def hnsw_topk_multi(
         else {int(qi): {int(c) for c in cs} for qi, cs in probes_per_query.items()}
     )
     kk, efs = int(k), int(ef_search)
-    vcol, icol, ccol, acol = vec_col, id_col, cluster_col, allowed_col
+    vcol, icol, ccol, acol = vec_col, id_col, "cluster_id", allowed_col
     cols = [ccol, icol, vcol] + ([acol] if acol else [])
     g, c = graph, clustered.select(*cols)
     if probes_map is not None:

@@ -169,21 +169,16 @@ class _Extractor(HTMLParser):
 _FIELD_KEYS = ("title", "text", "main_text", "links", "lang", "meta_description")
 
 
-def main_content(
-    blocks: list[tuple[str, int, bool]],
-    min_chars: int = MIN_BLOCK_CHARS,
-    max_link_density: float = MAX_LINK_DENSITY,
-) -> str:
+def main_content(blocks: list[tuple[str, int, bool]]) -> str:
     """Classify segmented blocks and join the survivors in document
     order (module docstring has the rule set and its provenance).  Kept
-    separate from the walk so the thresholds are tunable per corpus and
-    the rule is unit-testable without a parse."""
+    separate from the walk so the rule is unit-testable without a parse."""
     return " ".join(
         txt
         for txt, link_chars, in_boiler in blocks
         if not in_boiler
-        and len(txt) >= min_chars
-        and link_chars <= max_link_density * len(txt)
+        and len(txt) >= MIN_BLOCK_CHARS
+        and link_chars <= MAX_LINK_DENSITY * len(txt)
     )
 
 

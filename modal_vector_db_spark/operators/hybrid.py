@@ -40,15 +40,17 @@ from pyspark.sql.window import Window
 
 from modal_vector_db_spark.sources.catalog import local_frame
 
+#: BM25's term-frequency saturation and length normalization (the DuckDB
+#: oracle's constants); every scoring path shares them
+K1 = 1.2
+B = 0.75
+
 
 def bm25_scores(
     docs: DataFrame,
     terms: Sequence[str],
     *,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Per-document BM25 score for a whitespace-tokenized query.
 
@@ -64,7 +66,7 @@ def bm25_scores(
     term_list = list(dict.fromkeys(terms))
     if not term_list:
         return docs.select(id_col, F.lit(0.0).alias("score")).limit(0)
-    toks = docs.select(id_col, F.split(F.col(text_col), " ").alias("_toks"))
+    toks = docs.select(id_col, F.split(F.col("text"), " ").alias("_toks"))
     tokens = F.col("_toks")
     proj = toks.select(
         id_col,
@@ -85,7 +87,7 @@ def bm25_scores(
     for i, tf in enumerate(tfs):
         c = F.when(
             tf > 0,
-            _bm25_contrib(tf, F.col(f"_df{i}"), F.col("dl"), F.col("n"), F.col("avgdl"), k1, b),
+            _bm25_contrib(tf, F.col(f"_df{i}"), F.col("dl"), F.col("n"), F.col("avgdl")),
         ).otherwise(F.lit(0.0))
         score = c if score is None else score + c
     return (
@@ -95,18 +97,16 @@ def bm25_scores(
     )
 
 
-def _bm25_contrib(
-    tf: Column, df: Column, dl: Column, n: Column, avgdl: Column, k1: float, b: float
-) -> Column:
+def _bm25_contrib(tf: Column, df: Column, dl: Column, n: Column, avgdl: Column) -> Column:
     """The per-(doc, term) BM25 contribution — ONE definition shared by the
     scan path and the materialized-index path, so the two produce
     bit-identical scores (all inputs are integer-valued doubles; the
     expression mirrors the DuckDB oracle token-for-token:
-    ln((n - df + 0.5) / (df + 0.5) + 1) * tf*(k1+1)
-    / (tf + k1*((1-b) + b*dl/avgdl)))."""
+    ln((n - df + 0.5) / (df + 0.5) + 1) * tf*(K1+1)
+    / (tf + K1*((1-B) + B*dl/avgdl)))."""
     idf = F.log((n - df + F.lit(0.5)) / (df + F.lit(0.5)) + F.lit(1))
-    return idf * tf * F.lit(k1 + 1) / (
-        tf + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * dl / avgdl)
+    return idf * tf * F.lit(K1 + 1) / (
+        tf + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * dl / avgdl)
     )
 
 
@@ -164,8 +164,6 @@ def bm25_from_postings(
     *,
     id_col: str = "doc_id",
     buckets: int = 16,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 over materialized postings (:func:`build_text_postings`):
     the bucket `isin` prunes partitions BEFORE the scan (only the query
@@ -189,7 +187,7 @@ def bm25_from_postings(
         .withColumn("avgdl", F.lit(float(avgdl)))
     )
     return scored.groupBy(id_col).agg(
-        F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS), k1, b)), 6).alias("score")
+        F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS))), 6).alias("score")
     )
 
 
@@ -205,8 +203,6 @@ def rrf_fuse(
     vector: DataFrame,
     *,
     id_col: str = "doc_id",
-    lex_score: str = "score",
-    vec_distance: str = "distance",
     top_n: int = 50,
     k: int = 10,
     k0: int = 60,
@@ -215,13 +211,13 @@ def rrf_fuse(
     (id, distance ASC-better) vector channel: top-k of
     1/(k0 + lex_rank) + 1/(k0 + vec_rank), absent-channel term = 0."""
     lex = _ranked_topn(
-        lexical, [F.col(lex_score).desc(), F.col(id_col).asc()], id_col, top_n
+        lexical, [F.col("score").desc(), F.col(id_col).asc()], id_col, top_n
     ).select(F.col(id_col).alias("lex_id"), F.col("r").alias("lex_r"))
     # asc_nulls_last: a NULL distance (malformed embedding) must rank
     # WORST, matching the DuckDB default (NULLS LAST), the batched twin,
     # and the _topk_per_query tail — Spark's bare asc() puts NULLs first.
     vec = _ranked_topn(
-        vector, [F.col(vec_distance).asc_nulls_last(), F.col(id_col).asc()], id_col, top_n
+        vector, [F.col("distance").asc_nulls_last(), F.col(id_col).asc()], id_col, top_n
     ).select(F.col(id_col).alias("vec_id_"), F.col("r").alias("vec_r"))
     fused = lex.join(vec, lex.lex_id == vec.vec_id_, "full_outer").select(
         F.coalesce(F.col("lex_id"), F.col("vec_id_")).alias(id_col),
@@ -246,9 +242,6 @@ def bm25_scores_multi(
     pairs: Sequence[tuple[int, str]],
     *,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 for MANY queries over ONE corpus scan.  ``pairs`` is the
     driver-side distinct (q_id, term) list — broadcast — and every
@@ -259,7 +252,7 @@ def bm25_scores_multi(
     SAME per-(doc, term) contribution expression as :func:`bm25_scores` —
     a batch row is bit-identical to its single-query twin."""
     all_terms = sorted({t for _, t in pairs})
-    split = F.split(F.col(text_col), " ")
+    split = F.split(F.col("text"), " ")
     toks = docs.select(id_col, F.explode(split).alias("term")).filter(
         F.col("term").isin(all_terms)
     )
@@ -277,7 +270,7 @@ def bm25_scores_multi(
         .join(dl, id_col)
         .crossJoin(F.broadcast(stats))
         .groupBy("q_id", id_col)
-        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS), k1, b)), 6).alias("score"))
+        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS))), 6).alias("score"))
     )
 
 
@@ -289,8 +282,6 @@ def bm25_from_postings_multi(
     *,
     id_col: str = "doc_id",
     buckets: int = 16,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Batched :func:`bm25_from_postings`: one pruned postings read for
     the UNION of every query's term buckets (each term's df is complete
@@ -311,7 +302,7 @@ def bm25_from_postings_multi(
         .withColumn("n", F.lit(float(n)))
         .withColumn("avgdl", F.lit(float(avgdl)))
         .groupBy("q_id", id_col)
-        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS), k1, b)), 6).alias("score"))
+        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS))), 6).alias("score"))
     )
 
 
@@ -320,8 +311,6 @@ def rrf_fuse_multi(
     vector: DataFrame,
     *,
     id_col: str = "doc_id",
-    lex_score: str = "score",
-    vec_distance: str = "distance",
     top_n: int = 50,
     k: int = 10,
     k0: int = 60,
@@ -341,10 +330,8 @@ def rrf_fuse_multi(
             .select("q_id", F.col(id_col).alias(out + "_id"), F.col("r").alias(out + "_r"))
         )
 
-    lex = ranked(lexical, [F.col(lex_score).desc(), F.col(id_col).asc()], "lex")
-    vec = ranked(
-        vector, [F.col(vec_distance).asc_nulls_last(), F.col(id_col).asc()], "vec"
-    )
+    lex = ranked(lexical, [F.col("score").desc(), F.col(id_col).asc()], "lex")
+    vec = ranked(vector, [F.col("distance").asc_nulls_last(), F.col(id_col).asc()], "vec")
     fused = lex.join(
         vec,
         (lex["q_id"] == vec["q_id"]) & (lex["lex_id"] == vec["vec_id"]),

@@ -916,19 +916,14 @@ def encode_jpeg_solid(
     return bytes(out)
 
 
-def encode_jpeg_blocks(
-    width: int,
-    height: int,
-    blocks: list[list[int]],
-    qtable: list[int] | None = None,
-) -> bytes:
+def encode_jpeg_blocks(width: int, height: int, blocks: list[list[int]]) -> bytes:
     """GRAYSCALE baseline JPEG from hand-chosen QUANTIZED coefficient
     blocks (zigzag order, one 64-list per 8x8 block, row-major block
     order).  The golden-anchor generator: a test picks coefficients,
     computes expected pixels with an INDEPENDENT IDCT, and asserts the
     decoder's Huffman/dequant/zigzag/IDCT pipeline reproduces them —
-    never a circular encode↔decode."""
-    q = qtable or [1] * 64
+    never a circular encode↔decode.  Every quantizer step is 1."""
+    q = [1] * 64
     bx = (width + 7) // 8
     by = (height + 7) // 8
     if len(blocks) != bx * by:
@@ -972,12 +967,16 @@ def encode_jpeg_blocks(
     return bytes(out)
 
 
+#: :func:`encode_jpeg_progressive`'s restart interval in blocks (0 = no
+#: DRI/RSTn markers)
+_PROGRESSIVE_RESTART_INTERVAL = 0
+
+
 def encode_jpeg_progressive(
     width: int,
     height: int,
     blocks: list[list[int]],
     qtable: list[int] | None = None,
-    restart_interval: int = 0,
 ) -> bytes:
     """GRAYSCALE progressive (SOF2) JPEG from hand-chosen QUANTIZED
     coefficient blocks — the same input convention as
@@ -994,10 +993,12 @@ def encode_jpeg_progressive(
     A fully-refined progressive file must decode bit-identically to the
     same blocks through :func:`encode_jpeg_blocks` (pinned in tests —
     the decoder is additionally anchored against independently-IDCT'd
-    pixels, never a circular encode↔decode).  ``restart_interval``
-    emits DRI + RSTn markers every N blocks in every scan.  Fixture
-    grade: tests and planted oracle arms, not a production encoder."""
+    pixels, never a circular encode↔decode).  A nonzero
+    ``_PROGRESSIVE_RESTART_INTERVAL`` emits DRI + RSTn markers every N
+    blocks in every scan.  Fixture grade: tests and planted oracle arms,
+    not a production encoder."""
     q = qtable or [1] * 64
+    restart_interval = _PROGRESSIVE_RESTART_INTERVAL
     bx = (width + 7) // 8
     by = (height + 7) // 8
     if len(blocks) != bx * by:

@@ -131,42 +131,32 @@ def train_language_classifier(
     return pipe.fit(labeled)
 
 
-def predict_language(
-    model,
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "lang_pred",
-) -> DataFrame:
-    """Attach ``out_col`` = argmax-probability language to every row.
-    NULL text predicts NULL (never a silent majority-class guess) — the
-    same NULL stance as ``score_quality``.  Pure pipeline transform."""
+def predict_language(model, df: DataFrame) -> DataFrame:
+    """Attach ``lang_pred`` = argmax-probability language of ``text`` to
+    every row.  NULL text predicts NULL (never a silent majority-class
+    guess) — the same NULL stance as ``score_quality``.  Pure pipeline
+    transform."""
     src_cols = df.columns
-    if out_col in src_cols:
+    if "lang_pred" in src_cols:
         raise ValueError(
-            f"predict_language: input already has a column named {out_col!r}; "
-            "drop or rename it (or pass a different out_col)"
+            "predict_language: input already has a column named 'lang_pred'; "
+            "drop or rename it"
         )
-    scorable = df.filter(F.col(text_col).isNotNull())
-    pred = model.transform(scorable).select(
-        *src_cols, F.col("lang_pred").alias(out_col)
-    )
-    nulls = df.filter(F.col(text_col).isNull()).select(
-        *src_cols, F.lit(None).cast("string").alias(out_col)
+    scorable = df.filter(F.col("text").isNotNull())
+    pred = model.transform(scorable).select(*src_cols, "lang_pred")
+    nulls = df.filter(F.col("text").isNull()).select(
+        *src_cols, F.lit(None).cast("string").alias("lang_pred")
     )
     return pred.unionByName(nulls)
 
 
-def language_confusion(
-    model,
-    df: DataFrame,
-    text_col: str = "text",
-    label_col: str = "lang",
-) -> DataFrame:
-    """(true lang, predicted lang, n) — the evaluation artifact; the
-    diagonal over the row sums is per-language recall."""
+def language_confusion(model, df: DataFrame) -> DataFrame:
+    """(true lang, predicted lang, n) over ``df``'s (text, lang) — the
+    evaluation artifact; the diagonal over the row sums is per-language
+    recall."""
     return (
-        predict_language(model, df, text_col=text_col)
-        .filter(F.col(label_col).isNotNull())
-        .groupBy(F.col(label_col).alias("true_lang"), F.col("lang_pred"))
+        predict_language(model, df)
+        .filter(F.col("lang").isNotNull())
+        .groupBy(F.col("lang").alias("true_lang"), F.col("lang_pred"))
         .agg(F.count(F.lit(1)).alias("n"))
     )

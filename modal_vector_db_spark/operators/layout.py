@@ -11,7 +11,7 @@ at write time, and (b) breaking hot keys so no single reducer drowns.
   pre-paid at write time and amortizes over every subsequent join
   (verified by plan assertion in tests/test_layout.py).
 - **Salting**: ``salted_agg`` runs a two-phase aggregate — first over
-  (key, salt) to spread a hot key across ``n_salts`` reducers, then over
+  (key, salt) to spread a hot key across 16 reducers, then over
   key to combine.  Works for any algebraic aggregate (sum/count/min/max);
   AQE's skew-join handling covers the join side, this covers the agg side.
 - **Z-order clustering**: ``write_zordered`` sorts along a Morton curve so
@@ -27,20 +27,17 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 16,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` hash-bucketed (and optionally bucket-sorted) on
-    ``bucket_col``.  Joins between tables bucketed identically on the join
-    key skip the shuffle entirely."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.format("parquet").saveAsTable(table)
+def write_bucketed(df: DataFrame, table: str, bucket_col: str) -> None:
+    """Persist ``df`` in 16 hash buckets, bucket-sorted, on ``bucket_col``.
+    Joins between tables bucketed identically on the join key skip the
+    shuffle entirely."""
+    (
+        df.write.mode("overwrite")
+        .bucketBy(16, bucket_col)
+        .sortBy(bucket_col)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 #: op → (phase-1 partial fn, phase-2 recombine fn).  Partial counts ADD.
@@ -56,19 +53,18 @@ def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, tuple[str, str]],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation.
 
     ``aggs`` maps output-column name → ``(op, input_col)`` with op in
     {sum, count, min, max} (the algebraic aggregates that decompose).
     Phase 1 aggregates over (keys, salt) so a hot key's rows split across
-    ``n_salts`` partial groups on different reducers; phase 2 re-aggregates
+    16 partial groups on different reducers; phase 2 re-aggregates
     the partials by key.  The salt is derived deterministically from the
     row's physical position — uniform by construction, no rand()."""
     salted = df.withColumn(
         "_salt",
-        F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(n_salts)),
+        F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(16)),
     )
     partials, finals = [], []
     for name, (op, col) in aggs.items():
@@ -84,13 +80,11 @@ def salted_agg(
 def write_training_shards(
     df: DataFrame,
     path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     tokens_per_shard: int = 2048,
     buckets: int = 32,
 ) -> None:
-    """Export stage of the training-data pipeline: pack documents into
-    fixed token-budget shards (same streaming-pack rule as
+    """Export stage of the training-data pipeline: pack (doc_id, text)
+    documents into fixed token-budget shards (same streaming-pack rule as
     ``queries/pipeline_queries.py:text_pack_sequences`` — a doc whose
     tokens straddle the budget boundary opens the next shard) and write a
     ``shard=<bucket>_<pack>``-partitioned parquet dataset, one directory
@@ -106,10 +100,10 @@ def write_training_shards(
 
     from modal_vector_db_spark.functions.text import token_count
 
-    t = df.withColumn("_bucket", F.col(id_col) % buckets).withColumn(
-        "_tokens", token_count(text_col)
+    t = df.withColumn("_bucket", F.col("doc_id") % buckets).withColumn(
+        "_tokens", token_count("text")
     )
-    w = Window.partitionBy("_bucket").orderBy(id_col)
+    w = Window.partitionBy("_bucket").orderBy("doc_id")
     prior = F.sum("_tokens").over(w.rowsBetween(Window.unboundedPreceding, -1))
     packed = t.withColumn(
         "shard",
@@ -139,7 +133,6 @@ def zorder_key(cols: Sequence[Column], bits: int = 16) -> Column:
 def zorder_frame(
     df: DataFrame,
     cols: Sequence[str],
-    bits: int = 12,
     num_files: int = 16,
     lead_cols: Sequence[str] = (),
 ) -> DataFrame:
@@ -149,7 +142,7 @@ def zorder_frame(
     (plain parquet here, a versioned replace commit in
     ``sources/versioned.py:optimize_zorder``).
 
-    Column values are min-max scaled to ``bits``-bit buckets driver-side
+    Column values are min-max scaled to 12-bit buckets driver-side
     from ONE tiny agg row; ``repartitionByRange`` on the key gives
     contiguous curve segments per file (the property pruning relies on).
 
@@ -174,6 +167,7 @@ def zorder_frame(
             "or a hash bucket)"
         ) from e
     scaled = []
+    bits = 12
     top = (1 << bits) - 1
     for c in cols:
         if stats[f"min_{c}"] is None or stats[f"max_{c}"] is None:
@@ -200,13 +194,7 @@ def zorder_frame(
     )
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    bits: int = 12,
-    num_files: int = 16,
-) -> None:
+def write_zordered(df: DataFrame, path: str, cols: Sequence[str]) -> None:
     """Z-order-clustered parquet layout: rows sorted along a Morton curve
     over ``cols`` so parquet min/max footer stats stay tight on EVERY
     clustered column at once.
@@ -217,9 +205,7 @@ def write_zordered(
     skips most files at footer time.  This is the layout Delta/Iceberg
     ``OPTIMIZE ZORDER BY`` applies; here it is two scans (min/max agg, then
     range-partitioned sorted write) of plain parquet."""
-    zorder_frame(df, cols, bits=bits, num_files=num_files).write.mode(
-        "overwrite"
-    ).parquet(path)
+    zorder_frame(df, cols).write.mode("overwrite").parquet(path)
 
 
 def file_stats_pruned(path: str, col: str, value) -> tuple[int, int]:

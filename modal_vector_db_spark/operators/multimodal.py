@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -314,7 +313,7 @@ DECODERS: dict[str, Callable[[bytes], dict[str, Any]]] = {
 }
 
 
-def extract_media_features(df: DataFrame, blob_col: str = "blob", type_col: str = "media_type") -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """Decode + feature-extract media blobs via ``mapInPandas``.
 
     Input: (doc_id, media_type, blob: binary).  Output:
@@ -333,7 +332,7 @@ def extract_media_features(df: DataFrame, blob_col: str = "blob", type_col: str 
         for pdf in batches:
             rows = []
             for doc_id, mtype, blob, cksum in zip(
-                pdf["doc_id"], pdf[type_col], pdf[blob_col], pdf["_checksum"]
+                pdf["doc_id"], pdf["media_type"], pdf["blob"], pdf["_checksum"]
             ):
                 # SQL-NULL blob: all-None feature row (bytes(None) would
                 # raise and fail the task — the corrupt-media convention
@@ -378,7 +377,7 @@ def extract_media_features(df: DataFrame, blob_col: str = "blob", type_col: str 
     # Checksum JVM-side (F.sha2 inside codegen, passed THROUGH the Arrow
     # batch) — the Python loop touches bytes only for what genuinely needs
     # Python, the stdlib header decode.
-    pre = df.withColumn("_checksum", F.sha2(F.col(blob_col), 256))
+    pre = df.withColumn("_checksum", F.sha2(F.col("blob"), 256))
     return pre.mapInPandas(_extract, MEDIA_FEATURES_SCHEMA)
 
 
@@ -417,16 +416,14 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
-def encode_png(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 3,
-    filter_cycle: tuple[int, ...] = (0, 1, 2, 3, 4),
-) -> bytes:
+#: the PNG filter types :func:`encode_png` cycles through, row by row
+_PNG_FILTER_CYCLE = (0, 1, 2, 3, 4)
+
+
+def encode_png(width: int, height: int, pixels: bytes, channels: int = 3) -> bytes:
     """PNG writer (struct + zlib + CRC32): 8-bit gray/RGB/RGBA,
     non-interlaced.  Rows are FORWARD-FILTERED cycling through
-    ``filter_cycle`` (all five types by default), so any decoder reading
+    ``_PNG_FILTER_CYCLE`` (all five types), so any decoder reading
     the output must genuinely invert Sub/Up/Average/Paeth — the test and
     fixture generator for :func:`decode_png_pixels`."""
     import struct
@@ -444,6 +441,7 @@ def encode_png(
             + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
         )
 
+    filter_cycle = _PNG_FILTER_CYCLE
     raw = bytearray()
     prev = bytes(stride)
     for y in range(height):
@@ -644,15 +642,9 @@ def dhash64_from_pixels(w: int, h: int, ch: int, px: bytes) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def hash_extract(
-    df: DataFrame,
-    hash_fn,
-    blob_col: str = "blob",
-    id_col: str = "doc_id",
-    synth=None,
-) -> DataFrame:
+def hash_extract(df: DataFrame, hash_fn, synth=None) -> DataFrame:
     """THE shared Arrow boundary of every per-modality 64-bit perceptual
-    hash extractor: (id, binary blob) → (id, dhash long), NULL on any
+    hash extractor: (doc_id, binary blob) → (doc_id, dhash long), NULL on any
     decode failure (the all-None convention — corrupt media never fails a
     task or pairs downstream).  ``hash_fn`` is a plain ``bytes → int``
     (``dhash64`` / ``audio_dhash64`` / avi's ``video_dhash64``); shipping
@@ -668,6 +660,7 @@ def hash_extract(
     scale).  Production corpora pass blobs in ``df`` directly
     (synth=None, unchanged path)."""
     _ship_by_value()
+    blob_col, id_col = "blob", "doc_id"
     id_type = dict(df.dtypes)[id_col]
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -691,15 +684,13 @@ def hash_extract(
     return src.mapInPandas(_extract, f"`{id_col}` {id_type}, dhash long")
 
 
-def extract_image_dhash(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id", synth=None
-) -> DataFrame:
-    """Arrow-batched :func:`dhash64` over a binary column → (id, dhash
-    long); undecodable/too-small blobs yield a NULL dhash (the all-None
+def extract_image_dhash(df: DataFrame, synth=None) -> DataFrame:
+    """Arrow-batched :func:`dhash64` over the binary ``blob`` column →
+    (doc_id, dhash long); undecodable/too-small blobs yield a NULL dhash (the all-None
     convention).  The image twin of the text corpus's simhash pass —
     compose with ``signature_hamming_pairs`` for perceptual near-dup
     pairs at corpus scale (banded equijoin, no all-pairs)."""
-    return hash_extract(df, dhash64, blob_col, id_col, synth=synth)
+    return hash_extract(df, dhash64, synth=synth)
 
 
 def _wav_mixdown(blob: bytes):
@@ -764,13 +755,11 @@ def audio_dhash64(blob: bytes) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def extract_audio_dhash(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id", synth=None
-) -> DataFrame:
-    """Arrow-batched :func:`audio_dhash64` over a binary column → (id,
-    dhash long); undecodable/too-short blobs yield NULL (the all-None
+def extract_audio_dhash(df: DataFrame, synth=None) -> DataFrame:
+    """Arrow-batched :func:`audio_dhash64` over the binary ``blob`` column
+    → (doc_id, dhash long); undecodable/too-short blobs yield NULL (the all-None
     convention) and never pair downstream."""
-    return hash_extract(df, audio_dhash64, blob_col, id_col, synth=synth)
+    return hash_extract(df, audio_dhash64, synth=synth)
 
 
 def pixel_stats(blob: bytes) -> dict[str, Any]:
@@ -833,8 +822,8 @@ PIXEL_STATS_SCHEMA = StructType(
 )
 
 
-def extract_pixel_stats(df: DataFrame, blob_col: str = "blob", synth=None) -> DataFrame:
-    """Arrow-batched REAL pixel statistics over a binary column — the
+def extract_pixel_stats(df: DataFrame, synth=None) -> DataFrame:
+    """Arrow-batched REAL pixel statistics over the binary ``blob`` column — the
     quality-filter shape of an image-curation pass (brightness bounds,
     constant-image detection) with an honest decoder instead of a stub.
     Same executor-shipping rule as :func:`extract_media_features`.
@@ -847,7 +836,7 @@ def extract_pixel_stats(df: DataFrame, blob_col: str = "blob", synth=None) -> Da
             batches = synth(batches)
         for pdf in batches:
             rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[blob_col]):
+            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
                 # SQL NULL blobs surface as None — pixel_stats returns the
                 # all-None row for them, same as any undecodable input
                 st = pixel_stats(bytes(blob) if blob is not None else None)
@@ -865,9 +854,7 @@ def extract_pixel_stats(df: DataFrame, blob_col: str = "blob", synth=None) -> Da
     return df.mapInPandas(_extract, PIXEL_STATS_SCHEMA)  # synth: df carries producer inputs
 
 
-def resize_image(
-    df: DataFrame, width: int, height: int, blob_col: str = "blob"
-) -> DataFrame:
+def resize_image(df: DataFrame, width: int, height: int) -> DataFrame:
     """REAL image resize for PNG/BMP/GIF/baseline-JPEG blobs — ONE stdlib
     decode through :func:`decode_image_pixels` (the central dispatch, so
     this op supports exactly what the decoders support — GIF included,
@@ -888,7 +875,7 @@ def resize_image(
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_blobs, flags = [], []
-            for blob in pdf[blob_col]:
+            for blob in pdf["blob"]:
                 if blob is None:  # SQL NULL: pass through, flagged
                     out_blobs.append(None)
                     flags.append(False)
@@ -914,12 +901,12 @@ def resize_image(
                 {"doc_id": pdf["doc_id"], "blob": out_blobs, "resized": flags}
             )
 
-    return df.select("doc_id", blob_col).mapInPandas(
+    return df.select("doc_id", "blob").mapInPandas(
         _resize, "doc_id long, blob binary, resized boolean"
     )
 
 
-def extract_audio_stats(df: DataFrame, blob_col: str = "blob", synth=None) -> DataFrame:
+def extract_audio_stats(df: DataFrame, synth=None) -> DataFrame:
     """REAL audio SAMPLE decode (stdlib ``wave``): reads the actual PCM
     frames — not just the header — and emits amplitude statistics per
     blob: (doc_id, n_samples, amp_sum, amp_min, amp_max) over the RAW
@@ -937,7 +924,7 @@ def extract_audio_stats(df: DataFrame, blob_col: str = "blob", synth=None) -> Da
             batches = synth(batches)
         for pdf in batches:
             rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[blob_col]):
+            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
                 row = {"doc_id": int(doc_id), "n_samples": None,
                        "amp_sum": None, "amp_min": None, "amp_max": None}
                 try:
@@ -961,7 +948,7 @@ def extract_audio_stats(df: DataFrame, blob_col: str = "blob", synth=None) -> Da
                  "amp_min": "Int32", "amp_max": "Int32"}
             )
 
-    src = df if synth is not None else df.select("doc_id", blob_col)
+    src = df if synth is not None else df.select("doc_id", "blob")
     return src.mapInPandas(
         _extract,
         "doc_id long, n_samples long, amp_sum long, amp_min int, amp_max int",

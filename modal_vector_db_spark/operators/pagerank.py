@@ -81,11 +81,9 @@ def pagerank(
     edges: DataFrame,
     iters: int = 5,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
     materialize: bool = False,
 ) -> DataFrame:
-    """Rank every node of the directed graph ``edges`` (duplicate edges
+    """Rank every node of the directed graph ``edges`` (src, dst) (duplicate edges
     count once each; self-loops are legal).  Returns ``(node, rank)``
     with ranks UNROUNDED (callers round for cross-engine compares).
 
@@ -108,7 +106,7 @@ def pagerank(
     # RETURNED plan, so they cannot be unpersisted here (session-lifetime
     # cache); a caller looping over many graphs passes materialize=True,
     # which checkpoints the result and releases all of them.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
+    e = edges.select("src", "dst").persist()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("outdeg"))
     ew = e.join(deg, "src").persist()  # static per-iteration probe side
     # node table WITH the dangling flag in one aggregation: max(_has_out)

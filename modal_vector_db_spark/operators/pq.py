@@ -31,7 +31,7 @@ compressed-scan complement to the IVF layout.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -39,6 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modal_vector_db_spark.sources.catalog import local_frame
+
+#: rows :meth:`PQIndex.train` fits its codebooks on
+_TRAIN_SAMPLE_ROWS = 4096
 
 
 def _lloyd(x: np.ndarray, k: int, iters: int, rng: np.random.Generator) -> np.ndarray:
@@ -79,12 +82,9 @@ class PQIndex:
         df: DataFrame,
         vec_col: str = "embedding",
         m: int = 8,
-        ksub: int = 16,
-        sample_rows: int = 4096,
-        seed: int = 42,
-        iters: int = 20,
     ) -> "PQIndex":
-        """Fit per-subspace codebooks on a seeded, LAYOUT-INDEPENDENT
+        """Fit per-subspace codebooks (16 centroids each, 20 Lloyd
+        iterations, seed 42) on a seeded, LAYOUT-INDEPENDENT
         sample: rows are admitted by a content hash of the vector itself
         (``pmod(xxhash64(vec, seed))``), so the same corpus yields the
         same sample — hence the same codebooks — regardless of partition
@@ -92,8 +92,10 @@ class PQIndex:
         first partitions offered: compaction or repartition changed the
         codebooks under the same seed, and ordered data trained on a
         prefix-biased sample — review finding.)  The driver transfer stays
-        bounded: the hash admits ~1.2× ``sample_rows`` in expectation and
-        a deterministic hash-ordered truncation caps the exact count."""
+        bounded: the hash admits ~1.2× ``_TRAIN_SAMPLE_ROWS`` in
+        expectation and a deterministic hash-ordered truncation caps the
+        exact count."""
+        sample_rows, seed = _TRAIN_SAMPLE_ROWS, 42
         total = df.count()
         frac = min(1.0, (sample_rows * 1.2) / max(total, 1))
         # 2^31 hash buckets: at 1e6 buckets the admitted fraction floored
@@ -122,15 +124,13 @@ class PQIndex:
         dsub = x.shape[1] // m
         rng = np.random.default_rng(seed)
         books = np.stack(
-            [_lloyd(x[:, j * dsub : (j + 1) * dsub], ksub, iters, rng) for j in range(m)]
+            [_lloyd(x[:, j * dsub : (j + 1) * dsub], 16, 20, rng) for j in range(m)]
         )
         return cls(books)
 
     # -- encode (distributed) ---------------------------------------------
-    def encode(
-        self, df: DataFrame, vec_col: str = "embedding", code_col: str = "pq_code"
-    ) -> DataFrame:
-        """Add ``code_col`` (array<smallint>, length m): nearest-centroid id
+    def encode(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+        """Add ``pq_code`` (array<smallint>, length m): nearest-centroid id
         per subspace.  Arrow-batched; each batch is one (batch, ksub, dsub)
         broadcasted-numpy argmin per subspace — no Python per-row work."""
         books = self.codebooks
@@ -153,7 +153,7 @@ class PQIndex:
                     out[pos] = row
             return pd.Series(out)
 
-        return df.withColumn(code_col, _enc(F.col(vec_col)))
+        return df.withColumn("pq_code", _enc(F.col(vec_col)))
 
     # -- score + search ----------------------------------------------------
     def lut(self, query_vec: Sequence[float]) -> np.ndarray:
@@ -169,11 +169,9 @@ class PQIndex:
             ]
         )
 
-    def adc_scores(
-        self, codes_df: DataFrame, query_vec: Sequence[float], code_col: str = "pq_code"
-    ) -> DataFrame:
+    def adc_scores(self, codes_df: DataFrame, query_vec: Sequence[float]) -> DataFrame:
         """Approximate squared-L2 distance per row via LUT gather — the scan
-        reads only the code column (verify ReadSchema in the plan)."""
+        reads only the ``pq_code`` column (verify ReadSchema in the plan)."""
         table = self.lut(query_vec)
         m = self.m
 
@@ -188,28 +186,26 @@ class PQIndex:
                 out[valid.to_numpy()] = table[np.arange(m), c].sum(axis=1)
             return pd.Series(out)
 
-        return codes_df.withColumn("adc_distance", _adc(F.col(code_col)))
+        return codes_df.withColumn("adc_distance", _adc(F.col("pq_code")))
 
     def topk(
         self,
         codes_df: DataFrame,
         query_vec: Sequence[float],
         k: int = 10,
-        id_col: str = "vec_id",
-        code_col: str = "pq_code",
         refine_df: DataFrame | None = None,
-        vec_col: str = "embedding",
         refine_factor: int = 4,
     ) -> DataFrame:
         """Two-stage search: ADC top ``k·refine_factor`` candidates (bounded
-        TakeOrderedAndProject over the compressed scan), then — when
-        ``refine_df`` (id → original vector) is supplied — exact squared-L2
-        re-rank of just those candidates.  The refine read is candidate-
+        TakeOrderedAndProject over the compressed (vec_id, pq_code) scan),
+        then — when ``refine_df`` (vec_id → embedding) is supplied — exact
+        squared-L2 re-rank of just those candidates.  The refine read is candidate-
         sized: a broadcast semi-join against ≤ k·refine_factor ids."""
         from modal_vector_db_spark.functions.distance import sq_l2_distance, vector_lit
 
+        id_col = "vec_id"
         cand = (
-            self.adc_scores(codes_df, query_vec, code_col)
+            self.adc_scores(codes_df, query_vec)
             .select(id_col, "adc_distance")
             .orderBy(F.col("adc_distance").asc_nulls_last(), F.col(id_col).asc())
             .limit(k * refine_factor if refine_df is not None else k)
@@ -220,7 +216,7 @@ class PQIndex:
             F.broadcast(cand.select(id_col)), on=id_col, how="left_semi"
         ).select(
             id_col,
-            sq_l2_distance(F.col(vec_col), vector_lit(query_vec)).alias("distance"),
+            sq_l2_distance(F.col("embedding"), vector_lit(query_vec)).alias("distance"),
         )
         return exact.orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc()).limit(k)
 

@@ -29,12 +29,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _feature_pipeline(text_col: str, num_features: int):
+def _feature_pipeline(num_features: int):
     from pyspark.ml import Pipeline
     from pyspark.ml.feature import HashingTF, NGram, RegexTokenizer, VectorAssembler
 
     tok = RegexTokenizer(
-        inputCol=text_col, outputCol="_toks", pattern=r"\s+", toLowercase=True
+        inputCol="text", outputCol="_toks", pattern=r"\s+", toLowercase=True
     )
     big = NGram(n=2, inputCol="_toks", outputCol="_bigrams")
     tf1 = HashingTF(
@@ -50,13 +50,11 @@ def _feature_pipeline(text_col: str, num_features: int):
 def train_quality_classifier(
     positive: DataFrame,
     negative: DataFrame,
-    text_col: str = "text",
     num_features: int = 1 << 18,
-    reg_param: float = 1e-4,
     max_iter: int = 50,
 ):
     """Fit the classifier from a positive exemplar corpus and a negative
-    (raw-pool) corpus.  Returns a fitted ``PipelineModel`` (save/load via
+    (raw-pool) corpus, both on their ``text`` column.  Returns a fitted ``PipelineModel`` (save/load via
     its own ``.save(path)`` / ``PipelineModel.load``).  Rows with NULL
     text are dropped from training (they cannot carry a label).
 
@@ -67,8 +65,8 @@ def train_quality_classifier(
     from pyspark.ml import Pipeline
     from pyspark.ml.classification import LogisticRegression
 
-    pos = positive.select(F.col(text_col)).filter(F.col(text_col).isNotNull())
-    neg = negative.select(F.col(text_col)).filter(F.col(text_col).isNotNull())
+    pos = positive.select("text").filter(F.col("text").isNotNull())
+    neg = negative.select("text").filter(F.col("text").isNotNull())
     n_pos, n_neg = pos.count(), neg.count()
     if n_pos == 0 or n_neg == 0:
         raise ValueError("both corpora must be non-empty to train")
@@ -84,32 +82,27 @@ def train_quality_classifier(
         featuresCol="_features",
         labelCol="_label",
         weightCol="_w",
-        regParam=float(reg_param),
+        regParam=1e-4,
         maxIter=int(max_iter),
         standardization=False,
     )
-    pipe = Pipeline(stages=[_feature_pipeline(text_col, num_features), lr])
+    pipe = Pipeline(stages=[_feature_pipeline(num_features), lr])
     return pipe.fit(labeled)
 
 
-def score_quality(
-    model,
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "quality_score",
-) -> DataFrame:
-    """Attach ``out_col`` = P(high quality) to every row — NULL text rows
-    score NULL (never silently 0.5).  Pure pipeline transform: tokenize /
+def score_quality(model, df: DataFrame) -> DataFrame:
+    """Attach ``quality_score`` = P(high quality) of ``text`` to every row
+    — NULL text rows score NULL (never silently 0.5).  Pure pipeline transform: tokenize /
     hash / dot-product, no Python workers."""
     from pyspark.ml.functions import vector_to_array
 
     src_cols = df.columns
-    scorable = df.filter(F.col(text_col).isNotNull())
+    scorable = df.filter(F.col("text").isNotNull())
     scored = model.transform(scorable).select(
         *src_cols,
-        vector_to_array(F.col("probability")).getItem(1).alias(out_col),
+        vector_to_array(F.col("probability")).getItem(1).alias("quality_score"),
     )
-    nulls = df.filter(F.col(text_col).isNull()).select(
-        *src_cols, F.lit(None).cast("double").alias(out_col)
+    nulls = df.filter(F.col("text").isNull()).select(
+        *src_cols, F.lit(None).cast("double").alias("quality_score")
     )
     return scored.unionByName(nulls)

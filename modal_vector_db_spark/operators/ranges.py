@@ -16,7 +16,7 @@ evaluated, O(|L|·|R|) at 100 TB.  The scalable formulation is **binning**
 2. each interval explodes to the bins it overlaps
    (``sequence(floor(start/w), floor(end/w))`` — ×(len/w) rows, bounded);
 3. each left row maps to exactly ONE bin (``floor(ts/w)``);
-4. equi-join on ``bin`` (+ optional extra keys) — a plain hash join
+4. equi-join on ``bin`` — a plain hash join
    Catalyst can shuffle OR broadcast from size stats;
 5. residual filter ``start <= ts < end``.
 
@@ -27,8 +27,6 @@ duplicate intervals, wider bins inflate the residual-filter fan-in.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,20 +40,10 @@ def range_join(
     end_col: str,
     *,
     bin_width_s: int = 300,
-    by: Sequence[str] | str | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each ``left`` row to every ``right`` interval containing its
-    timestamp: ``right.start <= left.ts < right.end`` (half-open, DuckDB
-    ``>= AND <`` parity), plus optional ``by`` equi-keys.
-
-    ``how`` may be ``inner`` or ``left_outer`` (unmatched left rows kept
-    with null interval columns).
-    """
-    if how not in ("inner", "left_outer"):
-        raise ValueError(f"range_join supports inner/left_outer, got {how!r}")
-    by = [by] if isinstance(by, str) else list(by or [])
-
+    """Inner-join each ``left`` row to every ``right`` interval containing
+    its timestamp: ``right.start <= left.ts < right.end`` (half-open,
+    DuckDB ``>= AND <`` parity)."""
     w = F.lit(int(bin_width_s))
     l_bin = (F.unix_timestamp(F.col(ts_col)) / w).cast("long").alias("_bin")
     # End is exclusive, but floor(end/w) may still hold rows with ts < end,
@@ -67,13 +55,6 @@ def range_join(
 
     lt = left.withColumn("_bin", l_bin)
     rt = right.withColumn("_bin", F.explode(r_bins))
-    on = [lt["_bin"] == rt["_bin"]] + [lt[c] == rt[c] for c in by]
     contained = (rt[start_col] <= lt[ts_col]) & (lt[ts_col] < rt[end_col])
-
-    if how == "inner":
-        out = lt.join(rt, on + [contained], "inner")
-        return out.drop(rt["_bin"]).drop(lt["_bin"]).drop(*[rt[c] for c in by])
-    # left_outer: containment must be part of the join condition (not a
-    # post-filter, which would drop never-matched left rows).
-    out = lt.join(rt, on + [contained], "left_outer")
-    return out.drop(rt["_bin"]).drop(lt["_bin"]).drop(*[rt[c] for c in by])
+    out = lt.join(rt, [lt["_bin"] == rt["_bin"], contained], "inner")
+    return out.drop(rt["_bin"]).drop(lt["_bin"])

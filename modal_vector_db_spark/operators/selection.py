@@ -71,6 +71,12 @@ def hashed_ngram_buckets_sql(expr: str, buckets: int, bigrams: bool = True) -> s
     return f"list_concat({unis}, {bis})"
 
 
+#: DSIR's add-alpha smoothing and feature space (unigrams + bigrams),
+#: shared by the Spark operator and its DuckDB twin
+_ALPHA = 1.0
+_BIGRAMS = True
+
+
 def dsir_log_weights(
     df: DataFrame,
     id_col: str,
@@ -78,10 +84,8 @@ def dsir_log_weights(
     target: Column,
     *,
     buckets: int = 1024,
-    alpha: float = 1.0,
-    bigrams: bool = True,
 ) -> DataFrame:
-    """(id, log_weight): per-doc importance log-ratio under add-``alpha``
+    """(id, log_weight): per-doc importance log-ratio under add-``_ALPHA``
     smoothed hashed-ngram multinomials — target docs (``target`` boolean
     column over ``df``) define p_target, the rest define p_raw, and
 
@@ -97,7 +101,7 @@ def dsir_log_weights(
     feats = df.select(
         F.col(id_col),
         target.cast("int").alias("_t"),
-        F.explode(hashed_ngram_buckets(text_col, buckets, bigrams)).alias("_b"),
+        F.explode(hashed_ngram_buckets(text_col, buckets, _BIGRAMS)).alias("_b"),
     ).persist()
     per_bucket = feats.groupBy("_b").agg(
         F.sum("_t").cast("double").alias("_tn"),
@@ -106,7 +110,8 @@ def dsir_log_weights(
     totals = per_bucket.agg(
         F.sum("_tn").alias("_T"), F.sum("_rn").alias("_R")
     )
-    ab = float(alpha) * buckets
+    alpha = _ALPHA
+    ab = alpha * buckets
     ratio = (
         per_bucket.crossJoin(F.broadcast(totals))
         .select(
@@ -131,15 +136,14 @@ def dsir_log_weights_sql(
     target_expr: str,
     *,
     buckets: int = 1024,
-    alpha: float = 1.0,
-    bigrams: bool = True,
 ) -> str:
     """DuckDB twin emitting ``(doc_id, log_weight)`` — a CTE-bodied SELECT
     the oracle splices; identical feature space, counts, and smoothing.
     The token split runs ONCE per doc in its own CTE (see
     :func:`hashed_ngram_buckets_sql`'s column contract)."""
-    feats_list = hashed_ngram_buckets_sql("toks", buckets, bigrams)
-    ab = float(alpha) * buckets
+    feats_list = hashed_ngram_buckets_sql("toks", buckets, _BIGRAMS)
+    alpha = _ALPHA
+    ab = alpha * buckets
     return f"""
     WITH _d AS (
       SELECT {id_expr} AS doc_id, ({target_expr})::INT AS t,

@@ -54,7 +54,7 @@ def dup_rate_estimate(
     )
 
 
-def column_profile(df: DataFrame, cols: Sequence[str] | None = None, rsd: float = 0.02) -> DataFrame:
+def column_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Per-column profile — rows, nulls, approx NDV, min/max — in ONE
     aggregation pass over the table (no per-column jobs, no sort).  The
     input to layout decisions: NDV → bucket count, null rate → filter
@@ -70,7 +70,7 @@ def column_profile(df: DataFrame, cols: Sequence[str] | None = None, rsd: float 
         aggs += [
             F.count(F.lit(1)).alias(f"{c}__rows"),
             F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-            F.approx_count_distinct(c, rsd).alias(f"{c}__ndv"),
+            F.approx_count_distinct(c, 0.02).alias(f"{c}__ndv"),
             F.min(F.col(c).cast("string")).alias(f"{c}__min"),
             F.max(F.col(c).cast("string")).alias(f"{c}__max"),
         ]

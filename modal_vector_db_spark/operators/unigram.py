@@ -118,39 +118,40 @@ def viterbi_segment(word: str, logp: dict[str, float]) -> list[str] | None:
     return out
 
 
-def train_unigram(
-    df: DataFrame,
-    text_col: str = "text",
-    vocab_size: int = 400,
-    max_piece_len: int = 6,
-    seed_size: int = 4000,
-    em_iters: int = 4,
-    max_words: int = 1_000_000,
-    prune_frac: float = 0.25,
-    lowercase: bool = True,
-) -> dict[str, float]:
-    """Learn a (piece -> log-prob) unigram vocabulary of ~``vocab_size``
-    entries.  Distributed: corpus word pass + substring seed pass.
-    Driver: Viterbi hard-EM over the capped word table —
+#: :func:`train_unigram`'s tunables: target vocabulary size, longest
+#: seed piece, seed pieces kept, hard-EM rounds, words kept on the driver
+#: and the share of multi-char pieces pruned per round
+_VOCAB_SIZE = 400
+_MAX_PIECE_LEN = 6
+_SEED_SIZE = 4000
+_EM_ITERS = 4
+_MAX_WORDS = 1_000_000
+_PRUNE_FRAC = 0.25
 
-    1. seed = top ``seed_size`` substrings by weighted count (count
+
+def train_unigram(df: DataFrame) -> dict[str, float]:
+    """Learn a (piece -> log-prob) unigram vocabulary of ~``_VOCAB_SIZE``
+    entries from ``df``'s lowercased ``text``.  Distributed: corpus word
+    pass + substring seed pass.  Driver: Viterbi hard-EM over the capped word table —
+
+    1. seed = top ``_SEED_SIZE`` substrings by weighted count (count
        desc, piece asc) UNION all single characters (never pruned, so
        every word stays coverable);
     2. E-step: Viterbi-segment every word under current log-probs,
        accumulate piece counts weighted by word frequency;
     3. M-step: prob = count / total (characters floored at count 1 so
        coverage survives);
-    4. prune: drop the lowest-count ``prune_frac`` of multi-char pieces
-       each round until ``vocab_size`` remains (SentencePiece's
+    4. prune: drop the lowest-count ``_PRUNE_FRAC`` of multi-char pieces
+       each round until ``_VOCAB_SIZE`` remains (SentencePiece's
        shrink-toward-target loop, count-based instead of loss-based —
        deterministic and within a few percent of the loss rule on web
        corpora).
     """
-    wf_full = word_frequencies(df, text_col, lowercase=lowercase).persist()
+    wf_full = word_frequencies(df, "text", lowercase=True).persist()
     try:
         wf_rows = (
             wf_full.orderBy(F.col("freq").desc(), F.col("word").asc())
-            .limit(int(max_words))
+            .limit(_MAX_WORDS)
             .collect()
         )
         words = [(r["word"], int(r["freq"])) for r in wf_rows]
@@ -160,9 +161,9 @@ def train_unigram(
         # transfers are top-k capped; the word table is persisted so the
         # corpus is scanned once, not once per job)
         seed_rows = (
-            substring_frequencies(wf_full, max_piece_len=max_piece_len)
+            substring_frequencies(wf_full, max_piece_len=_MAX_PIECE_LEN)
             .orderBy(F.col("freq").desc(), F.col("piece").asc())
-            .limit(int(seed_size))
+            .limit(_SEED_SIZE)
             .collect()
         )
     finally:
@@ -177,7 +178,7 @@ def train_unigram(
         return {p: math.log(c / total) for p, c in cnt.items()}
 
     logp = _renorm(counts)
-    for _ in range(int(em_iters)):
+    for _ in range(_EM_ITERS):
         new: dict[str, float] = {}
         for w, f in words:
             seg = viterbi_segment(w, logp)
@@ -193,24 +194,18 @@ def train_unigram(
             ((p, c) for p, c in new.items() if len(p) > 1),
             key=lambda pc: (pc[1], pc[0]),
         )
-        excess = len(new) - int(vocab_size)
+        excess = len(new) - _VOCAB_SIZE
         if excess > 0:
-            drop = min(excess, max(1, int(len(multi) * prune_frac)))
+            drop = min(excess, max(1, int(len(multi) * _PRUNE_FRAC)))
             for p, _ in multi[:drop]:
                 del new[p]
         logp = _renorm(new)
     return logp
 
 
-def apply_unigram(
-    df: DataFrame,
-    vocab: dict[str, float],
-    text_col: str = "text",
-    out_col: str = "tokens",
-    lowercase: bool = True,
-) -> DataFrame:
-    """Tokenize ``text_col`` with a learned unigram vocab: adds
-    ``out_col`` (array<string>) and ``n_tokens`` (int) — the
+def apply_unigram(df: DataFrame, vocab: dict[str, float]) -> DataFrame:
+    """Tokenize the lowercased ``text`` with a learned unigram vocab: adds
+    ``tokens`` (array<string>) and ``n_tokens`` (int) — the
     ``apply_bpe`` twin: broadcast table, one Arrow pass, per-batch word
     cache, no shuffle.  Words with OOV characters fall back to per-char
     pieces (unknown chars pass through as themselves — never dropped,
@@ -220,32 +215,28 @@ def apply_unigram(
     from modal_vector_db_spark.shipping import ship_by_value
 
     ship_by_value(sys.modules[__name__])
-    lc = bool(lowercase)
     src_cols = df.columns
-    if out_col == "n_tokens":
-        raise ValueError("apply_unigram: out_col cannot be 'n_tokens' (reserved)")
-    for clash in (out_col, "n_tokens"):
+    for clash in ("tokens", "n_tokens"):
         if clash in src_cols:
             raise ValueError(
                 f"apply_unigram: input already has a column named {clash!r}; "
-                "drop or rename it (or pass a different out_col)"
+                "drop or rename it"
             )
     schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", `{out_col}` array<string>, n_tokens int"
-    tcol = text_col
+    ) + ", `tokens` array<string>, n_tokens int"
     vb = dict(vocab)
 
     def _encode(batches):
         cache: dict[str, list[str]] = {}
         for pdf in batches:
             toks, ns = [], []
-            for text in pdf[tcol]:
+            for text in pdf["text"]:
                 if text is None:
                     toks.append(None)
                     ns.append(None)
                     continue
-                t = str(text).lower() if lc else str(text)
+                t = str(text).lower()
                 out: list[str] = []
                 for w in t.split():
                     got = cache.get(w)
@@ -258,7 +249,7 @@ def apply_unigram(
                 toks.append(out)
                 ns.append(len(out))
             pdf = pdf.copy()
-            pdf[out_col] = toks
+            pdf["tokens"] = toks
             pdf["n_tokens"] = ns
             yield pdf
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 __all__ = ["release_local_checkpoint"]
 
 
-def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
+def release_local_checkpoint(df: DataFrame) -> bool:
     """Free the block storage behind a ``df.localCheckpoint()`` result.
     Returns True when a checkpointed RDD was found and unpersisted;
     False (and does nothing) when ``df`` is not a directly-checkpointed
@@ -32,7 +32,7 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRDD":
             return False
-        plan.rdd().unpersist(bool(blocking))
+        plan.rdd().unpersist(False)
         return True
     except Exception:
         return False

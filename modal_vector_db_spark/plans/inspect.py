@@ -19,7 +19,7 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def scan_columns(df: DataFrame, table_hint: str = "") -> list[list[str]]:
+def scan_columns(df: DataFrame) -> list[list[str]]:
     """Column lists of each parquet FileScan (column-pruning check)."""
     plan = executed_plan(df)
     out = []

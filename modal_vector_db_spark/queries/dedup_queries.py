@@ -23,11 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modal_vector_db_spark.functions.hashing import (
-    md5_long,
-    minhash_signature_from_hashes_sql,
-    simhash64,
-)
+from modal_vector_db_spark.functions.hashing import minhash_signature_from_hashes_sql
 from modal_vector_db_spark.functions.text import (
     hashed_shingles_sql,
     tokens,

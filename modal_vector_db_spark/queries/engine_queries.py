@@ -18,7 +18,6 @@ preserved ids, metadata text, and vector values bit-for-bit.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -329,7 +329,6 @@ def _time_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     """Day-partitioned rewrite of events (fixture setup, once per process
     per sf_dir) — the hypertable layout ``time_range_scan`` prunes."""
     import os
-    import tempfile
 
     hit = _TIME_LAYOUT_CACHE.get(sf_dir)
     if hit is not None:

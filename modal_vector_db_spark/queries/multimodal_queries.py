@@ -695,7 +695,6 @@ def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     hit = _BINFIX_CACHE.get(sf_dir)
     if hit is not None:
         return hit
-    import tempfile
 
     out = os.path.join(
         scratch_root(),

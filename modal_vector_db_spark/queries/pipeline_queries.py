@@ -51,7 +51,6 @@ def _zorder_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     rewrite's CONTENT fidelity is driver-checked (the footer-stat pruning
     effect itself is pinned by tests/test_layout.py)."""
     import os
-    import tempfile
 
     hit = _ZORDER_CACHE.get(sf_dir)
     if hit is not None:

@@ -130,7 +130,6 @@ def _warc_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     hit = _WEBFIX_CACHE.get(sf_dir)
     if hit is not None:
         return hit
-    import tempfile
 
     out = os.path.join(
         scratch_root(),

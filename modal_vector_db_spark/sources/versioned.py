@@ -355,20 +355,15 @@ def manifest_row_count(
     return total
 
 
-def manifest_column_min(
-    name: str,
-    col: str,
-    warehouse: str | None = None,
-    version: int | None = None,
-):
-    """MIN(col) from the commit log's recorded stats alone — the metadata
+def manifest_column_min(name: str, col: str, warehouse: str | None = None):
+    """MIN(col) at the head, from the commit log's recorded stats alone — the metadata
     twin of ``manifest_row_count`` for partition/stats columns.  Returns
-    None (caller falls back to a real scan) when any file of the version
-    lacks a recorded min for ``col``, or when the version carries
+    None (caller falls back to a real scan) when any file of the head
+    lacks a recorded min for ``col``, or when the head carries
     merge-on-read tombstones (a mask could have logically removed every
     row of the min-valued file — correctness over speed, same rule as the
     fast count)."""
-    v = version if version is not None else current_version(name, warehouse)
+    v = current_version(name, warehouse)
     if v is None:
         return None
     m = _read_manifest(name, warehouse, v)
@@ -1111,7 +1106,6 @@ def optimize_zorder(
     name: str,
     cols: list[str],
     warehouse: str | None = None,
-    bits: int = 12,
     num_files: int = 16,
     stats_cols: list[str] | None = None,
 ) -> int:
@@ -1148,7 +1142,7 @@ def optimize_zorder(
     # Partitioned tables z-order WITHIN partitions (lead_cols): a global
     # z-key range split would scatter each output task across every
     # partition dir — up to num_files × partitions files after partitionBy.
-    keyed = zorder_frame(df, cols, bits=bits, num_files=num_files, lead_cols=pcols)
+    keyed = zorder_frame(df, cols, num_files=num_files, lead_cols=pcols)
     new = _stage_files(keyed, name, warehouse, partition_by=pcols or None)
     stats = _collect_stats(
         name, warehouse, new, list(cols) if stats_cols is None else stats_cols

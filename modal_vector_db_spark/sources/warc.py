@@ -463,13 +463,13 @@ def _iter_member_spans(content: bytes, path: str) -> Iterator[tuple[int, int, by
         pos += member_len
 
 
-def _index_rows(p: str, content: bytes, on_error: str) -> list[dict]:
+def _index_rows(p: str, content: bytes) -> list[dict]:
     rows: list[dict] = []
 
     def _spans(blob: bytes, base_off: int, span_len: int | None):
         pos, idx = 0, 0
         while True:
-            head = _next_record_head(blob, pos, p, on_error)
+            head = _next_record_head(blob, pos, p, "fail")
             if head is None:
                 return
             start, headers, _, clen, pos = head
@@ -491,20 +491,14 @@ def _index_rows(p: str, content: bytes, on_error: str) -> list[dict]:
             idx += 1
 
     if content.startswith(_GZIP_MAGIC):
-        try:
-            for off, mlen, blob in _iter_member_spans(content, p):
-                _spans(blob, off, mlen)
-        except ValueError:  # torn trailing member: same skip/fail
-            if on_error != "skip":  # contract as the record walk
-                raise
+        for off, mlen, blob in _iter_member_spans(content, p):
+            _spans(blob, off, mlen)
     else:
         _spans(content, 0, None)
     return rows
 
 
-def build_cdx(
-    spark: SparkSession, path: str, *, glob: str = "*.warc*", on_error: str = "fail"
-) -> DataFrame:
+def build_cdx(spark: SparkSession, path: str) -> DataFrame:
     """Distributed CDX-style record index over the WARC files under
     ``path`` — the CommonCrawl mechanism for record-level random access.
     One pass, payloads never sliced or shipped (headers only); the
@@ -513,13 +507,12 @@ def build_cdx(
     index, then byte-range-fetch JUST those records instead of scanning
     the 100 TB crawl.  Also what makes per-record-gzip files splittable
     past the file level: each row's (offset, length) is independently
-    decodable."""
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
+    decodable.  Reads ``*.warc*`` files; an undecodable one fails the
+    job."""
     _ship_by_value()
     bf = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.warc*")
         .load(path)
         .select("path", "content")
     )
@@ -528,7 +521,7 @@ def build_cdx(
     def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for p, content in zip(pdf["path"], pdf["content"]):
-                rows = _index_rows(p, bytes(content), on_error)
+                rows = _index_rows(p, bytes(content))
                 if rows:
                     yield pd.DataFrame(rows, columns=cols)
 

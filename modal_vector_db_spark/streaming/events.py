@@ -51,14 +51,13 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
 
 
-def windowed_counts(
-    events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-window count+sum — late rows beyond the
-    watermark are dropped; state for closed windows is evicted."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Watermarked (10 minutes) 5-minute tumbling-window count+sum — late
+    rows beyond the watermark are dropped; state for closed windows is
+    evicted."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4).alias(
@@ -69,11 +68,11 @@ def windowed_counts(
     )
 
 
-def sessionized(events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour") -> DataFrame:
-    """Watermarked session windows (30-min inactivity gap)."""
+def sessionized(events: DataFrame) -> DataFrame:
+    """Watermarked (1 hour) session windows (30-min inactivity gap)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4).alias(
@@ -84,10 +83,10 @@ def sessionized(events: DataFrame, gap: str = "30 minutes", watermark: str = "1 
     )
 
 
-def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def dedup_within_watermark(events: DataFrame) -> DataFrame:
     """Streaming idempotent ingest: drop replayed event_ids arriving within
-    the watermark horizon (streaming S5)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+    the 1-hour watermark horizon (streaming S5)."""
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["event_id"])
 
 
 def start_to_memory(
@@ -111,9 +110,9 @@ def upsert_stream_to_vectordb(
     stream_df: DataFrame,
     vdb,
     checkpoint_dir: str,
-    text_col: str = "props",
 ):
-    """foreachBatch sink: each micro-batch is embedded and appended through
+    """foreachBatch sink: each micro-batch's ``props`` is embedded and
+    appended through
     the engine's idempotent anti-join write path — the streaming version of
     ``VectorDB.insert`` (replays/micro-batch retries dedup to no-ops, giving
     effectively-once ingest)."""
@@ -129,7 +128,7 @@ def upsert_stream_to_vectordb(
         items = batch_df.select(
             F.col("event_id").cast("string").alias("id"),
             F.to_json(F.struct("event_id", "event_type", "user_id")).alias("metadata"),
-            udf(F.col(text_col)).alias("embedding"),
+            udf(F.col("props")).alias("embedding"),
         )
         vdb._idempotent_append(items)
 
@@ -147,11 +146,9 @@ def stream_to_versioned_hypertable(
     name: str,
     checkpoint_dir: str,
     warehouse: str | None = None,
-    ts_col: str = "ts",
-    granularity: str = "day",
 ) -> None:
     """Streaming ingest into a VERSIONED, time-partitioned (hypertable)
-    table: each micro-batch derives its time bucket from ``ts_col`` and
+    table: each micro-batch derives its day bucket from ``ts`` and
     lands as ONE atomic manifest-log append — partition subdirectories
     under ``data/`` plus per-file stats (row counts + the path-encoded
     partition value), so downstream ``scan(between=('p_bucket', lo, hi))``
@@ -170,13 +167,11 @@ def stream_to_versioned_hypertable(
     from modal_vector_db_spark.operators.layout import _GRANULARITY_FMT
     from modal_vector_db_spark.sources import versioned as vcat
 
-    if granularity not in _GRANULARITY_FMT:  # same guard as write_time_partitioned
-        raise ValueError(f"granularity must be one of {sorted(_GRANULARITY_FMT)}")
-    fmt = _GRANULARITY_FMT[granularity]
+    fmt = _GRANULARITY_FMT["day"]
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
         out = batch_df.withColumn(
-            "p_bucket", F.date_format(F.col(ts_col), fmt)
+            "p_bucket", F.date_format(F.col("ts"), fmt)
         ).repartition("p_bucket")
         vcat.append(out, name, warehouse, partition_by=["p_bucket"], stats_cols=[])
 

@@ -103,9 +103,11 @@ def test_srp_pairs_find_planted_exact_duplicates(emb, spark):
     assert all(r["cos_sim"] >= 0.999 for r in pairs)
 
 
-def test_srp_pairs_carry_and_joinback_paths_agree(emb, spark):
-    """carry_vectors=True (one shuffle, vectors inline) and the high-dim
-    join-back path must produce the same pair set."""
+def test_srp_pairs_carry_and_joinback_paths_agree(emb, spark, monkeypatch):
+    """The carry path (one shuffle, vectors inline) and the high-dim
+    join-back path (reached here by lowering the dim threshold) must
+    produce the same pair set."""
+    from modal_vector_db_spark.operators import ann
     from modal_vector_db_spark.operators.ann import cosine_srp_pairs
 
     base = emb.select("vec_id", "embedding")
@@ -113,8 +115,9 @@ def test_srp_pairs_carry_and_joinback_paths_agree(emb, spark):
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
     aug = base.union(planted)
-    carry = {(r["id_a"], r["id_b"]) for r in cosine_srp_pairs(aug, 0.999, 64, carry_vectors=True).collect()}
-    joinback = {(r["id_a"], r["id_b"]) for r in cosine_srp_pairs(aug, 0.999, 64, carry_vectors=False).collect()}
+    carry = {(r["id_a"], r["id_b"]) for r in cosine_srp_pairs(aug, 0.999, 64).collect()}
+    monkeypatch.setattr(ann, "_CARRY_VECTORS_MAX_DIM", 63)
+    joinback = {(r["id_a"], r["id_b"]) for r in cosine_srp_pairs(aug, 0.999, 64).collect()}
     assert carry == joinback
 
 

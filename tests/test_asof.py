@@ -103,7 +103,7 @@ except ImportError:  # pragma: no cover
     pass
 
 
-def test_asof_bucketed_plan_matches_default(spark):
+def test_asof_bucketed_plan_matches_default(spark, monkeypatch):
     """The ts-bucketed (hot-key skew-spread) plan is value-identical to the
     single-window default across bucket widths — including gap buckets (a
     right-populated bucket with no left rows must still carry forward) and
@@ -111,6 +111,7 @@ def test_asof_bucketed_plan_matches_default(spark):
     local, one in the row's bucket-boundary past is carry)."""
     import random
 
+    from modal_vector_db_spark.operators import asof
     from modal_vector_db_spark.operators.asof import asof_join
 
     def _sec(s):
@@ -135,15 +136,12 @@ def test_asof_bucketed_plan_matches_default(spark):
     base = asof_join(left, right, on="ts", by="user").orderBy("user", "ts")
     expect = [tuple(r) for r in base.collect()]
     for width in (1.0, 7.0, 100.0, 10_000.0):
-        got = (
-            asof_join(left, right, on="ts", by="user", ts_bucket_seconds=width)
-            .orderBy("user", "ts")
-            .collect()
-        )
+        monkeypatch.setattr(asof, "_TS_BUCKET_SECONDS", width)
+        got = asof_join(left, right, on="ts", by="user").orderBy("user", "ts").collect()
         assert [tuple(r) for r in got] == expect, width
 
 
-def test_asof_hot_key_spreads_across_partitions(spark):
+def test_asof_hot_key_spreads_across_partitions(spark, monkeypatch):
     """One key at ~100x the median (the real events-table shape): the
     default plan funnels it through ONE window partition; the bucketed plan
     partitions the window by (key, time bucket), so the hot key's rows
@@ -152,6 +150,7 @@ def test_asof_hot_key_spreads_across_partitions(spark):
     the plan, not just intended)."""
     from pyspark.sql import functions as F
 
+    from modal_vector_db_spark.operators import asof
     from modal_vector_db_spark.operators.asof import asof_join
 
     # hot user 0: 20k rows; 50 normal users: 200 rows each
@@ -166,10 +165,12 @@ def test_asof_hot_key_spreads_across_partitions(spark):
         F.timestamp_seconds((F.col("id") * 7) % 5000).alias("ts"),
         (F.col("id") * 1.0).alias("v"),
     )
-    out = asof_join(left, right, on="ts", by="user", ts_bucket_seconds=250.0)
+    monkeypatch.setattr(asof, "_TS_BUCKET_SECONDS", 250.0)
+    out = asof_join(left, right, on="ts", by="user")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "_tsb" in plan  # the heavy window runs per (user, bucket)
     # spot-check correctness against the default plan on the hot key alone
+    monkeypatch.setattr(asof, "_TS_BUCKET_SECONDS", None)
     hot_expect = (
         asof_join(left.filter("user = 0"), right.filter("user = 0"), on="ts", by="user")
         .agg(F.round(F.sum("v_r"), 3).alias("s"), F.count("*").alias("c"))
@@ -210,15 +211,17 @@ def test_asof_null_right_ts_matches_nothing(spark):
     assert got[6] == 7.0
 
 
-def test_asof_bucketed_null_by_key_agrees_with_default(spark):
+def test_asof_bucketed_null_by_key_agrees_with_default(spark, monkeypatch):
     """Review finding: the bucketed plan's null-unsafe carry join dropped
     NULL by-groups that the default plan's window filled."""
+    from modal_vector_db_spark.operators import asof
     from modal_vector_db_spark.operators.asof import asof_join
 
     right = spark.createDataFrame([(None, 10, 1.5)], "user_id long, ts long, v double")
     left = spark.createDataFrame([(None, 5000)], "user_id long, ts long")
     base = asof_join(left, right, "ts", "user_id").collect()
-    buck = asof_join(left, right, "ts", "user_id", ts_bucket_seconds=100.0).collect()
+    monkeypatch.setattr(asof, "_TS_BUCKET_SECONDS", 100.0)
+    buck = asof_join(left, right, "ts", "user_id").collect()
     assert [r["v_r"] for r in base] == [r["v_r"] for r in buck] == [1.5]
 
 

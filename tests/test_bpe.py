@@ -14,6 +14,7 @@ from collections import defaultdict
 
 import pytest
 
+from modal_vector_db_spark.operators import bpe
 from modal_vector_db_spark.operators.bpe import (
     END,
     apply_bpe,
@@ -68,7 +69,7 @@ def test_golden_first_merges(spark):
         [("low",)] * 5 + [("lower",)] * 2 + [("newest",)] * 6 + [("widest",)] * 3
     )
     df = spark.createDataFrame(rows, "text string")
-    merges = train_bpe(df, num_merges=3, max_words=100, min_freq=2)
+    merges = train_bpe(df, num_merges=3, max_words=100)
     assert merges == [("e", "s"), ("es", "t"), ("est", END)]
 
 
@@ -96,7 +97,7 @@ def test_indexed_trainer_matches_naive_on_random_corpora(spark):
             (" ".join(corpus[i : i + 5]),) for i in range(0, len(corpus), 5)
         ]
         df = spark.createDataFrame(docs, "text string").repartition(7)
-        got = train_bpe(df, num_merges=40, max_words=10_000, min_freq=2)
+        got = train_bpe(df, num_merges=40, max_words=10_000)
         want = _naive_train(dict(freqs), 40, min_freq=2)
         assert got == want, trial
 
@@ -113,7 +114,7 @@ def test_determinism_under_partitioning(spark):
     assert a == b
 
 
-def test_encode_roundtrip_and_distributed_equality(spark):
+def test_encode_roundtrip_and_distributed_equality(spark, monkeypatch):
     """detokenize(encode(x)) reconstructs whitespace-normalized lowercase
     text exactly, and the Arrow-batched executor encode equals the
     driver-side encode_word per word."""
@@ -125,7 +126,8 @@ def test_encode_roundtrip_and_distributed_equality(spark):
         (5, "  spaced   out\ttabs  "),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    merges = train_bpe(df, num_merges=30, min_freq=1)
+    monkeypatch.setattr(bpe, "_MIN_FREQ", 1)
+    merges = train_bpe(df, num_merges=30)
     out = {r["doc_id"]: r for r in apply_bpe(df, merges).collect()}
     ranks = {tuple(m): i for i, m in enumerate(merges)}
     for doc_id, text in rows:
@@ -144,12 +146,13 @@ def test_encode_roundtrip_and_distributed_equality(spark):
         assert list(toks) == want, doc_id
 
 
-def test_merges_actually_compress(spark):
+def test_merges_actually_compress(spark, monkeypatch):
     """More merges → fewer tokens, monotonically down to the word level;
     with enough merges frequent words become single symbols."""
     rows = [("the cat sat on the mat the cat",)] * 20
     df = spark.createDataFrame(rows, "text string")
-    merges = train_bpe(df, num_merges=50, min_freq=1)
+    monkeypatch.setattr(bpe, "_MIN_FREQ", 1)
+    merges = train_bpe(df, num_merges=50)
     ranks = {tuple(m): i for i, m in enumerate(merges)}
     assert encode_word("the", ranks) == ["the" + END]
     n0 = sum(
@@ -183,7 +186,7 @@ def F_desc():
 
 
 def test_apply_bpe_rejects_output_column_collisions(spark):
-    """Round-7 ADVICE: the output schema is input + out_col + n_tokens —
+    """Round-7 ADVICE: the output schema is input + tokens + n_tokens —
     a clash used to produce a duplicate-column schema that failed (or
     shadowed) inside mapInPandas.  Now a plan-time ValueError."""
     import pytest
@@ -196,14 +199,6 @@ def test_apply_bpe_rejects_output_column_collisions(spark):
     df2 = spark.createDataFrame([("a b", "x")], "text string, tokens string")
     with pytest.raises(ValueError, match="tokens"):
         apply_bpe(df2, [], "text")
-    with pytest.raises(ValueError, match="reserved"):
-        apply_bpe(
-            spark.createDataFrame([("a",)], "text string"), [], "text",
-            out_col="n_tokens",
-        )
-    # non-clashing out_col on the same frame still works
-    got = apply_bpe(
-        spark.createDataFrame([("a b",)], "text string"), [], "text",
-        out_col="toks",
-    ).collect()
-    assert got[0]["toks"] is not None and got[0]["n_tokens"] == len(got[0]["toks"])
+    # a frame without either column still works
+    got = apply_bpe(spark.createDataFrame([("a b",)], "text string"), [], "text").collect()
+    assert got[0]["tokens"] is not None and got[0]["n_tokens"] == len(got[0]["tokens"])

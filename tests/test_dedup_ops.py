@@ -61,20 +61,22 @@ def test_embedding_cosine_finds_planted_copies(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, monkeypatch):
     """A 20-hop path graph: worst-case diameter for label propagation.
     Converges to a single component with bounded plan depth (each round is
     localCheckpoint-ed, so round i's plan does NOT replay rounds 0..i-1 —
     without that this test crawls at O(i²) and the planner blows up)."""
+    from modal_vector_db_spark.operators import graph
     from modal_vector_db_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(graph, "_MAX_ITER", 25)
     edges = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
-    out = connected_components(edges, max_iter=25).toPandas()
+    out = connected_components(edges).toPandas()
     assert len(out) == 21
     assert (out["component"] == 0).all()
     # plan depth stays bounded: the final frame reads a checkpoint, not a
     # 20-round join chain
-    df = connected_components(edges, max_iter=25)
+    df = connected_components(edges)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Join") <= 2, f"unbounded lineage: {plan[:2000]}"
 
@@ -489,10 +491,11 @@ def test_bucket_cap_bounds_mega_bucket_pairs(spark):
     assert stats["full_pairs"].max() > 1_000_000  # the quadratic we avoided
 
 
-def test_bucket_cap_is_exact_below_the_cap(spark):
+def test_bucket_cap_is_exact_below_the_cap(spark, monkeypatch):
     """On a corpus whose buckets all fit under the cap, capped output ==
     uncapped output — the cap changes NOTHING until skew actually appears
     (this is what keeps the oracle-gated dedup queries byte-identical)."""
+    from modal_vector_db_spark.operators import dedup
     from modal_vector_db_spark.operators.dedup import (
         minhash_lsh_pairs,
         simhash_pairs,
@@ -503,27 +506,31 @@ def test_bucket_cap_is_exact_below_the_cap(spark):
         + [(1000 + i, f"alpha{i} beta{i} gamma{i} delta{i} eps{i} zeta{i}") for i in range(40)],
         "doc_id long, text string",
     )
-    for fn, kw in (
-        (minhash_lsh_pairs, {"threshold": 0.4}),
-        (simhash_pairs, {"hamming_threshold": 6}),
-    ):
-        exact = {tuple(r) for r in fn(docs, "doc_id", "text", **kw).collect()}
-        capped = {
-            tuple(r)
-            for r in fn(docs, "doc_id", "text", bucket_cap=64, **kw).collect()
-        }
-        assert capped == exact, fn.__name__
+    exact = {tuple(r) for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.4).collect()}
+    capped = {
+        tuple(r)
+        for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.4, bucket_cap=64).collect()
+    }
+    assert capped == exact
+    exact = {tuple(r) for r in simhash_pairs(docs, "doc_id", "text").collect()}
+    monkeypatch.setattr(dedup, "_SIMHASH_BUCKET_CAP", 64)
+    capped = {tuple(r) for r in simhash_pairs(docs, "doc_id", "text").collect()}
+    assert capped == exact
 
 
-def test_bucket_cap_simhash_and_srp_star_mega_cluster(spark):
+def test_bucket_cap_simhash_and_srp_star_mega_cluster(spark, monkeypatch):
     """The same guard on the other two banded families: identical simhash
-    signatures / identical embeddings are the worst-case one-bucket shape."""
+    signatures / identical embeddings are the worst-case one-bucket shape.
+    Production leaves both caps off; the test sets the module constants."""
+    from modal_vector_db_spark.operators import ann, dedup
     from modal_vector_db_spark.operators.ann import cosine_srp_pairs
     from modal_vector_db_spark.operators.dedup import deduplicate, simhash_pairs
 
+    monkeypatch.setattr(dedup, "_SIMHASH_BUCKET_CAP", 64)
+    monkeypatch.setattr(ann, "_SRP_BUCKET_CAP", 64)
     n = 2_000
     docs = _templated_docs(spark, n).repartition(16)
-    sim = simhash_pairs(docs, "doc_id", "text", bucket_cap=64)
+    sim = simhash_pairs(docs, "doc_id", "text")
     n_sim = sim.count()
     assert 0 < n_sim <= 4 * n, n_sim
     assert deduplicate(docs, sim, "doc_id").count() == 1
@@ -533,9 +540,8 @@ def test_bucket_cap_simhash_and_srp_star_mega_cluster(spark):
         "vec_id long, embedding array<float>",
     ).repartition(16)
     for carry in (True, False):
-        pairs = cosine_srp_pairs(
-            vecs, 0.99, 4, carry_vectors=carry, bucket_cap=64
-        )
+        monkeypatch.setattr(ann, "_CARRY_VECTORS_MAX_DIM", 4 if carry else 3)
+        pairs = cosine_srp_pairs(vecs, 0.99, 4)
         n_pairs = pairs.count()
         assert 0 < n_pairs <= 4 * n, (carry, n_pairs)
         # star edges all hub-anchored: id_a is the global min id
@@ -622,13 +628,14 @@ def test_semdedup_oversized_cluster_routes_to_jvm_hub_star(spark):
 
 
 @pytest.mark.slow
-def test_semdedup_blocked_matmul_matches_unblocked(spark):
+def test_semdedup_blocked_matmul_matches_unblocked(spark, monkeypatch):
     """Round-7 ADVICE (medium): the per-cluster similarity used to be ONE
     dense m x m matmul — O(m^2) executor memory at the cap.  It is now a
     blocked strip scan; a degenerate block size (every strip shape: 1-row,
     uneven tail, full-m) must produce the identical pair set."""
     import random
 
+    from modal_vector_db_spark.operators import dedup
     from modal_vector_db_spark.operators.dedup import semdedup_pairs
 
     rng = random.Random(11)
@@ -642,11 +649,11 @@ def test_semdedup_blocked_matmul_matches_unblocked(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     def pairs(block):
+        monkeypatch.setattr(dedup, "_MATMUL_BLOCK", block)
         return {
             (r["id_a"], r["id_b"], round(r["cos_sim"], 12))
             for r in semdedup_pairs(
-                df, "vec_id", num_clusters=2, eps=0.01, cluster_cap=1000,
-                matmul_block=block,
+                df, "vec_id", num_clusters=2, eps=0.01, cluster_cap=1000
             ).collect()
         }
 
@@ -657,21 +664,22 @@ def test_semdedup_blocked_matmul_matches_unblocked(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_diameter_guard(spark):
+def test_connected_components_diameter_guard(spark, monkeypatch):
     """Review finding: exhausting max_iter silently returned unconverged
     labels.  A long chain must either converge (enough rounds) or raise."""
     import pytest as _pytest
 
+    from modal_vector_db_spark.operators import graph
     from modal_vector_db_spark.operators.graph import connected_components
 
     chain = [(i, i + 1) for i in range(30)]  # diameter 30
     df = spark.createDataFrame(chain, "src long, dst long")
+    monkeypatch.setattr(graph, "_MAX_ITER", 3)
     with _pytest.raises(ValueError, match="diameter"):
-        connected_components(df, max_iter=3)
-    labels = connected_components(df, max_iter=40).collect()
+        connected_components(df)
+    monkeypatch.setattr(graph, "_MAX_ITER", 40)
+    labels = connected_components(df).collect()
     assert {r["component"] for r in labels} == {0}
-    with _pytest.raises(ValueError, match="max_iter"):
-        connected_components(df, max_iter=0)
 
 
 def test_null_and_empty_text_never_collapse(spark):
@@ -720,11 +728,13 @@ def test_minhash_bands_validated(spark):
             minhash_lsh_pairs(df, "doc_id", "text", num_hashes=nh, bands=b).collect()
 
 
-def test_incremental_corpus_bucket_cap(spark):
-    """The opt-in skew guard bounds a mega-bucket's contribution without
-    changing results when buckets are small."""
+def test_incremental_corpus_bucket_cap(spark, monkeypatch):
+    """The skew guard (off in production) bounds a mega-bucket's
+    contribution without changing results when buckets are small."""
+    from modal_vector_db_spark.operators import dedup
     from modal_vector_db_spark.operators.dedup import incremental_dedup
 
+    monkeypatch.setattr(dedup, "_CORPUS_BUCKET_CAP", 5)
     corpus = spark.createDataFrame(
         [(i, "shared boilerplate words here") for i in range(40)],
         "doc_id long, text string",
@@ -733,24 +743,25 @@ def test_incremental_corpus_bucket_cap(spark):
         [(1000, "shared boilerplate words here"), (1001, "совершенно novel content")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"] for r in incremental_dedup(
-        corpus, batch, "doc_id", "text", corpus_bucket_cap=5
-    ).collect()}
+    out = {r["doc_id"] for r in incremental_dedup(corpus, batch, "doc_id", "text").collect()}
     assert out == {1001}  # the dup still caught within the cap
 
 
-def test_connected_components_exact_budget_converges(spark):
+def test_connected_components_exact_budget_converges(spark, monkeypatch):
     """Review finding: a chain whose diameter equals EXACTLY max_iter
     rounds converges on the final round, but the final round still moves
     labels — the old guard rejected that correct result.  The extra
     verification round accepts it; one round short still raises."""
     import pytest as _pytest
 
+    from modal_vector_db_spark.operators import graph
     from modal_vector_db_spark.operators.graph import connected_components
 
     chain = [(i, i + 1) for i in range(5)]  # 6 nodes: needs 5 rounds
     df = spark.createDataFrame(chain, "src long, dst long")
-    labels = connected_components(df, max_iter=5).collect()
+    monkeypatch.setattr(graph, "_MAX_ITER", 5)
+    labels = connected_components(df).collect()
     assert {r["component"] for r in labels} == {0}
+    monkeypatch.setattr(graph, "_MAX_ITER", 4)
     with _pytest.raises(ValueError, match="diameter"):
-        connected_components(df, max_iter=4)
+        connected_components(df)

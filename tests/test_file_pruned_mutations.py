@@ -38,7 +38,7 @@ def _idents(paths):
     return {p: (os.stat(p).st_ino, os.stat(p).st_mtime_ns) for p in paths}
 
 
-def test_versioned_delete_rewrites_only_touched_files(spark, tmp_path):
+def test_versioned_delete_rewrites_only_touched_files(spark, tmp_path, monkeypatch):
     db = _mk(spark, tmp_path, "vprune", versioned=True)
     v1_files = set(vcat.resolve_files(db.name, db.warehouse, version=1))
     v2_files = set(vcat.resolve_files(db.name, db.warehouse))
@@ -50,7 +50,8 @@ def test_versioned_delete_rewrites_only_touched_files(spark, tmp_path):
     # force the EAGER rewrite — the file-pruned copy-on-write contract is
     # what this test pins (the merge-on-read default is pinned by
     # tests/test_tombstones.py)
-    assert db.delete({"grp": "b"}, tombstone=False) == 10
+    monkeypatch.setattr(VectorDB, "_TOMBSTONE_MAX_IDS", 0)
+    assert db.delete({"grp": "b"}) == 10
 
     head_files = set(vcat.resolve_files(db.name, db.warehouse))
     # batch-a files carried forward BY REFERENCE: still listed, not restaged

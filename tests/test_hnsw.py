@@ -14,6 +14,7 @@ from modal_vector_db_spark.operators.hnsw import (
     build_hnsw,
     hnsw_search_cluster,
     hnsw_topk,
+    hnsw_topk_multi,
 )
 
 
@@ -103,7 +104,7 @@ def test_probed_serving_and_edge_policies(spark, corpus, graph):
     rows = corpus.collect()
     q = rows[42][2]
     # pruned serving: only the probed cluster's vectors can appear
-    got = hnsw_topk(graph, corpus, q, k=5, ef_search=32, probes=[0]).collect()
+    got = hnsw_topk_multi(graph, corpus, [q], k=5, ef_search=32, probes_per_query={0: [0]}).collect()
     ids = {r["vec_id"] for r in got}
     assert ids and all(i % 3 == 0 for i in ids)
     # NULL vectors are excluded from the graph, not a crash
@@ -168,10 +169,8 @@ def test_engine_graph_index_facade(spark, tmp_path):
 
 
 def test_multi_query_matches_per_query(spark, corpus, graph):
-    """hnsw_topk_multi == a loop of hnsw_topk, per query, including
-    per-query probe sets — one cogroup job instead of Q."""
-    from modal_vector_db_spark.operators.hnsw import hnsw_topk_multi
-
+    """hnsw_topk_multi == a loop of hnsw_topk over each query's probed
+    clusters, per query — one cogroup job instead of Q."""
     rows = corpus.collect()
     qs = [rows[7][2], rows[250][2], rows[900][2]]
     probes = {0: [0, 1, 2], 1: [1], 2: [0, 2]}
@@ -185,7 +184,9 @@ def test_multi_query_matches_per_query(spark, corpus, graph):
         single = [
             (r["distance"], r["vec_id"])
             for r in hnsw_topk(
-                graph, corpus, q, k=5, ef_search=48, probes=probes[qi]
+                graph.filter(F.col("cluster_id").isin(probes[qi])),
+                corpus.filter(F.col("cluster_id").isin(probes[qi])),
+                q, k=5, ef_search=48,
             ).collect()
         ]
         assert sorted(got[qi]) == single, qi

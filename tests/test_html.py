@@ -253,7 +253,8 @@ def test_main_content_trailing_text_and_void_blocks():
     assert html_fields(None)["main_text"] is None
 
 
-def test_main_content_thresholds_tunable():
+def test_main_content_thresholds_tunable(monkeypatch):
+    from modal_vector_db_spark.operators import html_extract
     from modal_vector_db_spark.operators.html_extract import html_fields, main_content
 
     html = f'<p>tiny</p><div><a href="/x">{_KEEP1}</a></div>'
@@ -266,9 +267,9 @@ def test_main_content_thresholds_tunable():
     ex.feed(html)
     ex.close()
     ex._flush_block()
-    assert main_content(ex.blocks, min_chars=1, max_link_density=1.0) == (
-        f"tiny {_KEEP1}"
-    )
+    monkeypatch.setattr(html_extract, "MIN_BLOCK_CHARS", 1)
+    monkeypatch.setattr(html_extract, "MAX_LINK_DENSITY", 1.0)
+    assert main_content(ex.blocks) == f"tiny {_KEEP1}"
 
 
 def test_main_content_rides_extract_schema(spark):

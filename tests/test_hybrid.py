@@ -186,7 +186,7 @@ def test_hybrid_batch_filters_match_single(spark, tmp_path):
         db.query_hybrid_batch(qs, k=3, filters=flt, use_text_index=True)
 
 
-def _bm25_explode_shape(docs, terms, k1=1.2, b=0.75):
+def _bm25_explode_shape(docs, terms):
     """The scan path's earlier shape — explode every token, aggregate tf by
     (doc, term), df over that, and join ``dl`` back by id — kept here as the
     reference the one-projection :func:`bm25_scores` must reproduce."""
@@ -205,7 +205,7 @@ def _bm25_explode_shape(docs, terms, k1=1.2, b=0.75):
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
-        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS), k1, b)), 6).alias("score"))
+        .agg(F.round(F.sum(_bm25_contrib(*map(F.col, _POSTING_COLS))), 6).alias("score"))
     )
 
 

@@ -495,16 +495,16 @@ def test_progressive_matches_independent_idct():
         assert got == expect, f"block {bi}"
 
 
-def test_progressive_restart_markers():
+def test_progressive_restart_markers(monkeypatch):
     """DRI + RSTn inside every progressive scan: DC predictor and EOB
     runs reset per restart segment on both sides."""
+    from modal_vector_db_spark.operators import jpeg
     from modal_vector_db_spark.operators.jpeg import encode_jpeg_progressive
 
     blocks = _prog_blocks(7, 12)  # 24x32 = 3x4 blocks... use 12 blocks
     base = decode_jpeg_pixels(encode_jpeg_blocks(24, 32, blocks))
-    prog = decode_jpeg_pixels(
-        encode_jpeg_progressive(24, 32, blocks, restart_interval=5)
-    )
+    monkeypatch.setattr(jpeg, "_PROGRESSIVE_RESTART_INTERVAL", 5)
+    prog = decode_jpeg_pixels(encode_jpeg_progressive(24, 32, blocks))
     assert prog == base
 
 

@@ -14,8 +14,8 @@ from tests.conftest import SF_DIR
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark):
-    write_bucketed(load(spark, SF_DIR, "orders"), "orders_b", "o_orderkey", num_buckets=8)
-    write_bucketed(load(spark, SF_DIR, "lineitem"), "lineitem_b", "l_orderkey", num_buckets=8)
+    write_bucketed(load(spark, SF_DIR, "orders"), "orders_b", "o_orderkey")
+    write_bucketed(load(spark, SF_DIR, "lineitem"), "lineitem_b", "l_orderkey")
     yield
     spark.sql("DROP TABLE IF EXISTS orders_b")
     spark.sql("DROP TABLE IF EXISTS lineitem_b")
@@ -54,7 +54,6 @@ def test_salted_agg_equals_direct(spark):
             "min_price": ("min", "l_extendedprice"),
             "max_price": ("max", "l_extendedprice"),
         },
-        n_salts=8,
     ).toPandas().set_index("l_returnflag").sort_index()
     want = (
         li.groupBy("l_returnflag")
@@ -181,7 +180,7 @@ def test_zorder_prunes_both_dimensions(spark, tmp_path):
     linear = str(tmp_path / "linear")
     zordered = str(tmp_path / "zorder")
     df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(linear)
-    write_zordered(df, zordered, ["x", "y"], bits=12, num_files=16)
+    write_zordered(df, zordered, ["x", "y"])
 
     probe = 5_000
     lin_y, lin_total = file_stats_pruned(linear, "y", probe)

@@ -61,7 +61,7 @@ def test_write_and_batch_plans_scan_no_python_rdd(spark, tmp_path):
     )
     db.insert(_rows(0, 200), embed_field="text")
     db.create_index(num_clusters=K, calibrate=False)
-    assert db.delete({"category": 2, "n": ("in", [2, 7, 12])}, tombstone=True) == 3
+    assert db.delete({"category": 2, "n": ("in", [2, 7, 12])}) == 3
     calls = {
         "insert": lambda: db.insert(_rows(180, 260), embed_field="text"),
         "query_batch": lambda: db.query_batch(

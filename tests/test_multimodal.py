@@ -273,7 +273,7 @@ def test_video_header_decoder_parses_mp4_and_avi():
     assert MM._decode_video_headers(junk) == MM._decode_video_fake(junk)
 
 
-def test_png_pixel_roundtrip_all_filters_and_colortypes():
+def test_png_pixel_roundtrip_all_filters_and_colortypes(monkeypatch):
     """encode_png forward-filters rows cycling through ALL five PNG filter
     types, so a successful round-trip proves the decoder genuinely inverts
     Sub/Up/Average/Paeth — for gray, RGB, and RGBA."""
@@ -295,8 +295,10 @@ def test_png_pixel_roundtrip_all_filters_and_colortypes():
         assert got == (w, h, ch, px), f"roundtrip failed for channels={ch}"
         # single-filter encodings must agree too
         for ft in range(5):
-            blob_ft = encode_png(w, h, px, channels=ch, filter_cycle=(ft,))
+            monkeypatch.setattr(MM, "_PNG_FILTER_CYCLE", (ft,))
+            blob_ft = encode_png(w, h, px, channels=ch)
             assert decode_png_pixels(blob_ft)[3] == px, (ch, ft)
+        monkeypatch.undo()
 
 
 def test_png_decode_rejects_unsupported_and_corrupt():
@@ -544,7 +546,7 @@ def test_media_ops_survive_nulls_and_hostile_dimensions(spark):
     assert au[2]["amp_min"] is None and au[2]["amp_max"] is None
 
 
-def test_png_roundtrip_property():
+def test_png_roundtrip_property(monkeypatch):
     """Hypothesis: ANY (width, height, channels, pixel bytes, filter
     choice) round-trips exactly through encode_png -> decode_png_pixels —
     the randomized generalization of the fixed-gradient tests (catches
@@ -571,7 +573,8 @@ def test_png_roundtrip_property():
 
         rng = random.Random(seed)
         px = bytes(rng.randrange(256) for _ in range(w * h * ch))
-        blob = encode_png(w, h, px, channels=ch, filter_cycle=tuple(filt))
+        monkeypatch.setattr(MM, "_PNG_FILTER_CYCLE", tuple(filt))
+        blob = encode_png(w, h, px, channels=ch)
         assert decode_png_pixels(blob) == (w, h, ch, px)
 
     check()

@@ -121,19 +121,19 @@ def test_materialize_releases_all_lineage_cache(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_releases_round_checkpoints(spark):
+def test_connected_components_releases_round_checkpoints(spark, monkeypatch):
     """Long-diameter CC must not accumulate one pinned checkpoint per
     round: after completion at most the returned labels stay persisted
     (delta-of-ids measurement, see above)."""
+    from modal_vector_db_spark.operators import graph
     from modal_vector_db_spark.operators.graph import connected_components
     from modal_vector_db_spark.plans.checkpoints import release_local_checkpoint
 
+    monkeypatch.setattr(graph, "_MAX_ITER", 40)
     spark.catalog.clearCache()
     base = _persisted_ids(spark)
     chain = [(i, i + 1) for i in range(30)]
-    labels = connected_components(
-        spark.createDataFrame(chain, "src long, dst long"), max_iter=40
-    )
+    labels = connected_components(spark.createDataFrame(chain, "src long, dst long"))
     assert {r["component"] for r in labels.collect()} == {0}
     added = _persisted_ids(spark) - base
     assert len(added) <= 1, added

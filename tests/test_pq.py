@@ -20,7 +20,7 @@ def emb(spark):
 
 @pytest.fixture(scope="module")
 def pq(emb):
-    return PQIndex.train(emb, m=8, ksub=16, sample_rows=1024, seed=7)
+    return PQIndex.train(emb, m=8)
 
 
 @pytest.fixture(scope="module")
@@ -41,8 +41,8 @@ def _exact_topk_ids(emb, qv, k):
 
 
 def test_train_is_deterministic(emb):
-    a = PQIndex.train(emb, m=8, ksub=16, sample_rows=512, seed=7)
-    b = PQIndex.train(emb, m=8, ksub=16, sample_rows=512, seed=7)
+    a = PQIndex.train(emb, m=8)
+    b = PQIndex.train(emb, m=8)
     assert np.array_equal(a.codebooks, b.codebooks)
     assert a.codebooks.shape == (8, 16, 8)  # 64-dim fixture / m=8
 
@@ -116,7 +116,7 @@ def test_pq_null_embedding_and_code_rows(spark):
 
     rows = [(i, [float(i % 5), float(i % 3), float(i % 7), float(i % 2)]) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx = PQIndex.train(df, m=2, ksub=4, sample_rows=30, seed=7)
+    idx = PQIndex.train(df, m=2)
     with_null = df.union(
         spark.createDataFrame([(99, None)], "vec_id long, embedding array<double>")
     )
@@ -129,18 +129,20 @@ def test_pq_null_embedding_and_code_rows(spark):
     assert scored[0] == scored[0]
 
 
-def test_pq_train_layout_independent(spark):
+def test_pq_train_layout_independent(spark, monkeypatch):
     """Review finding: sample().limit() made codebooks depend on the
     partition layout; the content-hash sample must not."""
     import numpy as np
 
+    from modal_vector_db_spark.operators import pq
     from modal_vector_db_spark.operators.pq import PQIndex
 
+    monkeypatch.setattr(pq, "_TRAIN_SAMPLE_ROWS", 100)  # sample 100 of 400 rows
     rows = [(i, [float((i * 13) % 17), float((i * 7) % 11),
                  float((i * 5) % 13), float((i * 3) % 7)]) for i in range(400)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = PQIndex.train(df.repartition(2), m=2, ksub=4, sample_rows=100, seed=5)
-    b = PQIndex.train(df.repartition(17, "vec_id"), m=2, ksub=4, sample_rows=100, seed=5)
+    a = PQIndex.train(df.repartition(2), m=2)
+    b = PQIndex.train(df.repartition(17, "vec_id"), m=2)
     assert np.array_equal(a.codebooks, b.codebooks)
 
 
@@ -151,7 +153,7 @@ def test_pq_load_rejects_incomplete_codebook(spark, tmp_path):
 
     rows = [(i, [float(i % 5), float(i % 3)]) for i in range(20)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx = PQIndex.train(df, m=2, ksub=4, sample_rows=20, seed=3)
+    idx = PQIndex.train(df, m=2)
     p = str(tmp_path / "books")
     idx.save(p, spark)
     torn = spark.read.parquet(p).filter("NOT (subspace = 1 AND code = 2)")
@@ -172,4 +174,4 @@ def test_pq_train_all_null_vectors_clear_error(spark):
         [(i, None) for i in range(5)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="sample came back empty"):
-        PQIndex.train(df, m=2, ksub=2, sample_rows=4)
+        PQIndex.train(df, m=2)

@@ -84,7 +84,7 @@ def test_versioned_stats_filtered_query_jobs_after_tombstone_delete(spark, tmp_p
 
     _, jobs = jobs_in_group(spark, ask)
     assert len(jobs) == 1
-    assert db.delete({"category": 2, "n": ("in", [2, 7, 12])}, tombstone=True) == 3
+    assert db.delete({"category": 2, "n": ("in", [2, 7, 12])}) == 3
     res, jobs = jobs_in_group(spark, ask)
     # the merge-on-read mask is read on the driver and applied as an IN
     # literal: the top-k is the only job
@@ -283,7 +283,7 @@ def test_footer_schema_equals_inferred_schema(spark, tmp_path):
     stats.insert(_rows(0, 120), embed_field="text")
     stats.create_index(num_clusters=3, pq_m=2, calibrate=False)
     stats.create_text_index()
-    assert stats.delete({"n": ("in", [1, 2])}, tombstone=True) == 2
+    assert stats.delete({"n": ("in", [1, 2])}) == 2
     bare = VectorDB(
         spark, "fs_w", embedding_dim=8, create_new_table=True, warehouse=wh,
         versioned=True,

@@ -65,35 +65,6 @@ def test_bin_width_invariance(frames, spark):
         assert got == ref, f"bin_width_s={w}: {got} != {ref}"
 
 
-def test_left_outer_keeps_unmatched(frames, spark):
-    events, intervals = frames
-    out = range_join(
-        events, intervals, "ts", "w_start", "w_end", bin_width_s=60, how="left_outer"
-    )
-    rows = out.collect()
-    unmatched = [r for r in rows if r["event_id"] == 4]
-    assert len(unmatched) == 1 and unmatched[0]["name"] is None
-
-
-def test_by_keys_restrict_matches(spark):
-    events = spark.createDataFrame(
-        [(1, 7, _ts(1)), (2, 8, _ts(1))], "event_id long, user_id long, ts timestamp"
-    )
-    intervals = spark.createDataFrame(
-        [(7, _ts(0), _ts(5))], "user_id long, w_start timestamp, w_end timestamp"
-    )
-    out = range_join(
-        events, intervals, "ts", "w_start", "w_end", bin_width_s=60, by="user_id"
-    )
-    assert [r["event_id"] for r in out.collect()] == [1]
-
-
-def test_rejects_unknown_how(frames, spark):
-    events, intervals = frames
-    with pytest.raises(ValueError):
-        range_join(events, intervals, "ts", "w_start", "w_end", how="full")
-
-
 # ---------------------------------------------------------------------------
 # Property-based: the binned formulation must equal the naive theta join on
 # every draw — intervals of any alignment/length (incl. empty), any bin width

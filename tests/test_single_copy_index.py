@@ -72,7 +72,7 @@ def test_versioned_tombstone_is_applied_to_probes(spark, tmp_path):
     db = _db(spark, tmp_path, True)
     db.create_index(num_clusters=4, calibrate=False)
     victim = db.query("doc 9 topic 4", k=1)[0].id
-    assert db.delete({"n": 9}, tombstone=True) == 1
+    assert db.delete({"n": 9}) == 1
     m = vcat._read_manifest(db.name, db.warehouse, vcat.current_version(db.name, db.warehouse))
     assert m.get("tombstones")  # merge-on-read: the file still holds the row
     served = {r.id for r in db.query("doc 9 topic 4", k=60, use_index=True, nprobe=4)}

@@ -128,10 +128,11 @@ def test_derive_prune_bounds_soundness_matrix(spark, tmp_path):
     assert d({"ts": ("in", [True, False])}) == []
 
 
-def test_facade_delete_scans_only_admitted_files(spark, tmp_path, spy_matching):
+def test_facade_delete_scans_only_admitted_files(spark, tmp_path, spy_matching, monkeypatch):
     """The verdict's done-criterion: a facade-level ``db.delete`` keyed to a
     declared stats field runs its touched-file scan over ONLY the
     stats-admitted files."""
+    monkeypatch.setattr(VectorDB, "_TOMBSTONE_MAX_IDS", 0)  # eager rewrite
     db = _mk(spark, tmp_path, "sf_del", stats_fields={"ts": "double"})
     batches = []
     for lo in (0, 10, 20):
@@ -143,7 +144,7 @@ def test_facade_delete_scans_only_admitted_files(spark, tmp_path, spy_matching):
     assert batches[0] and batches[1] and batches[2]
 
     spy_matching.clear()
-    removed = db.delete({"ts": (">=", 20.0)}, tombstone=False)
+    removed = db.delete({"ts": (">=", 20.0)})
     assert removed == 10
     assert db.num_rows() == 20
     # the discovery scan saw only batch-3 files — batches 1/2 were excluded
@@ -201,12 +202,14 @@ def test_facade_update_prunes_and_keeps_stats_sound(spark, tmp_path, spy_matchin
     # the moved row's _s_ts was rematerialized: a pruned delete at its NEW
     # position must find it (this fails if update wrote stale stats cols)
     spy_matching.clear()
-    assert db.delete({"ts": (">=", 99.0)}, tombstone=False) == 10
+    monkeypatch.setattr(VectorDB, "_TOMBSTONE_MAX_IDS", 0)  # eager rewrite
+    assert db.delete({"ts": (">=", 99.0)}) == 10
     assert all(not set(r) & batches[1] for r in spy_matching)
     assert db.num_rows() == 10
 
 
-def test_string_field_eq_pruning(spark, tmp_path, spy_matching):
+def test_string_field_eq_pruning(spark, tmp_path, spy_matching, monkeypatch):
+    monkeypatch.setattr(VectorDB, "_TOMBSTONE_MAX_IDS", 0)  # eager rewrite
     db = _mk(spark, tmp_path, "sf_day", stats_fields={"day": "string"})
     daysets = []
     for day in ("2024-01-01", "2024-01-02", "2024-01-03"):
@@ -215,7 +218,7 @@ def test_string_field_eq_pruning(spark, tmp_path, spy_matching):
         after = _files("sf_day", str(tmp_path))
         daysets.append(after - before)
     spy_matching.clear()
-    assert db.delete({"day": "2024-01-02"}, tombstone=False) == 8
+    assert db.delete({"day": "2024-01-02"}) == 8
     assert len(spy_matching) == 1 and set(spy_matching[0]) <= daysets[1]
     assert db.num_rows() == 16
 
@@ -273,9 +276,10 @@ def test_sidecar_guards_declaration(spark, tmp_path):
         )
 
 
-def test_declare_stats_fields_migration(spark, tmp_path, spy_matching):
+def test_declare_stats_fields_migration(spark, tmp_path, spy_matching, monkeypatch):
     """Adopting a declaration on an existing table: one rewrite, then every
     later mutation is file-pruned."""
+    monkeypatch.setattr(VectorDB, "_TOMBSTONE_MAX_IDS", 0)  # eager rewrite
     db = _mk(spark, tmp_path, "sf_mig")  # no declaration
     for lo in (0, 10):
         db.insert(_batch(lo, lo + 10), embed_field="text")
@@ -292,7 +296,7 @@ def test_declare_stats_fields_migration(spark, tmp_path, spy_matching):
     h2.insert(_batch(20, 30), embed_field="text")
     third = _files("sf_mig", str(tmp_path)) - before
     spy_matching.clear()
-    assert h2.delete({"ts": (">=", 20.0)}, tombstone=False) == 10
+    assert h2.delete({"ts": (">=", 20.0)}) == 10
     assert len(spy_matching) == 1 and set(spy_matching[0]) <= third
     assert h2.num_rows() == 20
 

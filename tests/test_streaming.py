@@ -190,11 +190,3 @@ def test_stream_to_versioned_hypertable_prunes_and_time_travels(spark, event_fil
     assert vcat.read_table(spark, name, wh).count() == 2 * n
     # time travel back to the pre-replay ingest
     assert vcat.read_table(spark, name, wh, version=v_before).count() == n
-
-
-def test_stream_hypertable_rejects_unknown_granularity(spark, event_files, tmp_path):
-    with pytest.raises(ValueError, match="granularity"):
-        SE.stream_to_versioned_hypertable(
-            SE.read_event_stream(spark, event_files), "ht_bad",
-            str(tmp_path / "cp_bad"), str(tmp_path), granularity="week",
-        )

@@ -37,6 +37,7 @@ def test_random_walk_mor_equals_eager(spark, tmp_path, seed):
     rng = np.random.default_rng(seed)
     a = _mk(spark, tmp_path, "mor")   # MoR-defaulting twin
     b = _mk(spark, tmp_path, "eag")   # forced-eager twin
+    b._TOMBSTONE_MAX_IDS = 0
     next_n = 0
     live: set[int] = set()
     checkpoints: list[int] = []  # versions to time-travel back to
@@ -58,8 +59,9 @@ def test_random_walk_mor_equals_eager(spark, tmp_path, seed):
             k = int(rng.integers(1, min(6, len(live)) + 1))
             victims = sorted(rng.choice(sorted(live), size=k, replace=False).tolist())
             filt = {"n": ("in", victims)}
-            ra = a.delete(filt, tombstone=(op == "mor_delete"))
-            rb = b.delete(filt, tombstone=False)
+            a._TOMBSTONE_MAX_IDS = VectorDB._TOMBSTONE_MAX_IDS if op == "mor_delete" else 0
+            ra = a.delete(filt)
+            rb = b.delete(filt)
             assert ra == rb == k, (step, op, victims)
             live.difference_update(victims)
         elif op == "fold":
@@ -99,7 +101,7 @@ def test_indexed_time_travel_across_tombstone_commits(spark, tmp_path):
     db.insert([{"n": i, "text": f"d {i}"} for i in range(60)], embed_field="text")
     db.create_index(num_clusters=3, calibrate=False)
     v_pre = vcat.current_version(db.name, db.warehouse)
-    assert db.delete({"n": ("in", [5, 6, 7])}, tombstone=True) == 3
+    assert db.delete({"n": ("in", [5, 6, 7])}) == 3
     v_post = vcat.current_version(db.name, db.warehouse)
     assert v_post == v_pre + 1
     # one more insert so the head moves past the tombstone commit and the

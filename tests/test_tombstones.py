@@ -93,8 +93,9 @@ def test_mor_is_byte_equal_to_eager(spark, tmp_path):
     hb = vcat.current_version(b.name, b.warehouse)
     assert ha == hb
     filt = {"n": ("between", (10, 39))}
-    assert a.delete(filt, tombstone=True) == 30
-    assert b.delete(filt, tombstone=False) == 30
+    assert a.delete(filt) == 30
+    b._TOMBSTONE_MAX_IDS = 0  # the eager twin
+    assert b.delete(filt) == 30
     assert vcat.current_version(a.name, a.warehouse) == ha + 1
     assert vcat.current_version(b.name, b.warehouse) == hb + 1
     assert a.num_rows() == b.num_rows() == 70
@@ -118,7 +119,7 @@ def test_indexed_graph_paths_and_stamp_after_mor_delete(spark, tmp_path):
     db.create_index(num_clusters=4, calibrate=False)
     db.create_graph_index(calibrate=False)
     victim = db.query("doc 42", k=1)[0]
-    assert db.delete({"n": victim.metadata["n"]}, tombstone=True) == 1
+    assert db.delete({"n": victim.metadata["n"]}) == 1
     assert _head_manifest(db)["op"] == "tombstone"
     stats = db.index_stats()
     assert stats["tombstones_pending"] == 1  # zero-job mask observability
@@ -141,7 +142,7 @@ def test_compact_and_maintain_fold_the_mask(spark, tmp_path):
     folds explicitly — after either, the manifest carries no tombstones
     and results are unchanged."""
     db = _mk(spark, tmp_path, f"tbf_{_uuid.uuid4().hex[:6]}", n=100, per_batch=25)
-    db.delete({"n": ("in", [1, 2, 3])}, tombstone=True)
+    db.delete({"n": ("in", [1, 2, 3])})
     assert _head_manifest(db).get("tombstones")
     ids_before = _ids(db)
     db.compact()
@@ -150,7 +151,7 @@ def test_compact_and_maintain_fold_the_mask(spark, tmp_path):
     assert _ids(db) == ids_before
     assert db.num_rows() == 97
     # a second mask, folded by maintain_index this time
-    db.delete({"n": ("in", [4, 5])}, tombstone=True)
+    db.delete({"n": ("in", [4, 5])})
     assert _head_manifest(db).get("tombstones")
     assert db.maintain_index() is True  # the fold counts as maintenance
     assert not _head_manifest(db).get("tombstones")
@@ -161,7 +162,7 @@ def test_update_folds_and_eager_fallback_over_threshold(spark, tmp_path, monkeyp
     """A replace-shaped update() folds the pending mask (replace_where);
     a delete over the threshold falls back to the eager rewrite."""
     db = _mk(spark, tmp_path, f"tbu_{_uuid.uuid4().hex[:6]}", n=100, per_batch=25)
-    db.delete({"n": ("in", [10, 11])}, tombstone=True)
+    db.delete({"n": ("in", [10, 11])})
     assert _head_manifest(db).get("tombstones")
     assert db.update({"n": 50}, {"tag": "patched"}) == 1
     m = _head_manifest(db)
@@ -181,7 +182,7 @@ def test_reinsert_of_masked_content_folds_first(spark, tmp_path):
     """Re-inserting content whose id sits in the mask must RE-ADD the row
     (eager-delete parity): the CAS loop folds the mask, then inserts."""
     db = _mk(spark, tmp_path, f"tbr_{_uuid.uuid4().hex[:6]}", n=40, per_batch=20)
-    assert db.delete({"n": 7}, tombstone=True) == 1
+    assert db.delete({"n": 7}) == 1
     assert db.num_rows() == 39
     db.insert([{"text": "doc 7", "n": 7}], embed_field="text")
     assert db.num_rows() == 40
@@ -195,7 +196,7 @@ def test_rollback_and_vacuum_respect_the_mask(spark, tmp_path):
     keeps tombstone files referenced by retained versions."""
     db = _mk(spark, tmp_path, f"tbk_{_uuid.uuid4().hex[:6]}", n=60, per_batch=20)
     pre = vcat.current_version(db.name, db.warehouse)
-    db.delete({"n": ("in", [0, 1, 2, 3])}, tombstone=True)
+    db.delete({"n": ("in", [0, 1, 2, 3])})
     masked_v = vcat.current_version(db.name, db.warehouse)
     db.insert([{"text": "later", "n": 777}], embed_field="later_missing_ok")
     # rollback to the masked version: mask carried, rows still excluded
@@ -216,26 +217,26 @@ def test_tombstone_requires_versioned(spark, tmp_path):
         warehouse=str(tmp_path), create_new_table=True,
     )
     db.insert([{"n": 1}], embed_field="n")
-    with pytest.raises(ValueError, match="versioned"):
-        db.delete({"n": 1}, tombstone=True)
-    # plain tables keep the eager contract untouched
+    # the mask lives on the manifest log: a plain table deletes eagerly
+    # however small the match
     assert db.delete({"n": 1}) == 1
     assert db.num_rows() == 0
 
 
-def test_fold_only_eager_delete_keeps_text_ledger(spark, tmp_path):
-    """Review finding: an eager delete that matches nothing live but FOLDS
-    a pending mask commits a version while removing 0 rows — the text
-    snapshot ledger must absorb that commit, not poison itself."""
+def test_folding_eager_delete_keeps_text_ledger(spark, tmp_path):
+    """Review finding: an eager delete that FOLDS a pending mask commits
+    the fold with its own removals — the text snapshot ledger must absorb
+    that commit, not poison itself."""
     db = _mk(spark, tmp_path, f"tbl_{_uuid.uuid4().hex[:6]}", n=60, per_batch=20)
     db.create_text_index()
-    assert db.delete({"n": ("in", [3, 4])}, tombstone=True) == 2
+    assert db.delete({"n": ("in", [3, 4])}) == 2
     assert _head_manifest(db).get("tombstones")
     st_before = db._read_text_meta().get("synced_through")
     assert st_before is not None
-    # matches only already-masked rows -> removed 0, but the rewrite folds
-    removed = db.delete({"n": ("in", [3, 4])}, tombstone=False)
-    assert removed == 0
+    # one live match (5) beside the masked 3 and 4; the eager rewrite folds
+    db._TOMBSTONE_MAX_IDS = 0
+    removed = db.delete({"n": ("in", [3, 4, 5])})
+    assert removed == 1
     assert not _head_manifest(db).get("tombstones")  # fold landed
     meta = db._read_text_meta()
     assert meta.get("synced_through") is not None  # ledger NOT poisoned
@@ -257,7 +258,7 @@ def test_update_with_mask_above_in_literal_ceiling(spark, tmp_path, monkeypatch)
     and rows."""
     monkeypatch.setattr(vcat, "IN_MASK_MAX_IDS", 1)
     db = _mk(spark, tmp_path, f"tbi_{_uuid.uuid4().hex[:6]}", n=60, per_batch=20)
-    db.delete({"n": ("in", [10, 11, 30])}, tombstone=True)
+    db.delete({"n": ("in", [10, 11, 30])})
     assert db.update({"n": ("in", [12, 40])}, {"tag": "p"}) == 2
     assert not _head_manifest(db).get("tombstones")
     metas = [json.loads(r["metadata"]) for r in db.items().collect()]
@@ -288,7 +289,7 @@ def test_replace_where_count_excludes_folded_mask(spark, tmp_path):
     """Review finding: replace_where's removed-count must not report
     folded mask rows as this predicate's removals (rewrite_where parity)."""
     db = _mk(spark, tmp_path, f"tbc_{_uuid.uuid4().hex[:6]}", n=40, per_batch=20)
-    db.delete({"n": ("in", [1, 2, 3])}, tombstone=True)
+    db.delete({"n": ("in", [1, 2, 3])})
     pred = F.coalesce(
         F.get_json_object("metadata", "$.n").cast("double") == 10.0, F.lit(False)
     )
@@ -307,7 +308,7 @@ def test_zorder_clone_stats_migration_respect_mask(spark, tmp_path):
     view), declare_stats_fields' migration rewrite folds it, and vacuum
     reclaims a folded mask's id files once their versions age out."""
     db = _mk(spark, tmp_path, f"tbz_{_uuid.uuid4().hex[:6]}", n=80, per_batch=20)
-    db.delete({"n": ("in", [0, 1, 2, 3, 4])}, tombstone=True)
+    db.delete({"n": ("in", [0, 1, 2, 3, 4])})
     assert _head_manifest(db).get("tombstones")
     ids_before = _ids(db)
 
@@ -327,13 +328,14 @@ def test_zorder_clone_stats_migration_respect_mask(spark, tmp_path):
     assert db.num_rows() == 75
 
     # a fresh mask, folded by optimize_zorder (logical view unchanged)
-    db.delete({"n": ("in", [10, 11])}, tombstone=True)
+    db.delete({"n": ("in", [10, 11])})
     mask_files = list(_head_manifest(db)["tombstones"])
     db.optimize_zorder(["n"])
     assert not _head_manifest(db).get("tombstones")
     assert db.num_rows() == 73
     # ...and a stats-pruned delete works on the migrated, folded table
-    assert db.delete({"n": ("between", (20.0, 24.0))}, tombstone=False) == 5
+    db._TOMBSTONE_MAX_IDS = 0  # eager rewrite
+    assert db.delete({"n": ("between", (20.0, 24.0))}) == 5
     assert db.num_rows() == 68
 
     # vacuum reclaims the folded mask's id files once unreferenced

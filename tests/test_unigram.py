@@ -11,6 +11,7 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+from modal_vector_db_spark.operators import unigram
 from modal_vector_db_spark.operators.unigram import (
     apply_unigram,
     substring_frequencies,
@@ -92,7 +93,7 @@ def _random_corpus(seed, n_words=40):
 
 
 @pytest.mark.parametrize("seed", [7, 21, 99])
-def test_anchor_against_naive_em(spark, seed):
+def test_anchor_against_naive_em(spark, seed, monkeypatch):
     """The distributed trainer and an independent naive EM must learn the
     IDENTICAL (piece -> logprob) table on random corpora."""
     words = _random_corpus(seed)
@@ -102,30 +103,31 @@ def test_anchor_against_naive_em(spark, seed):
     params = dict(
         vocab_size=30, max_piece_len=4, seed_size=60, em_iters=3, prune_frac=0.25
     )
-    got = train_unigram(docs, **params)
+    for name, value in params.items():
+        monkeypatch.setattr(unigram, f"_{name.upper()}", value)
+    got = train_unigram(docs)
     want = _naive_em(words, **params)
     assert set(got) == set(want)
     for p in want:
         assert got[p] == pytest.approx(want[p], abs=1e-12), p
 
 
-def test_partitioning_independent(spark):
+def test_partitioning_independent(spark, monkeypatch):
+    monkeypatch.setattr(unigram, "_VOCAB_SIZE", 25)
     words = _random_corpus(5, n_words=60)
     rows = [(" ".join([w] * f),) for w, f in words]
-    a = train_unigram(
-        spark.createDataFrame(rows, "text string").repartition(1), vocab_size=25
-    )
-    b = train_unigram(
-        spark.createDataFrame(rows, "text string").repartition(7), vocab_size=25
-    )
+    a = train_unigram(spark.createDataFrame(rows, "text string").repartition(1))
+    b = train_unigram(spark.createDataFrame(rows, "text string").repartition(7))
     assert a == b
 
 
-def test_apply_roundtrip_and_oov(spark):
+def test_apply_roundtrip_and_oov(spark, monkeypatch):
     train = spark.createDataFrame(
         [("merge sort merge scan sort merge",)] * 3, "text string"
     )
-    vocab = train_unigram(train, vocab_size=20, em_iters=3)
+    monkeypatch.setattr(unigram, "_VOCAB_SIZE", 20)
+    monkeypatch.setattr(unigram, "_EM_ITERS", 3)
+    vocab = train_unigram(train)
     assert viterbi_segment("merge", vocab) == ["merge"]
     df = spark.createDataFrame(
         [(0, "Merge SORT scan"), (1, "zzq merge"), (2, None)],
@@ -136,8 +138,8 @@ def test_apply_roundtrip_and_oov(spark):
     # OOV chars fall back to per-char pieces, never dropped
     assert out[1]["tokens"][: out[1]["tokens"].index("merge")] == ["z", "z", "q"]
     assert out[2]["tokens"] is None and out[2]["n_tokens"] is None
-    with pytest.raises(ValueError, match="reserved"):
-        apply_unigram(df, vocab, out_col="n_tokens")
+    with pytest.raises(ValueError, match="n_tokens"):
+        apply_unigram(df.withColumn("n_tokens", df.i), vocab)
 
 
 def test_substring_frequencies_matches_python(spark):

@@ -158,7 +158,7 @@ def test_optimize_zorder_prunes_both_columns_from_manifest(spark, tmp_path):
     vcat.overwrite(df.orderBy(F.rand(seed=7)).coalesce(4), name, wh, stats_cols=["k", "v"])
     v_before = vcat.current_version(name, wh)
 
-    v_new = vcat.optimize_zorder(spark, name, ["k", "v"], wh, bits=10, num_files=16)
+    v_new = vcat.optimize_zorder(spark, name, ["k", "v"], wh, num_files=16)
     assert v_new == v_before + 1
 
     files = vcat.resolve_files(name, wh)
