@@ -8,7 +8,6 @@ from modal_vector_db_spark.functions.distance import (
     cosine_similarity,
     dot_product,
     l2_norm,
-    l2_distance,
     vector_lit,
 )
 from modal_vector_db_spark.functions.hashing import md5_long, minhash_signature, simhash64
@@ -25,7 +24,6 @@ __all__ = [
     "cosine_similarity",
     "dot_product",
     "l2_norm",
-    "l2_distance",
     "vector_lit",
     "md5_long",
     "minhash_signature",

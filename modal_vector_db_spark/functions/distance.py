@@ -135,14 +135,3 @@ def cosine_similarity_pandas_udf():
 
     return _cos
 
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a.cast("array<double>"), b.cast("array<double>"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

@@ -110,18 +110,10 @@ def simhash64(toks: Column, bits: int = 60) -> Column:
     return F.when(F.size(toks) == 0, F.lit(None).cast("long")).otherwise(sig)
 
 
-def minhash_signature_from_hashes(hashes: Column, num_hashes: int) -> Column:
-    """MinHash signature over PRE-HASHED shingles (array<long> already in
-    [0, 2^30), e.g. ``functions.text.hashed_shingles``) — pure integer
-    mixing, zero cryptographic hashes in this step."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(hashes, lambda h: minhash_perm(h, i))),
-    )
-
-
 def minhash_signature_from_hashes_sql(hashes_expr: str, num_hashes: int) -> str:
-    """DuckDB transliteration of :func:`minhash_signature_from_hashes`."""
+    """DuckDB MinHash signature over PRE-HASHED shingles (array<long>
+    already in [0, 2^30), e.g. ``functions.text.hashed_shingles``): the
+    :func:`minhash_perm` mixes the banding engine takes per hash."""
     return (
         f"list_transform(generate_series(0, {num_hashes - 1}), "
         f"i -> list_min(list_transform({hashes_expr}, "

@@ -39,10 +39,6 @@ __all__ = [
     "html_to_text_sql",
     "html_title",
     "html_title_sql",
-    "html_lang",
-    "html_lang_sql",
-    "html_meta_description",
-    "html_meta_description_sql",
 ]
 
 #: rule 1 — CDATA blocks (case-insensitive, dotall, non-greedy to the
@@ -64,21 +60,6 @@ _ENTITIES: tuple[tuple[str, str], ...] = (
     ("&nbsp;", " "),
 )
 _TITLE_RE = r"(?is)<title[^>]*>(.*?)</title>"
-#: declared language — the langid shortcut every curation pass tries
-#: before n-gram detection.  The attribute name must follow WHITESPACE
-#: (RE2 has no lookbehind, so the boundary is an explicit \s) — else
-#: ``xml:lang``/``data-lang`` would match; the FIRST plain ``lang=``
-#: wins via the non-greedy prefix, mirroring the parser tier.
-_LANG_RE = r"(?is)<html\s(?:[^>]*?\s)?lang\s*=\s*[\"']?([a-zA-Z][a-zA-Z0-9-]*)"
-#: meta description — regex subset requires name BEFORE content (the
-#: overwhelmingly common order); the parser tier accepts either order.
-#: The value must be exactly 'description' (quoted, or unquoted followed
-#: by whitespace) — a prefix like name="description-x" must NOT match.
-_META_DESC_RE = (
-    r"(?is)<meta\s(?:[^>]*?\s)?name\s*=\s*"
-    r"(?:\"description\"|'description'|description\s)[^>]*"
-    r"content\s*=\s*[\"]([^\"]*)[\"]"
-)
 
 
 def _squash(c: Column) -> Column:
@@ -105,21 +86,6 @@ def html_title(html: Column | str) -> Column:
     return _squash(F.regexp_extract(h, _TITLE_RE, 1))
 
 
-def html_lang(html: Column | str) -> Column:
-    """Declared ``<html lang=...>`` value ('' when absent)."""
-    h = F.col(html) if isinstance(html, str) else html
-    return F.regexp_extract(h, _LANG_RE, 1)
-
-
-def html_meta_description(html: Column | str) -> Column:
-    """``<meta name="description" content="...">`` value ('' when
-    absent).  Regex-subset limitation (both engines alike): ``name``
-    must precede ``content`` and the value must be double-quoted — the
-    parser tier (``operators/html_extract.py``) accepts either order
-    and any quoting."""
-    h = F.col(html) if isinstance(html, str) else html
-    return F.regexp_extract(h, _META_DESC_RE, 1)
-
 
 #: ---- DuckDB twins (same rule order; backrefs/flags per RE2) ----------
 
@@ -142,12 +108,3 @@ def html_to_text_sql(expr: str) -> str:
 
 def html_title_sql(expr: str) -> str:
     return _squash_sql(f"regexp_extract({expr}, '{_TITLE_RE}', 1)")
-
-
-def html_lang_sql(expr: str) -> str:
-    return f"regexp_extract({expr}, '{_LANG_RE.replace(chr(39), chr(39) * 2)}', 1)"
-
-
-def html_meta_description_sql(expr: str) -> str:
-    pat = _META_DESC_RE.replace(chr(39), chr(39) * 2)
-    return f"regexp_extract({expr}, '{pat}', 1)"

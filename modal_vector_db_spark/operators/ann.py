@@ -314,23 +314,8 @@ class IVFIndex2L:
         # FLAT index of equal total size would carry), so repeated queries
         # stop paying a parquet listing+read per probed shard.  Handles
         # are per-index-generation (rebuilds construct a new instance and
-        # reset the load site), so no invalidation hook is needed beyond
-        # :meth:`invalidate_shard_cache` for long-lived handles.
+        # reset the load site), so no invalidation hook is needed.
         self._shard_cache: dict[int, list[tuple[int, list]]] = {}
-
-    def invalidate_shard_cache(self) -> None:
-        """Drop cached fine-centroid shards AND the assign-path broadcast
-        (call after an out-of-band rebuild when reusing a handle; engine
-        load sites construct fresh handles per generation and never need
-        this)."""
-        self._shard_cache.clear()
-        bc = getattr(self, "_assign_bc", None)
-        if bc is not None:
-            try:
-                bc.destroy()
-            except Exception:  # pragma: no cover - already-stopped context
-                pass
-            self._assign_bc = None
 
     # -- build --------------------------------------------------------------
     @classmethod
@@ -495,8 +480,7 @@ class IVFIndex2L:
         # ONCE per handle and reuse across assign calls — the engine
         # assigns every ingest batch, and re-broadcasting up to
         # MAX_FINE_BYTES per batch leaked executor memory and paid the
-        # serialization each time (review finding; invalidate_shard_cache
-        # destroys it for out-of-band rebuilds)
+        # serialization each time
         bc = getattr(self, "_assign_bc", None)
         if bc is None:
             ids, co, mat = self._fine_matrix()
@@ -936,8 +920,7 @@ def srp_band_keys_sql(
 #: text-LSH family (``operators/dedup.py:_capped_pair_frame``): a bucket
 #: larger than the cap (near-identical embedding mega-cluster: re-encoded
 #: boilerplate, zero vectors from a broken encoder) emits hub-star edges
-#: (O(m)) instead of all C(m,2) pairs.  ``None`` keeps the exact contract;
-#: report suppression with ``dedup.band_bucket_stats``.
+#: (O(m)) instead of all C(m,2) pairs.  ``None`` keeps the exact contract.
 _SRP_BUCKET_CAP: int | None = None
 #: :func:`cosine_srp_pairs` carries the embeddings through the band
 #: shuffle up to this dim and joins them back above it

@@ -27,7 +27,7 @@ never-hang rule the JPEG marker walk pins with fuzz tests).
 from __future__ import annotations
 
 import struct
-from typing import Any, Iterator
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -40,7 +40,6 @@ from modal_vector_db_spark.operators.multimodal import dhash64_from_pixels
 
 __all__ = [
     "encode_mjpeg_avi",
-    "parse_avi_header",
     "avi_video_frames",
     "sample_mjpeg_frames",
     "video_dhash64",
@@ -68,30 +67,6 @@ def _riff_walk(buf: bytes, pos: int, end: int) -> Iterator[tuple[bytes, int, int
 def _require_avi(blob: bytes) -> None:
     if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
         raise ValueError("not an AVI (RIFF/'AVI ' magic missing)")
-
-
-def parse_avi_header(blob: bytes) -> dict[str, Any]:
-    """Main-header metadata from ``avih`` (the structured twin of the
-    find()-based sniff in ``multimodal._decode_video_headers``): width,
-    height, declared n_frames, usec_per_frame.  Raises ``ValueError`` on
-    non-AVI input or a missing/truncated header."""
-    _require_avi(blob)
-    for fourcc, s, e in _riff_walk(blob, 12, len(blob)):
-        if fourcc == b"LIST" and blob[s : s + 4] == b"hdrl":
-            for cc, cs, ce in _riff_walk(blob, s + 4, e):
-                if cc == b"avih":
-                    if ce - cs < 40:
-                        raise ValueError("truncated AVI avih header")
-                    usec, _, _, _, frames, _, _, _, w, h = struct.unpack(
-                        "<10I", blob[cs : cs + 40]
-                    )
-                    return {
-                        "width": int(w),
-                        "height": int(h),
-                        "n_frames": int(frames),
-                        "usec_per_frame": int(usec),
-                    }
-    raise ValueError("AVI: no avih header")
 
 
 def avi_video_frames(blob: bytes) -> list[tuple[int, int]]:

@@ -1,4 +1,4 @@
-"""Distributed Bloom-filter semi/anti joins — the cross-corpus membership
+"""Distributed Bloom-filter anti join — the cross-corpus membership
 primitive for the regime where BOTH sides are too large to broadcast as
 exact key sets.
 
@@ -53,7 +53,6 @@ __all__ = [
     "bloom_build",
     "bloom_merge",
     "bloom_might_contain",
-    "bloom_semi_join",
     "bloom_anti_join",
 ]
 
@@ -154,7 +153,7 @@ def bloom_might_contain(
     bits for the row's key are set in ``words`` (built by
     :func:`bloom_build` with the SAME cols/num_bits/num_hashes/seed —
     mismatched parameters silently break the no-false-negative guarantee,
-    so callers should go through the semi/anti wrappers).
+    so callers should go through the anti-join wrapper).
 
     Membership is ``num_hashes`` broadcast hash joins against the word
     table — map-side only, the probe is never shuffled; flag=false rows
@@ -194,74 +193,13 @@ def bloom_might_contain(
     return out
 
 
-def _sized(build: DataFrame, on, expected_items, fpp, num_bits, num_hashes):
-    if (num_bits is None) != (num_hashes is None):
-        raise ValueError(
-            "pass BOTH num_bits and num_hashes, or neither (half-pinned "
-            "parameters would silently be ignored)"
-        )
-    if num_bits is not None:
-        if num_bits % 64 or num_bits < 64:
-            raise ValueError(
-                f"num_bits must be a positive multiple of 64, got {num_bits}"
-            )
-        return int(num_bits), int(num_hashes)
-    if expected_items is not None:
-        return bloom_params(expected_items, fpp)
-    # auto-sizing pass: approx DISTINCT keys, not rows — a duplicate-heavy
-    # corpus would otherwise oversize the filter by its duplication factor
-    # (round-8 ADVICE).  Still one extra scan of the (huge, by premise)
-    # build side: pass expected_items to skip it.
-    n = build.agg(
-        F.approx_count_distinct(F.struct(*[F.col(c) for c in on])).alias("n")
-    ).first()["n"]
-    return bloom_params(max(1, int(n)), fpp)
-
-
-def bloom_semi_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: Sequence[str],
-    *,
-    expected_items: int | None = None,
-    fpp: float = 0.01,
-    num_bits: int | None = None,
-    num_hashes: int | None = None,
-    seed: int = 0,
-) -> DataFrame:
-    """EXACT left-semi join (probe rows whose key exists in build) whose
-    PROBE-side shuffle cost scales with the MATCHES, not the probe corpus:
-    Bloom candidates map-side, then a verify semi-join over candidates
-    only.  The BUILD side is still scanned and shuffled once in the verify
-    (it cannot be broadcast in the both-sides-huge regime this operator
-    exists for) — the saving is probe-side: a 100 TB probe contributes
-    only its (rare) candidate rows to the shuffle, never the whole corpus.
-    The verify shuffles the build side's DISTINCT keys (partial-agg
-    collapses duplicates map-side before the exchange).  Result is
-    byte-identical to ``probe.join(build, on, 'left_semi')`` — false
-    positives die in the verify, false negatives don't exist.
-
-    Size via ``expected_items`` (build-side distinct key estimate; an
-    ``approx_count_distinct`` pass is run when omitted) + ``fpp``, or pin
-    ``num_bits``/``num_hashes`` directly."""
-    on = list(on)
-    m, k = _sized(build, on, expected_items, fpp, num_bits, num_hashes)
-    words = bloom_build(build, on, m, k, seed)
-    cand = bloom_might_contain(probe, words, on, m, k, seed).filter(
-        F.col(_FLAG)
-    ).drop(_FLAG)
-    return cand.join(build.select(*on).distinct(), on, "left_semi")
-
-
 def bloom_anti_join(
     probe: DataFrame,
     build: DataFrame,
     on: Sequence[str],
     *,
-    expected_items: int | None = None,
-    fpp: float = 0.01,
-    num_bits: int | None = None,
-    num_hashes: int | None = None,
+    num_bits: int,
+    num_hashes: int,
     seed: int = 0,
 ) -> DataFrame:
     """EXACT left-anti join (probe rows whose key does NOT exist in build)
@@ -278,11 +216,14 @@ def bloom_anti_join(
     same flagged plan, so the probe source is SCANNED TWICE (each scan is
     map-side only — flag columns + k broadcast joins, no shuffle) — cheap
     relative to a shuffle when columnar pushdown reads only the key
-    columns twice."""
+    columns twice.
+
+    Size the filter with ``num_bits`` (a positive multiple of 64) and
+    ``num_hashes``; :func:`bloom_params` derives both from a key count and
+    a false-positive rate."""
     on = list(on)
-    m, k = _sized(build, on, expected_items, fpp, num_bits, num_hashes)
-    words = bloom_build(build, on, m, k, seed)
-    flagged = bloom_might_contain(probe, words, on, m, k, seed)
+    words = bloom_build(build, on, num_bits, num_hashes, seed)
+    flagged = bloom_might_contain(probe, words, on, num_bits, num_hashes, seed)
     sure = flagged.filter(~F.col(_FLAG)).drop(_FLAG)
     cand = flagged.filter(F.col(_FLAG)).drop(_FLAG)
     return sure.unionByName(

@@ -87,8 +87,7 @@ def _capped_pair_frame(
     Recall caveat (documented contract): a member whose verify similarity
     to the HUB falls below threshold loses only its intra-bucket edges —
     every band it shares with a true near-dup in a small-enough bucket
-    still yields the pair.  Use :func:`band_bucket_stats` to surface the
-    suppressed-pair count — capping is never silent.
+    still yields the pair.
 
     Shape (round 12, optimization): ONE groupBy on (band, key) collecting
     the bucket members, then in-bucket pair generation from the sorted
@@ -137,29 +136,6 @@ def _capped_pair_frame(
         F.col("b._id").alias("id_b"),
         *[F.col(f"a.{p}").alias(f"{p}_a") for p in payload],
         *[F.col(f"b.{p}").alias(f"{p}_b") for p in payload],
-    )
-
-
-def band_bucket_stats(bands: DataFrame, bucket_cap: int) -> DataFrame:
-    """Skew report for a banded frame: the oversized (band, key) buckets a
-    ``bucket_cap`` would star, with the candidate-pair counts the cap
-    suppresses — ``members``, ``full_pairs`` (= C(m,2)), ``emitted_pairs``
-    (= m−1), ``suppressed_pairs``.  Run this alongside any capped dedup at
-    a new corpus/parameterization: capping must be a MEASURED decision,
-    never a silent one."""
-    m = F.col("members")
-    return (
-        bands.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("members"))
-        .filter(m > bucket_cap)
-        .select(
-            "band",
-            "key",
-            "members",
-            (m * (m - 1) / 2).cast("long").alias("full_pairs"),
-            (m - 1).cast("long").alias("emitted_pairs"),
-            (m * (m - 1) / 2 - (m - 1)).cast("long").alias("suppressed_pairs"),
-        )
     )
 
 
@@ -270,10 +246,9 @@ def minhash_lsh_pairs(
     ``bucket_cap``: verify-stage skew guard — buckets larger than this emit
     a hub-star (O(m) edges) instead of all C(m,2) pairs, bounding the one
     quadratic stage against near-identical boilerplate mega-clusters that
-    exact pre-collapse can't remove (see :func:`_capped_pair_frame`; report
-    what a cap suppresses with :func:`band_bucket_stats`).  ``None`` (the
-    default) keeps the exact all-pairs contract.  Measured guidance
-    (``tools/hubstar_recall.py``, BASELINE.md round 7): **64** is the
+    exact pre-collapse can't remove (see :func:`_capped_pair_frame`).
+    ``None`` (the default) keeps the exact all-pairs contract.  Measured
+    guidance (``tools/hubstar_recall.py``, BASELINE.md round 7): **64** is the
     production default — on a graded-similarity planted cluster it emits
     pairs identical to uncapped while keeping the mega-bucket blowup flat;
     lower caps lose pair-level recall on graded buckets (0.565 @16,

@@ -12,9 +12,7 @@ shape, not a libjpeg clone):
   4:4:4, 4:2:2, 4:2:0 — the overwhelming majority of web JPEGs),
   DRI/RSTn restart markers, 8- and 16-bit quantization tables.
   Everything else — arithmetic coding, 12-bit, hierarchical, >2
-  sampling factors — raises ``ValueError`` with the variant named, and
-  the PIL gate in ``operators/multimodal.py`` stays the documented
-  escape hatch for those.
+  sampling factors — raises ``ValueError`` with the variant named.
 - ENCODE (fixture/test-grade only): solid-color images in closed form
   (a uniform block quantizes to a DC-only spectrum EXACTLY, so decoded
   pixels equal the encoded color bit-for-bit — the planted-file shape
@@ -219,7 +217,7 @@ def decode_jpeg_pixels(blob: bytes) -> tuple[int, int, int, bytes]:
     height, channels, row-major pixel bytes) — channels 1 (grayscale) or
     3 (RGB via the JFIF YCbCr transform).  Raises ``ValueError`` naming
     the variant for anything outside the documented baseline scope (the
-    callers' fall-back / PIL-gate contract, same shape as
+    callers' fall-back contract, same shape as
     ``decode_png_pixels``)."""
     if len(blob) < 4 or blob[0:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
@@ -321,7 +319,7 @@ def decode_jpeg_pixels(blob: bytes) -> tuple[int, int, int, bytes]:
             raise ValueError(
                 f"unsupported JPEG frame type SOF{marker - 0xC0} "
                 "(baseline SOF0 + progressive-Huffman SOF2 only; "
-                "arithmetic/lossless/hierarchical stay PIL-gated)"
+                "arithmetic/lossless/hierarchical are not decoded)"
             )
         elif marker == 0xDA:  # SOS — scan follows
             if frame is None:

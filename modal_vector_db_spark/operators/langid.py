@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "train_language_classifier",
     "predict_language",
-    "language_confusion",
 ]
 
 
@@ -149,14 +148,3 @@ def predict_language(model, df: DataFrame) -> DataFrame:
     )
     return pred.unionByName(nulls)
 
-
-def language_confusion(model, df: DataFrame) -> DataFrame:
-    """(true lang, predicted lang, n) over ``df``'s (text, lang) — the
-    evaluation artifact; the diagonal over the row sums is per-language
-    recall."""
-    return (
-        predict_language(model, df)
-        .filter(F.col("lang").isNotNull())
-        .groupBy(F.col("lang").alias("true_lang"), F.col("lang_pred"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )

@@ -1,22 +1,14 @@
-"""Physical-layout operators: bucketing and skew salting.
+"""Physical-layout operators: training shards, Z-order clustering and
+time partitioning.
 
 The reference delegates all physical strategy to DuckDB's single-node
-executor; at cluster scale the two layout decisions that dominate join/agg
-cost are (a) co-locating repeatedly-joined facts so the shuffle happens once
-at write time, and (b) breaking hot keys so no single reducer drowns.
+executor; at cluster scale the layout decides which files a scan can skip.
 
-- **Bucketing**: ``write_bucketed`` persists a table hash-bucketed (and
-  bucket-sorted) on its join key.  Two tables bucketed the same way join as
-  bucket-local sort-merge with NO Exchange on either side — the shuffle was
-  pre-paid at write time and amortizes over every subsequent join
-  (verified by plan assertion in tests/test_layout.py).
-- **Salting**: ``salted_agg`` runs a two-phase aggregate — first over
-  (key, salt) to spread a hot key across 16 reducers, then over
-  key to combine.  Works for any algebraic aggregate (sum/count/min/max);
-  AQE's skew-join handling covers the join side, this covers the agg side.
 - **Z-order clustering**: ``write_zordered`` sorts along a Morton curve so
   parquet footer stats prune scans filtering ANY clustered column, not just
-  a linear sort's leading one; ``file_stats_pruned`` measures the effect.
+  a linear sort's leading one.
+- **Time partitioning**: ``write_time_partitioned`` writes one directory
+  per time bucket, and ``time_range_scan`` prunes them at listing time.
 """
 
 from __future__ import annotations
@@ -25,56 +17,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_col: str) -> None:
-    """Persist ``df`` in 16 hash buckets, bucket-sorted, on ``bucket_col``.
-    Joins between tables bucketed identically on the join key skip the
-    shuffle entirely."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(16, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-#: op → (phase-1 partial fn, phase-2 recombine fn).  Partial counts ADD.
-_ALGEBRAIC = {
-    "sum": (F.sum, F.sum),
-    "count": (F.count, F.sum),
-    "min": (F.min, F.min),
-    "max": (F.max, F.max),
-}
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict[str, tuple[str, str]],
-) -> DataFrame:
-    """Two-phase skew-safe aggregation.
-
-    ``aggs`` maps output-column name → ``(op, input_col)`` with op in
-    {sum, count, min, max} (the algebraic aggregates that decompose).
-    Phase 1 aggregates over (keys, salt) so a hot key's rows split across
-    16 partial groups on different reducers; phase 2 re-aggregates
-    the partials by key.  The salt is derived deterministically from the
-    row's physical position — uniform by construction, no rand()."""
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(16)),
-    )
-    partials, finals = [], []
-    for name, (op, col) in aggs.items():
-        if op not in _ALGEBRAIC:
-            raise ValueError(f"non-algebraic aggregate for salted_agg: {op!r}")
-        p_fn, r_fn = _ALGEBRAIC[op]
-        partials.append(p_fn(col).alias(f"_p_{name}"))
-        finals.append(r_fn(F.col(f"_p_{name}")).alias(name))
-    phase1 = salted.groupBy(*keys, "_salt").agg(*partials)
-    return phase1.groupBy(*keys).agg(*finals)
 
 
 def write_training_shards(
@@ -206,29 +148,6 @@ def write_zordered(df: DataFrame, path: str, cols: Sequence[str]) -> None:
     ``OPTIMIZE ZORDER BY`` applies; here it is two scans (min/max agg, then
     range-partitioned sorted write) of plain parquet."""
     zorder_frame(df, cols).write.mode("overwrite").parquet(path)
-
-
-def file_stats_pruned(path: str, col: str, value) -> tuple[int, int]:
-    """Pruning evidence: (files whose [min,max] footer range admits
-    ``col = value``, total files).  Reads ONLY parquet footers via pyarrow —
-    the same stats a Spark scan consults before touching row groups."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    files = sorted(_glob.glob(f"{path}/part-*.parquet"))
-    hit = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.to_arrow_schema().get_field_index(col)
-        admits = False
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max or (st.min <= value <= st.max):
-                admits = True
-                break
-        hit += admits
-    return hit, len(files)
 
 
 _GRANULARITY_FMT = {"hour": "yyyy-MM-dd-HH", "day": "yyyy-MM-dd", "month": "yyyy-MM"}

@@ -10,10 +10,10 @@ the stdlib alone (``_decode_image_headers``, ``_decode_audio_real``,
 chroma upsample + YCbCr, baseline SOF0 AND progressive SOF2).
 Arithmetic-coded JPEG, video codecs beyond MJPEG,
 and compressed-audio decoding need PIL/ffmpeg/torchaudio, which are NOT
-available here, so those route to ``DECODERS``' deterministic fakes
-(documented as such) with the PIL implementation raising
-``NotImplementedError`` until swapped in.  Everything Spark-side is real and
-tested: schemas, binary handling, batch iteration shape, partition sizing.
+dependencies, so those route to ``DECODERS``' deterministic fakes
+(documented as such); a real decoder swaps in through ``DECODERS``.
+Everything Spark-side is real and tested: schemas, binary handling, batch
+iteration shape, partition sizing.
 
 Scale notes (100 TB of media):
 - blobs ride in parquet binary columns (or out-of-line object-store URIs
@@ -77,28 +77,6 @@ def _ship_by_value() -> None:
     from modal_vector_db_spark.shipping import ship_by_value
 
     ship_by_value(sys.modules[__name__], _jpeg_mod, _avi_mod)
-
-
-def _decode_image_real(blob: bytes) -> dict[str, Any]:
-    """Real image decode via PIL — same contract as the stub: a dict with
-    int ``width``/``height``/``n_frames``.  Raises ``NotImplementedError``
-    when PIL is absent (this environment); the swap-in contract is pinned
-    by ``tests/test_multimodal.py::test_real_image_decoder_contract``,
-    which runs whenever PIL IS importable."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError as e:  # pragma: no cover - env without PIL
-        raise NotImplementedError(
-            "image decoding requires PIL; not installed here"
-        ) from e
-    with Image.open(io.BytesIO(blob)) as im:
-        return {
-            "width": int(im.width),
-            "height": int(im.height),
-            "n_frames": int(getattr(im, "n_frames", 1)),
-        }
 
 
 def _decode_image_headers(blob: bytes) -> dict[str, Any]:
@@ -305,8 +283,7 @@ def _decode_audio_fake(blob: bytes) -> dict[str, Any]:
 
 DECODERS: dict[str, Callable[[bytes], dict[str, Any]]] = {
     # Header formats (PNG/GIF/BMP/JPEG) parse REAL dimensions stdlib-side;
-    # anything else falls through to the deterministic fake.  Swap for
-    # _decode_image_real (PIL) when pixel data is needed.
+    # anything else falls through to the deterministic fake.
     "image": _decode_image_headers,
     "video": _decode_video_headers,
     "audio": _decode_audio_headers,  # real stdlib WAV parse, fake fallback
@@ -400,7 +377,7 @@ def frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
 # containers whose encodings the stdlib can honestly handle: PNG is
 # zlib-inflated filtered scanlines (RFC 2083 — pure struct+zlib+arithmetic),
 # BMP 24-bit is raw padded BGR rows, GIF is LZW, JPEG is Huffman+IDCT.
-# Progressive/arithmetic JPEG stays PIL-gated (loud ValueError).
+# Arithmetic-coded JPEG raises a loud ValueError.
 # Per-byte unfiltering is Python —
 # fine at Arrow-batch granularity for fixtures and tests; a production
 # deployment swaps a turbo decoder into the same batch boundary.

@@ -34,15 +34,11 @@ summation on both engines, rounded 6dp only at the end).
 from __future__ import annotations
 
 import contextlib
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["pagerank"]
-
-#: last chain plan captured under SPARK_GRAFT_PR_PLAN_DUMP (evidence hook)
-LAST_CHAIN_PLAN: str | None = None
 
 #: node-count ceiling for statically-planned iteration chains.  Below it
 #: the rank table is provably tiny (the head job counted it) and AQE's
@@ -197,13 +193,6 @@ def pagerank(
                 ranks = ranks.localCheckpoint(eager=True)
                 intermediates.append(ranks)
         ranks = ranks.select("node", "rank")
-        if os.environ.get("SPARK_GRAFT_PR_PLAN_DUMP"):
-            # evidence hook (env-gated, zero cost by default): the chain
-            # executes inside the materialize checkpoint, so the RETURNED
-            # plan is just the readback — expose the pre-checkpoint chain
-            # plan for the round's plans/ dumps.
-            global LAST_CHAIN_PLAN
-            LAST_CHAIN_PLAN = ranks._jdf.queryExecution().executedPlan().toString()
         if materialize:
             ranks = ranks.localCheckpoint(eager=True)  # the one surviving RDD
             for ck in intermediates:  # consumed by the final checkpoint

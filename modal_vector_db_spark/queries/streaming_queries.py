@@ -39,6 +39,10 @@ _STREAMFIX_CACHE: dict[tuple[str, str], str] = {}
 #: sf_dir → warehouse dir holding the once-per-process hypertable ingest
 _HYPER_CACHE: dict[str, str] = {}
 
+#: ``spark.sql.shuffle.partitions`` while a fixture stream drains: one
+#: state store per shuffle partition per stateful op per micro-batch
+_STREAM_SHUFFLE_PARTITIONS = 4
+
 
 def _stream_fixture_dir(spark: SparkSession, sf_dir: str, kind: str = "plain") -> str:
     """Re-write the events fixture as a 4-file parquet directory (µs
@@ -84,13 +88,9 @@ def _drain_concurrently(
     stores per micro-batch; for these fixture-scale drains the session
     default (32, sized for batch shuffles) means 32 HDFS-state-store commits
     per op per batch of pure overhead — size it to the stream instead (a
-    real deployment sets this per streaming job the same way; override with
-    $SPARK_GRAFT_STREAM_SHUFFLE)."""
+    real deployment sets this per streaming job the same way)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
     try:
         started = []
         for stream, prefix, mode in streams:
@@ -289,10 +289,7 @@ def streaming_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         hw = tempfile.mkdtemp(prefix="sparkvdb_hyperwh_", dir=scratch_root())
         hcp = tempfile.mkdtemp(prefix="sparkvdb_hypercp_", dir=scratch_root())
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
         try:
             SE.stream_to_versioned_hypertable(
                 SE.read_event_stream(spark, win_path), "hyper_events", hcp, warehouse=hw

@@ -378,13 +378,10 @@ def text_quality_filtered_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
       counts AND accuracy over the HELD-OUT odd half; the oracle's
       closed-form labels are ``langs[doc_id % 5]`` with stat pinned 1.0,
       so a single misprediction on unseen docs fails the arm;
-    - ``useed`` — the unigram-LM tokenizer trainer's SEED pass
-      (``operators/unigram.py:substring_frequencies``, the only
-      corpus-scale stage beyond the shared word pass): top-5 substring
+    - ``useed`` — the unigram-LM tokenizer's SEED pass
+      (``operators/unigram.py:substring_frequencies``): top-5 substring
       pieces (len 2-4) by frequency-weighted count, deterministic
-      (freq desc, piece asc) — the EM loop itself is iterative-argmax
-      (non-SQL, anchored against a naive EM in tests), but both of its
-      distributed inputs are now cross-engine exact."""
+      (freq desc, piece asc)."""
     from modal_vector_db_spark.operators.bpe import word_frequencies
     from modal_vector_db_spark.operators.langid import predict_language
     from modal_vector_db_spark.operators.lm import bigram_logprob, corpus_bigram_stats

@@ -10,8 +10,7 @@ Operators:
 - streaming dedup with ``dropDuplicatesWithinWatermark`` — the streaming
   analog of the reference's idempotent insert (``duckvdb.py:57-61``): the
   same event key arriving again within the watermark horizon is dropped;
-- ``foreachBatch`` upsert into a VectorDB table (streaming write path
-  reusing the exact anti-join protocol of ``engine._idempotent_append``).
+- ``foreachBatch`` appends into a versioned, day-partitioned table.
 
 Determinism for tests: file source + ``Trigger.AvailableNow`` + memory sink.
 
@@ -106,41 +105,6 @@ def start_to_memory(
     )
 
 
-def upsert_stream_to_vectordb(
-    stream_df: DataFrame,
-    vdb,
-    checkpoint_dir: str,
-):
-    """foreachBatch sink: each micro-batch's ``props`` is embedded and
-    appended through
-    the engine's idempotent anti-join write path — the streaming version of
-    ``VectorDB.insert`` (replays/micro-batch retries dedup to no-ops, giving
-    effectively-once ingest)."""
-    from modal_vector_db_spark.embedders import embed_udf
-
-    # ONE udf for the stream's lifetime: constructing it per micro-batch
-    # shipped a fresh closure each batch, so every executor re-loaded the
-    # embedder model per batch instead of once per process (review
-    # finding; embed_udf's lazy singleton caches per closure)
-    udf = embed_udf(vdb.embedder_name, dim=vdb.embedding_dim, **vdb.embedder_kwargs)
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        items = batch_df.select(
-            F.col("event_id").cast("string").alias("id"),
-            F.to_json(F.struct("event_id", "event_type", "user_id")).alias("metadata"),
-            udf(F.col("props")).alias("embedding"),
-        )
-        vdb._idempotent_append(items)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_to_versioned_hypertable(
     stream_df: DataFrame,
     name: str,
@@ -162,8 +126,7 @@ def stream_to_versioned_hypertable(
     ``optimize_zorder`` without breaking time travel.  Micro-batch
     RETRIES re-append rows (the blind append is what makes concurrent
     ingest conflict-free) — compose with ``dedup_within_watermark``
-    upstream, or ingest through the engine's CAS insert
-    (``upsert_stream_to_vectordb``), when content idempotency matters."""
+    upstream when content idempotency matters."""
     from modal_vector_db_spark.operators.layout import _GRANULARITY_FMT
     from modal_vector_db_spark.sources import versioned as vcat
 

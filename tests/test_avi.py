@@ -15,7 +15,6 @@ import pytest
 from modal_vector_db_spark.operators.avi import (
     avi_video_frames,
     encode_mjpeg_avi,
-    parse_avi_header,
     sample_mjpeg_frames,
 )
 from modal_vector_db_spark.operators.jpeg import encode_jpeg_solid
@@ -38,14 +37,11 @@ def _solid_avi(n_frames=5, w=16, h=8, color0=40):
 
 def test_header_and_frame_walk_roundtrip():
     blob, frames = _solid_avi(n_frames=7, w=24, h=16)
-    hdr = parse_avi_header(blob)
-    assert (hdr["width"], hdr["height"], hdr["n_frames"]) == (24, 16, 7)
-    assert hdr["usec_per_frame"] == 200_000
     offs = avi_video_frames(blob)
     assert len(offs) == 7
     for (off, size), f in zip(offs, frames):
         assert blob[off : off + size] == f  # exact payload recovery
-    # the header sniff in multimodal agrees with the structured parser
+    # the header sniff in multimodal reads what the writer declared
     from modal_vector_db_spark.operators.multimodal import _decode_video_headers
 
     sniff = _decode_video_headers(blob)
@@ -89,7 +85,7 @@ def test_sampling_never_touches_skipped_frames(monkeypatch):
 
 def test_gates_raise_valueerror():
     with pytest.raises(ValueError, match="not an AVI"):
-        parse_avi_header(b"RIFF\x04\x00\x00\x00WAVE")
+        avi_video_frames(b"RIFF\x04\x00\x00\x00WAVE")
     with pytest.raises(ValueError, match="not an AVI"):
         avi_video_frames(b"\xff\xd8\xff\xe0")
     blob, _ = _solid_avi(n_frames=2)
@@ -105,7 +101,7 @@ def test_gates_raise_valueerror():
 
 def test_fuzzed_sizes_terminate():
     """Corrupt RIFF size fields truncate the walk (clamped, monotone
-    cursor) — parse/walk must return or raise fast, never loop."""
+    cursor) — the walk must return or raise fast, never loop."""
     import random
 
     blob, _ = _solid_avi(n_frames=4)
@@ -114,23 +110,20 @@ def test_fuzzed_sizes_terminate():
         evil = bytearray(blob)
         for _ in range(rng.randrange(1, 4)):
             evil[rng.randrange(len(evil))] = rng.randrange(256)
-        for fn in (parse_avi_header, avi_video_frames):
-            try:
-                fn(bytes(evil))
-            except (ValueError, struct.error):
-                pass
+        try:
+            avi_video_frames(bytes(evil))
+        except (ValueError, struct.error):
+            pass
     # the specific stall shape: a LIST claiming size 0
     evil = bytearray(blob)
     i = bytes(evil).find(b"LIST")
     evil[i + 4 : i + 8] = struct.pack("<I", 0)
-    parse_avi_header_result = None
+    walked = None
     try:
-        parse_avi_header_result = parse_avi_header(bytes(evil))
+        walked = avi_video_frames(bytes(evil))
     except ValueError:
         pass
-    assert parse_avi_header_result is None or isinstance(
-        parse_avi_header_result, dict
-    )
+    assert walked is None or isinstance(walked, list)
 
 
 def test_extract_video_frame_stats_spark_boundary(spark):
@@ -233,7 +226,6 @@ def test_arbitrary_bytes_never_hang_the_walker():
 
     from modal_vector_db_spark.operators.avi import (
         avi_video_frames,
-        parse_avi_header,
         sample_mjpeg_frames,
     )
 
@@ -245,7 +237,7 @@ def test_arbitrary_bytes_never_hang_the_walker():
         )
     )
     def check(blob):
-        for fn in (parse_avi_header, avi_video_frames, sample_mjpeg_frames):
+        for fn in (avi_video_frames, sample_mjpeg_frames):
             try:
                 fn(blob)
             except (ValueError, struct.error):

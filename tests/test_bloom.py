@@ -1,9 +1,9 @@
-"""Distributed Bloom-filter semi/anti joins (operators/bloom.py) — the
+"""Distributed Bloom-filter anti join (operators/bloom.py) — the
 cross-corpus membership primitive for the both-sides-huge regime.
 
 Contracts pinned here:
-- EXACTNESS: bloom_semi_join / bloom_anti_join are byte-identical to the
-  plain left_semi / left_anti joins, including under a deliberately tiny
+- EXACTNESS: bloom_anti_join is byte-identical to the plain left_anti
+  join, including under a deliberately tiny
   filter (false positives everywhere — the verify join must kill them all)
   and under NULL keys (SQL join semantics: NULL never matches).
 - NO FALSE NEGATIVES: every true match is flagged by bloom_might_contain.
@@ -24,7 +24,6 @@ from modal_vector_db_spark.operators.bloom import (
     bloom_build,
     bloom_might_contain,
     bloom_params,
-    bloom_semi_join,
 )
 
 
@@ -68,29 +67,20 @@ def test_no_false_negatives_and_fp_rate(spark):
 
 
 @pytest.mark.parametrize("tiny_filter", [False, True])
-def test_semi_and_anti_match_plain_joins_exactly(spark, tiny_filter):
+def test_anti_join_matches_plain_join_exactly(spark, tiny_filter):
     """Exactness incl. the adversarial tiny filter (64 bits for 500 keys —
     nearly every probe row becomes a false-positive candidate, so the
     verify join carries the whole contract)."""
     probe, build = _corpora(spark, seed=13)
-    kw = dict(num_bits=64, num_hashes=2) if tiny_filter else dict(
-        expected_items=400, fpp=0.01
-    )
-    want_semi = {
-        r["doc_id"] for r in probe.join(build, ["text"], "left_semi").collect()
-    }
-    want_anti = {
+    m, k = (64, 2) if tiny_filter else bloom_params(400, 0.01)
+    want = {
         r["doc_id"] for r in probe.join(build, ["text"], "left_anti").collect()
     }
-    got_semi = {
-        r["doc_id"] for r in bloom_semi_join(probe, build, ["text"], **kw).collect()
+    got = {
+        r["doc_id"]
+        for r in bloom_anti_join(probe, build, ["text"], num_bits=m, num_hashes=k).collect()
     }
-    got_anti = {
-        r["doc_id"] for r in bloom_anti_join(probe, build, ["text"], **kw).collect()
-    }
-    assert got_semi == want_semi
-    assert got_anti == want_anti
-    assert got_semi | got_anti == {r["doc_id"] for r in probe.collect()}
+    assert got == want
 
 
 def test_null_keys_follow_sql_join_semantics(spark):
@@ -98,12 +88,9 @@ def test_null_keys_follow_sql_join_semantics(spark):
         [(1, "a"), (2, None), (3, "zzz")], "doc_id long, text string"
     )
     build = spark.createDataFrame([("a",), (None,)], "text string")
-    semi = {r["doc_id"] for r in bloom_semi_join(
-        probe, build, ["text"], num_bits=1024, num_hashes=3).collect()}
     anti = {r["doc_id"] for r in bloom_anti_join(
         probe, build, ["text"], num_bits=1024, num_hashes=3).collect()}
-    assert semi == {1}          # NULL never equals NULL in a join
-    assert anti == {2, 3}
+    assert anti == {2, 3}  # NULL never equals NULL in a join
 
 
 def test_multi_column_keys(spark):
@@ -111,9 +98,9 @@ def test_multi_column_keys(spark):
         [(1, "a", 10), (2, "a", 11), (3, "b", 10)], "doc_id long, s string, n int"
     )
     build = spark.createDataFrame([("a", 10), ("b", 99)], "s string, n int")
-    got = {r["doc_id"] for r in bloom_semi_join(
+    got = {r["doc_id"] for r in bloom_anti_join(
         probe, build, ["s", "n"], num_bits=4096, num_hashes=4).collect()}
-    assert got == {1}
+    assert got == {2, 3}
 
 
 def test_reserved_column_clash_raises(spark):
@@ -193,26 +180,11 @@ def test_bloom_merge_equals_build_over_union(spark):
         bloom_merge()
 
 
-def test_auto_sizing_counts_distinct_keys_not_rows(spark):
-    """A duplicate-heavy build side must size the filter by its DISTINCT
-    key count (round-8 ADVICE: a row count oversizes by the duplication
-    factor)."""
-    from modal_vector_db_spark.operators.bloom import _sized, bloom_params
-
-    build = spark.createDataFrame(
-        [(f"k{i % 10}",) for i in range(1000)], "text string"
-    )
-    m, k = _sized(build, ["text"], None, 0.01, None, None)
-    # approx_count_distinct is exact at this cardinality
-    assert (m, k) == bloom_params(10, 0.01)
-    assert m < bloom_params(1000, 0.01)[0]
-
-
 def test_sizing_and_flagcol_guards(spark):
     probe = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     build = spark.createDataFrame([("a",)], "text string")
-    with pytest.raises(ValueError, match="BOTH num_bits"):
-        bloom_semi_join(probe, build, ["text"], num_bits=1024)
+    with pytest.raises(ValueError, match="multiple of 64"):
+        bloom_anti_join(probe, build, ["text"], num_bits=1000, num_hashes=2)
     with pytest.raises(ValueError, match="reserved"):
         bloom_might_contain(probe.withColumn("_bf_x", probe.doc_id), build, ["text"], 64, 1)
 

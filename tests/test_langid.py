@@ -10,11 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from modal_vector_db_spark.operators.langid import (
-    language_confusion,
-    predict_language,
-    train_language_classifier,
-)
+from modal_vector_db_spark.operators.langid import predict_language, train_language_classifier
 from modal_vector_db_spark.queries.text_queries import _LANGID_LANGS, _langid_corpus
 
 
@@ -37,10 +33,13 @@ def model(corpus):
 def test_heldout_confusion_is_diagonal(model, corpus):
     """Per-language confusion on docs the model never saw: 40 of each
     language, zero off-diagonal mass."""
-    conf = language_confusion(
-        model, corpus.filter(F.col("doc_id") % 2 == 1)
-    ).collect()
-    got = {(r["true_lang"], r["lang_pred"]): r["n"] for r in conf}
+    conf = (
+        predict_language(model, corpus.filter(F.col("doc_id") % 2 == 1))
+        .groupBy("lang", "lang_pred")
+        .count()
+        .collect()
+    )
+    got = {(r["lang"], r["lang_pred"]): r["count"] for r in conf}
     assert got == {(lang, lang): 40 for lang in _LANGID_LANGS}, got
 
 

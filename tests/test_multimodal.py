@@ -1,10 +1,5 @@
 """Multimodal operator tests: the mapInPandas plumbing with the stub
-decoders, plus the PIL-gated contract test for the REAL image decoder
-(mirrors the embedder skip-if-missing pattern — when PIL is importable the
-real decoder must satisfy the exact schema the stub emits, so the prod
-swap-in (`DECODERS["image"] = _decode_image_real`) is tested code, not a
-comment).
-"""
+decoders, and the stdlib decoders that swap into it."""
 
 from __future__ import annotations
 
@@ -49,56 +44,6 @@ def test_frame_sample_stub_explodes_frames(spark):
     for doc_id, n_frames in feats.items():
         expected = len(range(0, max(n_frames - 1, 0) + 1, 30))
         assert sum(1 for r in out if r["doc_id"] == doc_id) == expected
-
-
-def test_real_image_decoder_contract():
-    """When PIL is present the real decoder must emit EXACTLY the stub's
-    schema — (width, height, n_frames) ints — for a real encoded image."""
-    PIL_Image = pytest.importorskip("PIL.Image")
-    import io
-
-    im = PIL_Image.new("RGB", (37, 23))
-    buf = io.BytesIO()
-    im.save(buf, format="PNG")
-    meta = MM._decode_image_real(buf.getvalue())
-    _check_contract(meta)
-    assert (meta["width"], meta["height"], meta["n_frames"]) == (37, 23, 1)
-
-
-def test_real_image_decoder_swaps_into_pipeline(spark):
-    """DECODERS['image'] = _decode_image_real must run through the SAME
-    mapInPandas plumbing (schema + Arrow batches) as the stub."""
-    PIL_Image = pytest.importorskip("PIL.Image")
-    import io
-
-    blobs = []
-    for i, (w, h) in enumerate([(16, 9), (32, 32)]):
-        buf = io.BytesIO()
-        PIL_Image.new("RGB", (w, h)).save(buf, format="PNG")
-        blobs.append((i, "image", buf.getvalue()))
-    df = spark.createDataFrame(blobs, "doc_id long, media_type string, blob binary")
-    patched = dict(MM.DECODERS, image=MM._decode_image_real)
-    orig = MM.DECODERS
-    try:
-        MM.DECODERS = patched
-        out = {r["doc_id"]: r for r in MM.extract_media_features(df).collect()}
-    finally:
-        MM.DECODERS = orig
-    assert (out[0]["width"], out[0]["height"]) == (16, 9)
-    assert (out[1]["width"], out[1]["height"]) == (32, 32)
-
-
-def test_real_decoder_raises_cleanly_without_pil():
-    """Without PIL the real decoder must fail with NotImplementedError (the
-    documented env gap), not an opaque ImportError mid-executor."""
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL present: the contract tests above cover the real path")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError):
-        MM._decode_image_real(b"not an image")
 
 
 def _make_wav(sample_rate=22050, n_frames=11025, channels=1) -> bytes:

@@ -144,29 +144,28 @@ def test_static_chain_broadcasts_contribs(spark, monkeypatch):
     to SortMergeJoin(node, dst) with a double exchange + two sorts per
     iteration.  (The ew -> ranks join's strategy is left to the planner:
     its estimate profile differs per edge source, and the rank-side hint
-    was measured slower on the fixture.)  Pinned via the env-gated
-    chain-plan evidence hook."""
+    was measured slower on the fixture.)  The chain runs inside the
+    materialize checkpoint, so its plan is read from the SQL status
+    store's formatted plans."""
     import re
 
-    from modal_vector_db_spark.operators import pagerank as PR
+    from modal_vector_db_spark.operators import pagerank
+    from tests.conftest import executed_plans
 
-    monkeypatch.setenv("SPARK_GRAFT_PR_PLAN_DUMP", "1")
     # the static chain is the precondition: pin the node ceiling the
     # 30-node graph plans under
-    monkeypatch.setattr(PR, "_STATIC_CHAIN_MAX_NODES", 200_000)
+    monkeypatch.setattr(pagerank, "_STATIC_CHAIN_MAX_NODES", 200_000)
     edges = [(i, (i + 1) % 30) for i in range(30)] + [(i, i % 5) for i in range(30)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    out = PR.pagerank(df, iters=5, materialize=True)
+    out = []
+    plan = "\n".join(executed_plans(spark, lambda: out.append(pagerank.pagerank(df, iters=5, materialize=True))))
     try:
-        assert out.count() == 30
-        plan = PR.LAST_CHAIN_PLAN
-        assert plan is not None
+        assert out[0].count() == 30
+        keys = r"[^\n]*\nLeft keys \[1\]: \[node#\d+L?\]\nRight keys \[1\]: \[dst#\d+L?\]\n"
         # every contribs join is a broadcast left-outer, never a sort-merge
-        assert not re.search(r"SortMergeJoin \[node#\d+L?\], \[dst#\d+L?\]", plan)
-        assert len(re.findall(
-            r"BroadcastHashJoin \[node#\d+L?\], \[dst#\d+L?\], LeftOuter", plan
-        )) == 5
+        assert not re.search(r"\(\d+\) SortMergeJoin" + keys, plan)
+        assert len(re.findall(r"\(\d+\) BroadcastHashJoin" + keys + "Join type: LeftOuter\n", plan)) == 5
     finally:
         from modal_vector_db_spark.plans.checkpoints import release_local_checkpoint
 
-        release_local_checkpoint(out)
+        release_local_checkpoint(out[0])

@@ -91,58 +91,6 @@ def test_stream_dedup_within_watermark(spark, event_files, tmp_path):
     assert got.select("event_id").distinct().count() == n_unique
 
 
-def test_stream_upsert_to_vectordb(spark, event_files, tmp_path):
-    """foreachBatch upsert lands exactly one row per event_id through the
-    idempotent write path, and re-running the stream adds nothing."""
-    from modal_vector_db_spark.engine import VectorDB
-
-    vdb = VectorDB(
-        spark,
-        "stream_sink",
-        embedding_dim=8,
-        create_new_table=True,
-        warehouse=str(tmp_path / "wh"),
-    )
-    limited = SE.read_event_stream(spark, event_files)
-    SE.upsert_stream_to_vectordb(limited, vdb, str(tmp_path / "cp4"))
-    n = _batch_events(spark, event_files).select("event_id").distinct().count()
-    assert vdb.num_rows() == n
-    # replay the whole stream with a fresh checkpoint → idempotent no-op
-    SE.upsert_stream_to_vectordb(limited, vdb, str(tmp_path / "cp5"))
-    assert vdb.num_rows() == n
-
-
-def test_stream_upsert_into_versioned_table(spark, event_files, tmp_path):
-    """foreachBatch + versioned backend: every micro-batch lands as an
-    auditable manifest commit, replay is a (committed but empty) no-op, and
-    the pre-replay version remains a time-travel target."""
-    from modal_vector_db_spark.engine import VectorDB
-
-    vdb = VectorDB(
-        spark,
-        "stream_vsink",
-        embedding_dim=8,
-        create_new_table=True,
-        warehouse=str(tmp_path / "whv"),
-        versioned=True,
-    )
-    stream = (
-        spark.readStream.schema(SE.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(event_files)
-    )
-    SE.upsert_stream_to_vectordb(stream, vdb, str(tmp_path / "cpv1"))
-    n = _batch_events(spark, event_files).select("event_id").distinct().count()
-    assert vdb.num_rows() == n
-    hist = vdb.history()
-    assert len(hist) >= 2 and all(h["op"] == "append" for h in hist)
-    v_done = hist[-1]["version"]
-
-    SE.upsert_stream_to_vectordb(stream, vdb, str(tmp_path / "cpv2"))
-    assert vdb.num_rows() == n  # idempotent replay
-    assert vdb.read_version(v_done).count() == n  # old head still readable
-
-
 def test_stream_to_versioned_hypertable_prunes_and_time_travels(spark, event_files, tmp_path):
     """Streaming -> versioned day-partitioned hypertable: the drained
     stream equals the batch table, day scans prune from the manifest
